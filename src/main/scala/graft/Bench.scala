@@ -9,9 +9,19 @@ import org.apache.spark.sql.SparkSession
   * reflect steady-state throughput (what a long-running cluster job sees).
   */
 object Bench {
+  /** `SPARK_GRAFT_CPUS` as a positive core count, 4 when unset. The count is
+    * written unquoted into the JSON lines and into the artifact file name, so
+    * anything else (`*` is valid for `local[*]`) fails at startup rather than
+    * producing invalid JSON. */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -72,7 +82,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus%s,"stat":"min2_lt${singleThreshold}%.0fs_else_single"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus%d,"stat":"min2_lt${singleThreshold}%.0fs_else_single"}"""
     println(line)
     // r11 post-mortem: the full line (~15 KB for 426 queries) exceeds the
     // driver's stdout-tail capture window, so the driver parsed NOTHING from
@@ -80,7 +90,7 @@ object Bench {
     // SHORT summary line AFTER it — same metric/value, no per-query map —
     // guaranteed inside any tail window, so the total always parses.
     val shortLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"cpus":$cpus%s,"sf":"$sfDir","queries_in":"BENCH_FULL.json"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"cpus":$cpus%d,"sf":"$sfDir","queries_in":"BENCH_FULL.json"}"""
     println(shortLine)
     // the driver's stdout-tail capture is lossy past ~4 KB, which truncated
     // the per-query map in earlier rounds — persist the complete artifact

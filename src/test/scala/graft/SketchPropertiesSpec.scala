@@ -70,6 +70,119 @@ class SketchPropertiesSpec extends AnyFunSuite {
     }
   }
 
+  /** Reference encoder over a plain dense register array: the wire bytes
+    * and estimate an HLL with these registers must produce, whatever its
+    * in-memory representation. */
+  private def hllReference(b: Int, regs: Array[Byte]): (Array[Byte], Long) = {
+    val m = 1 << b
+    val set = (0 until m).filter(regs(_) != 0)
+    val bytes =
+      if (6 + 4 * set.size < 2 + m) {
+        val out = java.nio.ByteBuffer.allocate(6 + 4 * set.size)
+        out.put(Sketch.TagHllSparse).put(b.toByte).putInt(set.size)
+        set.foreach(i => out.putInt(i << 8 | regs(i)))
+        out.array()
+      } else Array[Byte](Sketch.TagHll, b.toByte) ++ regs
+    val zeros = m - set.size
+    val alpha = m match {
+      case 16 => 0.673
+      case 32 => 0.697
+      case 64 => 0.709
+      case _ => 0.7213 / (1.0 + 1.079 / m)
+    }
+    val raw = alpha * m * m / regs.map(r => math.pow(2, -r)).sum
+    val est = if (raw <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else raw
+    (bytes, math.round(est))
+  }
+
+  /** Reference encoder over a plain bitmap, as [[hllReference]]. */
+  private def lcReference(sizeBytes: Int, bits: java.util.BitSet): (Array[Byte], Long) = {
+    val n = bits.cardinality
+    val mBits = 8L * sizeBytes
+    val bytes =
+      if (9L + 4L * n < 5L + sizeBytes) {
+        val out = java.nio.ByteBuffer.allocate(9 + 4 * n)
+        out.put(Sketch.TagLcSparse).putInt(sizeBytes).putInt(n)
+        bits.stream().forEach(i => out.putInt(i))
+        out.array()
+      } else {
+        val out = java.nio.ByteBuffer.allocate(5 + sizeBytes)
+        out.put(Sketch.TagLc).putInt(sizeBytes).put(java.util.Arrays.copyOf(bits.toByteArray, sizeBytes))
+        out.array()
+      }
+    val z = mBits - n
+    (bytes, if (z == 0) mBits else math.round(mBits * math.log(mBits.toDouble / z)))
+  }
+
+  /** Each way to reach the multiset of `hashes`: offers in order, in-place
+    * merges of three offered parts, and wire merges of those parts. */
+  private def allRoutes(hashes: Array[Long], create: () => Sketch): Seq[(String, Sketch)] = {
+    def offered(hs: Array[Long]) = { val s = create(); hs.foreach(s.offerHash); s }
+    val cut1 = hashes.length / 5
+    val cut2 = hashes.length * 3 / 5
+    val parts = Seq(hashes.take(cut1), hashes.slice(cut1, cut2), hashes.drop(cut2))
+    val viaMerge = offered(parts.head)
+    parts.tail.foreach(p => viaMerge.mergeInPlace(offered(p)))
+    val viaWire = parts.foldLeft(null: Sketch)((acc, p) => Sketch.mergeSerializedInto(offered(p).serialize(), acc))
+    Seq("offers" -> offered(hashes), "mergeInPlace" -> viaMerge, "mergeSerializedInto" -> viaWire)
+  }
+
+  test("sparse/dense switch: bytes and estimate match a dense reference at, below and above it") {
+    val rnd = new scala.util.Random(71)
+    for (b <- Seq(4, 12, 16)) {
+      val m = 1 << b
+      val maxRank = 65 - b
+      val switchAt = (m - 4 + 3) / 4 // fewest set registers that encode dense
+      for (count <- Seq(switchAt - 1, switchAt, switchAt + 1); seed <- 0 until 2) {
+        val regs = new Array[Byte](m)
+        val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
+        // a hash landing in register idx with rank r (all-zero suffix for the max rank)
+        def hashOf(idx: Int, r: Int): Long = {
+          val lead = 64 - b - r
+          val low = if (lead <= 0) 0L else rnd.nextLong() & ((1L << lead) - 1)
+          (idx.toLong << (64 - b)) | (if (r == maxRank) 0L else (1L << lead) | low)
+        }
+        for (idx <- rnd.shuffle((0 until m).toVector).take(count)) {
+          val r = 1 + rnd.nextInt(maxRank)
+          regs(idx) = r.toByte
+          hashes += hashOf(idx, r)
+          for (_ <- 0 until rnd.nextInt(3)) hashes += hashOf(idx, 1 + rnd.nextInt(r)) // lower or equal ranks
+        }
+        val (wantBytes, wantEst) = hllReference(b, regs)
+        for ((route, s) <- allRoutes(rnd.shuffle(hashes).toArray, () => new Hll(b))) {
+          val ctx = s"HLL b=$b set=$count seed=$seed via $route"
+          assert(java.util.Arrays.equals(s.serialize(), wantBytes), ctx)
+          assert(s.estimate == wantEst, ctx)
+          assert(java.util.Arrays.equals(Sketch.deserialize(wantBytes).serialize(), wantBytes), ctx)
+        }
+      }
+    }
+    for (sizeBytes <- Seq(64, 4096, 1000000)) {
+      val mBits = 8 * sizeBytes
+      val switchAt = (sizeBytes - 4 + 3) / 4 // fewest set bits that encode dense
+      for (count <- Seq(switchAt - 1, switchAt, switchAt + 1); seed <- 0 until (if (sizeBytes > 4096) 1 else 2)) {
+        val bits = new java.util.BitSet(mBits)
+        var set = 0
+        while (set < count) {
+          val bit = rnd.nextInt(mBits)
+          if (!bits.get(bit)) { bits.set(bit); set += 1 }
+        }
+        val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
+        // floorMod(h, mBits) == bit for every h ≡ bit, negative ones included
+        bits.stream().forEach { bit =>
+          for (_ <- 0 to rnd.nextInt(2)) hashes += bit + mBits.toLong * (rnd.nextInt(2001) - 1000)
+        }
+        val (wantBytes, wantEst) = lcReference(sizeBytes, bits)
+        for ((route, s) <- allRoutes(rnd.shuffle(hashes).toArray, () => new LinearCounter(sizeBytes))) {
+          val ctx = s"LC size=$sizeBytes set=$count seed=$seed via $route"
+          assert(java.util.Arrays.equals(s.serialize(), wantBytes), ctx)
+          assert(s.estimate == wantEst, ctx)
+          assert(java.util.Arrays.equals(Sketch.deserialize(wantBytes).serialize(), wantBytes), ctx)
+        }
+      }
+    }
+  }
+
   test("CountSketch: merge of any split is counter-identical to one-shot; join size unbiased-ish") {
     import graft.sketch.CountSketch
     def csOf(s: Seq[Long], w: Int = 256) = {

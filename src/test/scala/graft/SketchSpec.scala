@@ -162,6 +162,83 @@ class SketchSpec extends AnyFunSuite {
     val badLc = Array[Byte](4, 0, 0, 0, 4, 0, 0, 0, 1, 0, 0, 3, 0xE7.toByte) // size=4 (32 bits), idx=999
     val e6 = intercept[SketchMergeException](Sketch.deserialize(badLc))
     assert(e6.getMessage.contains("bit index"))
+
+    // HLL payloads are rejected alike by deserialize and by the wire merge
+    // into an empty sketch of the payload's own precision
+    def rejected(bytes: Array[Byte], b: Int, why: String): Unit = {
+      val viaDecode = intercept[SketchMergeException](Sketch.deserialize(bytes))
+      assert(viaDecode.getMessage.contains(why), viaDecode.getMessage)
+      intercept[SketchMergeException](Sketch.mergeSerializedInto(bytes, new Hll(b)))
+    }
+    def denseHll(b: Int, at: Int, r: Int): Array[Byte] = {
+      val out = new Array[Byte](2 + (1 << b))
+      out(0) = Sketch.TagHll; out(1) = b.toByte; out(2 + at) = r.toByte
+      out
+    }
+    def sparseHll(b: Int, idx: Int, r: Int): Array[Byte] =
+      Array[Byte](3, b.toByte, 0, 0, 0, 1, (idx >>> 16).toByte, (idx >>> 8).toByte, idx.toByte, r.toByte)
+    // a dense register byte >= 0x80
+    rejected(denseHll(4, 5, 0x80), 4, "rank 128")
+    rejected(denseHll(4, 5, 0xFF), 4, "rank 255")
+    // a sparse rank of 0 or "below" (a byte >= 0x80)
+    rejected(sparseHll(4, 5, 0), 4, "rank 0")
+    rejected(sparseHll(4, 5, 0x90), 4, "rank 144")
+    // a rank above 65 - b, dense and sparse
+    rejected(denseHll(4, 5, 62), 4, "rank 62 > 61")
+    rejected(sparseHll(16, 700, 50), 16, "rank 50 of register 700 outside [1, 49]")
+    assert(Sketch.deserialize(sparseHll(16, 700, 49)).estimate == 1) // the largest rank is fine
+    // a precision outside [4, 24]
+    for (b <- Seq(3, 25, -1)) {
+      val dense = Array[Byte](Sketch.TagHll, b.toByte, 0, 0, 0)
+      val e = intercept[SketchMergeException](Sketch.deserialize(dense))
+      assert(e.getMessage.contains("precision"), e.getMessage)
+      val sparse = Array[Byte](Sketch.TagHllSparse, b.toByte, 0, 0, 0, 0)
+      intercept[SketchMergeException](Sketch.deserialize(sparse))
+      intercept[SketchMergeException](Sketch.mergeSerializedInto(dense, new Hll(16)))
+      intercept[SketchMergeException](Sketch.mergeSerializedInto(sparse, new Hll(16)))
+    }
+  }
+
+  test("stored sparse payloads with unordered or repeated entries decode to their canonical multiset") {
+    // The encoder writes ascending indices, one per register or bit; older or
+    // hand-built payloads may not. The decoder keeps the max rank per
+    // register (HLL) or the set union (LC), as it always did.
+    def hllPayload(b: Int, entries: Seq[(Int, Int)]): Array[Byte] = {
+      val out = java.nio.ByteBuffer.allocate(6 + 4 * entries.size)
+      out.put(Sketch.TagHllSparse).put(b.toByte).putInt(entries.size)
+      entries.foreach { case (idx, r) => out.putInt(idx << 8 | r) }
+      out.array()
+    }
+    def lcPayload(size: Int, bits: Seq[Int]): Array[Byte] = {
+      val out = java.nio.ByteBuffer.allocate(9 + 4 * bits.size)
+      out.put(Sketch.TagLcSparse).putInt(size).putInt(bits.size)
+      bits.foreach(i => out.putInt(i))
+      out.array()
+    }
+    def sameAsCanonical(legacy: Array[Byte], canonical: Array[Byte], empty: => Sketch): Unit = {
+      val want = Sketch.deserialize(canonical)
+      assert(java.util.Arrays.equals(want.serialize(), canonical))
+      for (got <- Seq(Sketch.deserialize(legacy), Sketch.mergeSerializedInto(legacy, empty))) {
+        assert(java.util.Arrays.equals(got.serialize(), canonical))
+        assert(got.estimate == want.estimate)
+      }
+      // and into a sketch that already holds entries
+      val base = filled(empty)
+      val viaLegacy = Sketch.mergeSerializedInto(legacy, Sketch.deserialize(base))
+      val viaCanonical = Sketch.mergeSerializedInto(canonical, Sketch.deserialize(base))
+      assert(java.util.Arrays.equals(viaLegacy.serialize(), viaCanonical.serialize()))
+    }
+    def filled(s: Sketch): Array[Byte] = { (1L to 20L).foreach(v => s.offerHash(hash(v))); s.serialize() }
+
+    val b = 12
+    sameAsCanonical(
+      hllPayload(b, Seq(900 -> 3, 17 -> 2, 900 -> 7, 4000 -> 1, 17 -> 1, 2 -> 5, 900 -> 4)),
+      hllPayload(b, Seq(2 -> 5, 17 -> 2, 900 -> 7, 4000 -> 1)),
+      new Hll(b))
+    sameAsCanonical(
+      lcPayload(4096, Seq(30000, 5, 30000, 1234, 5, 0)),
+      lcPayload(4096, Seq(0, 5, 1234, 30000)),
+      new LinearCounter(4096))
   }
 
   test("LC serialization is representation-independent at the encoding threshold") {
