@@ -9,12 +9,13 @@ import org.apache.spark.sql.SparkSession
   * reflect steady-state throughput (what a long-running cluster job sees).
   */
 object Bench {
-  /** `SPARK_GRAFT_CPUS` as a positive core count, 4 when unset. The count is
-    * written unquoted into the JSON lines and into the artifact file name, so
-    * anything else (`*` is valid for `local[*]`) fails at startup rather than
-    * producing invalid JSON. */
-  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
-    case None => 4
+  /** `SPARK_GRAFT_CPUS` as a positive core count, `default` when unset. The
+    * count is written unquoted into the JSON lines and into the artifact file
+    * name, and `Verify`/`Sf1Bench` put it into `local[n]` and the shuffle
+    * partition count, so anything else (`*` is valid for `local[*]`) fails at
+    * startup rather than producing invalid JSON or failing inside Spark. */
+  private[graft] def parseCpus(raw: Option[String], default: Int = 4): Int = raw match {
+    case None => default
     case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
       throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }

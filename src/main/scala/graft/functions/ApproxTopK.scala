@@ -115,7 +115,7 @@ case class ApproxTopK(
   override def update(buffer: SpaceSaving, input: InternalRow): SpaceSaving = {
     val v = child.eval(input)
     if (v != null) {
-      if (mergeBinary) buffer.mergeInPlace(SpaceSaving.deserialize(v.asInstanceOf[Array[Byte]]))
+      if (mergeBinary) SpaceSaving.mergeSerializedInto(v.asInstanceOf[Array[Byte]], buffer)
       else {
         val w = weightExpr.eval(input)
         // null weight => row contributes nothing (matches null-item skip)
@@ -135,8 +135,8 @@ case class ApproxTopK(
   override def eval(buffer: SpaceSaving): Any = {
     if (buffer.n == 0L) null
     else if (emitBinary) buffer.serialize()
-    else new GenericArrayData(buffer.topK(k).map { case (item, est, err) =>
-      InternalRow(UTF8String.fromString(item), est, err)
+    else new GenericArrayData(buffer.topKItems(k).map { case (item, est, err) =>
+      InternalRow(item, est, err)
     }.toArray[Any])
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import graft.sources.Tables
 
 import org.apache.spark.sql.SparkSession
@@ -74,7 +74,7 @@ object Sf1Bench {
     // r12: honor SPARK_GRAFT_CPUS like Bench, so the sf1 heavies can be
     // measured at 8 vs 32 cores for the scaling table (a hard-coded
     // local[32] made the parallel-speedup question unanswerable)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default = 32)
     val spark = SparkSession.builder().master(s"local[$cpus]").appName("graft-sf1")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

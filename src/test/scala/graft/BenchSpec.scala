@@ -13,4 +13,13 @@ class BenchSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
     }
   }
+
+  test("SPARK_GRAFT_CPUS with a tool's own default (Sf1Bench: 32)") {
+    assert(Bench.parseCpus(None, default = 32) == 32)
+    assert(Bench.parseCpus(Some("8"), default = 32) == 8)
+    for (bad <- Seq("*", "0", "32x")) {
+      val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad), default = 32))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    }
+  }
 }

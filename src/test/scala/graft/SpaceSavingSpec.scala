@@ -1,8 +1,12 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.sketch.{SketchMergeException, SpaceSaving}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SpaceSaving kernel guarantees (exactness, eviction bounds, merge law,
@@ -22,6 +26,97 @@ class SpaceSavingSpec extends AnyFunSuite {
       s"item$k"
     }
     (items, items.groupBy(identity).view.mapValues(_.size.toLong).toMap)
+  }
+
+  /** The wire format written field by field, entries in the given order. */
+  private def payload(cap: Int, n: Long, evicted: Boolean,
+      entries: Seq[(String, Long, Long)]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeByte(SpaceSaving.WireTag)
+    out.writeInt(cap)
+    out.writeLong(n)
+    out.writeBoolean(evicted)
+    out.writeInt(entries.size)
+    entries.foreach { case (item, est, err) =>
+      val b = item.getBytes(UTF_8)
+      out.writeInt(b.length)
+      out.write(b)
+      out.writeLong(est)
+      out.writeLong(err)
+    }
+    out.flush()
+    bos.toByteArray
+  }
+
+  /** A summary as plain data: entries in slot order. */
+  private final case class Ref(cap: Int, n: Long, evicted: Boolean,
+      entries: Vector[(String, Long, Long)]) {
+    def bytes: Array[Byte] = payload(cap, n, evicted, entries.sortWith((a, b) => byteLess(a._1, b._1)))
+  }
+
+  private def byteLess(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0
+
+  private def decode(bytes: Array[Byte]): Ref = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    in.readByte()
+    val (cap, n, evicted, size) = (in.readInt(), in.readLong(), in.readBoolean(), in.readInt())
+    Ref(cap, n, evicted, Vector.fill(size) {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      (new String(b, UTF_8), in.readLong(), in.readLong())
+    })
+  }
+
+  /** The class-doc merge rule over plain maps. */
+  private def refMerge(a: Ref, b: Ref): Ref = {
+    def minOf(r: Ref) = if (r.evicted && r.entries.nonEmpty) r.entries.map(_._2).min else 0L
+    val (minA, minB) = (minOf(a), minOf(b))
+    val am = a.entries.map(e => e._1 -> e).toMap
+    val bm = b.entries.map(e => e._1 -> e).toMap
+    val merged = (am.keySet ++ bm.keySet).toVector.map { k =>
+      (am.get(k), bm.get(k)) match {
+        case (Some((_, e1, r1)), Some((_, e2, r2))) => (k, e1 + e2, r1 + r2)
+        case (Some((_, e1, r1)), None) => (k, e1 + minB, r1 + minB)
+        case (None, Some((_, e2, r2))) => (k, e2 + minA, r2 + minA)
+        case _ => throw new IllegalStateException(k)
+      }
+    }
+    val cap = math.min(a.cap, b.cap)
+    if (merged.size > cap) {
+      val top = merged.sortWith((x, y) => x._2 > y._2 || (x._2 == y._2 && byteLess(x._1, y._1)))
+      Ref(cap, a.n + b.n, evicted = true, top.take(cap))
+    } else Ref(cap, a.n + b.n, a.evicted || b.evicted, merged)
+  }
+
+  /** The offer path with an O(m) minimum scan: the victim is the first
+    * slot with the smallest estimate, and the newcomer takes its slot. */
+  private def refOffers(start: Ref, offers: Seq[(String, Long)]): Ref = {
+    val slots = scala.collection.mutable.ArrayBuffer.from(start.entries)
+    var (n, evicted) = (start.n, start.evicted)
+    for ((item, w) <- offers) {
+      n += w
+      val hit = slots.indexWhere(_._1 == item)
+      if (hit >= 0) slots(hit) = slots(hit).copy(_2 = slots(hit)._2 + w)
+      else if (slots.size < start.cap) slots += ((item, w, 0L))
+      else {
+        var v = 0
+        for (s <- 1 until slots.size) if (slots(s)._2 < slots(v)._2) v = s
+        val min = slots(v)._2
+        slots(v) = (item, min + w, min)
+        evicted = true
+      }
+    }
+    Ref(start.cap, n, evicted, slots.toVector)
+  }
+
+  /** Item names that order differently as UTF-8 bytes and as UTF-16
+    * `String`s (U+E000 vs a surrogate pair), mixed with ASCII ones. */
+  private def itemName(prefix: String, i: Int): String = i % 5 match {
+    case 0 => s"\uE000$prefix$i"
+    case 1 => s"\uD83D\uDE00$prefix$i"
+    case _ => s"$prefix$i"
   }
 
   test("exact when capacity exceeds the distinct count") {
@@ -163,7 +258,32 @@ class SpaceSavingSpec extends AnyFunSuite {
     val e1 = intercept[SketchMergeException](SpaceSaving.deserialize(junk))
     assert(e1.getMessage.contains("wire tag"))
     val trunc = bytes.take(6)
-    intercept[Exception](SpaceSaving.deserialize(trunc))
+    intercept[SketchMergeException](SpaceSaving.deserialize(trunc))
+    // each malformed payload fails the same way on both decode paths, and a
+    // rejected wire merge leaves its target untouched
+    val e = Seq(("a", 1L, 0L), ("b", 2L, 0L))
+    val good = payload(8, 3L, evicted = false, e)
+    val bad = Seq(
+      payload(8, 3L, evicted = false, Seq(("a", 2L, 0L), ("a", 1L, 0L))) -> "twice",
+      payload(8, 5L, evicted = false, Seq(("b", 2L, 0L), ("a", 1L, 0L), ("b", 2L, 0L))) -> "twice",
+      (good :+ 0.toByte) -> "trailing",
+      payload(8, -1L, evicted = false, e) -> "n=-1",
+      good.dropRight(3) -> "truncated",
+      good.dropRight(12) -> "truncated",
+      good.take(20) -> "truncated")
+    for ((b, msg) <- bad) {
+      val d = intercept[SketchMergeException](SpaceSaving.deserialize(b))
+      assert(d.getMessage.contains(msg), d.getMessage)
+      val target = new SpaceSaving(8)
+      target.offer("a")
+      val before = target.serialize()
+      val w = intercept[SketchMergeException](SpaceSaving.mergeSerializedInto(b, target))
+      assert(w.getMessage == d.getMessage)
+      assert(target.serialize().sameElements(before))
+    }
+    // a payload out of byte order (as older versions wrote) still decodes
+    val unordered = payload(8, 3L, evicted = false, e.reverse)
+    assert(SpaceSaving.deserialize(unordered).serialize().sameElements(good))
     // mixed capacities are NOT an error: they trim to the smaller summary
     val a = new SpaceSaving(8); val b = new SpaceSaving(16)
     a.mergeInPlace(b)
@@ -231,5 +351,80 @@ class SpaceSavingSpec extends AnyFunSuite {
     val e3 = intercept[Exception](
       spark.sql("SELECT approx_top_k(42) FROM ss_one").collect())
     assert(e3.getMessage.toLowerCase.contains("string"))
+  }
+
+  test("huge capacities are not presized") {
+    for (cap <- Seq(1 << 30, Int.MaxValue)) {
+      val ss = new SpaceSaving(cap)
+      Seq("a", "b", "a", "c").foreach(ss.offer)
+      val back = SpaceSaving.deserialize(ss.serialize())
+      assert(back.capacity == cap)
+      Seq("d", "a").foreach(back.offer)
+      assert(back.topK(2) == Seq(("a", 3L, 0L), ("b", 1L, 0L)))
+      assert(back.n == 6L)
+      SpaceSaving.mergeSerializedInto(ss.serialize(), back)
+      assert(back.topK(1) == Seq(("a", 5L, 0L)))
+    }
+  }
+
+  test("offer path matches the reference model with its tie rule, byte for byte") {
+    for (cap <- Seq(1, 2, 64, 1024); weighted <- Seq(false, true); seed <- 0 until 3) {
+      val rnd = new scala.util.Random(cap * 31 + seed * 7 + (if (weighted) 1 else 0))
+      val domain = 3 * cap + 5
+      val offers = Seq.fill(if (cap == 1024) 20000 else 4000) {
+        // half uniform, half skewed: evictions, hits and ties on the minimum
+        val i = if (rnd.nextBoolean()) rnd.nextInt(domain)
+          else math.min(domain - 1, (1.0 / rnd.nextDouble() - 1.0).toInt)
+        (itemName("o", i), if (weighted) 1L + rnd.nextInt(4) else 1L)
+      }
+      val (first, second) = offers.splitAt(offers.size / 2)
+      val ss = new SpaceSaving(cap)
+      first.foreach { case (item, w) => ss.offer(UTF8String.fromString(item), w) }
+      val ref = refOffers(Ref(cap, 0L, evicted = false, Vector.empty), first)
+      val bytes = ss.serialize()
+      assert(bytes.sameElements(ref.bytes), s"cap=$cap weighted=$weighted seed=$seed")
+      assert(ref.evicted)
+      // a decoded summary's slots follow payload order
+      val back = SpaceSaving.deserialize(bytes)
+      second.foreach { case (item, w) => back.offer(UTF8String.fromString(item), w) }
+      val ref2 = refOffers(decode(bytes), second)
+      assert(back.serialize().sameElements(ref2.bytes), s"cap=$cap weighted=$weighted seed=$seed")
+    }
+  }
+
+  test("wire merge == mergeInPlace == the class-doc rule, byte for byte") {
+    val caps = Seq(1, 2, 8, 64, 256)
+    for (seed <- 0 until 200) {
+      val rnd = new scala.util.Random(seed)
+      def side(prefix: String): (() => SpaceSaving) = {
+        val cap = caps(rnd.nextInt(caps.size))
+        // domain below capacity: never evicts; above: evicts
+        val domain = if (rnd.nextBoolean()) cap else 4 * cap + 3
+        // flat counts leave ties in estimate at the trim cut
+        val flat = rnd.nextBoolean()
+        val items = Seq.fill(rnd.nextInt(3 * cap + 20)) {
+          val i = if (flat) rnd.nextInt(domain)
+            else math.min(domain - 1, (1.0 / rnd.nextDouble() - 1.0).toInt)
+          itemName(prefix, i)
+        }
+        () => { val s = new SpaceSaving(cap); items.foreach(s.offer); s }
+      }
+      val overlap = rnd.nextBoolean()
+      val (mkA, mkB) = (side("a"), side(if (overlap) "a" else "b"))
+      val (aBytes, bBytes) = (mkA().serialize(), mkB().serialize())
+      val want = refMerge(decode(aBytes), decode(bBytes)).bytes
+      val viaWire = SpaceSaving.mergeSerializedInto(bBytes, mkA()).serialize()
+      val a = mkA()
+      a.mergeInPlace(mkB())
+      val ctx = s"seed=$seed overlap=$overlap"
+      assert(viaWire.sameElements(want), ctx)
+      assert(a.serialize().sameElements(want), ctx)
+      // merging into an empty summary re-serializes to the input bytes
+      val empty = new SpaceSaving(decode(bBytes).cap)
+      assert(SpaceSaving.mergeSerializedInto(bBytes, empty).serialize().sameElements(bBytes), ctx)
+      val empty2 = new SpaceSaving(decode(bBytes).cap)
+      empty2.mergeInPlace(mkB())
+      assert(empty2.serialize().sameElements(bBytes), ctx)
+    }
   }
 }
