@@ -1,9 +1,6 @@
 package graft
 
-import graft.functions.{ApproxDistinct, ApproxQuantiles, ApproxTopK, BloomAgg, CosineSimilarity, HyperplaneLsh, LangId, MightContain, QualityScore, ShingleHashes, SimHash, SketchEstimate, SketchIntersectionEstimate, SketchUnion, ThetaDifference, ThetaEstimate, ThetaFraction, ThetaIntersect, ThetaJaccard, ThetaRetained, ThetaSketchAgg, ThetaUnion}
-import graft.functions.{CmEstimate, CmTotal, CountMinAgg}
-import graft.functions.{AgmsAgg, AgmsF2, AgmsJoinSize}
-import graft.functions.DdQuantiles
+import graft.functions.{AgmsF2, AgmsJoinSize, BloomAgg, CmEstimate, CmTotal, CosineSimilarity, HyperplaneLsh, LangId, MightContain, QualityScore, ShingleHashes, SimHash, SketchAgg, SketchEstimate, SketchIntersectionEstimate, SketchUnion, ThetaDifference, ThetaEstimate, ThetaFraction, ThetaIntersect, ThetaJaccard, ThetaRetained, ThetaUnion}
 import graft.sketch.{DdSketch, KllDoubles, ThetaSketch}
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -29,60 +26,47 @@ object GraftFunctions {
   private def col(e: Expression): Column = GraftBridge.column(e)
   private def expr(c: Column): Expression = GraftBridge.expression(c)
 
-  private def approxDistinctExpr(exprs: Seq[Expression], mergeBinary: Boolean): Expression = {
-    val (c, algo, p) = exprs match {
-      case Seq(c) => (c, Literal("hll"), Literal(-1))
-      case Seq(c, a) => (c, a, Literal(-1))
-      case Seq(c, a, p) => (c, a, p)
-      case _ => throw new IllegalArgumentException(
-        "approx_distinct requires 1 to 3 arguments: (col[, algo[, precision]])")
-    }
-    ApproxDistinct(c, algo, p, mergeBinary = mergeBinary)
-  }
+  /** A declared sketch aggregate ([[graft.functions.SketchAgg.functions]])
+    * called with `args` in SQL argument order. */
+  private def sketch(name: String, args: Expression*): Column =
+    col(SketchAgg.fn(name).build(args).toAggregateExpression())
 
   /** `approx_distinct(col)` with defaults (HLL, b=16). */
-  def approx_distinct(c: Column): Column =
-    col(approxDistinctExpr(Seq(expr(c)), mergeBinary = false).asInstanceOf[ApproxDistinct]
-      .toAggregateExpression())
+  def approx_distinct(c: Column): Column = sketch("approx_distinct", expr(c))
 
   /** `approx_distinct(col, algo, precision)`; algo in {"hll","lc"}; precision
     * -1 = default (HLL b=16 / LC 1,000,000 bytes). */
   def approx_distinct(c: Column, algo: String, precision: Int = -1): Column =
-    col(ApproxDistinct(expr(c), Literal(algo), Literal(precision)).toAggregateExpression())
+    sketch("approx_distinct", expr(c), Literal(algo), Literal(precision))
 
   /** Aggregate-merge of a BINARY serialized-sketch column (our analogue of
     * Spark's `hll_union_agg` convention; the struct path of `approx_distinct`
     * covers the reference's own re-aggregation form). */
-  def sketch_merge_agg(c: Column): Column =
-    col(ApproxDistinct(expr(c), Literal("hll"), Literal(-1), mergeBinary = true)
-      .toAggregateExpression())
+  def sketch_merge_agg(c: Column): Column = sketch("sketch_merge_agg", expr(c))
 
   /** `approx_top_k(item, k, capacity)` — mergeable SpaceSaving heavy
     * hitters (see [[graft.functions.ApproxTopK]]). */
   def approx_top_k(c: Column, k: Int = 10,
       capacity: Int = functions.ApproxTopK.DefaultCapacity): Column =
-    col(ApproxTopK(expr(c), Literal(k), Literal(capacity)).toAggregateExpression())
+    sketch("approx_top_k", expr(c), Literal(k), Literal(capacity))
 
   /** Heavy hitters ranked by a summed integral measure instead of
     * occurrence count (top brands by quantity, top tokens by doc weight). */
   def approx_top_k_weighted(c: Column, weight: Column, k: Int = 10,
       capacity: Int = functions.ApproxTopK.DefaultCapacity): Column =
-    col(ApproxTopK(expr(c), Literal(k), Literal(capacity), weightExpr = expr(weight))
-      .toAggregateExpression())
+    sketch("approx_top_k_weighted", expr(c), expr(weight), Literal(k), Literal(capacity))
 
   /** Serialized SpaceSaving summary of a group, for storing (the heavy-
     * hitter analogue of a stored sketch). */
   def topk_sketch_agg(c: Column,
       capacity: Int = functions.ApproxTopK.DefaultCapacity): Column =
-    col(ApproxTopK(expr(c), Literal(1), Literal(capacity), emitBinary = true)
-      .toAggregateExpression())
+    sketch("topk_sketch_agg", expr(c), Literal(capacity))
 
   /** Aggregate-merge of BINARY serialized SpaceSaving summaries
     * (store-then-merge for heavy hitters). */
   def topk_merge_agg(c: Column, k: Int = 10,
       capacity: Int = functions.ApproxTopK.DefaultCapacity): Column =
-    col(ApproxTopK(expr(c), Literal(k), Literal(capacity), mergeBinary = true)
-      .toAggregateExpression())
+    sketch("topk_merge_agg", expr(c), Literal(k), Literal(capacity))
 
   /** `replicate_moments_agg(h, v, r)` — single-pass per-replicate pseudo-arm
     * moments for the re-randomization test (one R×(count, exact 128-bit sum)
@@ -107,52 +91,45 @@ object GraftFunctions {
     * (see [[graft.functions.ApproxQuantiles]]). */
   def approx_quantiles(c: Column, probs: Seq[Double],
       k: Int = KllDoubles.DefaultK): Column =
-    col(ApproxQuantiles(expr(c), probsLit(probs), Literal(k)).toAggregateExpression())
+    sketch("approx_quantiles", expr(c), probsLit(probs), Literal(k))
 
   /** Serialized KLL sketch of a group, for storing. */
   def kll_sketch_agg(c: Column, k: Int = KllDoubles.DefaultK): Column =
-    col(ApproxQuantiles(expr(c), Literal(null), Literal(k), emitBinary = true)
-      .toAggregateExpression())
+    sketch("kll_sketch_agg", expr(c), Literal(k))
 
   /** Aggregate-merge of BINARY serialized KLL sketches, evaluated at the
     * given probabilities (store-then-merge for quantiles). */
   def kll_merge_agg(c: Column, probs: Seq[Double],
       k: Int = KllDoubles.DefaultK): Column =
-    col(ApproxQuantiles(expr(c), probsLit(probs), Literal(k), mergeBinary = true)
-      .toAggregateExpression())
+    sketch("kll_merge_agg", expr(c), probsLit(probs), Literal(k))
 
   /** `dd_quantiles(x, probs, alpha)` — mergeable DDSketch quantile
     * estimates with a RELATIVE-error guarantee (vs KLL's rank error;
     * see [[graft.functions.DdQuantiles]]). */
   def dd_quantiles(c: Column, probs: Seq[Double],
       alpha: Double = DdSketch.DefaultAlpha): Column =
-    col(DdQuantiles(expr(c), probsLit(probs), Literal(alpha))
-      .toAggregateExpression())
+    sketch("dd_quantiles", expr(c), probsLit(probs), Literal(alpha))
 
   /** Serialized DDSketch of a group, for storing. */
   def dd_sketch_agg(c: Column, alpha: Double = DdSketch.DefaultAlpha): Column =
-    col(DdQuantiles(expr(c), Literal(null), Literal(alpha), emitBinary = true)
-      .toAggregateExpression())
+    sketch("dd_sketch_agg", expr(c), Literal(alpha))
 
   /** Aggregate-merge of BINARY serialized DDSketches, evaluated at the
     * given probabilities (store-then-merge for relative-error
     * quantiles). */
   def dd_merge_agg(c: Column, probs: Seq[Double],
       alpha: Double = DdSketch.DefaultAlpha): Column =
-    col(DdQuantiles(expr(c), probsLit(probs), Literal(alpha),
-      mergeBinary = true).toAggregateExpression())
+    sketch("dd_merge_agg", expr(c), probsLit(probs), Literal(alpha))
 
   /** `theta_sketch_agg(x, k)` — serialized theta sketch of a column
     * (distinct counting + bounded-error set algebra; see
     * [[graft.sketch.ThetaSketch]]). */
   def theta_sketch_agg(c: Column, k: Int = ThetaSketch.DefaultK): Column =
-    col(ThetaSketchAgg(expr(c), Literal(k)).toAggregateExpression())
+    sketch("theta_sketch_agg", expr(c), Literal(k))
 
   /** Aggregate-merge of BINARY serialized theta sketches (store-then-merge
     * for set algebra). */
-  def theta_merge_agg(c: Column): Column =
-    col(ThetaSketchAgg(expr(c), Literal(ThetaSketch.DefaultK), mergeBinary = true)
-      .toAggregateExpression())
+  def theta_merge_agg(c: Column): Column = sketch("theta_merge_agg", expr(c))
 
   /** Distinct-count estimate of a stored theta sketch. */
   def theta_estimate(c: Column): Column = col(ThetaEstimate(expr(c)))
@@ -183,7 +160,7 @@ object GraftFunctions {
     * column (point-frequency estimates; see [[graft.sketch.CountMin]]). */
   def cm_sketch_agg(c: Column, width: Int = graft.sketch.CountMin.DefaultWidth,
       depth: Int = graft.sketch.CountMin.DefaultDepth): Column =
-    col(CountMinAgg(expr(c), Literal(width), Literal(depth)).toAggregateExpression())
+    sketch("cm_sketch_agg", expr(c), Literal(width), Literal(depth))
 
   /** Aggregate-merge of BINARY serialized Count-Min sketches
     * (store-then-merge; additive — follow the append-once store discipline).
@@ -191,22 +168,17 @@ object GraftFunctions {
     * counters genuinely cannot re-bin, so sketches of DIFFERENT shapes in
     * one store raise a [[graft.sketch.SketchMergeException]] at merge time
     * (unlike SpaceSaving/KLL/theta, which widen to the weaker parameter). */
-  def cm_merge_agg(c: Column,
-      width: Int = graft.sketch.CountMin.DefaultWidth,
-      depth: Int = graft.sketch.CountMin.DefaultDepth): Column =
-    col(CountMinAgg(expr(c), Literal(width), Literal(depth),
-      mergeBinary = true).toAggregateExpression())
+  def cm_merge_agg(c: Column): Column = sketch("cm_merge_agg", expr(c))
 
   /** `agms_sketch_agg(x[, width[, depth]])` — serialized Count-Sketch of a
-    * join-key column ([[graft.functions.AgmsAgg]]). */
+    * join-key column (see [[graft.functions.AgmsAgg]]). */
   def agms_sketch_agg(c: Column,
       width: Int = graft.sketch.CountSketch.DefaultWidth,
       depth: Int = graft.sketch.CountSketch.DefaultDepth): Column =
-    col(AgmsAgg(expr(c), Literal(width), Literal(depth)).toAggregateExpression())
+    sketch("agms_sketch_agg", expr(c), Literal(width), Literal(depth))
 
   /** Aggregate-merge of BINARY serialized count-sketches. */
-  def agms_merge_agg(c: Column): Column =
-    col(new AgmsAgg(expr(c)).copy(mergeBinary = true).toAggregateExpression())
+  def agms_merge_agg(c: Column): Column = sketch("agms_merge_agg", expr(c))
 
   /** `agms_join_size(a, b)` — equi-join cardinality estimate from two
     * parallel count-sketches. */
@@ -227,13 +199,12 @@ object GraftFunctions {
     * column (the runtime-filter build side; see [[graft.functions.BloomAgg]]). */
   def bloom_agg(c: Column, numBits: Int = BloomAgg.DefaultNumBits,
       numHashes: Int = BloomAgg.DefaultNumHashes): Column =
-    col(BloomAgg(expr(c), Literal(numBits), Literal(numHashes)).toAggregateExpression())
+    sketch("bloom_agg", expr(c), Literal(numBits), Literal(numHashes))
 
   /** Aggregate-merge of BINARY serialized Bloom filters (bitwise OR). */
   def bloom_merge_agg(c: Column, numBits: Int = BloomAgg.DefaultNumBits,
       numHashes: Int = BloomAgg.DefaultNumHashes): Column =
-    col(BloomAgg(expr(c), Literal(numBits), Literal(numHashes), mergeBinary = true)
-      .toAggregateExpression())
+    sketch("bloom_merge_agg", expr(c), Literal(numBits), Literal(numHashes))
 
   /** `might_contain(bloom, x)` — probe a serialized Bloom filter; false is
     * definitive (no false negatives). */
@@ -286,96 +257,8 @@ object GraftFunctions {
   /** The complete SQL function surface: (name, usage, builder). Consumed by
     * both [[register]] (runtime, FunctionRegistry) and
     * [[GraftExtensions]] (session build time, injectFunction). */
-  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("approx_distinct", "approx_distinct(col[, algo[, precision]]) - HLL/LC distinct sketch",
-      (exprs: Seq[Expression]) => approxDistinctExpr(exprs, mergeBinary = false)),
-    ("sketch_merge_agg", "sketch_merge_agg(bin) - merge serialized sketches",
-      (exprs: Seq[Expression]) => approxDistinctExpr(exprs, mergeBinary = true)),
-    ("approx_top_k", "approx_top_k(item[, k[, capacity]]) - SpaceSaving heavy hitters",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => new ApproxTopK(c)
-        case Seq(c, k) => new ApproxTopK(c, k)
-        case Seq(c, k, cap) => ApproxTopK(c, k, cap)
-        case _ => throw new IllegalArgumentException(
-          "approx_top_k requires 1 to 3 arguments: (item[, k[, capacity]])")
-      }),
-    ("approx_top_k_weighted", "approx_top_k_weighted(item, weight[, k[, capacity]]) - heavy hitters by summed weight",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, w) => ApproxTopK(c, Literal(10), Literal(ApproxTopK.DefaultCapacity), weightExpr = w)
-        case Seq(c, w, k) => ApproxTopK(c, k, Literal(ApproxTopK.DefaultCapacity), weightExpr = w)
-        case Seq(c, w, k, cap) => ApproxTopK(c, k, cap, weightExpr = w)
-        case _ => throw new IllegalArgumentException(
-          "approx_top_k_weighted requires 2 to 4 arguments: (item, weight[, k[, capacity]])")
-      }),
-    ("topk_sketch_agg", "topk_sketch_agg(item[, capacity]) - serialized heavy-hitter summary",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => ApproxTopK(c, Literal(1), Literal(ApproxTopK.DefaultCapacity), emitBinary = true)
-        case Seq(c, cap) => ApproxTopK(c, Literal(1), cap, emitBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "topk_sketch_agg requires 1 or 2 arguments: (item[, capacity])")
-      }),
-    ("topk_merge_agg", "topk_merge_agg(bin[, k[, capacity]]) - merge stored heavy-hitter summaries",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => ApproxTopK(c, Literal(10), Literal(ApproxTopK.DefaultCapacity), mergeBinary = true)
-        case Seq(c, k) => ApproxTopK(c, k, Literal(ApproxTopK.DefaultCapacity), mergeBinary = true)
-        case Seq(c, k, cap) => ApproxTopK(c, k, cap, mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "topk_merge_agg requires 1 to 3 arguments: (bin[, k[, capacity]])")
-      }),
-    ("approx_quantiles", "approx_quantiles(x, probs[, k]) - KLL quantile estimates",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, p) => new ApproxQuantiles(c, p)
-        case Seq(c, p, k) => ApproxQuantiles(c, p, k)
-        case _ => throw new IllegalArgumentException(
-          "approx_quantiles requires 2 or 3 arguments: (x, probs[, k])")
-      }),
-    ("kll_sketch_agg", "kll_sketch_agg(x[, k]) - serialized KLL quantile sketch",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => ApproxQuantiles(c, Literal(null), Literal(KllDoubles.DefaultK), emitBinary = true)
-        case Seq(c, k) => ApproxQuantiles(c, Literal(null), k, emitBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "kll_sketch_agg requires 1 or 2 arguments: (x[, k])")
-      }),
-    ("kll_merge_agg", "kll_merge_agg(bin, probs[, k]) - merge stored KLL sketches",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, p) => ApproxQuantiles(c, p, Literal(KllDoubles.DefaultK), mergeBinary = true)
-        case Seq(c, p, k) => ApproxQuantiles(c, p, k, mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "kll_merge_agg requires 2 or 3 arguments: (bin, probs[, k])")
-      }),
-    ("dd_quantiles", "dd_quantiles(x, probs[, alpha]) - DDSketch RELATIVE-error quantile estimates",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, p) => new DdQuantiles(c, p)
-        case Seq(c, p, a) => DdQuantiles(c, p, a)
-        case _ => throw new IllegalArgumentException(
-          "dd_quantiles requires 2 or 3 arguments: (x, probs[, alpha])")
-      }),
-    ("dd_sketch_agg", "dd_sketch_agg(x[, alpha]) - serialized DDSketch quantile sketch",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => DdQuantiles(c, Literal(null),
-          Literal(DdSketch.DefaultAlpha), emitBinary = true)
-        case Seq(c, a) => DdQuantiles(c, Literal(null), a, emitBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "dd_sketch_agg requires 1 or 2 arguments: (x[, alpha])")
-      }),
-    ("dd_merge_agg", "dd_merge_agg(bin, probs[, alpha]) - merge stored DDSketches",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, p) => DdQuantiles(c, p,
-          Literal(DdSketch.DefaultAlpha), mergeBinary = true)
-        case Seq(c, p, a) => DdQuantiles(c, p, a, mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "dd_merge_agg requires 2 or 3 arguments: (bin, probs[, alpha])")
-      }),
-    ("theta_sketch_agg", "theta_sketch_agg(x[, k]) - serialized theta sketch (distinct + set algebra)",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => new ThetaSketchAgg(c)
-        case Seq(c, k) => ThetaSketchAgg(c, k)
-        case _ => throw new IllegalArgumentException(
-          "theta_sketch_agg requires 1 or 2 arguments: (x[, k])")
-      }),
-    ("theta_merge_agg", "theta_merge_agg(bin) - merge stored theta sketches",
-      arity("theta_merge_agg", 1)(e =>
-        ThetaSketchAgg(e.head, Literal(ThetaSketch.DefaultK), mergeBinary = true))),
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] =
+    SketchAgg.functions.map(f => (f.name, f.usage, f.build _)) ++ Seq(
     ("theta_estimate", "theta_estimate(s) - distinct estimate of a theta sketch",
       arity("theta_estimate", 1)(e => ThetaEstimate(e.head))),
     ("theta_retained", "theta_retained(s) - retained entries of a theta sketch",
@@ -390,61 +273,14 @@ object GraftFunctions {
       arity("theta_difference", 2)(e => ThetaDifference(e(0), e(1)))),
     ("theta_jaccard", "theta_jaccard(a, b) - Jaccard similarity estimate of two theta sketches",
       arity("theta_jaccard", 2)(e => ThetaJaccard(e(0), e(1)))),
-    ("cm_sketch_agg", "cm_sketch_agg(x[, width[, depth]]) - serialized Count-Min frequency sketch",
-      es => (es.length match {
-        case 1 => new CountMinAgg(es.head)
-        case 2 => new CountMinAgg(es(0), es(1))
-        case 3 => CountMinAgg(es(0), es(1), es(2))
-        case _ => throw new IllegalArgumentException(
-          "cm_sketch_agg requires 1 to 3 arguments: (x[, width[, depth]])")
-      }).toAggregateExpression()),
-    // no width/depth: stored sketches carry their shape; mixed shapes can't
-    // re-bin, so they fail the merge with a SketchMergeException
-    ("cm_merge_agg", "cm_merge_agg(bin) - merge stored Count-Min sketches (shapes must match)",
-      es => (es.length match {
-        case 1 => new CountMinAgg(es.head).copy(mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "cm_merge_agg requires exactly 1 argument: (bin)")
-      }).toAggregateExpression()),
     ("cm_estimate", "cm_estimate(bin, key) - point-frequency estimate from a Count-Min sketch",
       arity("cm_estimate", 2)(e => CmEstimate(e(0), e(1)))),
-    ("agms_sketch_agg", "agms_sketch_agg(x[, width[, depth]]) - serialized Count-Sketch (AGMS) of a join-key column",
-      es => (es.length match {
-        case 1 => new AgmsAgg(es.head)
-        case 2 => new AgmsAgg(es(0), es(1))
-        case 3 => AgmsAgg(es(0), es(1), es(2))
-        case _ => throw new IllegalArgumentException(
-          "agms_sketch_agg requires 1 to 3 arguments: (x[, width[, depth]])")
-      }).toAggregateExpression()),
-    ("agms_merge_agg", "agms_merge_agg(bin) - merge stored count-sketches (shapes must match)",
-      es => (es.length match {
-        case 1 => new AgmsAgg(es.head).copy(mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "agms_merge_agg requires exactly 1 argument: (bin)")
-      }).toAggregateExpression()),
     ("agms_join_size", "agms_join_size(a, b) - equi-join cardinality estimate from two parallel count-sketches",
       arity("agms_join_size", 2)(e => AgmsJoinSize(e(0), e(1)))),
     ("agms_f2", "agms_f2(bin) - second-moment (self-join size) estimate of a count-sketch",
       arity("agms_f2", 1)(e => AgmsF2(e.head))),
     ("cm_total", "cm_total(bin) - total offered weight of a Count-Min sketch",
       arity("cm_total", 1)(e => CmTotal(e.head))),
-    ("bloom_agg", "bloom_agg(x[, numBits[, numHashes]]) - build a Bloom filter of a column",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => new BloomAgg(c)
-        case Seq(c, b) => new BloomAgg(c, b)
-        case Seq(c, b, h) => BloomAgg(c, b, h)
-        case _ => throw new IllegalArgumentException(
-          "bloom_agg requires 1 to 3 arguments: (x[, numBits[, numHashes]])")
-      }),
-    ("bloom_merge_agg", "bloom_merge_agg(bin[, numBits[, numHashes]]) - OR-merge stored Bloom filters",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => BloomAgg(c, Literal(BloomAgg.DefaultNumBits),
-          Literal(BloomAgg.DefaultNumHashes), mergeBinary = true)
-        case Seq(c, b) => BloomAgg(c, b, Literal(BloomAgg.DefaultNumHashes), mergeBinary = true)
-        case Seq(c, b, h) => BloomAgg(c, b, h, mergeBinary = true)
-        case _ => throw new IllegalArgumentException(
-          "bloom_merge_agg requires 1 to 3 arguments: (bin[, numBits[, numHashes]])")
-      }),
     ("might_contain", "might_contain(bloom, x) - probe a Bloom filter (no false negatives)",
       arity("might_contain", 2)(e => MightContain(e(0), e(1)))),
     ("simhash", "simhash(tokens) - 64-bit Charikar SimHash",

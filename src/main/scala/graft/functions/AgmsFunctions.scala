@@ -2,130 +2,10 @@ package graft.functions
 
 import graft.sketch.CountSketch
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-
-/** Mutable buffer holding at most one live count-sketch (NULL-for-empty
-  * group, the shared sketch-buffer contract). */
-final class AgmsBuffer(var sketch: CountSketch) extends Serializable
-
-/** `agms_sketch_agg(x[, width[, depth]])` — aggregate a join-key column
-  * into a serialized Count-Sketch ([[graft.sketch.CountSketch]]);
-  * `agms_merge_agg` re-aggregates stored sketches (additive — append-once
-  * store discipline). Two sketches built with the same shape over two
-  * tables' key columns answer `agms_join_size(a, b)` — the equi-join
-  * cardinality estimate a planner prices joins with — and
-  * `agms_f2(bin)` estimates a single column's second moment (skew).
-  * Keys hash with the shared typed kernel, so both sides must sketch the
-  * same key TYPE (cast first if the schemas differ). */
-case class AgmsAgg(
-    child: Expression,
-    widthExpr: Expression,
-    depthExpr: Expression,
-    mergeBinary: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[AgmsBuffer] {
-
-  def this(child: Expression) =
-    this(child, Literal(CountSketch.DefaultWidth), Literal(CountSketch.DefaultDepth))
-  def this(child: Expression, width: Expression) =
-    this(child, width, Literal(CountSketch.DefaultDepth))
-
-  override def children: Seq[Expression] = Seq(child, widthExpr, depthExpr)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), widthExpr = newChildren(1), depthExpr = newChildren(2))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): AgmsAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): AgmsAgg =
-    copy(inputAggBufferOffset = newOffset)
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = if (mergeBinary) "agms_merge_agg" else "agms_sketch_agg"
-
-  @transient private lazy val width: Int =
-    Option(widthExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(CountSketch.DefaultWidth)
-  @transient private lazy val depth: Int =
-    Option(depthExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(CountSketch.DefaultDepth)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!widthExpr.foldable || !depthExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width and depth must be foldable literals")
-    val integral = Seq(widthExpr, depthExpr).forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    if (!integral)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width and depth must be integral literals")
-    if (width < 16 || width > CountSketch.MaxWidth || (width & (width - 1)) != 0)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width must be a power of 2 in [16, ${CountSketch.MaxWidth}], got $width")
-    if (depth < 1 || depth > 16)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: depth must be in [1,16], got $depth")
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case dt if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"agms_merge_agg expects a BINARY serialized count-sketch, got ${dt.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: unsupported input type ${dt.sql}")
-    }
-  }
-
-  @transient private lazy val hashFn: Any => Long =
-    TypedXxHash.kernel(child.dataType, AgmsFunctions.HashSeed)
-
-  override def createAggregationBuffer(): AgmsBuffer = new AgmsBuffer(null)
-
-  override def update(buffer: AgmsBuffer, input: InternalRow): AgmsBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) {
-        val bytes = v.asInstanceOf[Array[Byte]]
-        if (bytes.nonEmpty) {
-          val incoming = CountSketch.deserialize(bytes)
-          if (buffer.sketch == null) buffer.sketch = incoming
-          else buffer.sketch.mergeInPlace(incoming)
-        }
-      } else {
-        if (buffer.sketch == null) buffer.sketch = new CountSketch(depth, width)
-        buffer.sketch.offerHash(hashFn(v))
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: AgmsBuffer, input: AgmsBuffer): AgmsBuffer = {
-    if (input.sketch != null) {
-      if (buffer.sketch == null) buffer.sketch = input.sketch
-      else buffer.sketch.mergeInPlace(input.sketch)
-    }
-    buffer
-  }
-
-  override def eval(buffer: AgmsBuffer): Any =
-    if (buffer.sketch == null) null else buffer.sketch.serialize()
-
-  override def serialize(buffer: AgmsBuffer): Array[Byte] =
-    if (buffer.sketch == null) Array.emptyByteArray else buffer.sketch.serialize()
-
-  override def deserialize(bytes: Array[Byte]): AgmsBuffer =
-    if (bytes.isEmpty) new AgmsBuffer(null)
-    else new AgmsBuffer(CountSketch.deserialize(bytes))
-}
 
 object AgmsFunctions {
   /** Independent from every other family's seed — parallel sketches must

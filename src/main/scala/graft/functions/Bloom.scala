@@ -2,114 +2,10 @@ package graft.functions
 
 import graft.sketch.BloomFilter
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-
-object BloomAgg {
-  /** ~1% FPR at one million elements (10 bits/element, k=7). */
-  val DefaultNumBits = 10000000 - (10000000 % 64) + 64
-  val DefaultNumHashes = 7
-  val HashSeed = 77L // independent from the sketch hash seed
-}
-
-/** `bloom_agg(x[, numBits[, numHashes]])` — build a Bloom filter of a
-  * column's values as a BINARY value. The distributed runtime-filter
-  * primitive: build once over the small/selective side of a join, broadcast
-  * the few-MB filter, and drop non-matching fact rows at the scan — the
-  * shuffle then carries only rows that can match. Merge is bitwise OR, so
-  * partial aggregation is exact and stored filters re-aggregate
-  * (`bloom_merge_agg`) like every other sketch in the engine.
-  *
-  * Same `TypedImperativeAggregate` pattern as [[ApproxDistinct]]; hashes via
-  * [[TypedXxHash]] so [[MightContain]] probes agree by construction.
-  */
-case class BloomAgg(
-    child: Expression,
-    numBitsExpr: Expression,
-    numHashesExpr: Expression,
-    mergeBinary: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter] {
-
-  def this(child: Expression) =
-    this(child, Literal(BloomAgg.DefaultNumBits), Literal(BloomAgg.DefaultNumHashes))
-  def this(child: Expression, numBits: Expression) =
-    this(child, numBits, Literal(BloomAgg.DefaultNumHashes))
-
-  override def children: Seq[Expression] = Seq(child, numBitsExpr, numHashesExpr)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), numBitsExpr = newChildren(1), numHashesExpr = newChildren(2))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = if (mergeBinary) "bloom_merge_agg" else "bloom_agg"
-
-  @transient private lazy val numBits: Int =
-    Option(numBitsExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(BloomAgg.DefaultNumBits)
-  @transient private lazy val numHashes: Int =
-    Option(numHashesExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(BloomAgg.DefaultNumHashes)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!numBitsExpr.foldable || !numHashesExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numBits and numHashes must be foldable literals")
-    if (numBits < 64 || numBits % 64 != 0)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numBits must be a positive multiple of 64, got $numBits")
-    if (numHashes < 1 || numHashes > 16)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: numHashes must be in [1,16], got $numHashes")
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case _ if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"bloom_merge_agg expects a BINARY serialized bloom filter, got ${child.dataType.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"bloom_agg: unsupported input type ${dt.sql}")
-    }
-  }
-
-  @transient private lazy val hashFn: Any => Long =
-    TypedXxHash.kernel(child.dataType, BloomAgg.HashSeed)
-
-  override def createAggregationBuffer(): BloomFilter =
-    new BloomFilter(numBits, numHashes)
-
-  override def update(buffer: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) buffer.mergeInPlace(BloomFilter.deserialize(v.asInstanceOf[Array[Byte]]))
-      else buffer.offerHash(hashFn(v))
-    }
-    buffer
-  }
-
-  override def merge(buffer: BloomFilter, input: BloomFilter): BloomFilter = {
-    buffer.mergeInPlace(input)
-    buffer
-  }
-
-  override def eval(buffer: BloomFilter): Any = buffer.serialize()
-
-  override def serialize(buffer: BloomFilter): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.deserialize(bytes)
-}
 
 /** `might_contain(bloom, x)` — probe a serialized Bloom filter. `false`
   * means x was definitely never inserted (no false negatives); `true` means

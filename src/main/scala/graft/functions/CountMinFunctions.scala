@@ -2,130 +2,10 @@ package graft.functions
 
 import graft.sketch.CountMin
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-
-/** Mutable buffer holding at most one live count-min sketch (NULL-for-empty
-  * group, same contract as the other sketch buffers). */
-final class CountMinBuffer(var sketch: CountMin) extends Serializable
-
-/** `cm_sketch_agg(x[, width[, depth]])` — aggregate a column into a
-  * serialized Count-Min sketch ([[graft.sketch.CountMin]]); `cm_merge_agg`
-  * re-aggregates stored sketches (store-then-merge, additive like
-  * SpaceSaving/KLL). The merge variant takes no width/depth — stored
-  * sketches carry their shape, and counters of different shapes cannot be
-  * re-binned (unlike SpaceSaving/KLL/theta, which widen to the weaker
-  * parameter), so a mixed-shape store fails the merge with a clean
-  * [[graft.sketch.SketchMergeException]]. Probe with the scalar
-  * `cm_estimate(bin, key)` — the key is hashed with the same typed kernel
-  * as the aggregate input, so probes must use the same column TYPE the
-  * sketch was built from. */
-case class CountMinAgg(
-    child: Expression,
-    widthExpr: Expression,
-    depthExpr: Expression,
-    mergeBinary: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMinBuffer] {
-
-  def this(child: Expression) =
-    this(child, Literal(CountMin.DefaultWidth), Literal(CountMin.DefaultDepth))
-  def this(child: Expression, width: Expression) =
-    this(child, width, Literal(CountMin.DefaultDepth))
-
-  override def children: Seq[Expression] = Seq(child, widthExpr, depthExpr)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), widthExpr = newChildren(1), depthExpr = newChildren(2))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(inputAggBufferOffset = newOffset)
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = if (mergeBinary) "cm_merge_agg" else "cm_sketch_agg"
-
-  @transient private lazy val width: Int =
-    Option(widthExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(CountMin.DefaultWidth)
-  @transient private lazy val depth: Int =
-    Option(depthExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(CountMin.DefaultDepth)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!widthExpr.foldable || !depthExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width and depth must be foldable literals")
-    val integral = Seq(widthExpr, depthExpr).forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-    if (!integral)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width and depth must be integral literals")
-    if (width < 16 || width > CountMin.MaxWidth || (width & (width - 1)) != 0)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: width must be a power of 2 in [16, ${CountMin.MaxWidth}], got $width")
-    if (depth < 1 || depth > 16)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: depth must be in [1,16], got $depth")
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case dt if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"cm_merge_agg expects a BINARY serialized count-min sketch, got ${dt.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: unsupported input type ${dt.sql}")
-    }
-  }
-
-  @transient private lazy val hashFn: Any => Long =
-    TypedXxHash.kernel(child.dataType, CountMinFunctions.HashSeed)
-
-  override def createAggregationBuffer(): CountMinBuffer = new CountMinBuffer(null)
-
-  override def update(buffer: CountMinBuffer, input: InternalRow): CountMinBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) {
-        val bytes = v.asInstanceOf[Array[Byte]]
-        if (bytes.nonEmpty)
-          // wire-format merge: no per-row intermediate counter array
-          buffer.sketch = CountMin.mergeSerializedInto(bytes, buffer.sketch)
-      } else {
-        if (buffer.sketch == null) buffer.sketch = new CountMin(depth, width)
-        buffer.sketch.offerHash(hashFn(v))
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: CountMinBuffer, input: CountMinBuffer): CountMinBuffer = {
-    if (input.sketch != null) {
-      if (buffer.sketch == null) buffer.sketch = input.sketch
-      else buffer.sketch.mergeInPlace(input.sketch)
-    }
-    buffer
-  }
-
-  override def eval(buffer: CountMinBuffer): Any =
-    if (buffer.sketch == null) null else buffer.sketch.serialize()
-
-  override def serialize(buffer: CountMinBuffer): Array[Byte] =
-    if (buffer.sketch == null) Array.emptyByteArray else buffer.sketch.serialize()
-
-  override def deserialize(bytes: Array[Byte]): CountMinBuffer =
-    if (bytes.isEmpty) new CountMinBuffer(null)
-    else new CountMinBuffer(CountMin.deserialize(bytes))
-}
 
 object CountMinFunctions {
   /** Independent from the other sketch seeds so a count-min probe can never

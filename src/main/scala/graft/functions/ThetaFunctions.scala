@@ -4,119 +4,9 @@ import graft.sketch.ThetaSketch
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
-
-/** Mutable buffer holding at most one live theta sketch (NULL-for-empty
-  * group, same contract as [[SketchBuffer]]). */
-final class ThetaBuffer(var sketch: ThetaSketch) extends Serializable
-
-/** `theta_sketch_agg(x[, k])` — aggregate a column into a serialized theta
-  * sketch (see [[graft.sketch.ThetaSketch]]); `theta_merge_agg(bin)` —
-  * re-aggregate stored sketches (E3 store-then-merge, the same contract as
-  * `sketch_merge_agg`/`topk_merge_agg`/`kll_merge_agg`). Returns BINARY;
-  * combine with the scalar `theta_estimate` / `theta_union` /
-  * `theta_intersect` / `theta_difference` set algebra.
-  *
-  * One bounded sketch per group crosses the shuffle (8(k+1) bytes of heap +
-  * the dedup table per live group; k=4096 default ≈ 32 KiB retained), on the
-  * same `TypedImperativeAggregate`/ObjectHashAggregateExec path as the
-  * flagship `approx_distinct` (UDAFCardinalityEstimator.java:69-344).
-  */
-case class ThetaSketchAgg(
-    child: Expression,
-    kExpr: Expression,
-    mergeBinary: Boolean = false,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaBuffer] {
-
-  def this(child: Expression) = this(child, Literal(ThetaSketch.DefaultK))
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), kExpr = newChildren(1))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-  override def prettyName: String =
-    if (mergeBinary) "theta_merge_agg" else "theta_sketch_agg"
-
-  @transient private lazy val k: Int =
-    Option(kExpr.eval()).map(_.asInstanceOf[Number].intValue())
-      .getOrElse(ThetaSketch.DefaultK)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!kExpr.foldable)
-      return TypeCheckResult.TypeCheckFailure(s"$prettyName: k must be a foldable literal")
-    kExpr.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => // ok — Number below is safe
-      case dt => return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: k must be an integral literal, got ${dt.sql}")
-    }
-    if (k < ThetaSketch.MinK || k > ThetaSketch.MaxK)
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: k must be in [${ThetaSketch.MinK}, ${ThetaSketch.MaxK}], got $k")
-    child.dataType match {
-      case BinaryType if mergeBinary => TypeCheckResult.TypeCheckSuccess
-      case dt if mergeBinary => TypeCheckResult.TypeCheckFailure(
-        s"theta_merge_agg expects a BINARY serialized theta sketch, got ${dt.sql}")
-      case dt if org.apache.spark.sql.graft.GraftBridge.isAtomic(dt) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: unsupported input type ${dt.sql}")
-    }
-  }
-
-  @transient private lazy val hashFn: Any => Long =
-    TypedXxHash.kernel(child.dataType, ApproxDistinct.HashSeed)
-
-  override def createAggregationBuffer(): ThetaBuffer = new ThetaBuffer(null)
-
-  override def update(buffer: ThetaBuffer, input: InternalRow): ThetaBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      if (mergeBinary) {
-        val bytes = v.asInstanceOf[Array[Byte]]
-        if (bytes.nonEmpty) {
-          val incoming = ThetaSketch.deserialize(bytes)
-          if (buffer.sketch == null) buffer.sketch = incoming
-          else buffer.sketch = ThetaSketch.mergeInto(buffer.sketch, incoming)
-        }
-      } else {
-        if (buffer.sketch == null) buffer.sketch = new ThetaSketch(k)
-        buffer.sketch.offerHash(hashFn(v))
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: ThetaBuffer, input: ThetaBuffer): ThetaBuffer = {
-    if (input.sketch != null) {
-      if (buffer.sketch == null) buffer.sketch = input.sketch
-      else buffer.sketch = ThetaSketch.mergeInto(buffer.sketch, input.sketch)
-    }
-    buffer
-  }
-
-  override def eval(buffer: ThetaBuffer): Any =
-    if (buffer.sketch == null) null else buffer.sketch.serialize()
-
-  override def serialize(buffer: ThetaBuffer): Array[Byte] =
-    if (buffer.sketch == null) Array.emptyByteArray else buffer.sketch.serialize()
-
-  override def deserialize(bytes: Array[Byte]): ThetaBuffer =
-    if (bytes.isEmpty) new ThetaBuffer(null)
-    else new ThetaBuffer(ThetaSketch.deserialize(bytes))
-}
 
 /** Shared input checking/decoding for the scalar theta combinators. Like the
   * HLL scalar functions ([[SketchExprs]]) these run over sketch ROWS (one per

@@ -779,7 +779,7 @@ object SketchQueries {
     slideFrameSketches(events, tsCol, keyCol, valueCol, slideSeconds,
         frameBuckets)(v => cm_sketch_agg(v, width, depth))
       .groupBy("k", "frame")
-      .agg(cm_merge_agg(col("sk"), width, depth).as("cm"))
+      .agg(cm_merge_agg(col("sk")).as("cm"))
       .select((col("frame") * lit(slideSeconds)).as("frame_epoch"),
         col("k").as(keyCol),
         cm_estimate(col("cm"), lit(probe)).as("est"),

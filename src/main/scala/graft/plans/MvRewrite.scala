@@ -210,13 +210,12 @@ final case class MvAggregateRewrite(spec: MvRewrite.SummarySpec)
           // by merge associativity, so this is exact wrt the original
           // plan, not an approximation of it. Only the MV's own sketch
           // geometry (default hll, b=16) is answerable.
-          case ad: graft.functions.ApproxDistinct
-              if !ad.mergeBinary && defaultHllGeometry(ad) =>
+          case ad: graft.functions.SketchAgg
+              if ad.fn.name == "approx_distinct" && defaultHllGeometry(ad) =>
             ad.child match {
               case a: AttributeReference =>
-                spec.sketches.get(a.name).map(c =>
-                  agg(graft.functions.ApproxDistinct(mvAttr(c),
-                    Literal("hll"), Literal(-1), mergeBinary = true)))
+                spec.sketches.get(a.name).map(c => agg(
+                  graft.functions.SketchAgg.fn("sketch_merge_agg").build(Seq(mvAttr(c)))))
               case _ => None
             }
           case _ => None
@@ -224,15 +223,9 @@ final case class MvAggregateRewrite(spec: MvRewrite.SummarySpec)
         rewritten.map(e => castIfNeeded(e, ae.dataType))
     }
 
-  private def defaultHllGeometry(
-      ad: graft.functions.ApproxDistinct): Boolean = {
-    val algoOk = ad.algoExpr.foldable &&
-      Option(ad.algoExpr.eval()).forall(_.toString.equalsIgnoreCase("hll"))
-    val precOk = ad.precisionExpr.foldable &&
-      Option(ad.precisionExpr.eval())
-        .forall(_.asInstanceOf[Number].intValue == -1)
-    algoOk && precOk
-  }
+  private def defaultHllGeometry(ad: graft.functions.SketchAgg): Boolean =
+    ad.args.exists(a =>
+      a.string("algo").equalsIgnoreCase("hll") && a.int("precision") == -1)
 
   /** The measure identity of an aggregate's child: (base column, cast). */
   private def measureOf(e: Expression): Option[(String, Option[DataType])] =

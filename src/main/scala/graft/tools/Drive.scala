@@ -64,6 +64,11 @@ object Drive {
       """SELECT approx_quantiles(l_quantity, array(0.5D, 0.95D)) AS q,
         |       percentile(l_quantity, 0.5) AS exact_p50
         |FROM lineitem""".stripMargin).show(false)
+    // a plain SQL 0.01 is a DECIMAL literal; alpha reads any numeric literal
+    spark.sql(
+      """SELECT dd_quantiles(l_extendedprice, array(0.5D, 0.95D), 0.01) AS dd_q,
+        |       percentile(l_extendedprice, 0.5) AS exact_p50
+        |FROM lineitem""".stripMargin).show(false)
     spark.sql(
       """SELECT count(*) AS bloom_hits FROM lineitem
         |WHERE might_contain((SELECT bloom_agg(l_orderkey, 65536, 7)
@@ -77,6 +82,10 @@ object Drive {
 
     println("== probe: approx_top_k capacity < k ==")
     try spark.sql("SELECT approx_top_k(l_returnflag, 10, 5) FROM lineitem").collect()
+    catch { case e: Exception => println("ERROR(expected): " + e.getMessage.linesIterator.next()) }
+
+    println("== probe: non-integral literal for an integral parameter ==")
+    try spark.sql("SELECT approx_top_k(l_returnflag, 2.5) FROM lineitem").collect()
     catch { case e: Exception => println("ERROR(expected): " + e.getMessage.linesIterator.next()) }
 
     println("== physical plan of grouped sketch agg ==")

@@ -53,6 +53,31 @@ class ApproxDistinctSpec extends AnyFunSuite {
     assert(relErr <= 3 * 1.04 / math.sqrt(1 << 14))
   }
 
+  test("typed literal parameters: a wrong literal type fails analysis naming the parameter") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    Seq((1L, 1.5, "a"), (2L, 2.5, "b"), (3L, 4.0, "a")).toDF("k", "v", "item")
+      .createOrReplaceTempView("typed_params")
+    // call -> the parameter its analysis error names; None: the call runs
+    val table = Seq(
+      "approx_distinct(k, 'hll', 'abc')" -> Some("precision"),
+      "approx_quantiles(v, array(0.5D), '200')" -> Some("k"),
+      "bloom_agg(k, '6400')" -> Some("numBits"),
+      "approx_top_k(item, 2.5)" -> Some("k"),
+      "dd_quantiles(v, array(0.5D), 0.01)" -> None)
+    for ((call, param) <- table) {
+      def run() = spark.sql(s"SELECT $call FROM typed_params").head()
+      param match {
+        case Some(p) =>
+          val e = intercept[org.apache.spark.sql.AnalysisException](run())
+          assert(e.getMessage.contains(s"$p must be an integral literal"), s"$call: ${e.getMessage}")
+        case None => // DECIMAL 0.01 reads as the DOUBLE alpha 0.01
+          assert(run() == spark.sql(
+            "SELECT dd_quantiles(v, array(0.5D), 0.01D) FROM typed_params").head())
+      }
+    }
+  }
+
   test("re-aggregation of stored sketches equals one-shot (E3)") {
     GraftFunctions.register(spark)
     val daily = lineitem.groupBy(to_date(col("l_shipdate")).as("day"))

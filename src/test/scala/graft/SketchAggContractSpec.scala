@@ -1,0 +1,167 @@
+package graft
+
+import graft.sketch.{BloomFilter, KllDoubles, SketchMergeException, SpaceSaving}
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The contract all eight sketch families keep through the one
+  * [[graft.functions.SketchAgg]] node, table-driven over their raw, emit
+  * and merge modes: NULL for empty input, partition-invariant stored bytes,
+  * store-then-merge equal to one-shot, 0 bytes as the empty sketch, and the
+  * merge-mode shape parameters still in force. */
+class SketchAggContractSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = TestSpark.session
+
+  /** One family's SQL: `raw` and `emit` over the columns of [[data]],
+    * `merge` over a BINARY column `s` of stored `emit` sketches. */
+  private case class Family(name: String, raw: String, emit: String, merge: String)
+
+  private val families = Seq(
+    Family("hll", "approx_distinct(k)", "approx_distinct(k).binary", "sketch_merge_agg(s)"),
+    Family("kll", "approx_quantiles(v, array(0.25D, 0.5D))", "kll_sketch_agg(v)",
+      "kll_merge_agg(s, array(0.25D, 0.5D))"),
+    Family("dd", "dd_quantiles(v, array(0.25D, 0.5D))", "dd_sketch_agg(v)",
+      "dd_merge_agg(s, array(0.25D, 0.5D))"),
+    Family("topk", "approx_top_k(item, 5)", "topk_sketch_agg(item)", "topk_merge_agg(s, 5)"),
+    Family("theta", "theta_sketch_agg(k)", "theta_sketch_agg(k)", "theta_merge_agg(s)"),
+    Family("cm", "cm_sketch_agg(k, 256, 4)", "cm_sketch_agg(k, 256, 4)", "cm_merge_agg(s)"),
+    Family("agms", "agms_sketch_agg(k, 256, 4)", "agms_sketch_agg(k, 256, 4)",
+      "agms_merge_agg(s)"),
+    Family("bloom", "bloom_agg(k, 6400, 3)", "bloom_agg(k, 6400, 3)",
+      "bloom_merge_agg(s, 6400, 3)"))
+
+  private val emptyBloom = new BloomFilter(6400, 3).serialize()
+
+  /** 200 rows in 4 groups (few enough that KLL never compacts) plus rows
+    * whose inputs are all NULL. */
+  private lazy val data: DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rows = (0 until 200).map(i =>
+      (i % 4, Option(i * 7919L % 150), Option((i % 37) * 1.5 + 1), Option(s"item${i % 23}")))
+    val nulls = (0 until 8).map(i => (i % 4, Option.empty[Long], Option.empty[Double],
+      Option.empty[String]))
+    (rows ++ nulls).toDF("g", "k", "v", "item")
+  }
+
+  private def sql(df: DataFrame, select: String): Array[Row] = {
+    GraftFunctions.register(spark)
+    df.createOrReplaceTempView("contract_in")
+    spark.sql(s"SELECT $select FROM contract_in").collect()
+  }
+
+  private def stores(f: Family, df: DataFrame = data): DataFrame = {
+    GraftFunctions.register(spark)
+    df.createOrReplaceTempView("contract_src")
+    spark.sql(s"SELECT g, ${f.emit} AS s FROM contract_src GROUP BY g")
+  }
+
+  private def failsWithMergeException(run: => Any): Boolean = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[SketchMergeException] ||
+        String.valueOf(c.getMessage).contains("SketchMergeException"))
+  }
+
+  test("empty and all-NULL groups give NULL in every mode; bloom gives the empty filter") {
+    val s = spark
+    import s.implicits._
+    val binaries = Seq(Option.empty[Array[Byte]], Some(Array.emptyByteArray)).toDF("s")
+    val cases = Seq(
+      ("empty input", data.where("false"), (f: Family) => Seq(f.raw, f.emit)),
+      ("all-NULL group", data.where("k IS NULL"), (f: Family) => Seq(f.raw, f.emit)),
+      ("no stored sketches", binaries.where("false"), (f: Family) => Seq(f.merge)),
+      ("NULL and X'' sketches", binaries, (f: Family) => Seq(f.merge)))
+    for (f <- families; (label, df, exprs) <- cases; e <- exprs(f)) {
+      val out = sql(df, s"$e AS out").head
+      if (f.name == "bloom") {
+        assert(java.util.Arrays.equals(out.getAs[Array[Byte]](0), emptyBloom), s"$label: $e")
+        df.createOrReplaceTempView("contract_probe")
+        assert(spark.sql(s"SELECT NOT might_contain(out, 7L) FROM " +
+          s"(SELECT $e AS out FROM contract_probe)").head().getBoolean(0), s"$label: $e")
+      } else assert(out.isNullAt(0), s"${f.name} $label: $e gave $out")
+    }
+  }
+
+  test("*_sketch_agg bytes are identical at 1 vs 8 partitions") {
+    for (f <- families) {
+      def bytesAt(n: Int): Seq[Array[Byte]] =
+        stores(f, data.repartition(n)).orderBy("g").collect().map(_.getAs[Array[Byte]](1)).toSeq
+      val (one, eight) = (bytesAt(1), bytesAt(8))
+      assert(one.length == 4)
+      if (f.name == "kll") {
+        // KLL keeps level 0 in arrival order: same items, k, n and levels
+        def canon(b: Array[Byte]) = {
+          val s = KllDoubles.deserialize(b)
+          (s.k, s.n, s.compactions, s.levels.map(_.sorted.toSeq).toSeq)
+        }
+        assert(one.map(canon) == eight.map(canon), f.name)
+      } else one.zip(eight).foreach { case (a, b) =>
+        assert(java.util.Arrays.equals(a, b), s"${f.name}: 1 vs 8 partitions differ")
+      }
+    }
+  }
+
+  test("store-then-merge equals one-shot; X'' and NULL stored values merge as empty") {
+    val s = spark
+    import s.implicits._
+    for (f <- families) {
+      val oneShot = sql(data, f.raw).head
+      val stored = stores(f).select("s")
+        .union(Seq(Option.empty[Array[Byte]], Some(Array.emptyByteArray)).toDF("s"))
+      val merged = sql(stored, f.merge).head
+      assert(merged == oneShot, s"${f.name}: merged $merged != one-shot $oneShot")
+    }
+  }
+
+  test("a corrupt non-empty stored sketch still fails with a typed error") {
+    val s = spark
+    import s.implicits._
+    val junk = Seq(Array[Byte](0x7F, 1, 2, 3)).toDF("s")
+    for (f <- families)
+      assert(failsWithMergeException(sql(junk, f.merge)), f.name)
+  }
+
+  test("merge-mode shape parameters govern the result") {
+    val s = spark
+    import s.implicits._
+    // top-k: capacity-1024 stores merged at capacity 256 evict like the kernel
+    val items = (0 until 20000).map(i => s"it${(i * 2654435761L % 997) % (1 + i % 600)}")
+    val topStores = items.grouped(5000).map { part =>
+      val ss = new SpaceSaving(1024); part.foreach(ss.offer); ss.serialize()
+    }.toSeq
+    val topIn = topStores.toDF("s").coalesce(1)
+    def top(select: String) = sql(topIn, s"explode($select) AS e").map(r =>
+      (r.getStruct(0).getString(0), r.getStruct(0).getLong(1), r.getStruct(0).getLong(2))).toSeq
+    val at256 = top("topk_merge_agg(s, 256, 256)")
+    val fold = new SpaceSaving(256)
+    topStores.foreach(SpaceSaving.mergeSerializedInto(_, fold))
+    assert(at256 == fold.topK(256))
+    assert(at256 != top("topk_merge_agg(s, 256, 1024)"), "capacity 256 must evict")
+
+    // KLL: stores of k=64 and k=256, merged at k=16 and k=256
+    val rnd = new scala.util.Random(5)
+    val kllStores = Seq(64, 256).map { k =>
+      val sk = new KllDoubles(k); Seq.fill(5000)(rnd.nextGaussian()).foreach(sk.update)
+      sk.serialize()
+    }
+    val kllIn = kllStores.toDF("s").coalesce(1)
+    for (k <- Seq(16, 256)) {
+      val got = sql(kllIn, s"kll_merge_agg(s, array(0.1D, 0.5D, 0.9D), $k)").head.getSeq[Double](0)
+      val fold = new KllDoubles(k)
+      kllStores.foreach(b => fold.mergeInPlace(KllDoubles.deserialize(b)))
+      assert(got == Seq(0.1, 0.5, 0.9).map(fold.quantile), s"k=$k")
+    }
+  }
+
+  test("bloom and count-min stores of another shape fail the merge") {
+    val s = spark
+    import s.implicits._
+    val bloomStore = sql(data, "bloom_agg(k, 6400, 3) AS s").toSeq.map(_.getAs[Array[Byte]](0))
+    assert(failsWithMergeException(sql(bloomStore.toDF("s"), "bloom_merge_agg(s)")))
+    val cmStore = Seq(256, 512).map(w =>
+      sql(data, s"cm_sketch_agg(k, $w, 4)").head.getAs[Array[Byte]](0))
+    assert(failsWithMergeException(sql(cmStore.toDF("s"), "cm_merge_agg(s)")))
+  }
+}
