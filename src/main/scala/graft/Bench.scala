@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints exactly ONE JSON line. Queries are forced through the `noop` sink —
   * `.count()` would let Catalyst prune the very projections being measured.
@@ -23,22 +21,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The between-query Checkpoints.freeAll sweep logs one
-    // "WARN MapPartitionsRDD: … cannot be recomputed after unpersisting" per
-    // freed block — expected and harmless (frames rebuild from parquet), but
-    // at ~1,600 executions it floods the driver's stderr tail and buries the
-    // single JSON output line (r10: the driver artifact was 100% this spam).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.local(cpus)
 
     def runOnce(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

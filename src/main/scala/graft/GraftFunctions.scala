@@ -239,8 +239,6 @@ object GraftFunctions {
   def sketch_intersection_estimate(a: Column, b: Column): Column =
     col(SketchIntersectionEstimate(expr(a), expr(b)))
 
-  @volatile private var registeredSessions = Set.empty[SparkSession]
-
   private def arity(name: String, n: Int)(
       b: Seq[Expression] => Expression): Seq[Expression] => Expression =
     exprs =>
@@ -317,6 +315,8 @@ object GraftFunctions {
     * FunctionRegistry so plain SQL can call them (the Catalyst analogue of the
     * reference's resolver entry point, UDAFCardinalityEstimator.java:100-148;
     * literal-argument validation happens in checkInputDataTypes).
+    * [[graft.Session.local]] sessions come registered; call this once on a
+    * session the engine did not build.
     *
     * Deliberate in-session shadowing: Spark 4.1 ships DataSketches-backed
     * `theta_sketch_agg`/`theta_union`/`theta_difference` built-ins;
@@ -326,11 +326,9 @@ object GraftFunctions {
     * partition-invariant bytes — mixing two incompatible binary formats
     * under one name prefix would be worse than the shadow. */
   def register(spark: SparkSession): Unit = {
-    if (registeredSessions.contains(spark)) return
     val reg = spark.sessionState.functionRegistry
     sqlFunctions.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    synchronized { registeredSessions += spark }
   }
 }

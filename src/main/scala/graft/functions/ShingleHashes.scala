@@ -55,17 +55,8 @@ object ShingleHashes {
     * by [[ShingleHashes]] and [[MinHashBands]] so both sides of a MinHash
     * pipeline see identical shingle sets. */
   def distinctHashes(u: UTF8String, k: Int): Array[Long] = {
-    val s = u.toString
     // whitespace tokenization, empties dropped (== tokens() semantics)
-    val toks = mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
-      val start = i
-      while (i < n && !Character.isWhitespace(s.charAt(i))) i += 1
-      if (i > start) toks += s.substring(start, i)
-    }
+    val toks = TextKernel.tokenize(u.toString, lower = false)
     val out = mutable.LinkedHashSet.empty[Long]
     def hashOf(sh: String): Long =
       XXH64.hashUTF8String(UTF8String.fromString(sh), 42L)

@@ -57,16 +57,7 @@ object ShingleStrings {
     * twin of [[ShingleHashes.distinctHashes]] (hashing each returned shingle
     * with xxhash64 seed 42 reproduces that function exactly). */
   def distinctShingles(u: UTF8String, k: Int): Array[Any] = {
-    val s = u.toString
-    val toks = mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
-      val start = i
-      while (i < n && !Character.isWhitespace(s.charAt(i))) i += 1
-      if (i > start) toks += s.substring(start, i)
-    }
+    val toks = TextKernel.tokenize(u.toString, lower = false)
     val out = mutable.LinkedHashSet.empty[String]
     if (toks.length < k) {
       out += toks.mkString(" ")

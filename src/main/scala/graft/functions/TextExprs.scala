@@ -12,6 +12,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * per row.
   */
 private[graft] object TextKernel {
+  /** Java regex `\s`, i.e. `[ \t\n\x0B\f\r]`: the separator class of the
+    * composed `TextAnalysis.tokens` (`split(c, "\\s+")`). Not
+    * `Character.isWhitespace`, which also splits on U+001C–U+001F and the
+    * Unicode space separators (U+3000, U+2028, ...). */
+  @inline def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
   /** Whitespace tokens of `s`, optionally lower-cased. */
   def tokenize(s: String, lower: Boolean): Array[String] = {
     val src = if (lower) s.toLowerCase(java.util.Locale.ROOT) else s
@@ -19,9 +25,9 @@ private[graft] object TextKernel {
     var i = 0
     val n = src.length
     while (i < n) {
-      while (i < n && Character.isWhitespace(src.charAt(i))) i += 1
+      while (i < n && isSpace(src.charAt(i))) i += 1
       val start = i
-      while (i < n && !Character.isWhitespace(src.charAt(i))) i += 1
+      while (i < n && !isSpace(src.charAt(i))) i += 1
       if (i > start) out += src.substring(start, i)
     }
     out.toArray
@@ -219,10 +225,10 @@ case class GopherStats(child: Expression)
     var stopMask = 0
     var i = 0
     while (i < n) {
-      while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
+      while (i < n && TextKernel.isSpace(s.charAt(i))) i += 1
       val start = i
       var hasLetter = false
-      while (i < n && !Character.isWhitespace(s.charAt(i))) {
+      while (i < n && !TextKernel.isSpace(s.charAt(i))) {
         if (!hasLetter && Character.isLetter(s.charAt(i))) hasLetter = true
         i += 1
       }

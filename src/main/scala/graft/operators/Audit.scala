@@ -375,7 +375,6 @@ object Audit {
   def madAnomaliesApprox(df: DataFrame, key: String, valueCol: String,
       k: Double = 3.0,
       kllK: Int = graft.sketch.KllDoubles.DefaultK): DataFrame = {
-    graft.GraftFunctions.register(df.sparkSession)
     val med = df.groupBy(col(key))
       .agg(element_at(graft.GraftFunctions.approx_quantiles(
         col(valueCol), Seq(0.5), kllK), 1).as("med"))
@@ -433,7 +432,6 @@ object Audit {
     * costs one Expand pass and exists for the ORACLE, not the operator. */
   def tableStats(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "tableStats needs at least one column")
-    graft.GraftFunctions.register(df.sparkSession)
     val aggs = cols.flatMap { c =>
       Seq(count(col(c)).as(s"__nn_$c"),
         graft.GraftFunctions.approx_distinct(col(c))

@@ -169,7 +169,6 @@ object Dedup {
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Int = 256,
       md5Hash: Boolean = false, numChunks: Int = 0): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val simFn: Column => Column =
       if (md5Hash) GraftFunctions.simhash_md5 else GraftFunctions.simhash
     hammingNearDupPairs(

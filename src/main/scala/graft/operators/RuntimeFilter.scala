@@ -86,7 +86,6 @@ object RuntimeFilter {
     * plain semi-join; hash equality proves the no-false-negative contract
     * end-to-end through the Catalyst wiring. */
   def q64BloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val building = Tables.customer(spark, dir)
       .filter(col("c_mktsegment") === "BUILDING")
     bloomSemiJoin(Tables.orders(spark, dir), building, "o_custkey", "c_custkey")

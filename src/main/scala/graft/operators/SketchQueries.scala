@@ -33,7 +33,6 @@ object SketchQueries {
     * aggregation joined on: mixing countDistinct into the sketch agg makes
     * Spark plan an Expand (2× rows through the imperative aggregate). */
   def q30ApproxGlobal(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val est = Tables.lineitem(spark, dir)
       .agg(approx_distinct(col("l_orderkey")).as("d"))
       .select(col("d.cardinality").as("est"))
@@ -47,7 +46,6 @@ object SketchQueries {
   /** E1: grouped aggregate — partial sketches merge across the shuffle.
     * Exact twin joined on the group key (same Expand rationale as q30). */
   def q31ApproxGrouped(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val est = Tables.lineitem(spark, dir)
       .groupBy("l_returnflag")
       .agg(approx_distinct(col("l_orderkey")).as("d"))
@@ -63,7 +61,6 @@ object SketchQueries {
 
   /** LinearCounting path: low-cardinality domain where LC is near-exact. */
   def q32ApproxLcUsers(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.events(spark, dir)
       .agg(approx_distinct(col("user_id"), "lc").as("d"))
       .select(col("d.cardinality").as("n_users"))
@@ -73,7 +70,6 @@ object SketchQueries {
     * global count without rescanning raw rows (the reference's
     * distinguishing feature, UDAFCardinalityEstimator.java:190-199). */
   def q33SketchReagg(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val est = Tables.lineitem(spark, dir)
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(approx_distinct(col("l_orderkey")).as("sk"))
@@ -90,7 +86,6 @@ object SketchQueries {
     * sketch_union / sketch_estimate — the stub UDF's TODO realized). Each
     * output column is a plain union estimate, so the 1.2% envelope applies. */
   private def dateSliceSketches(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val o = Tables.orders(spark, dir)
     def slice(from: String, to: String) =
       o.filter(col("o_orderdate") >= lit(from).cast("timestamp") &&
@@ -166,7 +161,6 @@ object SketchQueries {
     * The hash of the sketch estimate itself never enters the oracle
     * compare; only the boolean gate does. */
   def q72ThetaSetOps(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val o = Tables.orders(spark, dir)
     def slice(from: String, to: String) =
       o.filter(col("o_orderdate") >= lit(from).cast("timestamp") &&
@@ -208,7 +202,6 @@ object SketchQueries {
     * k=64 < |per-day user set| at sf0.01, so estimation mode genuinely
     * engages; at sf0.001 the sketch is exact and est == J. */
   def q77ThetaUserOverlap(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
     def users(day: String) = ev
       .filter(col("ts") >= lit(day).cast("timestamp") &&
@@ -243,7 +236,6 @@ object SketchQueries {
     * one-row sketch broadcast-joins to the key list — at 100 TB the probe
     * side is whatever key set you ask about, never a rescan. */
   def q78CmFrequencies(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
     val sk = ev.agg(GraftFunctions.cm_sketch_agg(col("event_type")).as("sk"))
     val exact = ev.groupBy("event_type").agg(count(lit(1)).as("n_events"))
@@ -259,7 +251,6 @@ object SketchQueries {
     * which is what makes the streaming surface oracle-checkable. LC with a
     * 64 KiB bitmap is collision-free w.h.p. at per-window cardinalities. */
   def q36WindowedApproxUsers(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val est = graft.streaming.StreamOps.windowedApproxDistinct(
         Tables.events(spark, dir), "ts", "event_type", "user_id", "1 hour",
         algo = "lc", precision = 65536)
@@ -354,7 +345,6 @@ object SketchQueries {
       : DataFrame = {
     require(slideSeconds > 0, s"slide must be positive, got $slideSeconds")
     require(frameBuckets >= 1, s"frameBuckets must be >= 1, got $frameBuckets")
-    GraftFunctions.register(events.sparkSession)
     val slideUs = slideSeconds * 1000000L
     val bucketed = events.select(col(keyCol).as("k"),
       expr(s"unix_micros($tsCol) div $slideUs").as("bucket"),
@@ -435,7 +425,6 @@ object SketchQueries {
       valueCol: String, rangeUs: Long, bucketUs: Long,
       algo: String = "lc", precision: Int = -1): DataFrame = {
     require(rangeUs > 0 && bucketUs > 0, s"bad frame: $rangeUs/$bucketUs")
-    GraftFunctions.register(events.sparkSession)
     val base = events.select(col(keyCol).as("k"),
         expr(s"unix_micros($tsCol)").as("us"), col(valueCol).as("v"))
       .withColumn("bucket", expr(s"us div $bucketUs"))
@@ -849,7 +838,6 @@ object SketchQueries {
     * standard deviation, which the median-of-depth estimate clears with
     * overwhelming probability (validated deterministic at both SFs). */
   def q134JoinSizeEstimate(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val width = graft.sketch.CountSketch.DefaultWidth
     val o = Tables.orders(spark, dir)
     val li = Tables.lineitem(spark, dir)
@@ -877,7 +865,6 @@ object SketchQueries {
     * n/m error, merge law) are property-tested in SketchPropertiesSpec;
     * this gate proves the Catalyst wiring end-to-end. */
   def q62HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.events(spark, dir)
       .agg(approx_top_k(col("event_type"), k = 5, capacity = 1024).as("tk"))
       .select(explode(col("tk")).as("e"))
@@ -893,7 +880,6 @@ object SketchQueries {
     * lossless: strict hash gate. At 100 TB the same plan ships one ≤ 256-
     * entry summary per language per map task across the shuffle. */
   def q63TopkStoreMerge(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.documents(spark, dir).filter(col("text").isNotNull)
       .select(col("lang"), explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .groupBy("lang").agg(topk_sketch_agg(col("tok"), capacity = 256).as("s"))
@@ -923,7 +909,6 @@ object SketchQueries {
     * at 100 TB the join output never needs a per-brand shuffle, just one
     * summary per map task. */
   def q69WeightedTopK(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val li = Tables.lineitem(spark, dir).select(col("l_partkey"),
       col("l_quantity").cast("long").as("qty"))
     val parts = Tables.part(spark, dir).select(col("p_partkey"), col("p_brand"))
@@ -961,7 +946,6 @@ object SketchQueries {
     * exact ranks are recomputed in-query from the raw data; the oracle
     * reproduces the deterministic columns (group, prob, n) and `true`. */
   def q65ApproxQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val probs = Seq(0.25, 0.5, 0.95)
     val eps = 0.04
     val li = Tables.lineitem(spark, dir)
@@ -986,7 +970,6 @@ object SketchQueries {
     * quantiles. Same rank-error gate as q65 (merged-sketch error keeps the
     * KLL bound; ε has ≳3× margin over the measured merged error). */
   def q66KllStoreMerge(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val eps = 0.04
     val li = Tables.lineitem(spark, dir)
     val vhat = li.groupBy(to_date(col("l_shipdate")).as("day"))
@@ -1012,7 +995,6 @@ object SketchQueries {
     * shape to prefer when the window carries only the sketch estimate. */
   def withApproxDistinctOver(df: DataFrame, partitionCols: Seq[String],
       valueCol: String, outCol: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val perGroup = df.groupBy(partitionCols.map(col): _*)
       .agg(approx_distinct(col(valueCol)).as("__sk"))
       .select(partitionCols.map(col) :+ col("__sk.cardinality").as(outCol): _*)
@@ -1032,7 +1014,6 @@ object SketchQueries {
   def sketchMvBatch(batch: DataFrame, groupCol: String, valueCol: String,
       path: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    GraftFunctions.register(spark)
     val partial = batch.groupBy(col(groupCol))
       .agg(approx_distinct(col(valueCol)).getField("binary").as("sk"))
     val merged = graft.streaming.StreamOps

@@ -77,8 +77,6 @@ object MvRewrite {
   def buildSummary(base: DataFrame, dims: Seq[String], sumCols: Seq[String],
       sumScale: Int, minMaxCols: Seq[String], path: String,
       sketchCols: Seq[String] = Nil): Unit = {
-    if (sketchCols.nonEmpty)
-      graft.GraftFunctions.register(base.sparkSession)
     val aggs =
       Seq(count(lit(1)).as("cnt")) ++
         sumCols.map(c => sum(col(c).cast(s"decimal(18,$sumScale)"))

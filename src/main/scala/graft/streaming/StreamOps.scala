@@ -26,7 +26,6 @@ object StreamOps {
       valueCol: String, windowDur: String, slide: Option[String] = None,
       watermark: Option[String] = None, algo: String = "hll",
       precision: Int = -1): DataFrame = {
-    GraftFunctions.register(events.sparkSession)
     val withWm = watermark.map(events.withWatermark(tsCol, _)).getOrElse(events)
     val win = slide match {
       case Some(s) => window(col(tsCol), windowDur, s)
@@ -50,7 +49,6 @@ object StreamOps {
       valueCol: String, windowDur: String, probs: Seq[Double],
       alpha: Double = graft.sketch.DdSketch.DefaultAlpha,
       watermark: Option[String] = None): DataFrame = {
-    GraftFunctions.register(events.sparkSession)
     val withWm = watermark.map(events.withWatermark(tsCol, _)).getOrElse(events)
     withWm.groupBy(window(col(tsCol), windowDur).as("w"), col(keyCol))
       .agg(GraftFunctions.dd_quantiles(col(valueCol), probs, alpha).as("qs"))
@@ -67,7 +65,6 @@ object StreamOps {
   def windowedTopK(events: DataFrame, tsCol: String, itemCol: String,
       windowDur: String, k: Int, capacity: Int = 1024,
       watermark: Option[String] = None): DataFrame = {
-    GraftFunctions.register(events.sparkSession)
     val withWm = watermark.map(events.withWatermark(tsCol, _)).getOrElse(events)
     withWm.groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(GraftFunctions.approx_top_k(col(itemCol), k, capacity).as("topk"))
@@ -397,7 +394,6 @@ object StreamOps {
       valueCol: String, windowDur: String, path: String,
       watermark: Option[String] = None,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    GraftFunctions.register(events.sparkSession)
     val withWm = watermark.map(events.withWatermark(tsCol, _)).getOrElse(events)
     val agg = withWm
       .groupBy(window(col(tsCol), windowDur).as("w"), col(keyCol))
@@ -418,7 +414,6 @@ object StreamOps {
       windowDur: String, path: String, watermark: String,
       capacity: Int = 1024,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    GraftFunctions.register(events.sparkSession)
     val agg = events.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(GraftFunctions.topk_sketch_agg(col(itemCol), capacity).as("sk"))
@@ -782,7 +777,6 @@ object StreamOps {
       k: Int = graft.sketch.ThetaSketch.DefaultK,
       watermark: Option[String] = None,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    GraftFunctions.register(events.sparkSession)
     val withWm = watermark.map(events.withWatermark(tsCol, _)).getOrElse(events)
     val agg = withWm
       .groupBy(window(col(tsCol), windowDur).as("w"), col(keyCol))
@@ -802,7 +796,6 @@ object StreamOps {
       width: Int = graft.sketch.CountMin.DefaultWidth,
       depth: Int = graft.sketch.CountMin.DefaultDepth,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    GraftFunctions.register(events.sparkSession)
     val agg = events.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(GraftFunctions.cm_sketch_agg(col(keyCol), width, depth).as("sk"))
@@ -1111,7 +1104,6 @@ object StreamOps {
       windowDur: String, path: String, watermark: String,
       k: Int = graft.sketch.KllDoubles.DefaultK,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    GraftFunctions.register(events.sparkSession)
     val agg = events.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur).as("w"))
       .agg(GraftFunctions.kll_sketch_agg(col(valueCol), k).as("sk"))

@@ -3,7 +3,6 @@ package graft.tools
 import graft.GraftFunctions
 import graft.sources.Tables
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev smoke CLI: drives the engine's public surface (SQL registration,
@@ -13,12 +12,7 @@ import org.apache.spark.sql.functions._
 object Drive {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]").appName("graft-drive")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
+    val spark = graft.Session.local(4)
     import GraftFunctions._
 
     val li = Tables.lineitem(spark, sf)

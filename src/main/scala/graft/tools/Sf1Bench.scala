@@ -75,13 +75,7 @@ object Sf1Bench {
     // measured at 8 vs 32 cores for the scaling table (a hard-coded
     // local[32] made the parallel-speedup question unanswerable)
     val cpus = Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"), default = 32)
-    val spark = SparkSession.builder().master(s"local[$cpus]").appName("graft-sf1")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(cpus)
     if (!new java.io.File(s"$Out/lineitem.parquet").exists()) generate(spark)
     if (!new java.io.File(s"$Out/events.parquet").exists()) generateEvents(spark)
     if (!new java.io.File(s"$Out/embeddings.parquet").exists())

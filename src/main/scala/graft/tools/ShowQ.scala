@@ -1,14 +1,8 @@
 package graft.tools
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 object ShowQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]").appName("graft-show")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     for (dir <- args.tail) {
       println(s"== ${args(0)} @ $dir ==")
       SparkEntry.queries(args(0))(spark, dir).show(50, false)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.GraftFunctions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput stress: distinct-count aggregates over a generated N-row
@@ -13,12 +12,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000000L)
     val d = if (args.length > 1) args(1).toLong else 10000000L
-    val spark = SparkSession.builder().master("local[32]").appName("graft-stress")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "8g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
+    val spark = graft.Session.local(32)
 
     val df = spark.range(n).select((col("id") % d).as("v"))
     def time(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {

@@ -2,25 +2,16 @@ package graft.tools
 
 import graft.SparkEntry
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev profiling CLI: time one declared query and dump its physical plan.
-  * Usage: sbt "runMain graft.tools.TimeQuery q52_embedding_near_dup /root/testdata/sf0.1 [runs]"
+/** Dev profiling CLI: time declared queries and print each one's physical
+  * plan; `runs` = 0 prints the plans only.
+  * Usage: sbt "runMain graft.tools.TimeQuery q52_embedding_near_dup[,q2,...] /root/testdata/sf0.1 [runs]"
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq // one or many (comma-separated)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().master("local[32]").appName("graft-time")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = graft.Session.local(32)
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       for (i <- 1 to runs) {
@@ -34,9 +25,8 @@ object TimeQuery {
         graft.plans.Checkpoints.freeAll(spark)
         println(f"[$name run $i] plan-build ${(tPlan - t0) / 1e9}%.3f s, execute ${(tExec - tPlan) / 1e9}%.3f s")
       }
-      if (names.size == 1)
-        println(fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode))
+      println(fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode))
     }
     spark.stop()
   }

@@ -117,6 +117,7 @@ class Round12OpsSpec extends AnyFunSuite {
 
   test("shingle_strings ≡ array_distinct(shingles(tokens(text))) on edge cases") {
     import graft.operators.{Dedup, TextAnalysis}
+    import org.apache.spark.unsafe.types.UTF8String
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "a b a b a b", // repeated shingles → dedup order matters
@@ -124,24 +125,37 @@ class Round12OpsSpec extends AnyFunSuite {
       "single",
       "", // no tokens → one empty shingle
       "   leading and   multiple   spaces\ttabs\nnewlines  ",
-      "x y z x y z x y z")
+      "x y z x y z x y z",
+      // U+3000, U+2028 and U+001C are Character.isWhitespace but not regex
+      // \s; U+00A0 is neither: all four stay inside a token
+      "alpha\u3000beta gamma\u2028delta\u001Cepsilon zeta\u00A0eta theta iota",
+      "\u3000 lead  \t\u001C  tail \u2028 end")
     val df = texts.toDF("text")
+    val toks = TextAnalysis.tokens(col("text"))
     val composed = df.select(col("text"),
-      array_distinct(Dedup.shingles(TextAnalysis.tokens(col("text")), 3)).as("sh"))
+      array_distinct(Dedup.shingles(toks, 3)).as("sh"), Dedup.shingles(toks, 3).as("all"))
     val kernel = df.select(col("text"),
       org.apache.spark.sql.graft.GraftBridge.column(
         graft.functions.ShingleStrings(
-          org.apache.spark.sql.graft.GraftBridge.expression(col("text")), 3)).as("sh"))
-    val a = composed.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    val b = kernel.collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
+          org.apache.spark.sql.graft.GraftBridge.expression(col("text")), 3)).as("sh"),
+      TextAnalysis.wordShingles(col("text"), 3).as("all"))
+    def rows(d: DataFrame) = d.collect().map(r =>
+      r.getString(0) -> (r.getSeq[String](1), r.getSeq[String](2))).toMap
+    val a = rows(composed)
+    val b = rows(kernel)
     assert(a == b) // same shingles, same order (array_distinct keeps first occurrence)
-    // and the hash twin sees exactly these shingles
-    val viaHash = graft.functions.ShingleHashes.distinctHashes(
-      org.apache.spark.unsafe.types.UTF8String.fromString(texts.head), 3).toSeq
-    val hashed = b(texts.head).map(s =>
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
-        org.apache.spark.unsafe.types.UTF8String.fromString(s), 42L))
-    assert(viaHash == hashed)
+    val viaHashes = df.select(col("text"), GraftFunctions.shingle_hashes(col("text"), 3))
+      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+    texts.foreach { t =>
+      assert(graft.functions.TextKernel.tokenize(t, lower = false).toSeq ==
+        t.split("\\s+").filter(_.nonEmpty).toSeq, t)
+      // and the hash twin sees exactly these shingles
+      val viaHash = viaHashes(t)
+      val hashed = b(t)._1.map(s =>
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+          UTF8String.fromString(s), 42L))
+      assert(viaHash == hashed, t)
+    }
   }
 
   test("nano_units + nano_d2 ≡ the aggregate(zip_with(...)) decimal chain") {
