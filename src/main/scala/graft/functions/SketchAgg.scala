@@ -305,12 +305,9 @@ abstract class SketchKernel[S <: AnyRef] {
   def merge(into: S, in: S): S
   def serialize(s: S): Array[Byte]
   def deserialize(bytes: Array[Byte]): S
-  /** Merge one stored sketch into `into` (null: nothing yet); families with
-    * a wire-format merge override the deserialize-then-merge default. */
-  def mergeSerialized(bytes: Array[Byte], into: S): S = {
-    val in = deserialize(bytes)
-    if (into == null) in else merge(into, in)
-  }
+  /** Merge one stored sketch into `into` (null: nothing yet), read straight
+    * from its wire bytes; a rejected payload leaves `into` unchanged. */
+  def mergeSerialized(bytes: Array[Byte], into: S): S
   /** The raw- and merge-mode result; the emit modes return [[serialize]]. */
   def result(s: S): Any = serialize(s)
   /** A sketch that counted nothing evaluates to NULL, like an empty group. */
@@ -363,7 +360,7 @@ object ApproxDistinct extends SketchFamily("col", "sketch",
     def merge(into: Sketch, in: Sketch): Sketch = { into.mergeInPlace(in); into }
     def serialize(s: Sketch): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): Sketch = Sketch.deserialize(bytes)
-    override def mergeSerialized(bytes: Array[Byte], into: Sketch): Sketch =
+    def mergeSerialized(bytes: Array[Byte], into: Sketch): Sketch =
       Sketch.mergeSerializedInto(bytes, into)
     override def result(s: Sketch): Any =
       InternalRow(UTF8String.fromString(s.algo), s.estimate, s.serialize())
@@ -436,6 +433,8 @@ object ApproxQuantiles
       def merge(into: KllDoubles, in: KllDoubles): KllDoubles = { into.mergeInPlace(in); into }
       def serialize(s: KllDoubles): Array[Byte] = s.serialize()
       def deserialize(bytes: Array[Byte]): KllDoubles = KllDoubles.deserialize(bytes)
+      def mergeSerialized(bytes: Array[Byte], into: KllDoubles): KllDoubles =
+        KllDoubles.mergeSerializedInto(bytes, into)
       protected def quantile(s: KllDoubles, p: Double): Double = s.quantile(p)
       protected def count(s: KllDoubles): Long = s.n
     }
@@ -462,6 +461,8 @@ object DdQuantiles
       def merge(into: DdSketch, in: DdSketch): DdSketch = { into.mergeInPlace(in); into }
       def serialize(s: DdSketch): Array[Byte] = s.serialize()
       def deserialize(bytes: Array[Byte]): DdSketch = DdSketch.deserialize(bytes)
+      def mergeSerialized(bytes: Array[Byte], into: DdSketch): DdSketch =
+        DdSketch.mergeSerializedInto(bytes, into)
       protected def quantile(s: DdSketch, p: Double): Double = s.quantile(p)
       protected def count(s: DdSketch): Long = s.n
     }
@@ -515,7 +516,7 @@ object ApproxTopK extends SketchFamily("item", "summary",
     def merge(into: SpaceSaving, in: SpaceSaving): SpaceSaving = { into.mergeInPlace(in); into }
     def serialize(s: SpaceSaving): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): SpaceSaving = SpaceSaving.deserialize(bytes)
-    override def mergeSerialized(bytes: Array[Byte], into: SpaceSaving): SpaceSaving =
+    def mergeSerialized(bytes: Array[Byte], into: SpaceSaving): SpaceSaving =
       SpaceSaving.mergeSerializedInto(bytes, into)
     override def result(s: SpaceSaving): Any =
       new GenericArrayData(s.topKItems(k).map { case (item, est, err) =>
@@ -547,6 +548,8 @@ object ThetaSketchAgg extends SketchFamily("x", "theta sketch",
     def merge(into: ThetaSketch, in: ThetaSketch): ThetaSketch = ThetaSketch.mergeInto(into, in)
     def serialize(s: ThetaSketch): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): ThetaSketch = ThetaSketch.deserialize(bytes)
+    def mergeSerialized(bytes: Array[Byte], into: ThetaSketch): ThetaSketch =
+      ThetaSketch.mergeSerializedInto(bytes, into)
   }
 }
 
@@ -583,7 +586,7 @@ object CountMinAgg extends SketchFamily("x", "count-min sketch",
     def merge(into: CountMin, in: CountMin): CountMin = { into.mergeInPlace(in); into }
     def serialize(s: CountMin): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): CountMin = CountMin.deserialize(bytes)
-    override def mergeSerialized(bytes: Array[Byte], into: CountMin): CountMin =
+    def mergeSerialized(bytes: Array[Byte], into: CountMin): CountMin =
       CountMin.mergeSerializedInto(bytes, into)
   }
 }
@@ -609,6 +612,8 @@ object AgmsAgg extends SketchFamily("x", "count-sketch",
     def merge(into: CountSketch, in: CountSketch): CountSketch = { into.mergeInPlace(in); into }
     def serialize(s: CountSketch): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): CountSketch = CountSketch.deserialize(bytes)
+    def mergeSerialized(bytes: Array[Byte], into: CountSketch): CountSketch =
+      CountSketch.mergeSerializedInto(bytes, into)
   }
 }
 
@@ -645,5 +650,7 @@ object BloomAgg extends SketchFamily("x", "bloom filter",
     def merge(into: BloomFilter, in: BloomFilter): BloomFilter = { into.mergeInPlace(in); into }
     def serialize(s: BloomFilter): Array[Byte] = s.serialize()
     def deserialize(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
+    def mergeSerialized(bytes: Array[Byte], into: BloomFilter): BloomFilter =
+      BloomFilter.mergeSerializedInto(bytes, into)
   }
 }

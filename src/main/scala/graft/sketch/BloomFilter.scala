@@ -69,13 +69,9 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
   }
 
   def serialize(): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(1 + 4 + 4 + 8 + words.length * 8)
-    buf.put(BloomFilter.WireTag)
-    buf.putInt(numBits)
-    buf.putInt(numHashes)
-    buf.putLong(n)
-    var i = 0
-    while (i < words.length) { buf.putLong(words(i)); i += 1 }
+    val buf = java.nio.ByteBuffer.allocate(BloomFilter.HeaderBytes + words.length * 8)
+    buf.put(BloomFilter.WireTag).putInt(numBits).putInt(numHashes).putLong(n)
+    buf.asLongBuffer().put(words)
     buf.array()
   }
 }
@@ -83,24 +79,55 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
 object BloomFilter {
   val WireTag: Byte = 0x42 // 'B'
 
-  def deserialize(bytes: Array[Byte]): BloomFilter = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-    val tag = buf.get()
-    if (tag != WireTag)
+  private val HeaderBytes = 1 + 4 + 4 + 8
+
+  /** Validate the wire header and the exact length; return (numBits,
+    * numHashes, n). Shared by [[deserialize]] and [[mergeSerializedInto]]. */
+  private def readHeader(bytes: Array[Byte]): (Int, Int, Long) = {
+    if (bytes.length >= 1 && bytes(0) != WireTag)
       throw new SketchMergeException(
-        f"not a bloom filter: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
-    val numBits = buf.getInt
-    val numHashes = buf.getInt
+        f"not a bloom filter: wire tag 0x${bytes(0)}%02x (expected 0x$WireTag%02x)")
+    if (bytes.length < HeaderBytes)
+      throw new SketchMergeException(s"corrupted bloom payload: ${bytes.length} bytes")
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    val numBits = buf.getInt(1)
+    val numHashes = buf.getInt(5)
     if (numBits < 64 || numBits % 64 != 0 || numHashes < 1 || numHashes > 16)
       throw new SketchMergeException(
         s"corrupted bloom payload: numBits=$numBits numHashes=$numHashes")
-    if (bytes.length != 1 + 4 + 4 + 8 + (numBits / 64) * 8)
+    if (bytes.length != HeaderBytes + (numBits / 64) * 8)
       throw new SketchMergeException(
         s"corrupted bloom payload: ${bytes.length} bytes for numBits=$numBits")
+    (numBits, numHashes, buf.getLong(9))
+  }
+
+  private def wordView(bytes: Array[Byte]): java.nio.LongBuffer =
+    java.nio.ByteBuffer.wrap(bytes, HeaderBytes, bytes.length - HeaderBytes).asLongBuffer()
+
+  def deserialize(bytes: Array[Byte]): BloomFilter = {
+    val (numBits, numHashes, n) = readHeader(bytes)
     val bf = new BloomFilter(numBits, numHashes)
-    bf.n = buf.getLong
-    var i = 0
-    while (i < bf.words.length) { bf.words(i) = buf.getLong; i += 1 }
+    bf.n = n
+    wordView(bytes).get(bf.words)
     bf
+  }
+
+  /** Merge a SERIALIZED filter directly into `target` (null: decode it) —
+    * the bitwise-OR twin of [[CountMin.mergeSerializedInto]]: no decoded
+    * bit array per input row in `bloom_merge_agg`. The same validation,
+    * bits and count as deserialize + mergeInPlace; a rejected payload
+    * leaves `target` unchanged. */
+  def mergeSerializedInto(bytes: Array[Byte], target: BloomFilter): BloomFilter = {
+    if (target == null) return deserialize(bytes)
+    val (numBits, numHashes, n) = readHeader(bytes)
+    if (numBits != target.numBits || numHashes != target.numHashes)
+      throw new SketchMergeException(
+        s"cannot merge bloom filters of different shape: " +
+          s"(${target.numBits},${target.numHashes}) vs ($numBits,$numHashes)")
+    target.n += n
+    val lb = wordView(bytes)
+    var i = 0
+    while (i < target.words.length) { target.words(i) |= lb.get(i); i += 1 }
+    target
   }
 }

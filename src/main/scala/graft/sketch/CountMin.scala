@@ -1,7 +1,5 @@
 package graft.sketch
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-
 /** Count-Min sketch (Cormode, Muthukrishnan 2005 "An Improved Data Stream
   * Summary: The Count-Min Sketch and its Applications") — point-frequency
   * estimates over arbitrary keys in `depth × width` counters, the
@@ -78,18 +76,8 @@ final class CountMin(val depth: Int, val width: Int) extends Serializable {
     n += other.n
   }
 
-  def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(17 + 8 * counters.length)
-    val out = new DataOutputStream(bos)
-    out.writeByte(CountMin.WireTag)
-    out.writeInt(depth)
-    out.writeInt(width)
-    out.writeLong(n)
-    var i = 0
-    while (i < counters.length) { out.writeLong(counters(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  def serialize(): Array[Byte] =
+    CounterWire.serialize(CountMin.WireTag, depth, width, n, counters)
 }
 
 object CountMin {
@@ -101,35 +89,14 @@ object CountMin {
     * rather than OOMing inside an executor. */
   val MaxWidth = 1 << 22
 
-  /** Validate the wire header and return (depth, width, n). Shared by
-    * [[deserialize]] and [[mergeSerializedInto]]. */
-  private def readHeader(bytes: Array[Byte]): (Int, Int, Long) = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val tag = bb.get()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a count-min sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
-    val depth = bb.getInt
-    val width = bb.getInt
-    if (depth < 1 || depth > 16 || width < 16 || width > MaxWidth ||
-        (width & (width - 1)) != 0)
-      throw new SketchMergeException(s"corrupted count-min sketch: ${depth}x$width")
-    if (bytes.length != 17 + 8 * depth * width)
-      throw new SketchMergeException(
-        s"corrupted count-min sketch: ${bytes.length} bytes for ${depth}x$width")
-    val n = bb.getLong
-    if (n < 0) throw new SketchMergeException(s"corrupted count-min sketch: n=$n")
-    (depth, width, n)
-  }
+  private def readHeader(bytes: Array[Byte]): (Int, Int, Long) =
+    CounterWire.readHeader(bytes, WireTag, "count-min sketch", MaxWidth)
 
   def deserialize(bytes: Array[Byte]): CountMin = {
     val (depth, width, n) = readHeader(bytes)
     val cm = new CountMin(depth, width)
     cm.n = n
-    // bulk long view instead of a DataInputStream (which reads byte-at-a-time
-    // through a stream per long — measurable at 20k counters per sketch)
-    java.nio.ByteBuffer.wrap(bytes, 17, 8 * cm.counters.length)
-      .asLongBuffer().get(cm.counters)
+    CounterWire.counters(bytes).get(cm.counters)
     cm
   }
 
@@ -146,13 +113,54 @@ object CountMin {
         s"cannot merge count-min sketches of different shape: " +
           s"${target.depth}x${target.width} vs ${depth}x$width")
     target.n += n
-    val lb = java.nio.ByteBuffer.wrap(bytes, 17, 8 * target.counters.length)
-      .asLongBuffer()
-    var i = 0
-    while (i < target.counters.length) {
-      target.counters(i) += lb.get(i)
-      i += 1
-    }
+    CounterWire.addInto(bytes, target.counters)
     target
+  }
+}
+
+/** The wire layout of both counter matrices, [[CountMin]] and
+  * [[CountSketch]]: tag, depth, width, n, then the depth × width counters
+  * (big-endian). */
+private[sketch] object CounterWire {
+  private val HeaderBytes = 1 + 4 + 4 + 8
+
+  def serialize(tag: Byte, depth: Int, width: Int, n: Long, counters: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(HeaderBytes + 8 * counters.length)
+    bb.put(tag).putInt(depth).putInt(width).putLong(n)
+    bb.asLongBuffer().put(counters)
+    bb.array()
+  }
+
+  /** Validate the header and the exact length of a `what` payload; return
+    * (depth, width, n). */
+  def readHeader(bytes: Array[Byte], tag: Byte, what: String, maxWidth: Int): (Int, Int, Long) = {
+    if (bytes.length >= 1 && bytes(0) != tag)
+      throw new SketchMergeException(
+        f"not a $what: wire tag 0x${bytes(0)}%02x (expected 0x$tag%02x)")
+    if (bytes.length < HeaderBytes)
+      throw new SketchMergeException(s"corrupted $what: ${bytes.length} bytes")
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val depth = bb.getInt(1)
+    val width = bb.getInt(5)
+    if (depth < 1 || depth > 16 || width < 16 || width > maxWidth ||
+        (width & (width - 1)) != 0)
+      throw new SketchMergeException(s"corrupted $what: ${depth}x$width")
+    if (bytes.length != HeaderBytes + 8 * depth * width)
+      throw new SketchMergeException(
+        s"corrupted $what: ${bytes.length} bytes for ${depth}x$width")
+    val n = bb.getLong(9)
+    if (n < 0) throw new SketchMergeException(s"corrupted $what: n=$n")
+    (depth, width, n)
+  }
+
+  /** The counters of a validated payload. */
+  def counters(bytes: Array[Byte]): java.nio.LongBuffer =
+    java.nio.ByteBuffer.wrap(bytes, HeaderBytes, bytes.length - HeaderBytes).asLongBuffer()
+
+  /** Add a validated payload's counters into `into`, element by element. */
+  def addInto(bytes: Array[Byte], into: Array[Long]): Unit = {
+    val lb = counters(bytes)
+    var i = 0
+    while (i < into.length) { into(i) += lb.get(i); i += 1 }
   }
 }

@@ -1,7 +1,5 @@
 package graft.sketch
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-
 /** Count-Sketch / fast-AGMS (Charikar–Chen–Farach-Colton 2002 "Finding
   * frequent items in data streams"; Cormode–Garofalakis 2005 "Sketching
   * streams through the net" for the join-size use) — `depth × width` SIGNED
@@ -110,18 +108,8 @@ final class CountSketch(val depth: Int, val width: Int) extends Serializable {
     n += other.n
   }
 
-  def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(17 + 8 * counters.length)
-    val out = new DataOutputStream(bos)
-    out.writeByte(CountSketch.WireTag)
-    out.writeInt(depth)
-    out.writeInt(width)
-    out.writeLong(n)
-    var i = 0
-    while (i < counters.length) { out.writeLong(counters(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
-  }
+  def serialize(): Array[Byte] =
+    CounterWire.serialize(CountSketch.WireTag, depth, width, n, counters)
 }
 
 object CountSketch {
@@ -154,25 +142,31 @@ object CountSketch {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  private def readHeader(bytes: Array[Byte]): (Int, Int, Long) =
+    CounterWire.readHeader(bytes, WireTag, "count-sketch", MaxWidth)
+
   def deserialize(bytes: Array[Byte]): CountSketch = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a count-sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
-    val depth = in.readInt()
-    val width = in.readInt()
-    if (depth < 1 || depth > 16 || width < 16 || width > MaxWidth ||
-        (width & (width - 1)) != 0)
-      throw new SketchMergeException(s"corrupted count-sketch: ${depth}x$width")
-    if (bytes.length != 17 + 8 * depth * width)
-      throw new SketchMergeException(
-        s"corrupted count-sketch: ${bytes.length} bytes for ${depth}x$width")
+    val (depth, width, n) = readHeader(bytes)
     val cs = new CountSketch(depth, width)
-    cs.n = in.readLong()
-    var i = 0
-    while (i < cs.counters.length) { cs.counters(i) = in.readLong(); i += 1 }
-    if (cs.n < 0) throw new SketchMergeException(s"corrupted count-sketch: n=${cs.n}")
+    cs.n = n
+    CounterWire.counters(bytes).get(cs.counters)
     cs
+  }
+
+  /** Merge a SERIALIZED sketch directly into `target` (null: decode it) —
+    * the counter-add twin of [[CountMin.mergeSerializedInto]]: no decoded
+    * counter array per input row in `agms_merge_agg`. The same validation,
+    * counters and total weight as deserialize + mergeInPlace; a rejected
+    * payload leaves `target` unchanged. */
+  def mergeSerializedInto(bytes: Array[Byte], target: CountSketch): CountSketch = {
+    if (target == null) return deserialize(bytes)
+    val (depth, width, n) = readHeader(bytes)
+    if (depth != target.depth || width != target.width)
+      throw new SketchMergeException(
+        s"cannot merge count-sketches of different shape: " +
+          s"${target.depth}x${target.width} vs ${depth}x$width")
+    target.n += n
+    CounterWire.addInto(bytes, target.counters)
+    target
   }
 }

@@ -1,8 +1,6 @@
 package graft.sketch
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
-
-import scala.collection.mutable
+import java.nio.ByteBuffer
 
 /** DDSketch — relative-error quantile sketch (Masson, Rim & Lee,
   * "DDSketch: a fast and fully-mergeable quantile sketch with
@@ -24,13 +22,22 @@ import scala.collection.mutable
   * Mergeability is EXACT: a merge adds bucket counts, so aggregation is
   * associative, commutative, and — unlike KLL's randomized compaction —
   * fully deterministic: any partitioning of the data yields the
-  * IDENTICAL sketch as long as no store exceeded `MaxBuckets`
-  * (property-tested). Memory is bounded by collapsing the LOWEST-index
-  * buckets into their neighbor once a store passes `MaxBuckets`
-  * (the DataDog `collapsingLowest` variant): the α guarantee then still
-  * holds for every quantile above the collapsed mass — the high
+  * IDENTICAL sketch (property-tested). Memory is bounded by collapsing the
+  * LOWEST-index buckets into their neighbor once a store passes
+  * `MaxBuckets` (the DataDog `collapsingLowest` variant): the α guarantee
+  * then still holds for every quantile above the collapsed mass — the high
   * quantiles observability cares about — and only the extreme low tail
-  * degrades.
+  * degrades. Collapse-lowest is order-independent — a store keeps its top
+  * `MaxBuckets` keys and the lowest kept key holds all mass below it — so
+  * a merge adds every bucket first and collapses once, and the identical-
+  * sketch guarantee holds past the cap too.
+  *
+  * Storage: per sign, one primitive array of (key, count) pairs in
+  * ascending key order — O(buckets) memory, never O(index span) (α = 1e-4
+  * over 1e-300…1e300 spans about 7M indices). That is also the wire layout,
+  * so a merge, in memory or straight from the wire bytes
+  * ([[DdSketch.mergeSerializedInto]]), is a linear merge of two sorted
+  * lists.
   *
   * Quantile queries walk negative buckets by descending index (most
   * negative value first), the zero bucket, then positive buckets by
@@ -41,11 +48,13 @@ final class DdSketch(val alpha: Double) extends Serializable {
   require(alpha >= 1e-4 && alpha <= 0.5,
     s"ddsketch alpha must be in [1e-4, 0.5], got $alpha")
 
+  import DdSketch._
+
   val gamma: Double = (1.0 + alpha) / (1.0 - alpha)
   private val lnGamma: Double = math.log(gamma)
 
-  private[graft] val pos = mutable.LongMap.empty[Long] // index -> count
-  private[graft] val neg = mutable.LongMap.empty[Long]
+  private[sketch] val pos = new Store
+  private[sketch] val neg = new Store
   private[graft] var zero: Long = 0L
   private[graft] var n: Long = 0L
 
@@ -60,38 +69,21 @@ final class DdSketch(val alpha: Double) extends Serializable {
   def updateN(v: Double, count: Long): Unit = {
     if (v.isNaN || count <= 0L) return
     n += count
-    if (math.abs(v) < DdSketch.ZeroEps) zero += count
-    else if (v > 0) bump(pos, index(v), count)
-    else bump(neg, index(-v), count)
+    if (math.abs(v) < ZeroEps) zero += count
+    else if (v > 0) pos.add(index(v), count)
+    else neg.add(index(-v), count)
   }
 
-  private def bump(store: mutable.LongMap[Long], i: Long,
-      count: Long): Unit = {
-    store.update(i, store.getOrElse(i, 0L) + count)
-    if (store.size > DdSketch.MaxBuckets) collapseLowest(store)
-  }
-
-  /** Fold the smallest-index bucket into the next smallest — bounded
-    * memory at the cost of the extreme LOW tail only (all counts are
-    * preserved, just at a coarser low-end resolution). */
-  private def collapseLowest(store: mutable.LongMap[Long]): Unit = {
-    if (store.size < 2) return
-    var lo1 = Long.MaxValue; var lo2 = Long.MaxValue
-    store.foreachKey { k =>
-      if (k < lo1) { lo2 = lo1; lo1 = k } else if (k < lo2) lo2 = k
-    }
-    val c = store(lo1)
-    store -= lo1
-    store.update(lo2, store.getOrElse(lo2, 0L) + c)
-  }
+  private def checkAlpha(other: Double): Unit =
+    if (math.abs(other - alpha) > 1e-12)
+      throw new SketchMergeException(
+        s"cannot merge ddsketch(alpha=$other) into ddsketch(alpha=$alpha): " +
+          "the log-bucket grids differ; re-aggregate from raw data instead")
 
   def mergeInPlace(other: DdSketch): Unit = {
-    if (math.abs(other.alpha - alpha) > 1e-12)
-      throw new SketchMergeException(
-        s"cannot merge ddsketch(alpha=${other.alpha}) into ddsketch(alpha=$alpha): " +
-          "the log-bucket grids differ; re-aggregate from raw data instead")
-    other.pos.foreach { case (i, c) => bump(pos, i, c) }
-    other.neg.foreach { case (i, c) => bump(neg, i, c) }
+    checkAlpha(other.alpha)
+    pos.merge(other.pos.kc, 0, other.pos.size)
+    neg.merge(other.neg.kc, 0, other.neg.size)
     zero += other.zero
     n += other.n
   }
@@ -104,46 +96,39 @@ final class DdSketch(val alpha: Double) extends Serializable {
     val target = math.max(1L, math.ceil(q * n).toLong)
     var cum = 0L
     // negatives: most negative first = descending |v| index
-    val negKeys = neg.keys.toArray.sorted(Ordering[Long].reverse)
-    var j = 0
-    while (j < negKeys.length) {
-      cum += neg(negKeys(j))
-      if (cum >= target) return -estimate(negKeys(j))
-      j += 1
+    var j = neg.size - 1
+    while (j >= 0) {
+      cum += neg.count(j)
+      if (cum >= target) return -estimate(neg.key(j))
+      j -= 1
     }
     cum += zero
     if (cum >= target) return 0.0
-    val posKeys = pos.keys.toArray.sorted
     j = 0
-    while (j < posKeys.length) {
-      cum += pos(posKeys(j))
-      if (cum >= target) return estimate(posKeys(j))
+    while (j < pos.size) {
+      cum += pos.count(j)
+      if (cum >= target) return estimate(pos.key(j))
       j += 1
     }
-    if (posKeys.nonEmpty) estimate(posKeys.last)
+    if (pos.size > 0) estimate(pos.key(pos.size - 1))
     else if (zero > 0) 0.0
-    else -estimate(negKeys.last)
+    else -estimate(neg.key(0))
   }
 
   def buckets: Int = pos.size + neg.size + (if (zero > 0) 1 else 0)
 
+  /** tag, alpha, zero, n; then per store (positive, negative) its size and
+    * its (key, count) pairs in ascending key order: equal sketches
+    * serialize equal. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeByte(DdSketch.WireTag)
-    out.writeDouble(alpha)
-    out.writeLong(zero)
-    out.writeLong(n)
-    def store(m: mutable.LongMap[Long]): Unit = {
-      out.writeInt(m.size)
-      // sorted for a canonical wire form: equal sketches serialize equal
-      m.keys.toArray.sorted.foreach { k =>
-        out.writeLong(k); out.writeLong(m(k))
-      }
+    val bb = ByteBuffer.allocate(HeaderBytes + 8 + 16 * (pos.size + neg.size))
+    bb.put(WireTag).putDouble(alpha).putLong(zero).putLong(n)
+    for (s <- Seq(pos, neg)) {
+      bb.putInt(s.size)
+      var i = 0
+      while (i < 2 * s.size) { bb.putLong(s.kc(i)); i += 1 }
     }
-    store(pos); store(neg)
-    out.flush()
-    bos.toByteArray
+    bb.array()
   }
 }
 
@@ -154,36 +139,149 @@ object DdSketch {
     * magnitude before any collapse — far beyond any physical metric. */
   val MaxBuckets = 4096
   val ZeroEps = 1e-12
+  private val HeaderBytes = 1 + 8 + 8 + 8
+
+  /** One sign's buckets: (key, count) pairs at `kc(2i)`, `kc(2i + 1)`, keys
+    * strictly ascending, counts positive, at most [[MaxBuckets]] of them. */
+  private[sketch] final class Store extends Serializable {
+    var kc: Array[Long] = new Array[Long](16)
+    var size: Int = 0
+
+    def key(i: Int): Long = kc(2 * i)
+    def count(i: Int): Long = kc(2 * i + 1)
+
+    private def ensure(pairs: Int): Unit =
+      if (kc.length < 2 * pairs) kc = java.util.Arrays.copyOf(kc, math.max(2 * pairs, 2 * kc.length))
+
+    def add(key: Long, c: Long): Unit = {
+      var lo = 0
+      var hi = size - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val k = kc(2 * mid)
+        if (k < key) lo = mid + 1
+        else if (k > key) hi = mid - 1
+        else { kc(2 * mid + 1) += c; return }
+      }
+      ensure(size + 1)
+      System.arraycopy(kc, 2 * lo, kc, 2 * lo + 2, 2 * (size - lo))
+      kc(2 * lo) = key
+      kc(2 * lo + 1) = c
+      size += 1
+      collapse()
+    }
+
+    /** Add the `m` pairs at `src(from)…` (keys strictly ascending): a merge
+      * back to front that sums equal keys, then one collapse. */
+    def merge(src: Array[Long], from: Int, m: Int): Unit = {
+      ensure(size + m)
+      var i = size - 1
+      var j = m - 1
+      var w = size + m - 1
+      while (j >= 0) {
+        val kb = src(from + 2 * j)
+        val ka = if (i >= 0) kc(2 * i) else Long.MinValue
+        if (i >= 0 && ka > kb) {
+          kc(2 * w) = ka; kc(2 * w + 1) = kc(2 * i + 1); i -= 1
+        } else {
+          kc(2 * w) = kb
+          kc(2 * w + 1) = src(from + 2 * j + 1)
+          if (i >= 0 && ka == kb) { kc(2 * w + 1) += kc(2 * i + 1); i -= 1 }
+          j -= 1
+        }
+        w -= 1
+      }
+      // w - i equal keys were summed: close the gap they left
+      val dups = w - i
+      if (dups > 0) System.arraycopy(kc, 2 * (w + 1), kc, 2 * (i + 1), 2 * (size + m - 1 - w))
+      size += m - dups
+      collapse()
+    }
+
+    /** Keep the top [[MaxBuckets]] keys; the lowest kept one takes the mass
+      * of every key below it. */
+    private def collapse(): Unit = if (size > MaxBuckets) {
+      val drop = size - MaxBuckets
+      var mass = 0L
+      var i = 0
+      while (i <= drop) { mass += kc(2 * i + 1); i += 1 }
+      System.arraycopy(kc, 2 * drop, kc, 0, 2 * MaxBuckets)
+      kc(1) = mass
+      size = MaxBuckets
+    }
+  }
+
+  private def corrupted(what: String) =
+    new SketchMergeException(s"corrupted ddsketch payload: $what")
+
+  /** A validated payload: its header and both stores' pairs, positive then
+    * negative, in wire layout. */
+  private final class Wire(val alpha: Double, val zero: Long, val n: Long,
+      val posSize: Int, val negSize: Int, val pairs: Array[Long])
+
+  /** Pass 1 of both decode paths: every field, each store's size, keys
+    * strictly ascending, counts positive and the exact length. */
+  private def validate(bytes: Array[Byte]): Wire = {
+    if (bytes.length >= 1 && bytes(0) != WireTag)
+      throw new SketchMergeException(
+        f"not a ddsketch: wire tag 0x${bytes(0)}%02x (expected 0x$WireTag%02x)")
+    if (bytes.length < HeaderBytes + 4)
+      throw corrupted(s"${bytes.length} bytes, shorter than the header")
+    val bb = ByteBuffer.wrap(bytes)
+    val alpha = bb.getDouble(1)
+    if (!(alpha >= 1e-4 && alpha <= 0.5)) throw corrupted(s"alpha=$alpha")
+    val zero = bb.getLong(9)
+    val n = bb.getLong(17)
+    if (zero < 0 || n < 0) throw corrupted(s"zero=$zero n=$n")
+    val posSize = bb.getInt(HeaderBytes)
+    if (posSize < 0 || posSize > MaxBuckets) throw corrupted(s"$posSize buckets")
+    val negAt = HeaderBytes + 4 + 16 * posSize
+    if (bytes.length < negAt + 4) throw corrupted(s"truncated: ${bytes.length} bytes")
+    val negSize = bb.getInt(negAt)
+    if (negSize < 0 || negSize > MaxBuckets) throw corrupted(s"$negSize buckets")
+    val end = negAt + 4 + 16 * negSize
+    if (bytes.length != end)
+      throw corrupted(s"${bytes.length} bytes for $posSize + $negSize buckets")
+    val pairs = new Array[Long](2 * (posSize + negSize))
+    ByteBuffer.wrap(bytes, HeaderBytes + 4, 16 * posSize).asLongBuffer().get(pairs, 0, 2 * posSize)
+    ByteBuffer.wrap(bytes, negAt + 4, 16 * negSize).asLongBuffer()
+      .get(pairs, 2 * posSize, 2 * negSize)
+    var i = 0
+    while (i < posSize + negSize) {
+      val k = pairs(2 * i)
+      val c = pairs(2 * i + 1)
+      if (c <= 0) throw corrupted(s"count $c at $k")
+      if (i != 0 && i != posSize && k <= pairs(2 * i - 2))
+        throw corrupted(s"key $k duplicated or out of order")
+      i += 1
+    }
+    new Wire(alpha, zero, n, posSize, negSize, pairs)
+  }
 
   def deserialize(bytes: Array[Byte]): DdSketch = {
-    val in = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
-      throw new SketchMergeException(
-        f"not a ddsketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
-    val alpha = in.readDouble()
-    if (alpha < 1e-4 || alpha > 0.5)
-      throw new SketchMergeException(s"corrupted ddsketch payload: alpha=$alpha")
-    val s = new DdSketch(alpha)
-    s.zero = in.readLong()
-    s.n = in.readLong()
-    if (s.zero < 0 || s.n < 0)
-      throw new SketchMergeException(
-        s"corrupted ddsketch payload: zero=${s.zero} n=${s.n}")
-    def load(m: mutable.LongMap[Long]): Unit = {
-      val sz = in.readInt()
-      if (sz < 0 || sz > MaxBuckets)
-        throw new SketchMergeException(s"corrupted ddsketch payload: $sz buckets")
-      var i = 0
-      while (i < sz) {
-        val k = in.readLong(); val c = in.readLong()
-        if (c < 0) throw new SketchMergeException(
-          s"corrupted ddsketch payload: negative count at $k")
-        m.update(k, c); i += 1
-      }
-    }
-    load(s.pos); load(s.neg)
+    val w = validate(bytes)
+    val s = new DdSketch(w.alpha)
+    s.zero = w.zero
+    s.n = w.n
+    s.pos.merge(w.pairs, 0, w.posSize)
+    s.neg.merge(w.pairs, 2 * w.posSize, w.negSize)
     s
+  }
+
+  /** Merge a SERIALIZED sketch directly into `target` (null: decode it) —
+    * the DDSketch twin of [[Sketch.mergeSerializedInto]]: each stored list
+    * of buckets is merged into the target's sorted store in one linear
+    * pass, with no decoded sketch per input row in `dd_merge_agg`. The same
+    * validation, buckets and bytes as deserialize + [[DdSketch.mergeInPlace]];
+    * a rejected payload leaves `target` unchanged. */
+  def mergeSerializedInto(bytes: Array[Byte], target: DdSketch): DdSketch = {
+    if (target == null) return deserialize(bytes)
+    val w = validate(bytes)
+    target.checkAlpha(w.alpha)
+    target.pos.merge(w.pairs, 0, w.posSize)
+    target.neg.merge(w.pairs, 2 * w.posSize, w.negSize)
+    target.zero += w.zero
+    target.n += w.n
+    target
   }
 }

@@ -1,6 +1,6 @@
 package graft.sketch
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 /** Theta sketch for distinct counting AND bounded-error set algebra —
   * the sound realization of the reference stub's "TODO potential set
@@ -156,26 +156,25 @@ final class ThetaSketch private (
       throw new SketchMergeException(
         s"cannot merge theta sketches of different k in place: $k vs ${other.k}" +
           " (use ThetaSketch.mergeInto / theta_union, which widen to min k)")
-    if (other.theta < theta) {
-      // adopt the tighter theta, dropping own entries above it
-      theta = other.theta
-      var i = 0
-      var live = 0
-      val kept = new Array[Long](heapSize)
-      while (i < heapSize) {
-        if (heap(i) < theta) { kept(live) = heap(i); live += 1 }
-        i += 1
-      }
-      heapSize = 0
-      i = 0
-      while (i < live) { heap(i) = kept(i); heapSize += 1; i += 1 }
-      // kept is an arbitrary slice of a heap array — re-heapify
-      java.util.Arrays.sort(heap, 0, heapSize)
-      reverseHeapRange()
-      rebuildTable()
-    }
+    if (other.theta < theta) adoptTheta(other.theta)
     var i = 0
     while (i < other.heapSize) { offerPosition(other.heap(i)); i += 1 }
+  }
+
+  /** Adopt a tighter theta, dropping own entries at or above it. */
+  private def adoptTheta(t: Long): Unit = {
+    theta = t
+    var live = 0
+    var i = 0
+    while (i < heapSize) {
+      if (heap(i) < t) { heap(live) = heap(i); live += 1 }
+      i += 1
+    }
+    heapSize = live
+    // the kept entries are an arbitrary slice of a heap array — re-heapify
+    java.util.Arrays.sort(heap, 0, heapSize)
+    reverseHeapRange()
+    rebuildTable()
   }
 
   /** A descending-sorted array is a valid max-heap. */
@@ -214,15 +213,12 @@ final class ThetaSketch private (
   /** Canonical wire format: tag, k, theta, count, ascending entries — bytes
     * depend only on (k, underlying set), never on data placement. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(13 + 8 * heapSize)
-    val out = new DataOutputStream(bos)
-    out.writeByte(WireTag)
-    out.writeInt(k)
-    out.writeLong(theta)
-    out.writeInt(heapSize)
-    sortedEntries().foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
+    val bb = ByteBuffer.allocate(HeaderBytes + 8 * heapSize)
+    bb.put(WireTag).putInt(k).putLong(theta).putInt(heapSize)
+    val entries = sortedEntries()
+    var i = 0
+    while (i < entries.length) { bb.putLong(entries(i)); i += 1 }
+    bb.array()
   }
 }
 
@@ -234,6 +230,7 @@ object ThetaSketch {
   val MinK = 16
   val MaxK = 1 << 26
   val DefaultK = 4096
+  private val HeaderBytes = 1 + 4 + 8 + 4
 
   /** Map a 64-bit hash onto the positive position space [1, 2⁶³). */
   def position(hash: Long): Long = {
@@ -261,34 +258,71 @@ object ThetaSketch {
     new ThetaSketch(k, theta, heap, entries.length)
   }
 
-  def deserialize(bytes: Array[Byte]): ThetaSketch = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val tag = in.readByte()
-    if (tag != WireTag)
+  private def corrupted(what: String) =
+    new SketchMergeException(s"corrupted theta sketch: $what")
+
+  /** Pass 1 of both decode paths: tag, k, theta, count ≤ k, the exact
+    * length, and entries strictly ascending below theta. Returns the entry
+    * count. */
+  private def validate(bytes: Array[Byte], bb: ByteBuffer): Int = {
+    if (bytes.length >= 1 && bytes(0) != WireTag)
       throw new SketchMergeException(
-        f"not a theta sketch: wire tag 0x$tag%02x (expected 0x$WireTag%02x)")
-    val k = in.readInt()
-    if (k < MinK || k > MaxK)
-      throw new SketchMergeException(s"corrupted theta sketch: k=$k")
-    val theta = in.readLong()
-    if (theta <= 0L)
-      throw new SketchMergeException(s"corrupted theta sketch: theta=$theta")
-    val count = in.readInt()
-    if (count < 0 || count > k)
-      throw new SketchMergeException(s"corrupted theta sketch: $count entries for k=$k")
-    val entries = new Array[Long](count)
+        f"not a theta sketch: wire tag 0x${bytes(0)}%02x (expected 0x$WireTag%02x)")
+    if (bytes.length < HeaderBytes)
+      throw corrupted(s"${bytes.length} bytes, shorter than the $HeaderBytes-byte header")
+    val k = bb.getInt(1)
+    if (k < MinK || k > MaxK) throw corrupted(s"k=$k")
+    val theta = bb.getLong(5)
+    if (theta <= 0L) throw corrupted(s"theta=$theta")
+    val count = bb.getInt(13)
+    if (count < 0 || count > k) throw corrupted(s"$count entries for k=$k")
+    if (bytes.length != HeaderBytes + 8L * count)
+      throw corrupted(s"${bytes.length} bytes for $count entries")
     var i = 0
     var prev = 0L
     while (i < count) {
-      val p = in.readLong()
+      val p = bb.getLong(HeaderBytes + 8 * i)
       if (p <= prev || p >= theta)
-        throw new SketchMergeException(
-          s"corrupted theta sketch: entry $p out of order or >= theta $theta")
-      entries(i) = p
+        throw corrupted(s"entry $p out of order or >= theta $theta")
       prev = p
       i += 1
     }
-    fromParts(k, theta, entries)
+    count
+  }
+
+  def deserialize(bytes: Array[Byte]): ThetaSketch = {
+    val bb = ByteBuffer.wrap(bytes)
+    val count = validate(bytes, bb)
+    val k = bb.getInt(1)
+    // ascending on the wire: stored back to front, a valid max-heap
+    val heap = new Array[Long](math.max(k + 1, 2))
+    var i = 0
+    while (i < count) { heap(count - 1 - i) = bb.getLong(HeaderBytes + 8 * i); i += 1 }
+    new ThetaSketch(k, bb.getLong(5), heap, count)
+  }
+
+  /** Merge a SERIALIZED sketch directly into `target` (null: decode it) —
+    * the theta twin of [[Sketch.mergeSerializedInto]], with the result of
+    * [[mergeInto]] on the decoded sketch and no decoded sketch per input row
+    * in `theta_merge_agg`. The wire is ascending, so the offers stop at the
+    * first entry at or above the target's current theta. Mixed k goes
+    * through [[union]], which builds a fresh sketch anyway. A rejected
+    * payload leaves `target` unchanged. */
+  def mergeSerializedInto(bytes: Array[Byte], target: ThetaSketch): ThetaSketch = {
+    if (target == null) return deserialize(bytes)
+    val bb = ByteBuffer.wrap(bytes)
+    val count = validate(bytes, bb)
+    if (bb.getInt(1) != target.k) return union(target, deserialize(bytes))
+    val t = bb.getLong(5)
+    if (t < target.theta) target.adoptTheta(t)
+    var i = 0
+    while (i < count) {
+      val p = bb.getLong(HeaderBytes + 8 * i)
+      if (p >= target.theta) return target
+      target.offerPosition(p)
+      i += 1
+    }
+    target
   }
 
   /** Union `b` into `a` and return the sketch to keep: the fast in-place

@@ -28,20 +28,38 @@ object Tables {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
-  /** Parquet schema catalog: one footer-inference per (path) per JVM instead
-    * of one per scan. METADATA only (a StructType — the same thing a
-    * metastore would hold), never data: every query still reads all its
-    * rows from parquet on every invocation. With ~430 bench queries × 1–3
+  /** Parquet schema catalog: one footer-inference per (path, file listing)
+    * per JVM instead of one per scan. METADATA only (a StructType — the same
+    * thing a metastore would hold), never data: every query still reads all
+    * its rows from parquet on every invocation. With ~430 bench queries × 1–3
     * `load` calls each, driver-side footer inference was a measurable slice
-    * of the per-query constant (guide §6 — give the reader the schema). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    * of the per-query constant (guide §6 — give the reader the schema).
+    * Each entry is keyed on the path's listing (name, length, modification
+    * time of each file), so a path rewritten inside one JVM infers again. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  /** The listing of `path` as one string, or None if it does not exist. */
+  private def listing(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      val root = fs.getFileStatus(p)
+      val files = if (root.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.getName) else Seq(root)
+      Some(files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").mkString(","))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     configure(spark)
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = listing(spark, path) match {
+      // missing: let the reader raise its usual PATH_NOT_FOUND
+      case None => spark.read.parquet(path).schema
+      case Some(files) => schemaCache.compute(path, (p, cached) =>
+        if (cached != null && cached._1 == files) cached
+        else (files, spark.read.parquet(p).schema))._2
+    }
     val df = spark.read.schema(schema).parquet(path)
     val fixes: Seq[(String, Column)] = df.schema.fields.toSeq.collect {
       // NTZ micros → TZ micros: with spark.sql.session.timeZone=UTC the wall

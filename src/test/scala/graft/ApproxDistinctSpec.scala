@@ -44,7 +44,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
   }
 
   test("SQL registration: approx_distinct with literal args") {
-    GraftFunctions.register(spark)
     lineitem.createOrReplaceTempView("lineitem_t")
     val r = spark.sql(
       "SELECT approx_distinct(l_partkey, 'hll', 14) AS d FROM lineitem_t").select("d.*").head()
@@ -54,7 +53,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
   }
 
   test("typed literal parameters: a wrong literal type fails analysis naming the parameter") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, 1.5, "a"), (2L, 2.5, "b"), (3L, 4.0, "a")).toDF("k", "v", "item")
       .createOrReplaceTempView("typed_params")
@@ -79,7 +77,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
   }
 
   test("re-aggregation of stored sketches equals one-shot (E3)") {
-    GraftFunctions.register(spark)
     val daily = lineitem.groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(approx_distinct(col("l_orderkey")).as("sk"))
     val merged = daily.agg(approx_distinct(col("sk")).as("d"))
@@ -110,7 +107,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
   }
 
   test("scalar sketch functions: estimate, union, intersection") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 3000).map(i => (if (i <= 2000) "a" else "b", i.toLong)).toDF("seg", "v")
     // overlap: a = 1..2000, b = 2001..3000 (disjoint)
@@ -140,7 +136,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
   }
 
   test("sketch_merge_agg over a BINARY sketch column") {
-    GraftFunctions.register(spark)
     val daily = lineitem.groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(approx_distinct(col("l_orderkey")).as("sk"))
       .select(col("day"), col("sk.binary").as("skb"))

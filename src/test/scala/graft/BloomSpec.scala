@@ -44,7 +44,6 @@ class BloomSpec extends AnyFunSuite {
   }
 
   test("bloom_agg + might_contain via SQL: no inserted key ever misses") {
-    GraftFunctions.register(spark)
     (1L to 5000L).toDF("k").createOrReplaceTempView("bloom_keys")
     (4000L to 9000L).toDF("k").createOrReplaceTempView("bloom_probes")
     val missed = spark.sql(
@@ -63,7 +62,6 @@ class BloomSpec extends AnyFunSuite {
   }
 
   test("bloom_merge_agg: stored partial filters OR to the full filter") {
-    GraftFunctions.register(spark)
     val df = (1L to 2000L).map(k => (k % 7, k)).toDF("g", "k")
     val stored = df.groupBy("g")
       .agg(GraftFunctions.bloom_agg($"k", 65536, 7).as("bf"))
@@ -124,5 +122,30 @@ class BloomSpec extends AnyFunSuite {
     assert(kCap == 1, s"capped filter should drop to the minimum probes, got $kCap")
     val (mTiny, _) = graft.operators.RuntimeFilter.bloomGeometry(1L, 0.01)
     assert(mTiny >= 64 && mTiny % 64 == 0)
+  }
+
+  private val codec = WireCodec[BloomFilter](_.serialize(), BloomFilter.deserialize,
+    (a, b) => { a.mergeInPlace(b); a }, BloomFilter.mergeSerializedInto)
+
+  test("wire merge == deserialize + mergeInPlace, bytes included; other shapes refused") {
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val (numBits, numHashes) = (64 * (1 + rnd.nextInt(200)), 1 + rnd.nextInt(8))
+      def of(n: Int) = {
+        val f = new BloomFilter(numBits, numHashes)
+        (0 until n).foreach(_ => f.offerHash(rnd.nextLong()))
+        f
+      }
+      val a = of(rnd.nextInt(1000))
+      val bytes = of(rnd.nextInt(1000)).serialize()
+      codec.checkMerge(s"seed $seed: ($numBits,$numHashes)", () => BloomFilter.deserialize(a.serialize()),
+        bytes, bytes)
+      codec.checkRejected("other numBits", a, new BloomFilter(numBits + 64, numHashes).serialize(),
+        decodes = true)
+      codec.checkRejected("other numHashes", a, new BloomFilter(numBits, numHashes % 8 + 1).serialize(),
+        decodes = true)
+      codec.checkRejected("truncated", a, bytes.dropRight(1))
+      codec.checkRejected("trailing byte", a, bytes :+ 0.toByte)
+    }
   }
 }

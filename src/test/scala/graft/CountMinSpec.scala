@@ -80,7 +80,6 @@ class CountMinSpec extends AnyFunSuite {
 
   test("SQL surface: agg, probe, store-then-merge; validation errors") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1 to 10000).map(i => (i % 4, s"key${i % 10}")).toDF("g", "v")
       .createOrReplaceTempView("cm_t")

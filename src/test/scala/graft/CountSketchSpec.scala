@@ -80,7 +80,6 @@ class CountSketchSpec extends AnyFunSuite {
 
   test("SQL surface: agms functions registered, join-size probe runs end-to-end") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(1L, 1L, 2L, 3L).toDF("k").createOrReplaceTempView("agms_a")
     Seq(2L, 2L, 2L, 3L).toDF("k").createOrReplaceTempView("agms_b")
@@ -90,5 +89,29 @@ class CountSketchSpec extends AnyFunSuite {
         |  (SELECT agms_sketch_agg(k) FROM agms_b)) AS est""".stripMargin)
       .head().getDouble(0)
     assert(est == 4.0, s"got $est") // 1*3 + 1*1, collision-free at width 1024
+  }
+
+  private val codec = WireCodec[CountSketch](_.serialize(), CountSketch.deserialize,
+    (a, b) => { a.mergeInPlace(b); a }, CountSketch.mergeSerializedInto)
+
+  test("wire merge == deserialize + mergeInPlace, bytes included; other shapes refused") {
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val (depth, width) = (1 + rnd.nextInt(6), 16 << rnd.nextInt(5))
+      def of(n: Int) = {
+        val s = new CountSketch(depth, width)
+        (0 until n).foreach(_ => s.offerHash(hash(rnd.nextInt(500).toLong), 1L + rnd.nextInt(3)))
+        s
+      }
+      val a = of(rnd.nextInt(2000))
+      val bytes = of(rnd.nextInt(2000)).serialize()
+      codec.checkMerge(s"seed $seed: ${depth}x$width", () => CountSketch.deserialize(a.serialize()),
+        bytes, bytes)
+      codec.checkRejected("other width", a, new CountSketch(depth, width * 2).serialize(), decodes = true)
+      codec.checkRejected("other depth", a, new CountSketch(depth % 6 + 1, width).serialize(),
+        decodes = true)
+      codec.checkRejected("truncated", a, bytes.dropRight(1))
+      codec.checkRejected("trailing byte", a, bytes :+ 0.toByte)
+    }
   }
 }

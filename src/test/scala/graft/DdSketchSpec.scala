@@ -97,7 +97,6 @@ class DdSketchSpec extends AnyFunSuite {
 
   test("SQL surface: grouped dd_quantiles within alpha of exact; store-then-merge equals one-shot") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val vs = lognormalish(6000).zipWithIndex.map { case (v, i) =>
       (if (i % 2 == 0) "a" else "b", i % 7, v)
     }.toSeq
@@ -132,7 +131,6 @@ class DdSketchSpec extends AnyFunSuite {
   }
 
   test("SQL surface: arg validation fails loudly") {
-    GraftFunctions.register(spark)
     spark.range(5).createOrReplaceTempView("dd_rng")
     val e1 = intercept[Exception] {
       spark.sql("SELECT dd_quantiles(id, array(1.5D)) FROM dd_rng").collect()
@@ -143,5 +141,65 @@ class DdSketchSpec extends AnyFunSuite {
         .collect()
     }
     assert(e2.getMessage.contains("alpha"))
+  }
+
+  private val codec = WireCodec[DdSketch](_.serialize(), DdSketch.deserialize,
+    (a, b) => { a.mergeInPlace(b); a }, DdSketch.mergeSerializedInto)
+
+  test("wire merge == deserialize + mergeInPlace == one-shot, bytes included, past MaxBuckets") {
+    var collapsed = 0
+    for (seed <- 1 to 24) {
+      val rnd = new scala.util.Random(seed)
+      val alpha = Seq(1e-4, 0.01, 0.05)(seed % 3)
+      val wide = seed % 2 == 0
+      // wide: 1e-300…1e300 at alpha 1e-4 spans ~7M indices, far past the cap
+      def values(n: Int): Array[Double] = Array.fill(n) {
+        val sign = if (rnd.nextBoolean()) 1.0 else -1.0
+        if (rnd.nextInt(10) == 0) 0.0
+        else if (wide) sign * math.pow(10.0, rnd.nextDouble() * 600 - 300)
+        else sign * math.exp(rnd.nextGaussian() * 2)
+      }
+      def size() = if (wide) 6000 + rnd.nextInt(8000) else rnd.nextInt(12000)
+      val (va, vb) = (values(size()), values(size()))
+      def of(vs: Array[Double]) = { val s = new DdSketch(alpha); vs.foreach(s.update); s }
+      val bytes = of(vb).serialize()
+      val ctx = s"seed $seed: alpha $alpha, n ${va.length} <- ${vb.length}"
+      val merged = codec.checkMerge(ctx, () => of(va), bytes, bytes)
+      // collapse-lowest is order-independent: the merge equals the one-shot
+      val oneShot = of(va ++ vb)
+      assert(merged.sameElements(oneShot.serialize()), s"$ctx: merge != one-shot")
+      val posKeys = (va ++ vb).filter(_ >= DdSketch.ZeroEps)
+        .map(v => math.ceil(math.log(v) / math.log(oneShot.gamma)).toLong).distinct.length
+      if (posKeys > DdSketch.MaxBuckets) collapsed += 1
+    }
+    assert(collapsed >= 3, s"only $collapsed cases passed MaxBuckets")
+  }
+
+  test("corrupt payloads are refused by the wire merge and leave the target unchanged") {
+    val s = new DdSketch(0.01)
+    Seq(1.0, 2.0, 5.0, -3.0, 0.0).foreach(s.update)
+    val bytes = s.serialize()
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    def key(i: Int) = 29 + 16 * i // positive store pairs start after the header and size
+    def patched(f: java.nio.ByteBuffer => Unit) = {
+      val out = bytes.clone(); f(java.nio.ByteBuffer.wrap(out)); out
+    }
+    val cases = Seq(
+      "truncated" -> bytes.dropRight(1),
+      "trailing byte" -> (bytes :+ 0.toByte),
+      "duplicate key" -> patched(_.putLong(key(1), bb.getLong(key(0)))),
+      "unsorted keys" -> patched { o =>
+        o.putLong(key(0), bb.getLong(key(1))); o.putLong(key(1), bb.getLong(key(0)))
+      },
+      "zero count" -> patched(_.putLong(key(0) + 8, 0L)),
+      "negative count" -> patched(_.putLong(key(2) + 8, -1L)))
+    for ((what, bad) <- cases) {
+      val target = new DdSketch(0.01)
+      lognormalish(100).foreach(target.update)
+      codec.checkRejected(what, target, bad)
+    }
+    val other = new DdSketch(0.02); other.update(1.0)
+    codec.checkRejected("alpha", { val t = new DdSketch(0.01); t.update(3.0); t }, other.serialize(),
+      decodes = true)
   }
 }

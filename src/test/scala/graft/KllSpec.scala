@@ -94,7 +94,6 @@ class KllSpec extends AnyFunSuite {
   }
 
   test("approx_quantiles via SQL: envelope vs exact percentile") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(31)
     val data = Array.fill(100000)(rnd.nextDouble() * 1000)
     data.toSeq.toDF("x").createOrReplaceTempView("kll_vals")
@@ -117,7 +116,6 @@ class KllSpec extends AnyFunSuite {
   }
 
   test("store-then-merge equals the one-shot envelope") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(37)
     val df = Seq.fill(60000)((rnd.nextInt(20), rnd.nextGaussian())).toDF("g", "x")
     val merged = df.groupBy("g")
@@ -126,5 +124,79 @@ class KllSpec extends AnyFunSuite {
       .select(element_at($"qs", 1)).as[Double].head()
     // median of a standard gaussian: 0 ± (rank eps mapped through density)
     assert(math.abs(merged) < 0.15, s"merged median $merged")
+  }
+
+  private val codec = WireCodec[KllDoubles](_.serialize(), KllDoubles.deserialize,
+    (a, b) => { a.mergeInPlace(b); a }, KllDoubles.mergeSerializedInto)
+
+  /** The payload with every level's items shuffled: the layout of a build
+    * that wrote levels in arrival order. */
+  private def unsortedLayout(bytes: Array[Byte], rnd: scala.util.Random): Array[Byte] = {
+    val out = bytes.clone()
+    val bb = java.nio.ByteBuffer.wrap(out)
+    var pos = 25
+    for (_ <- 0 until bb.getInt(21)) {
+      val sz = bb.getInt(pos)
+      val items = rnd.shuffle((0 until sz).map(i => bb.getLong(pos + 4 + 8 * i)))
+      items.zipWithIndex.foreach { case (v, i) => bb.putLong(pos + 4 + 8 * i, v) }
+      pos += 4 + 8 * sz
+    }
+    out
+  }
+
+  test("wire merge == deserialize + mergeInPlace, bytes included: mixed k, old unsorted layout") {
+    var mixedK = 0
+    var unsorted = 0
+    for (seed <- 1 to 40) {
+      val rnd = new scala.util.Random(seed)
+      def values(n: Int): Array[Double] = Array.fill(n)(rnd.nextInt(3) match {
+        case 0 => rnd.nextGaussian() * 100
+        case 1 => rnd.nextInt(20).toDouble // duplicates
+        case _ => if (rnd.nextBoolean()) 0.0 else -0.0
+      })
+      val ks = Seq(8, 16, 64, 256)
+      val (kA, kB) = (ks(rnd.nextInt(4)), ks(rnd.nextInt(4)))
+      val (va, vb) = (values(rnd.nextInt(6000)), values(rnd.nextInt(6000)))
+      def mkA() = { val s = new KllDoubles(kA); va.foreach(s.update); s }
+      // b from merged parts, so its levels carry merged and compacted runs
+      val b = vb.grouped(1000).map { p => val s = new KllDoubles(kB); p.foreach(s.update); s }
+        .foldLeft(new KllDoubles(kB)) { (acc, s) => acc.mergeInPlace(s); acc }
+      val bytes = b.serialize()
+      val old = if (seed % 2 == 0) unsortedLayout(bytes, rnd) else bytes
+      if (kA != kB) mixedK += 1
+      if (!old.sameElements(bytes)) unsorted += 1
+      val ctx = s"seed $seed: k $kA <- $kB, n ${va.length} <- ${vb.length}"
+      codec.checkMerge(ctx, mkA _, old, bytes)
+      // a decoded target (every level sorted) merges the same way
+      codec.checkMerge(ctx + " (decoded target)", () => KllDoubles.deserialize(mkA().serialize()), old, bytes)
+    }
+    assert(mixedK > 10 && unsorted > 10, s"coverage: $mixedK mixed-k, $unsorted unsorted cases")
+  }
+
+  test("corrupt payloads are refused by the wire merge and leave the target unchanged") {
+    val rnd = new scala.util.Random(41)
+    val b = new KllDoubles(64)
+    Seq.fill(3000)(rnd.nextGaussian()).foreach(b.update)
+    val bytes = b.serialize()
+    def target() = { val t = new KllDoubles(64); Seq.fill(500)(rnd.nextGaussian()).foreach(t.update); t }
+    val badLevelSize = bytes.clone()
+    java.nio.ByteBuffer.wrap(badLevelSize).putInt(25, 1 << 20)
+    val badTag = bytes.clone(); badTag(0) = 0x44
+    for ((what, bad) <- Seq("truncated" -> bytes.dropRight(1), "trailing byte" -> (bytes :+ 0.toByte),
+        "level size" -> badLevelSize, "tag" -> badTag, "header only" -> bytes.take(9)))
+      codec.checkRejected(what, target(), bad)
+  }
+
+  test("every level is written sorted") {
+    val rnd = new scala.util.Random(43)
+    val s = new KllDoubles(32)
+    Seq.fill(5000)(rnd.nextDouble()).foreach(s.update)
+    val bb = java.nio.ByteBuffer.wrap(s.serialize())
+    var pos = 25
+    for (lvl <- 0 until bb.getInt(21)) {
+      val items = (0 until bb.getInt(pos)).map(i => bb.getDouble(pos + 4 + 8 * i))
+      assert(items == items.sorted(Ordering.Double.TotalOrdering), s"level $lvl")
+      pos += 4 + 8 * items.length
+    }
   }
 }

@@ -17,7 +17,6 @@ class NearDupRecallSpec extends AnyFunSuite {
   test("simhash multi-index blocking has perfect recall at hamming <= 3 (pigeonhole)") {
     val docs = Tables.documents(spark, sf)
     // exhaustive ground truth: per-doc simhash, all pairs, hamming <= 3
-    GraftFunctions.register(spark)
     val sims = docs.select($"doc_id",
       GraftFunctions.simhash(graft.operators.TextAnalysis.tokens($"text")).as("sim"))
     val truth = sims.as("x").join(sims.as("y"), $"x.doc_id" < $"y.doc_id")

@@ -339,7 +339,6 @@ class OperatorsSpec extends AnyFunSuite {
     // so the rewrite agrees with Spark's native sliding window wherever
     // both are defined (native also emits windows anchored at unoccupied
     // instants; the rewrite's occupied frames are a subset)
-    GraftFunctions.register(spark)
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     val rewrite = SketchQueries.slidingSketchDistinct(ev, "ts", "event_type",
         "user_id", slideSeconds = 3600L, frameBuckets = 6,
@@ -801,7 +800,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("SQL surface: text/similarity functions callable from plain SQL") {
-    GraftFunctions.register(spark)
     Seq((1L, "alpha beta gamma delta", Array(1.0f, 0.0f)),
       (2L, "alpha beta gamma epsilon", Array(0.6f, 0.8f)))
       .toDF("id", "text", "vec").createOrReplaceTempView("sqlfns")
@@ -824,7 +822,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("intersection estimate within 3 sigma of inclusion-exclusion error") {
     import GraftFunctions._
-    GraftFunctions.register(spark)
     val a = (1L to 20000L).toDF("v").agg(approx_distinct($"v").as("sk")).select($"sk".as("sa"))
     val b = (15001L to 35000L).toDF("v").agg(approx_distinct($"v").as("sk")).select($"sk".as("sb"))
     val est = a.join(b).select(sketch_intersection_estimate($"sa", $"sb").as("i"))

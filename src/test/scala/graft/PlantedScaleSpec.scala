@@ -148,7 +148,6 @@ class PlantedScaleSpec extends AnyFunSuite {
   }
 
   test("planted simhash ground truth at sf0.1: blocking finds every hamming<=3 pair at the default cap") {
-    GraftFunctions.register(spark)
     // engine fingerprints of the planted docs only (tiny), then local
     // brute force => expected pair set among planted ids
     val fps = plantedDf

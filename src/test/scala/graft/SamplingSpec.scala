@@ -13,7 +13,6 @@ class SamplingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("md5_hash64 matches the cross-engine reference value") {
-    GraftFunctions.register(spark)
     // reference: first 8 big-endian bytes of md5("hello") = 0x5d41402abc4b2a76
     val got = spark.sql("SELECT md5_hash64('hello')").as[Long].head()
     assert(got == 0x5d41402abc4b2a76L)

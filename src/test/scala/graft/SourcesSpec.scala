@@ -113,7 +113,6 @@ class SourcesSpec extends AnyFunSuite {
 
   test("binary sketch columns survive a parquet store-and-merge cycle") {
     import GraftFunctions._
-    GraftFunctions.register(spark)
     val dir = tmp()
     Tables.lineitem(spark, sf)
       .groupBy(to_date(col("l_shipdate")).as("day"))
@@ -126,5 +125,17 @@ class SourcesSpec extends AnyFunSuite {
       .agg(approx_distinct(col("l_orderkey")).as("d"))
       .select(col("d.cardinality")).head().getLong(0)
     assert(merged == oneShot)
+  }
+
+  test("Tables.load infers the schema again after a same-path rewrite") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "name"))
+    Seq((2.5, 7, true)).toDF("x", "y", "z").write.mode(SaveMode.Overwrite).parquet(s"$dir/t.parquet")
+    val again = Tables.load(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("x", "y", "z"))
+    assert(again.collect().toSeq == Seq(org.apache.spark.sql.Row(2.5, 7, true)))
   }
 }

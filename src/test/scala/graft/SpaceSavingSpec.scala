@@ -179,7 +179,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("topk_merge_agg over a mixed-capacity store returns the trimmed answer") {
-    GraftFunctions.register(spark)
     val (items, exact) = stream(33, 40000, 200)
     val df = items.zipWithIndex
       .map { case (it, i) => (if (i % 2 == 0) "old" else "new", it) }
@@ -291,7 +290,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("approx_top_k via SQL and Column API: exact regime equals GROUP BY") {
-    GraftFunctions.register(spark)
     val (items, exact) = stream(6, 20000, 25)
     val df = items.toDF("item")
     df.createOrReplaceTempView("ss_items")
@@ -307,7 +305,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("store-then-merge: topk_sketch_agg + topk_merge_agg equals one-shot") {
-    GraftFunctions.register(spark)
     val (items, _) = stream(7, 30000, 20)
     val df = items.zipWithIndex.map { case (it, i) => (i % 13, it) }.toDF("g", "item")
     val oneShot = df.agg(GraftFunctions.approx_top_k($"item", 10, 64).as("tk"))
@@ -322,7 +319,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("weighted top-k: exact regime equals SUM-ranked GROUP BY") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     val rows = Seq.fill(20000)((s"item${rnd.nextInt(30)}", rnd.nextInt(100).toLong + 1))
     val df = rows.toDF("item", "w")
@@ -340,7 +336,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("argument validation fails fast") {
-    GraftFunctions.register(spark)
     Seq("item").toDF("item").createOrReplaceTempView("ss_one")
     val e1 = intercept[Exception](
       spark.sql("SELECT approx_top_k(item, 0) FROM ss_one").collect())

@@ -39,7 +39,6 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("jaro_winkler SQL surface evaluates via the registered function") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val r = Seq(("MARTHA", "MARHTA")).toDF("a", "b")
       .selectExpr("jaro_winkler(a, b) AS s").head().getDouble(0)

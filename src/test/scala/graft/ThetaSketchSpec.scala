@@ -154,7 +154,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("theta_merge_agg accepts stored sketches of mixed k (widens like theta_union)") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1 to 20000).map(i => (if (i <= 10000) 512 else 128, i.toLong)).toDF("k", "v")
       .createOrReplaceTempView("theta_mixed_src")
@@ -169,7 +168,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("SQL NULL is the union identity; intersect/difference propagate NULL") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1L to 400L).toDF("v").createOrReplaceTempView("theta_null_src")
     val r = spark.sql(
@@ -186,7 +184,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("theta_jaccard estimates |A.B|/|AUB|; empty/NULL edges defined") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1L to 30000L).toDF("v").createOrReplaceTempView("theta_jac_src")
     val r = spark.sql(
@@ -210,7 +207,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("non-integral foldable k fails analysis cleanly, not with a ClassCastException") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     (1L to 10L).toDF("v").createOrReplaceTempView("theta_badk_src")
     val e = intercept[Exception](
@@ -220,7 +216,6 @@ class ThetaSketchSpec extends AnyFunSuite {
 
   test("SQL surface end-to-end: agg, store-then-merge, set algebra, partition invariance") {
     val spark = TestSpark.session
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 30000).map(i => (i % 3, i.toLong)).toDF("g", "v")
     df.createOrReplaceTempView("theta_t")
@@ -273,5 +268,48 @@ class ThetaSketchSpec extends AnyFunSuite {
     assert(rows.length == 1)
     assert(rows.head.getAs[Boolean]("est_ok"))
     assert(rows.head.getAs[Boolean]("diff_ok"))
+  }
+
+  private val codec = WireCodec[ThetaSketch](_.serialize(), ThetaSketch.deserialize,
+    ThetaSketch.mergeInto, ThetaSketch.mergeSerializedInto)
+
+  test("wire merge == deserialize + mergeInto, bytes included: tighter theta, mixed k, exact mode") {
+    var tighter, mixed, exact = 0
+    for (seed <- 1 to 40) {
+      val rnd = new scala.util.Random(seed)
+      val ks = Seq(16, 64, 256)
+      val (kA, kB) = (ks(rnd.nextInt(3)), ks(rnd.nextInt(3)))
+      def range(): Seq[Long] = {
+        val lo = rnd.nextInt(2000).toLong
+        lo until lo + (if (rnd.nextInt(3) == 0) rnd.nextInt(16) else rnd.nextInt(3000))
+      }
+      val (ra, rb) = (range(), range())
+      val b = sketchOf(rb, kB)
+      val bytes = b.serialize()
+      val ctx = s"seed $seed: k $kA <- $kB, n ${ra.length} <- ${rb.length}"
+      codec.checkMerge(ctx, () => sketchOf(ra, kA), bytes, bytes)
+      if (kA != kB) mixed += 1
+      else if (b.thetaFraction < sketchOf(ra, kA).thetaFraction) tighter += 1
+      if (b.thetaFraction == 1.0) exact += 1
+    }
+    assert(tighter > 3 && mixed > 10 && exact > 3, s"coverage: $tighter tighter, $mixed mixed, $exact exact")
+  }
+
+  test("corrupt payloads are refused by the wire merge and leave the target unchanged") {
+    val bytes = sketchOf(1L to 100L, 64).serialize()
+    val base = 1 + 4 + 8 + 4
+    def patched(f: java.nio.ByteBuffer => Unit) = {
+      val out = bytes.clone(); f(java.nio.ByteBuffer.wrap(out)); out
+    }
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val cases = Seq(
+      "truncated" -> bytes.dropRight(1),
+      "trailing byte" -> (bytes :+ 0.toByte),
+      "unsorted entries" -> patched { o =>
+        o.putLong(base, bb.getLong(base + 8)); o.putLong(base + 8, bb.getLong(base))
+      },
+      "entry at theta" -> patched(o => o.putLong(5, bb.getLong(base + 8 * 10))),
+      "count above k" -> patched(_.putInt(13, 65)))
+    for ((what, bad) <- cases) codec.checkRejected(what, sketchOf(50L to 5000L, 64), bad)
   }
 }
