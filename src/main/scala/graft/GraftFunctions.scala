@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{AgmsF2, AgmsJoinSize, BloomAgg, CmEstimate, CmTotal, CosineSimilarity, HyperplaneLsh, LangId, MightContain, QualityScore, ShingleHashes, SimHash, SketchAgg, SketchEstimate, SketchIntersectionEstimate, SketchUnion, ThetaDifference, ThetaEstimate, ThetaFraction, ThetaIntersect, ThetaJaccard, ThetaRetained, ThetaUnion}
+import graft.functions.{BloomAgg, CosineSimilarity, HyperplaneLsh, LangId, QualityScore, ShingleHashes, SimHash, SketchAgg, SketchRead}
 import graft.sketch.{DdSketch, KllDoubles, ThetaSketch}
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -30,6 +30,11 @@ object GraftFunctions {
     * called with `args` in SQL argument order. */
   private def sketch(name: String, args: Expression*): Column =
     col(SketchAgg.fn(name).build(args).toAggregateExpression())
+
+  /** A declared stored-sketch reader ([[graft.functions.SketchRead.functions]])
+    * called with `args` in SQL argument order. */
+  private def read(name: String, args: Column*): Column =
+    col(SketchRead.fn(name).build(args.map(expr)))
 
   /** `approx_distinct(col)` with defaults (HLL, b=16). */
   def approx_distinct(c: Column): Column = sketch("approx_distinct", expr(c))
@@ -132,29 +137,29 @@ object GraftFunctions {
   def theta_merge_agg(c: Column): Column = sketch("theta_merge_agg", expr(c))
 
   /** Distinct-count estimate of a stored theta sketch. */
-  def theta_estimate(c: Column): Column = col(ThetaEstimate(expr(c)))
+  def theta_estimate(c: Column): Column = read("theta_estimate", c)
 
   /** Retained-entry count — with [[theta_fraction]] this exposes the
     * sketch's own error bound (RSE ≈ √(1−θ)/√(c−1)) in-query. */
-  def theta_retained(c: Column): Column = col(ThetaRetained(expr(c)))
+  def theta_retained(c: Column): Column = read("theta_retained", c)
 
   /** Sampling fraction θ ∈ (0, 1] of a stored theta sketch. */
-  def theta_fraction(c: Column): Column = col(ThetaFraction(expr(c)))
+  def theta_fraction(c: Column): Column = read("theta_fraction", c)
 
   /** Sketch of A ∪ B. */
-  def theta_union(a: Column, b: Column): Column = col(ThetaUnion(expr(a), expr(b)))
+  def theta_union(a: Column, b: Column): Column = read("theta_union", a, b)
 
   /** Sketch of A ∩ B — error proportional to the intersection, not the
     * union (the bounded-error realization of the reference stub's "set
     * intersection" TODO). */
-  def theta_intersect(a: Column, b: Column): Column = col(ThetaIntersect(expr(a), expr(b)))
+  def theta_intersect(a: Column, b: Column): Column = read("theta_intersect", a, b)
 
   /** Sketch of A \ B. */
-  def theta_difference(a: Column, b: Column): Column = col(ThetaDifference(expr(a), expr(b)))
+  def theta_difference(a: Column, b: Column): Column = read("theta_difference", a, b)
 
   /** Jaccard similarity estimate |A∩B| / |A∪B| from two stored theta
-    * sketches (see [[graft.functions.ThetaJaccard]]). */
-  def theta_jaccard(a: Column, b: Column): Column = col(ThetaJaccard(expr(a), expr(b)))
+    * sketches (NULL is the empty set: J(∅, B) = 0). */
+  def theta_jaccard(a: Column, b: Column): Column = read("theta_jaccard", a, b)
 
   /** `cm_sketch_agg(x, width, depth)` — serialized Count-Min sketch of a
     * column (point-frequency estimates; see [[graft.sketch.CountMin]]). */
@@ -182,18 +187,16 @@ object GraftFunctions {
 
   /** `agms_join_size(a, b)` — equi-join cardinality estimate from two
     * parallel count-sketches. */
-  def agms_join_size(a: Column, b: Column): Column =
-    col(AgmsJoinSize(expr(a), expr(b)))
+  def agms_join_size(a: Column, b: Column): Column = read("agms_join_size", a, b)
 
   /** `agms_f2(bin)` — second-moment (self-join size) estimate. */
-  def agms_f2(c: Column): Column = col(AgmsF2(expr(c)))
+  def agms_f2(c: Column): Column = read("agms_f2", c)
 
   /** `cm_estimate(bin, key)` — point-frequency estimate (never under). */
-  def cm_estimate(sketch: Column, key: Column): Column =
-    col(CmEstimate(expr(sketch), expr(key)))
+  def cm_estimate(sketch: Column, key: Column): Column = read("cm_estimate", sketch, key)
 
   /** `cm_total(bin)` — total offered weight of a stored count-min sketch. */
-  def cm_total(sketch: Column): Column = col(CmTotal(expr(sketch)))
+  def cm_total(sketch: Column): Column = read("cm_total", sketch)
 
   /** `bloom_agg(x, numBits, numHashes)` — serialized Bloom filter of a
     * column (the runtime-filter build side; see [[graft.functions.BloomAgg]]). */
@@ -208,8 +211,7 @@ object GraftFunctions {
 
   /** `might_contain(bloom, x)` — probe a serialized Bloom filter; false is
     * definitive (no false negatives). */
-  def might_contain(bloom: Column, c: Column): Column =
-    col(MightContain(expr(bloom), expr(c)))
+  def might_contain(bloom: Column, c: Column): Column = read("might_contain", bloom, c)
 
   /** 64-bit Charikar SimHash of a token array (near-dup fingerprint). */
   def simhash(c: Column): Column = col(SimHash(expr(c)))
@@ -234,10 +236,10 @@ object GraftFunctions {
   def hyperplane_lsh(c: Column, dim: Int, nBits: Int, table: Int): Column =
     col(HyperplaneLsh(expr(c), dim, nBits, table))
 
-  def sketch_estimate(c: Column): Column = col(SketchEstimate(expr(c)))
-  def sketch_union(a: Column, b: Column): Column = col(SketchUnion(expr(a), expr(b)))
+  def sketch_estimate(c: Column): Column = read("sketch_estimate", c)
+  def sketch_union(a: Column, b: Column): Column = read("sketch_union", a, b)
   def sketch_intersection_estimate(a: Column, b: Column): Column =
-    col(SketchIntersectionEstimate(expr(a), expr(b)))
+    read("sketch_intersection_estimate", a, b)
 
   private def arity(name: String, n: Int)(
       b: Seq[Expression] => Expression): Seq[Expression] => Expression =
@@ -256,31 +258,8 @@ object GraftFunctions {
     * both [[register]] (runtime, FunctionRegistry) and
     * [[GraftExtensions]] (session build time, injectFunction). */
   val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] =
-    SketchAgg.functions.map(f => (f.name, f.usage, f.build _)) ++ Seq(
-    ("theta_estimate", "theta_estimate(s) - distinct estimate of a theta sketch",
-      arity("theta_estimate", 1)(e => ThetaEstimate(e.head))),
-    ("theta_retained", "theta_retained(s) - retained entries of a theta sketch",
-      arity("theta_retained", 1)(e => ThetaRetained(e.head))),
-    ("theta_fraction", "theta_fraction(s) - sampling fraction of a theta sketch",
-      arity("theta_fraction", 1)(e => ThetaFraction(e.head))),
-    ("theta_union", "theta_union(a, b) - theta sketch of the set union",
-      arity("theta_union", 2)(e => ThetaUnion(e(0), e(1)))),
-    ("theta_intersect", "theta_intersect(a, b) - theta sketch of the set intersection",
-      arity("theta_intersect", 2)(e => ThetaIntersect(e(0), e(1)))),
-    ("theta_difference", "theta_difference(a, b) - theta sketch of the set difference",
-      arity("theta_difference", 2)(e => ThetaDifference(e(0), e(1)))),
-    ("theta_jaccard", "theta_jaccard(a, b) - Jaccard similarity estimate of two theta sketches",
-      arity("theta_jaccard", 2)(e => ThetaJaccard(e(0), e(1)))),
-    ("cm_estimate", "cm_estimate(bin, key) - point-frequency estimate from a Count-Min sketch",
-      arity("cm_estimate", 2)(e => CmEstimate(e(0), e(1)))),
-    ("agms_join_size", "agms_join_size(a, b) - equi-join cardinality estimate from two parallel count-sketches",
-      arity("agms_join_size", 2)(e => AgmsJoinSize(e(0), e(1)))),
-    ("agms_f2", "agms_f2(bin) - second-moment (self-join size) estimate of a count-sketch",
-      arity("agms_f2", 1)(e => AgmsF2(e.head))),
-    ("cm_total", "cm_total(bin) - total offered weight of a Count-Min sketch",
-      arity("cm_total", 1)(e => CmTotal(e.head))),
-    ("might_contain", "might_contain(bloom, x) - probe a Bloom filter (no false negatives)",
-      arity("might_contain", 2)(e => MightContain(e(0), e(1)))),
+    SketchAgg.functions.map(f => (f.name, f.usage, f.build _)) ++
+    SketchRead.functions.map(f => (f.name, f.usage, f.build _)) ++ Seq(
     ("simhash", "simhash(tokens) - 64-bit Charikar SimHash",
       arity("simhash", 1)(e => SimHash(e.head))),
     ("simhash_md5", "simhash_md5(tokens) - SimHash with cross-engine-reproducible MD5 token hash",
@@ -302,19 +281,14 @@ object GraftFunctions {
     ("lang_id", "lang_id(text) - stopword-overlap language ID",
       arity("lang_id", 1)(e => LangId(e.head))),
     ("quality_score", "quality_score(text) - [0,1] text quality heuristic",
-      arity("quality_score", 1)(e => QualityScore(e.head))),
-    ("sketch_estimate", "sketch_estimate(s) - estimate of a stored sketch",
-      arity("sketch_estimate", 1)(e => SketchEstimate(e.head))),
-    ("sketch_union", "sketch_union(a, b) - serialized sketch union",
-      arity("sketch_union", 2)(e => SketchUnion(e(0), e(1)))),
-    ("sketch_intersection_estimate",
-      "sketch_intersection_estimate(a, b) - inclusion-exclusion intersection",
-      arity("sketch_intersection_estimate", 2)(e => SketchIntersectionEstimate(e(0), e(1)))))
+      arity("quality_score", 1)(e => QualityScore(e.head))))
 
-  /** Idempotently register all engine functions with a session's
-    * FunctionRegistry so plain SQL can call them (the Catalyst analogue of the
-    * reference's resolver entry point, UDAFCardinalityEstimator.java:100-148;
-    * literal-argument validation happens in checkInputDataTypes).
+  /** Idempotently install on a session what [[GraftExtensions]] injects:
+    * every engine function in its FunctionRegistry so plain SQL can call them
+    * (the Catalyst analogue of the reference's resolver entry point,
+    * UDAFCardinalityEstimator.java:100-148; literal-argument validation
+    * happens in checkInputDataTypes), and [[graft.plans.AsOfJoinStrategy]]
+    * among its experimental strategies unless already there.
     * [[graft.Session.local]] sessions come registered; call this once on a
     * session the engine did not build.
     *
@@ -330,5 +304,8 @@ object GraftFunctions {
     sqlFunctions.foreach { case (name, _, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(graft.plans.AsOfJoinStrategy))
+      spark.experimental.extraStrategies = strategies :+ graft.plans.AsOfJoinStrategy
   }
 }

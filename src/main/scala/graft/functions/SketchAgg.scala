@@ -62,8 +62,9 @@ case class SketchAgg(
   /** The family parameters, read once at bind time; Left says why not. */
   @transient lazy val args: Either[String, Args] = family.read(children.tail)
 
-  @transient private lazy val structInput = SketchExprs.isSketchStruct(child.dataType)
-  @transient private lazy val mergeInput = fn.mode == Merge || structInput
+  @transient private lazy val mergeInput =
+    fn.mode == Merge || ApproxDistinct.isResultStruct(child.dataType)
+  @transient private lazy val bytesOf = storedBytes(child.dataType)
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val failure = args match {
@@ -92,12 +93,7 @@ case class SketchAgg(
     val v = child.eval(input)
     if (v != null) {
       if (mergeInput) {
-        val bytes =
-          if (!structInput) v.asInstanceOf[Array[Byte]]
-          else {
-            val row = v.asInstanceOf[InternalRow]
-            if (row.isNullAt(2)) null else row.getBinary(2)
-          }
+        val bytes = bytesOf(v)
         if (bytes != null && bytes.length > 0)
           buffer.sketch = kernel.mergeSerialized(bytes, target(buffer))
       } else {
@@ -190,6 +186,15 @@ object SketchAgg {
   private val byName: Map[String, SketchFn] = functions.map(f => f.name -> f).toMap
 
   def fn(name: String): SketchFn = byName(name)
+
+  /** Reads the bytes of a non-null stored sketch of type `dt`, bound once:
+    * a BINARY, or `approx_distinct`'s result struct (null when its `binary`
+    * field is). */
+  def storedBytes(dt: DataType): Any => Array[Byte] =
+    if (ApproxDistinct.isResultStruct(dt)) { v =>
+      val row = v.asInstanceOf[InternalRow]
+      if (row.isNullAt(2)) null else row.getBinary(2)
+    } else _.asInstanceOf[Array[Byte]]
 }
 
 /** One SQL sketch aggregate: `name(input, req...[, opt...])` over a family
@@ -332,8 +337,15 @@ object ApproxDistinct extends SketchFamily("col", "sketch",
     StructField("cardinality", LongType),
     StructField("binary", BinaryType)))
 
+  /** Whether `dt` is the result struct, which re-aggregates and reads as a
+    * stored sketch (ref :259-265). */
+  def isResultStruct(dt: DataType): Boolean = dt match {
+    case s: StructType => s.fieldNames.sameElements(resultType.fieldNames)
+    case _ => false
+  }
+
   override def checkInput(dt: DataType): String = dt match {
-    case s: StructType if !SketchExprs.isSketchStruct(s) =>
+    case s: StructType if !isResultStruct(s) =>
       s"struct input must be a sketch struct ${resultType.sql}, got ${s.sql}"
     case _: StructType => null
     case _ => super.checkInput(dt)
@@ -621,7 +633,7 @@ object AgmsAgg extends SketchFamily("x", "count-sketch",
   * BINARY: the runtime-filter build side (build over the selective side of a
   * join, broadcast, drop non-matching fact rows at the scan). Merge is
   * bitwise OR, so `bloom_merge_agg` re-aggregates stored filters exactly.
-  * Hashes via [[TypedXxHash]] so [[MightContain]] probes agree by
+  * Hashes via [[TypedXxHash]] so `might_contain` probes agree by
   * construction. An empty group gives the empty filter, not NULL. */
 object BloomAgg extends SketchFamily("x", "bloom filter",
     Param("numBits", Param.Integral, BloomAgg.DefaultNumBits),
@@ -653,4 +665,16 @@ object BloomAgg extends SketchFamily("x", "bloom filter",
     def mergeSerialized(bytes: Array[Byte], into: BloomFilter): BloomFilter =
       BloomFilter.mergeSerializedInto(bytes, into)
   }
+}
+
+object CountMinFunctions {
+  /** Independent from the other sketch seeds so a count-min probe can never
+    * silently agree with a bloom/topk hash of the same value. */
+  val HashSeed = 91L
+}
+
+object AgmsFunctions {
+  /** Independent from every other family's seed — parallel sketches must
+    * agree with EACH OTHER, never accidentally with a CM/bloom hash. */
+  val HashSeed = 131L
 }

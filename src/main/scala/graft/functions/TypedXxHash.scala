@@ -6,7 +6,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One 64-bit xxHash kernel per atomic input type, resolved once at bind
   * time (not per row). Shared by every hashing consumer in the engine
-  * ([[ApproxDistinct]], [[BloomAgg]], [[MightContain]]) so a value hashes
+  * ([[ApproxDistinct]], [[BloomAgg]], [[SketchRead]]) so a value hashes
   * identically everywhere — a bloom built from a LONG column and probed
   * with the same LONG agrees by construction. */
 object TypedXxHash {

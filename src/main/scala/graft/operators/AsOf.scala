@@ -62,18 +62,15 @@ object AsOf {
     * Right side should be unique per (key, time) for total determinism
     * (same contract as [[asofJoin]]).
     *
-    * Registers [[graft.plans.AsOfJoinStrategy]] with the session's
-    * experimental strategies on first use (idempotent);
-    * [[graft.GraftExtensions]] injects it cluster-wide. */
+    * The session plans it through [[graft.plans.AsOfJoinStrategy]], which
+    * [[graft.GraftFunctions.register]] and [[graft.GraftExtensions]]
+    * install. */
   def asofJoinExec(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String): DataFrame = {
     val collisions = left.columns.toSet.intersect(right.columns.toSet)
     require(collisions.isEmpty, s"colliding column names: $collisions")
     val spark = left.sparkSession
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ graft.plans.AsOfJoinStrategy
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     InjectRuntimeFilter makes): nothing executes until the query's own
   *     action, the filter bytes never appear as a plan literal, and the
   *     subquery result is materialized exactly once per query run
-  *     ([[graft.functions.MightContain]] then deserializes once per task);
+  *     (`might_contain`, [[graft.functions.SketchRead]], then deserializes once per task);
   *  3. finish with the exact join.
   *
   * Because a Bloom filter has NO false negatives, step 2 never drops a

@@ -35,9 +35,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * movement (sides shuffle separately), no sort-buffer union, no window
   * frame evaluation.
   *
-  * Deployment: [[graft.operators.AsOf.asofJoinExec]] registers
-  * [[AsOfJoinStrategy]] in the session's experimental strategies;
-  * [[graft.GraftExtensions]] injects it cluster-wide.
+  * Deployment: [[graft.GraftFunctions.register]] adds [[AsOfJoinStrategy]]
+  * to the session's experimental strategies; [[graft.GraftExtensions]]
+  * injects it cluster-wide.
   */
 case class AsOfJoinNode(left: LogicalPlan, right: LogicalPlan,
     leftKey: Expression, rightKey: Expression,

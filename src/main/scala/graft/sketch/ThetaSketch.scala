@@ -6,7 +6,7 @@ import java.nio.ByteBuffer
   * the sound realization of the reference stub's "TODO potential set
   * intersection and other utils" (UDFCardinalityEstimator.java:30).
   *
-  * Inclusion–exclusion over HLL sketches ([[graft.functions.SketchIntersectionEstimate]])
+  * Inclusion–exclusion over HLL sketches (`sketch_intersection_estimate`)
   * has error proportional to the UNION size; a theta sketch's set-expression
   * error is proportional to the RESULT size (Beyer et al. 2007 "On Synopses
   * for Distinct-Value Estimation under Multiset Operations" — the KMV
