@@ -32,8 +32,13 @@ object TypedXxHash {
       val b = v.asInstanceOf[Array[Byte]]
       XXH64.hashUnsafeBytes(b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, seed)
     }
-    case _: DecimalType => v =>
-      XXH64.hashUTF8String(UTF8String.fromString(v.toString), seed)
+    case _: DecimalType => v => {
+      // one string per numeric value: trailing fractional zeros stripped, so
+      // 1.5 and 1.50 agree while a value without them keeps its string
+      val d = v.asInstanceOf[Decimal].toJavaBigDecimal.stripTrailingZeros
+      val canon = if (d.scale < 0) d.setScale(0) else d
+      XXH64.hashUTF8String(UTF8String.fromString(canon.toString), seed)
+    }
     case _ => v => XXH64.hashUTF8String(UTF8String.fromString(String.valueOf(v)), seed)
   }
 }

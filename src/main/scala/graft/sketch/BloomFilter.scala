@@ -11,7 +11,8 @@ package graft.sketch
   *
   * Merge = bitwise OR (same numBits/numHashes required) — distributive, so
   * partial aggregation builds per-partition filters that OR across the
-  * shuffle; a 100 TB build ships m/8 bytes per map task, never raw keys.
+  * shuffle; a 100 TB build ships at most m/8 bytes per map task (fewer
+  * for a sparse filter), never raw keys.
   * NO false negatives ever: `bloom-prefilter → exact join` is identity-
   * preserving, which is what makes the bloom queries hash-gateable.
   */
@@ -68,26 +69,78 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
     n += other.n
   }
 
+  /** The sparse layout when it is smaller than the dense words, else the
+    * dense one (see [[BloomFilter.deserialize]]): the choice depends only on
+    * the bits, so the bytes stay partition-invariant. */
   def serialize(): Array[Byte] = {
-    val buf = java.nio.ByteBuffer.allocate(BloomFilter.HeaderBytes + words.length * 8)
-    buf.put(BloomFilter.WireTag).putInt(numBits).putInt(numHashes).putLong(n)
-    buf.asLongBuffer().put(words)
+    var setBits = 0
+    var i = 0
+    while (i < words.length) { setBits += java.lang.Long.bitCount(words(i)); i += 1 }
+    val dense = BloomFilter.HeaderBytes + words.length * 8
+    // each position takes at least one byte
+    val sparse =
+      if (BloomFilter.SparseHeaderBytes + setBits >= dense) dense else sparseBytes(dense)
+    val buf = java.nio.ByteBuffer.allocate(math.min(sparse, dense))
+    if (sparse < dense) {
+      buf.put(BloomFilter.SparseTag).putInt(numBits).putInt(numHashes).putLong(n).putInt(setBits)
+      var prev = -1
+      i = 0
+      while (i < words.length) {
+        var word = words(i)
+        while (word != 0L) {
+          val pos = i * 64 + java.lang.Long.numberOfTrailingZeros(word)
+          var gap = pos - prev
+          while (gap >= 0x80) { buf.put((gap | 0x80).toByte); gap >>>= 7 }
+          buf.put(gap.toByte)
+          prev = pos
+          word &= word - 1
+        }
+        i += 1
+      }
+    } else {
+      buf.put(BloomFilter.WireTag).putInt(numBits).putInt(numHashes).putLong(n)
+      buf.asLongBuffer().put(words)
+    }
     buf.array()
+  }
+
+  /** The size of the sparse layout, or any size ≥ `limit` once it reaches
+    * that (the scan stops there). */
+  private def sparseBytes(limit: Int): Int = {
+    var size = BloomFilter.SparseHeaderBytes
+    var prev = -1
+    var i = 0
+    while (i < words.length && size < limit) {
+      var word = words(i)
+      while (word != 0L) {
+        val pos = i * 64 + java.lang.Long.numberOfTrailingZeros(word)
+        size += (38 - Integer.numberOfLeadingZeros(pos - prev)) / 7 // the gap's varint
+        prev = pos
+        word &= word - 1
+      }
+      i += 1
+    }
+    size
   }
 }
 
 object BloomFilter {
+  /** The dense layout's tag. */
   val WireTag: Byte = 0x42 // 'B'
+  /** The sparse layout's tag. */
+  val SparseTag: Byte = 0x62 // 'b'
 
   private val HeaderBytes = 1 + 4 + 4 + 8
+  private val SparseHeaderBytes = HeaderBytes + 4
 
-  /** Validate the wire header and the exact length; return (numBits,
-    * numHashes, n). Shared by [[deserialize]] and [[mergeSerializedInto]]. */
+  /** Validate the wire header and, for the dense layout, the exact length;
+    * return (numBits, numHashes, n). Shared by [[deserialize]] and
+    * [[mergeSerializedInto]]. */
   private def readHeader(bytes: Array[Byte]): (Int, Int, Long) = {
-    if (bytes.length >= 1 && bytes(0) != WireTag)
+    if (bytes.length >= 1 && bytes(0) != WireTag && bytes(0) != SparseTag)
       throw new SketchMergeException(
-        f"not a bloom filter: wire tag 0x${bytes(0)}%02x (expected 0x$WireTag%02x)")
-    if (bytes.length < HeaderBytes)
+        f"not a bloom filter: wire tag 0x${bytes(0)}%02x (expected 0x$WireTag%02x or 0x$SparseTag%02x)")
+    if (bytes.length < HeaderBytes || bytes(0) == SparseTag && bytes.length < SparseHeaderBytes)
       throw new SketchMergeException(s"corrupted bloom payload: ${bytes.length} bytes")
     val buf = java.nio.ByteBuffer.wrap(bytes)
     val numBits = buf.getInt(1)
@@ -95,20 +148,64 @@ object BloomFilter {
     if (numBits < 64 || numBits % 64 != 0 || numHashes < 1 || numHashes > 16)
       throw new SketchMergeException(
         s"corrupted bloom payload: numBits=$numBits numHashes=$numHashes")
-    if (bytes.length != HeaderBytes + (numBits / 64) * 8)
+    if (bytes(0) == WireTag && bytes.length != HeaderBytes + (numBits / 64) * 8)
       throw new SketchMergeException(
         s"corrupted bloom payload: ${bytes.length} bytes for numBits=$numBits")
     (numBits, numHashes, buf.getLong(9))
   }
 
-  private def wordView(bytes: Array[Byte]): java.nio.LongBuffer =
-    java.nio.ByteBuffer.wrap(bytes, HeaderBytes, bytes.length - HeaderBytes).asLongBuffer()
+  /** OR a validated payload's bits into `into`; for the sparse layout, with
+    * `into` null, only check its positions. */
+  private def orBits(bytes: Array[Byte], numBits: Int, into: Array[Long]): Unit =
+    if (bytes(0) == WireTag) {
+      if (into != null) {
+        val lb = java.nio.ByteBuffer.wrap(bytes, HeaderBytes, bytes.length - HeaderBytes).asLongBuffer()
+        var i = 0
+        while (i < into.length) { into(i) |= lb.get(i); i += 1 }
+      }
+    } else {
+      def corrupt(why: String) = throw new SketchMergeException(s"corrupted bloom payload: $why")
+      val count = java.nio.ByteBuffer.wrap(bytes).getInt(HeaderBytes)
+      if (count < 0 || count > numBits) corrupt(s"$count set bits of $numBits")
+      var at = SparseHeaderBytes
+      var prev = -1L
+      var k = 0
+      while (k < count) {
+        var delta = 0L
+        var shift = 0
+        var b = 0
+        while ({
+          if (at >= bytes.length) corrupt(s"truncated after $k of $count positions")
+          if (shift == 35) corrupt("overlong varint")
+          b = bytes(at)
+          at += 1
+          delta |= (b & 0x7fL) << shift
+          shift += 7
+          b < 0
+        }) ()
+        if (b == 0 && shift > 7) corrupt("overlong varint")
+        if (delta == 0) corrupt("positions not ascending")
+        prev += delta
+        if (prev >= numBits) corrupt(s"position $prev >= numBits=$numBits")
+        if (into != null) into((prev >>> 6).toInt) |= 1L << prev
+        k += 1
+      }
+      if (at != bytes.length) corrupt(s"${bytes.length - at} trailing bytes")
+    }
 
+  /** Decode either layout:
+    *  - dense (`B`): `[tag: 1][numBits: 4][numHashes: 4][n: 8]` then the
+    *    numBits / 64 words as big-endian longs;
+    *  - sparse (`b`): the same header, `[count: 4]`, then the count set-bit
+    *    positions in ascending order, each as the LEB128 varint of its gap
+    *    to the one before (the first's to −1), so every gap is ≥ 1 — the
+    *    gap coding of a sparse filter (Mitzenmacher, "Compressed Bloom
+    *    Filters", 2002). */
   def deserialize(bytes: Array[Byte]): BloomFilter = {
     val (numBits, numHashes, n) = readHeader(bytes)
     val bf = new BloomFilter(numBits, numHashes)
     bf.n = n
-    wordView(bytes).get(bf.words)
+    orBits(bytes, numBits, bf.words)
     bf
   }
 
@@ -116,7 +213,7 @@ object BloomFilter {
     * the bitwise-OR twin of [[CountMin.mergeSerializedInto]]: no decoded
     * bit array per input row in `bloom_merge_agg`. The same validation,
     * bits and count as deserialize + mergeInPlace; a rejected payload
-    * leaves `target` unchanged. */
+    * leaves `target` unchanged (a sparse one is checked in full first). */
   def mergeSerializedInto(bytes: Array[Byte], target: BloomFilter): BloomFilter = {
     if (target == null) return deserialize(bytes)
     val (numBits, numHashes, n) = readHeader(bytes)
@@ -124,10 +221,9 @@ object BloomFilter {
       throw new SketchMergeException(
         s"cannot merge bloom filters of different shape: " +
           s"(${target.numBits},${target.numHashes}) vs ($numBits,$numHashes)")
+    if (bytes(0) == SparseTag) orBits(bytes, numBits, null)
+    orBits(bytes, numBits, target.words)
     target.n += n
-    val lb = wordView(bytes)
-    var i = 0
-    while (i < target.words.length) { target.words(i) |= lb.get(i); i += 1 }
     target
   }
 }

@@ -108,12 +108,15 @@ final class CountSketch(val depth: Int, val width: Int) extends Serializable {
     n += other.n
   }
 
-  def serialize(): Array[Byte] =
-    CounterWire.serialize(CountSketch.WireTag, depth, width, n, counters)
+  /** The packed [[CounterWire]] layout. */
+  def serialize(): Array[Byte] = CountSketch.wire.serialize(depth, width, n, counters)
 }
 
 object CountSketch {
+  /** The plain layout's tag: read, no longer written. */
   val WireTag: Byte = 0x47 // 'G' (aGms); distinct from every other family tag
+  /** The bit-packed layout's tag, what [[CountSketch.serialize]] writes. */
+  val PackedTag: Byte = 0x67 // 'g'
   val DefaultDepth = 5
   val DefaultWidth = 1024
   val MaxWidth = 1 << 22
@@ -142,14 +145,17 @@ object CountSketch {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
-  private def readHeader(bytes: Array[Byte]): (Int, Int, Long) =
-    CounterWire.readHeader(bytes, WireTag, "count-sketch", MaxWidth)
+  private val wire = new CounterWire(WireTag, PackedTag, "count-sketch", MaxWidth)
 
+  /** Wire layout: `[tag 'g': 1][depth: 4][width: 4][n: 8][min: 8][w: 1]`,
+    * then depth × width counters as c − min in w bits (min is negative once
+    * any counter is); the plain `'G'` layout of earlier builds (8-byte
+    * counters) still decodes ([[CounterWire]]). */
   def deserialize(bytes: Array[Byte]): CountSketch = {
-    val (depth, width, n) = readHeader(bytes)
-    val cs = new CountSketch(depth, width)
-    cs.n = n
-    CounterWire.counters(bytes).get(cs.counters)
+    val p = wire.read(bytes)
+    val cs = new CountSketch(p.depth, p.width)
+    cs.n = p.n
+    p.addInto(cs.counters)
     cs
   }
 
@@ -160,13 +166,13 @@ object CountSketch {
     * payload leaves `target` unchanged. */
   def mergeSerializedInto(bytes: Array[Byte], target: CountSketch): CountSketch = {
     if (target == null) return deserialize(bytes)
-    val (depth, width, n) = readHeader(bytes)
-    if (depth != target.depth || width != target.width)
+    val p = wire.read(bytes)
+    if (p.depth != target.depth || p.width != target.width)
       throw new SketchMergeException(
         s"cannot merge count-sketches of different shape: " +
-          s"${target.depth}x${target.width} vs ${depth}x$width")
-    target.n += n
-    CounterWire.addInto(bytes, target.counters)
+          s"${target.depth}x${target.width} vs ${p.depth}x${p.width}")
+    target.n += p.n
+    p.addInto(target.counters)
     target
   }
 }

@@ -258,6 +258,8 @@ object DdSketch {
     new Wire(alpha, zero, n, posSize, negSize, pairs)
   }
 
+  /** Wire layout: `[tag 'D': 1][alpha: 8][zero: 8][n: 8]`, then per store
+    * (positive, negative) `[size: 4][size × (key: 8, count: 8)]`, ascending keys. */
   def deserialize(bytes: Array[Byte]): DdSketch = {
     val w = validate(bytes)
     val s = new DdSketch(w.alpha)

@@ -305,6 +305,8 @@ object KllDoubles {
     numLevels
   }
 
+  /** Wire layout: `[tag 'K': 1][k: 4][n: 8][compactions: 8][levels: 4]`,
+    * then per level `[size: 4][size × item: 8]` (double bits, ascending). */
   def deserialize(bytes: Array[Byte]): KllDoubles = {
     val bb = ByteBuffer.wrap(bytes)
     val numLevels = validate(bytes, bb)

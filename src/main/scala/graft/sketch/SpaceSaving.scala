@@ -568,6 +568,8 @@ object SpaceSaving {
     }
   }
 
+  /** Wire layout: `[tag 'S': 1][capacity: 4][n: 8][evicted: 1][size: 4]`,
+    * then `size × [length: 4][UTF-8 item][estimate: 8][error: 8]`. */
   def deserialize(bytes: Array[Byte]): SpaceSaving = {
     val w = validate(bytes)
     val ss = new SpaceSaving(w.capacity)

@@ -290,6 +290,8 @@ object ThetaSketch {
     count
   }
 
+  /** Wire layout: `[tag 'T': 1][k: 4][theta: 8][count: 4][count × hash: 8]`,
+    * ascending hashes below theta. */
   def deserialize(bytes: Array[Byte]): ThetaSketch = {
     val bb = ByteBuffer.wrap(bytes)
     val count = validate(bytes, bb)

@@ -148,4 +148,58 @@ class BloomSpec extends AnyFunSuite {
       codec.checkRejected("trailing byte", a, bytes :+ 0.toByte)
     }
   }
+
+  /** A sparse payload by hand: a (numBits, 3) header, `count`, then `body`
+    * as the varint bytes. */
+  private def sparse(numBits: Int, count: Int, body: Int*): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(21 + body.length)
+    bb.put(BloomFilter.SparseTag).putInt(numBits).putInt(3).putLong(1L).putInt(count)
+    body.foreach(b => bb.put(b.toByte))
+    bb.array()
+  }
+
+  test("sparse layout when smaller, else dense byte for byte; dense payloads still merge; corrupt positions refused") {
+    val tags = for (seed <- 1 to 12) yield {
+      val rnd = new scala.util.Random(seed)
+      val (numBits, numHashes) = (64 * (1 + rnd.nextInt(400)), 1 + rnd.nextInt(8))
+      val f = new BloomFilter(numBits, numHashes)
+      // odd seeds: under one set bit per 64; even: half the bits or more
+      val keys = if (seed % 2 == 1) rnd.nextInt(numBits / 64 / numHashes + 1) else numBits / 2 + rnd.nextInt(numBits)
+      (0 until keys).foreach(_ => f.offerHash(rnd.nextLong()))
+      val bytes = f.serialize()
+      val dense = LegacyWire.bloom(f)
+      if (bytes(0) == BloomFilter.WireTag) assert(bytes.sameElements(dense), s"seed $seed")
+      else assert(bytes(0) == BloomFilter.SparseTag && bytes.length < dense.length, s"seed $seed")
+      val a = new BloomFilter(numBits, numHashes)
+      (0 until 50).foreach(_ => a.offerHash(rnd.nextLong()))
+      for ((layout, payload) <- Seq("dense" -> dense, "written" -> bytes))
+        codec.checkMerge(s"seed $seed, $layout", () => BloomFilter.deserialize(a.serialize()), payload, bytes)
+      codec.checkRejected(s"seed $seed, truncated", a, bytes.dropRight(1))
+      codec.checkRejected(s"seed $seed, trailing byte", a, bytes :+ 0.toByte)
+      bytes(0)
+    }
+    assert(tags.toSet == Set(BloomFilter.SparseTag, BloomFilter.WireTag))
+
+    val ok = sparse(128, 2, 5, 3) // positions 4 and 7
+    assert(BloomFilter.deserialize(ok).words.toSeq == Seq(1L << 4 | 1L << 7, 0L))
+    val target = BloomFilter.deserialize(sparse(128, 1, 100))
+    for ((what, bad) <- Seq(
+        "position >= numBits" -> sparse(128, 1, 0x81, 0x01),
+        "non-ascending positions" -> sparse(128, 2, 5, 0),
+        "overlong varint" -> sparse(128, 1, 0x85, 0x00),
+        "six-byte varint" -> sparse(128, 1, 0x81, 0x80, 0x80, 0x80, 0x80, 0x00),
+        "fewer positions than the count" -> sparse(128, 3, 5, 3),
+        "count above numBits" -> sparse(128, 129),
+        "negative count" -> sparse(128, -1),
+        "no count" -> sparse(128, 0).dropRight(4)))
+      codec.checkRejected(what, target, bad)
+  }
+
+  test("a 2^20-bit bloom filter of 2048 keys is sparse and at most 20 KB") {
+    val f = new BloomFilter(1 << 20, 7)
+    (1L to 2048L).foreach(k => f.offerHash(org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(k, 0L)))
+    val bytes = f.serialize()
+    assert(bytes(0) == BloomFilter.SparseTag && bytes.length <= 20480, bytes.length)
+    assert(BloomFilter.deserialize(bytes).words.sameElements(f.words))
+  }
 }

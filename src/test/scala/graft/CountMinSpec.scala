@@ -78,6 +78,44 @@ class CountMinSpec extends AnyFunSuite {
     assertThrows[SketchMergeException](CountMin.deserialize(truncated))
   }
 
+  private val codec = WireCodec[CountMin](_.serialize(), CountMin.deserialize,
+    (a, b) => { a.mergeInPlace(b); a }, CountMin.mergeSerializedInto)
+
+  test("packed counters: plain payloads still decode and merge; corrupt packed payloads refused") {
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val (depth, width) = (1 + rnd.nextInt(6), 16 << rnd.nextInt(5))
+      def of(n: Int, maxWeight: Long) = {
+        val s = new CountMin(depth, width)
+        (0 until n).foreach(_ => s.offerHash(rnd.nextLong(), 1L + (rnd.nextLong() >>> 1) % maxWeight))
+        s
+      }
+      // weights up to 2^(4·seed): counters from a few bits wide to 50
+      val b = of(rnd.nextInt(3000), 1L << (4 * seed))
+      val packed = b.serialize()
+      val plain = LegacyWire.countMin(b)
+      assert(packed(0) == CountMin.PackedTag && packed.length <= plain.length + 9, s"seed $seed")
+      val a = of(rnd.nextInt(3000), 8)
+      for ((layout, bytes) <- Seq("plain" -> plain, "packed" -> packed))
+        codec.checkMerge(s"seed $seed, $layout", () => CountMin.deserialize(a.serialize()), bytes, packed)
+      val empty = new CountMin(depth, width)
+      codec.checkMerge(s"seed $seed, empty", () => CountMin.deserialize(a.serialize()),
+        LegacyWire.countMin(empty), empty.serialize())
+      for ((what, bad) <- Seq("truncated" -> packed.dropRight(1), "trailing byte" -> (packed :+ 0.toByte),
+          "65-bit counters" -> packed.updated(25, 65.toByte), "plain truncated" -> plain.dropRight(1),
+          "plain trailing byte" -> (plain :+ 0.toByte)))
+        codec.checkRejected(s"seed $seed, $what", a, bad)
+    }
+  }
+
+  test("a count-min sketch of 2048 keys packs into at most 10 KB") {
+    val cm = new CountMin(CountMin.DefaultDepth, CountMin.DefaultWidth)
+    (1L to 2048L).foreach(k => cm.offerHash(hash(k)))
+    val bytes = cm.serialize()
+    assert(bytes.length <= 10240, bytes.length)
+    assert(CountMin.deserialize(bytes).counters.sameElements(cm.counters))
+  }
+
   test("SQL surface: agg, probe, store-then-merge; validation errors") {
     val spark = TestSpark.session
     import spark.implicits._

@@ -114,4 +114,44 @@ class CountSketchSpec extends AnyFunSuite {
       codec.checkRejected("trailing byte", a, bytes :+ 0.toByte)
     }
   }
+
+  test("packed counters: negative and 64-bit ranges; plain payloads still decode and merge; corrupt packed payloads refused") {
+    def bits(b: Array[Byte]): Int = b(25) & 0xff
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val (depth, width) = (1 + rnd.nextInt(6), 16 << rnd.nextInt(5))
+      def of(n: Int, maxWeight: Long) = {
+        val s = new CountSketch(depth, width)
+        (0 until n).foreach(_ => s.offerHash(rnd.nextLong(), 1L + (rnd.nextLong() >>> 1) % maxWeight))
+        s
+      }
+      val b = of(200 + rnd.nextInt(3000), 1L << (4 * seed))
+      val packed = b.serialize()
+      val plain = LegacyWire.countSketch(b)
+      assert(packed(0) == CountSketch.PackedTag && packed.length <= plain.length + 9, s"seed $seed")
+      assert(java.nio.ByteBuffer.wrap(packed).getLong(17) < 0, s"seed $seed: the least counter is negative")
+      val a = of(rnd.nextInt(3000), 8)
+      for ((layout, bytes) <- Seq("plain" -> plain, "packed" -> packed))
+        codec.checkMerge(s"seed $seed, $layout", () => CountSketch.deserialize(a.serialize()), bytes, packed)
+      for ((what, bad) <- Seq("truncated" -> packed.dropRight(1), "trailing byte" -> (packed :+ 0.toByte),
+          "65-bit counters" -> packed.updated(25, 65.toByte), "plain truncated" -> plain.dropRight(1),
+          "plain trailing byte" -> (plain :+ 0.toByte)))
+        codec.checkRejected(s"seed $seed, $what", a, bad)
+    }
+    // counters of ±(2^63 − 1): a range that needs all 64 bits
+    val wide = (1L to 20L).iterator.map { k =>
+      val s = new CountSketch(5, 64); s.offerHash(hash(k), Long.MaxValue); s
+    }.find(s => bits(s.serialize()) == 64).get
+    codec.checkMerge("64-bit range", () => new CountSketch(5, 64), LegacyWire.countSketch(wide),
+      wide.serialize())
+    assert(CountSketch.deserialize(wide.serialize()).counters.sameElements(wide.counters))
+  }
+
+  test("a count-sketch of 2048 keys packs into at most 4 KB") {
+    val cs = new CountSketch(CountSketch.DefaultDepth, CountSketch.DefaultWidth)
+    (1L to 2048L).foreach(k => cs.offerHash(hash(k)))
+    val bytes = cs.serialize()
+    assert(bytes.length <= 4096, bytes.length)
+    assert(CountSketch.deserialize(bytes).counters.sameElements(cs.counters))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sketch.{BloomFilter, KllDoubles, SketchMergeException, SpaceSaving}
+import graft.sketch.{BloomFilter, CountMin, CountSketch, KllDoubles, SketchMergeException, SpaceSaving}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -92,6 +92,60 @@ class SketchAggContractSpec extends AnyFunSuite {
         assert(java.util.Arrays.equals(a, b), s"${f.name}: 1 vs 8 partitions differ")
       }
     }
+  }
+
+  /** The bit width and the least counter of a packed CM/AGMS payload. */
+  private def counterBits(b: Array[Byte]): Int = b(25) & 0xff
+  private def counterMin(b: Array[Byte]): Long = java.nio.ByteBuffer.wrap(b).getLong(17)
+
+  test("compact layouts: bytes are identical at 1 vs 8 partitions on each side of their switches") {
+    val s = spark
+    import s.implicits._
+    // group g: 8·4^g keys, each 1 + g² times — from a sparse bloom and narrow
+    // counters to a dense bloom and wider ones
+    val keyed = (for (g <- 0 until 4; k <- 0L until (8L << (2 * g)); _ <- 0 to g * g)
+      yield (g, k)).toDF("g", "k")
+    def same(emit: String, df: DataFrame, groups: Int): Seq[Array[Byte]] = {
+      def at(n: Int) = {
+        df.repartition(n).createOrReplaceTempView("switch_src")
+        spark.sql(s"SELECT g, $emit AS s FROM switch_src GROUP BY g ORDER BY g")
+          .collect().map(_.getAs[Array[Byte]](1)).toSeq
+      }
+      val (one, eight) = (at(1), at(8))
+      assert(one.length == groups)
+      one.zip(eight).foreach { case (a, b) => assert(a.sameElements(b), s"$emit: 1 vs 8 partitions differ") }
+      one
+    }
+    val blooms = same("bloom_agg(k, 2048, 3)", keyed, 4)
+    assert(blooms.map(_(0)).toSet == Set(BloomFilter.SparseTag, BloomFilter.WireTag),
+      blooms.map(b => (b(0), b.length)))
+    val cms = same("cm_sketch_agg(k, 256, 4)", keyed, 4)
+    assert(cms.map(counterBits).distinct.length >= 3, cms.map(counterBits))
+    val agms = same("agms_sketch_agg(k, 256, 4)", keyed, 4)
+    assert(agms.forall(counterMin(_) < 0), agms.map(counterMin))
+
+    // merge mode, over stored sketches whose counters need up to 64 bits: one
+    // AGMS store in group 0 holds ±3·2^61 (a range of 1.5·2^63), and the
+    // stores' weights reach 2^41
+    val rnd = new scala.util.Random(17)
+    val wide = Iterator.from(1).map { i =>
+      val cs = new CountSketch(4, 256)
+      cs.offerHash(rnd.nextLong(), 3L << 61)
+      cs.offerHash(rnd.nextLong(), -(3L << 61))
+      cs.serialize()
+    }.find(counterBits(_) == 64).get
+    def stores[S](mk: => S, offer: (S, Long, Long) => Unit, bytes: S => Array[Byte]) =
+      Seq.tabulate(24) { i =>
+        val sk = mk
+        (0 until 40 * (i + 1)).foreach(_ => offer(sk, rnd.nextLong(), 1L + (rnd.nextLong() >>> (23 + i))))
+        (i % 3, bytes(sk))
+      }
+    val agmsStores = (0, wide) +: stores[CountSketch](new CountSketch(4, 256), _.offerHash(_, _), _.serialize())
+    val cmStores = stores[CountMin](new CountMin(4, 256), _.offerHash(_, _), _.serialize())
+    val agmsMerged = same("agms_merge_agg(s)", agmsStores.toDF("g", "s"), 3)
+    assert(counterBits(agmsMerged(0)) == 64 && agmsMerged.forall(counterMin(_) < 0))
+    val cmMerged = same("cm_merge_agg(s)", cmStores.toDF("g", "s"), 3)
+    assert(cmMerged.forall(counterBits(_) > 32), cmMerged.map(counterBits))
   }
 
   test("store-then-merge equals one-shot; X'' and NULL stored values merge as empty") {

@@ -4,7 +4,10 @@ import graft.GraftFunctions._
 import graft.sketch.SketchMergeException
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{Decimal, DecimalType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -178,6 +181,24 @@ class SketchReadContractSpec extends AnyFunSuite with BeforeAndAfterAll {
       val viaLiteral = rows(call(r, full(r).updated(i, literal)))
       assert(viaLiteral == rows(call(r, full(r).updated(i, s"${r.family}0"))), s"${r.name} arg $i")
       if (r.sketches == 2) assert(viaLiteral.distinct.length > 1, s"${r.name}: rows must differ")
+    }
+  }
+
+  test("a DECIMAL key probes alike at any scale; one without trailing zeros keeps its hash") {
+    for ((v, built, probed) <- Seq(("1.5", "DECIMAL(10,1)", "DECIMAL(12,2)"),
+        ("0.0", "DECIMAL(4,1)", "DECIMAL(5,2)"), ("-2.50", "DECIMAL(6,2)", "DECIMAL(9,4)"))) {
+      val r = spark.sql(
+        s"""SELECT might_contain((SELECT bloom_agg(CAST($v AS $built))), CAST($v AS $probed)),
+           |  cm_estimate((SELECT cm_sketch_agg(CAST($v AS $built))), CAST($v AS $probed))""".stripMargin)
+        .head()
+      assert(r.getBoolean(0) && r.getLong(1) == 1L, s"$v as $built, probed as $probed: $r")
+    }
+    // the string hash of earlier builds, of the value with trailing zeros stripped
+    for ((v, hashedAs) <- Seq("1.5" -> "1.5", "-0.25" -> "-0.25", "100" -> "100", "0" -> "0",
+        "1.50" -> "1.5", "100.00" -> "100", "0.00" -> "0", "-2.500" -> "-2.5")) {
+      val d = Decimal(BigDecimal(v))
+      val got = graft.functions.TypedXxHash.kernel(DecimalType(12, d.scale), 7L)(d)
+      assert(got == XXH64.hashUTF8String(UTF8String.fromString(hashedAs), 7L), v)
     }
   }
 }

@@ -39,3 +39,27 @@ final case class WireCodec[S <: AnyRef](
     if (!decodes) intercept[SketchMergeException](deserialize(bytes))
   }
 }
+
+/** Payloads in the layouts written before the compact ones (plain counters,
+  * dense bloom words), which every decoder and wire merge still reads. */
+object LegacyWire {
+  import graft.sketch.{BloomFilter, CountMin, CountSketch}
+
+  /** `[tag][depth: 4][width: 4][n: 8]`, then each counter as a big-endian long. */
+  def counters(tag: Byte, depth: Int, width: Int, n: Long, cs: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(17 + 8 * cs.length)
+    bb.put(tag).putInt(depth).putInt(width).putLong(n)
+    bb.asLongBuffer().put(cs)
+    bb.array()
+  }
+
+  def countMin(s: CountMin): Array[Byte] =
+    counters(CountMin.WireTag, s.depth, s.width, s.n, s.counters)
+
+  def countSketch(s: CountSketch): Array[Byte] =
+    counters(CountSketch.WireTag, s.depth, s.width, s.n, s.counters)
+
+  /** `[B][numBits: 4][numHashes: 4][n: 8]`, then each word as a big-endian long. */
+  def bloom(f: BloomFilter): Array[Byte] =
+    counters(BloomFilter.WireTag, f.numBits, f.numHashes, f.n, f.words)
+}
