@@ -1,15 +1,15 @@
 package graft
 
-import graft.operators.{AsOf, Audit, Basket, Behavior, Cdc, Dedup, Graph, Layout, Linkage, Ml, Multimodal, Mv, Relational, RuntimeFilter, Sampling, Similarity, SketchQueries, Skew, Skyline, Stats, TextAnalysis}
+import graft.operators.{AsOf, Audit, Basket, Behavior, Cdc, Dedup, Graph, Layout, Linkage, Ml, Multimodal, Mv, Query, Relational, RuntimeFilter, Sampling, Similarity, SketchQueries, Skew, Skyline, Stats, TextAnalysis}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` is the engine's declared operator inventory (SURVEY §2); each
-  * entry with an `oracleSql` twin is hash-checked against DuckDB at sf0.01,
-  * the rest get a rows-only check (approximate/engine-specific operators).
+  * `declared` is the engine's query catalog (SURVEY §2): each entry pairs
+  * an operator's builder with the DuckDB SQL it is hash-checked against
+  * at sf0.01.
   */
 object SparkEntry {
 
@@ -32,22 +32,20 @@ object SparkEntry {
     * q417/q418/q419 were reserved in round 11 for ops (conformal quantile,
     * degree assortativity, CUPED) that turned out to duplicate q245/q208/
     * q250 and were dropped. They are not missing operators. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ SketchQueries.queries ++ TextAnalysis.queries ++
-      Dedup.queries ++ Similarity.queries ++ Multimodal.queries ++ AsOf.queries ++
-      RuntimeFilter.queries ++ Sampling.queries ++ Skew.queries ++ Layout.queries ++
-      Cdc.queries ++ Audit.queries ++ Behavior.queries ++ Linkage.queries ++
-      Skyline.queries ++ Graph.queries ++ Mv.queries ++ Basket.queries ++
-      Stats.queries ++ Ml.queries
+  val declared: Map[String, Query] =
+    Relational.declared ++ SketchQueries.declared ++ TextAnalysis.declared ++
+      Dedup.declared ++ Similarity.declared ++ Multimodal.declared ++
+      AsOf.declared ++ RuntimeFilter.declared ++ Sampling.declared ++
+      Skew.declared ++ Layout.declared ++ Cdc.declared ++ Audit.declared ++
+      Behavior.declared ++ Linkage.declared ++ Skyline.declared ++
+      Graph.declared ++ Mv.declared ++ Basket.declared ++ Stats.declared ++
+      Ml.declared
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map { case (name, q) => name -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (approximate candidates, engine-specific hashes) → rows-only check. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ SketchQueries.oracles ++ TextAnalysis.oracles ++
-      Dedup.oracles ++ Similarity.oracles ++ Multimodal.oracles ++ AsOf.oracles ++
-      RuntimeFilter.oracles ++ Sampling.oracles ++ Skew.oracles ++ Layout.oracles ++
-      Cdc.oracles ++ Audit.oracles ++ Behavior.oracles ++ Linkage.oracles ++
-      Skyline.oracles ++ Graph.oracles ++ Mv.oracles ++ Basket.oracles ++
-      Stats.oracles ++ Ml.oracles
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    declared.map { case (name, q) => name -> q.oracle }
 }

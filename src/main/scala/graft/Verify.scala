@@ -33,6 +33,23 @@ object Verify {
     }
     fixes.foldLeft(df) { case (d, (c, e)) => d.withColumn(c, e) }
   }
+
+  /** Renders `m` as one JSON object. Escapes backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in an oracle's SQL would otherwise
+    * make `compare_oracle.py`'s json.load fail and zero the whole check. */
+  private[graft] def oracleJson(m: Map[String, String]): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (fast local iteration;
@@ -56,21 +73,8 @@ object Verify {
         // between-query checkpoint-block sweep (see Bench.runOnce)
         graft.plans.Checkpoints.freeAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
 }

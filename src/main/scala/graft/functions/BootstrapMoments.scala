@@ -175,37 +175,6 @@ object BootstrapMoments {
     StructField("s0", DecimalType(38, 0), nullable = true))),
     containsNull = false)
 
-  /** Signed 128-bit accumulator (hi carries the sign, lo unsigned). */
-  final class Int128 extends Serializable {
-    var hi: Long = 0L
-    var lo: Long = 0L
-
-    def add(v: Long): Unit = addWide(v >> 63, v)
-
-    /** += w·v exactly, for any longs (used with w ∈ {1,2,3}). */
-    def addProduct(w: Long, v: Long): Unit =
-      addWide(java.lang.Math.multiplyHigh(w, v), w * v)
-
-    def addWide(addHi: Long, addLo: Long): Unit = {
-      val oldLo = lo
-      val newLo = oldLo + addLo
-      val carry = ((oldLo & addLo) | ((oldLo | addLo) & ~newLo)) >>> 63
-      lo = newLo
-      hi = hi + addHi + carry
-    }
-
-    def decimal: Decimal = {
-      val bytes = new Array[Byte](16)
-      var i = 0
-      while (i < 8) {
-        bytes(i) = (hi >>> (56 - 8 * i)).toByte
-        bytes(8 + i) = (lo >>> (56 - 8 * i)).toByte
-        i += 1
-      }
-      Decimal(new java.math.BigDecimal(new java.math.BigInteger(bytes)), 38, 0)
-    }
-  }
-
   final class Buffer(val b: Int) extends Serializable {
     val wsum: Array[Long] = new Array[Long](b)
     val wt: Array[Int128] = Array.fill(b)(new Int128)

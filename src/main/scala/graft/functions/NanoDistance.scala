@@ -105,7 +105,8 @@ case class NanoD2Longs(left: Expression, right: Expression)
     }
 
   /** The kernel, callable from generated code. Returns null (boxed) on any
-    * NULL element per the zip_with-pad semantics. */
+    * NULL element per the zip_with-pad semantics, and when the sum exceeds
+    * DECIMAL(38,0), as the non-ANSI SUM does. */
   def computeD2(a0: Any, b0: Any): Any = {
     val a = a0.asInstanceOf[ArrayData]
     val b = b0.asInstanceOf[ArrayData]
@@ -119,21 +120,11 @@ case class NanoD2Longs(left: Expression, right: Expression)
       if (a.isNullAt(i) || b.isNullAt(i)) return null
       val d = a.getLong(i) - b.getLong(i)
       val pLo = d * d
-      val pHi = java.lang.Math.multiplyHigh(d, d)
-      val newLo = lo + pLo
-      val carry = ((lo & pLo) | ((lo | pLo) & ~newLo)) >>> 63
-      lo = newLo
-      hi = hi + pHi + carry
+      hi = Int128.sumHi(hi, lo, java.lang.Math.multiplyHigh(d, d), pLo)
+      lo += pLo
       i += 1
     }
-    val bytes = new Array[Byte](16)
-    var j = 0
-    while (j < 8) {
-      bytes(j) = (hi >>> (56 - 8 * j)).toByte
-      bytes(8 + j) = (lo >>> (56 - 8 * j)).toByte
-      j += 1
-    }
-    Decimal(new java.math.BigDecimal(new java.math.BigInteger(bytes)), 38, 0)
+    Int128.toDecimal(hi, lo)
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = computeD2(a, b)

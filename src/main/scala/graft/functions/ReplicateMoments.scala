@@ -178,25 +178,12 @@ object ReplicateMoments {
     def add(b: Int, v: Long): Unit = addWide(b, v >> 63, v)
 
     def addWide(b: Int, addHi: Long, addLo: Long): Unit = {
-      val oldLo = lo(b)
-      val newLo = oldLo + addLo
-      // unsigned carry-out of oldLo + addLo
-      val carry = ((oldLo & addLo) | ((oldLo | addLo) & ~newLo)) >>> 63
-      lo(b) = newLo
-      hi(b) = hi(b) + addHi + carry
+      hi(b) = Int128.sumHi(hi(b), lo(b), addHi, addLo)
+      lo(b) += addLo
     }
 
-    /** Exact DECIMAL(38,0) of the 128-bit sum. */
-    def decimal(b: Int): Decimal = {
-      val bytes = new Array[Byte](16)
-      var i = 0
-      while (i < 8) {
-        bytes(i) = (hi(b) >>> (56 - 8 * i)).toByte
-        bytes(8 + i) = (lo(b) >>> (56 - 8 * i)).toByte
-        i += 1
-      }
-      Decimal(new java.math.BigDecimal(new java.math.BigInteger(bytes)), 38, 0)
-    }
+    /** Exact DECIMAL(38,0) of the 128-bit sum; null on overflow. */
+    def decimal(b: Int): Decimal = Int128.toDecimal(hi(b), lo(b))
   }
 
   def apply(h: Expression, v: Expression, r: Int): ReplicateMoments =

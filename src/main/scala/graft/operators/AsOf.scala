@@ -194,7 +194,6 @@ object AsOf {
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val obsB = when(col("__v").isNotNull, col("__b"))
     val obsV = when(col("__v").isNotNull, col("__v"))
-    val dd = (c: Column) => c.cast("double")
     dense
       .withColumn("__pb", last(obsB, ignoreNulls = true).over(wPrev))
       .withColumn("__pv", last(obsV, ignoreNulls = true).over(wPrev))
@@ -288,13 +287,6 @@ object AsOf {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q23_asof_join" -> (q23AsofJoin _),
-    "q182_asof_exec" -> (q182AsofExec _),
-    "q100_resample_locf" -> (q100ResampleLocf _),
-    "q207_interpolate_gaps" -> (q207InterpolateGaps _),
-    "q217_asof_forward" -> (q217AsofForward _))
-
   private val asofSql: String =
       """SELECT e.event_id, o.o_orderkey
         |FROM events e ASOF LEFT JOIN
@@ -303,11 +295,11 @@ object AsOf {
         |ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
         |ORDER BY e.event_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q23_asof_join" -> asofSql,
+  val declared: Map[String, Query] = Map(
+    "q23_asof_join" -> Query(q23AsofJoin, asofSql),
     // the custom exec must reproduce the native ASOF JOIN bit-for-bit
-    "q182_asof_exec" -> asofSql,
-    "q100_resample_locf" ->
+    "q182_asof_exec" -> Query(q182AsofExec, asofSql),
+    "q100_resample_locf" -> Query(q100ResampleLocf,
       """WITH e AS (
         |  SELECT user_id, epoch_us(ts) AS us, event_id, value FROM events),
         |b AS (
@@ -325,11 +317,11 @@ object AsOf {
         |  FROM g JOIN e ON e.user_id = g.user_id AND e.us <= g.us)
         |SELECT user_id, us AS ts_us, value
         |FROM s WHERE rn = 1
-        |ORDER BY user_id, ts_us""".stripMargin,
+        |ORDER BY user_id, ts_us""".stripMargin),
     // row_number emulation of the forward ASOF (DuckDB's native ASOF
     // supports >= one way; the explicit form keeps the ≥-inclusive
     // semantics and min-orderkey tie rule visible)
-    "q217_asof_forward" ->
+    "q217_asof_forward" -> Query(q217AsofForward,
       """WITH o AS (
         |  SELECT o_custkey, epoch_us(o_orderdate) AS ous,
         |    MIN(o_orderkey) AS o_orderkey
@@ -343,8 +335,8 @@ object AsOf {
         |SELECT ev.event_id, m.o_orderkey, m.wait_us
         |FROM (SELECT event_id FROM e) ev
         |LEFT JOIN m ON m.event_id = ev.event_id AND m.rn = 1
-        |ORDER BY ev.event_id""".stripMargin,
-    "q207_interpolate_gaps" ->
+        |ORDER BY ev.event_id""".stripMargin),
+    "q207_interpolate_gaps" -> Query(q207InterpolateGaps,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -378,5 +370,5 @@ object AsOf {
         |        * CAST(b - pb AS DOUBLE) / CAST(nb - pb AS DOUBLE)
         |    WHEN pb IS NOT NULL THEN CAST(pv AS DOUBLE)
         |    ELSE CAST(nv AS DOUBLE) END AS value
-        |FROM n ORDER BY 1, 2""".stripMargin)
+        |FROM n ORDER BY 1, 2""".stripMargin))
 }

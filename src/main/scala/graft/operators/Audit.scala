@@ -611,7 +611,6 @@ object Audit {
     * aggregate — no joins at all. */
   def captureRecapture(df: DataFrame, keyCol: String, inA: Column,
       inB: Column): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     df.select(inA.as("a"), inB.as("b"))
       .agg(count(lit(1)).as("n_true"),
         sum(when(col("a"), 1L).otherwise(0L)).as("n_a"),
@@ -649,7 +648,6 @@ object Audit {
     * equijoin anyway). */
   def joinFanoutAudit(df: DataFrame, keyCol: String,
       edgeName: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     // fanout histogram: ≤ |distinct fanout| rows. Materialized ONCE — it
     // feeds five consumers (tot ×3 via the crossJoins, quant, ent), each of
     // which would otherwise re-run the full scan + both aggregations
@@ -698,7 +696,6 @@ object Audit {
     * so the one order-sensitive sum is exact. */
   def psiCompare(live: DataFrame, baseline: DataFrame,
       nBuckets: Int): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val spark = live.sparkSession
     val keys = live.select("k").distinct()
       .join(baseline.select("k").distinct(), Seq("k"), "inner")
@@ -763,7 +760,6 @@ object Audit {
   def candidateKeys(df: DataFrame, combos: Seq[Seq[String]]): DataFrame = {
     require(combos.nonEmpty && combos.forall(_.nonEmpty),
       s"need at least one non-empty column combo: $combos")
-    val dd = (c: Column) => c.cast("double")
     val tot = df.agg(count(lit(1)).as("n_rows"))
     combos.map { cs =>
       df.select(cs.map(col): _*).distinct()
@@ -784,25 +780,6 @@ object Audit {
       Seq("o_orderkey"), Seq("o_custkey"), Seq("o_orderdate"),
       Seq("o_custkey", "o_orderdate"),
       Seq("o_orderstatus", "o_orderpriority")))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q399_candidate_keys" -> (q399CandidateKeys _),
-    "q324_join_fanout" -> (q324JoinFanout _),
-    "q331_psi_drift" -> (q331PsiDrift _),
-    "q302_fd_violations" -> (q302FdViolations _),
-    "q303_fk_orphans" -> (q303FkOrphans _),
-    "q313_capture_recapture" -> (q313CaptureRecapture _),
-    "q188_calendar_gaps" -> (q188CalendarGaps _),
-    "q189_duplicate_payments" -> (q189DuplicatePayments _),
-    "q177_benford" -> (q177Benford _),
-    "q112_dq_audit" -> (q112DqAudit _),
-    "q113_mad_anomaly" -> (q113MadAnomaly _),
-    "q137_seasonal_anomaly" -> (q137SeasonalAnomaly _),
-    "q141_ks_drift" -> (q141KsDrift _),
-    "q142_ks_baseline_compare" -> (q142KsBaselineCompare _),
-    "q145_table_stats" -> (q145TableStats _),
-    "q146_approx_mad" -> (q146ApproxMad _),
-    "q152_winsorize" -> (q152Winsorize _))
 
   private val statsCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderpriority")
@@ -864,8 +841,8 @@ object Audit {
        |  CAST(sj AS DOUBLE) AS selfjoin_rows, entropy_nats
        |FROM t CROSS JOIN qs CROSS JOIN e)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q399_candidate_keys" ->
+  val declared: Map[String, Query] = Map(
+    "q399_candidate_keys" -> Query(q399CandidateKeys,
       """WITH tot AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM orders),
         |c AS (
@@ -889,13 +866,13 @@ object Audit {
         |  CAST(n_distinct AS DOUBLE) / CAST(n_rows AS DOUBLE)
         |    AS uniqueness,
         |  n_distinct = n_rows AS is_key
-        |FROM c, tot ORDER BY combo""".stripMargin,
-    "q324_join_fanout" ->
+        |FROM c, tot ORDER BY combo""".stripMargin),
+    "q324_join_fanout" -> Query(q324JoinFanout,
       (fanoutSql("lineitem", "l_orderkey", "lineitem per order") +
         "\nUNION ALL\n" +
         fanoutSql("events", "user_id", "events per user") +
-        "\nORDER BY edge"),
-    "q313_capture_recapture" ->
+        "\nORDER BY edge")),
+    "q313_capture_recapture" -> Query(q313CaptureRecapture,
       """WITH t AS (
         |  SELECT doc_id % 7 < 2 AS a, doc_id % 11 < 3 AS b
         |  FROM documents),
@@ -911,8 +888,8 @@ object Audit {
         |    * CAST(n_b AS DOUBLE) / CAST(n_both AS DOUBLE) END AS petersen,
         |  CAST(n_a + 1 AS DOUBLE) * CAST(n_b + 1 AS DOUBLE)
         |    / CAST(n_both + 1 AS DOUBLE) - 1.0 AS chapman
-        |FROM c""".stripMargin,
-    "q302_fd_violations" ->
+        |FROM c""".stripMargin),
+    "q302_fd_violations" -> Query(q302FdViolations,
       """SELECT * FROM (
         |SELECT 'o_custkey -> o_orderpriority' AS fd,
         |  CAST(COUNT(*) AS BIGINT) AS n_groups,
@@ -939,10 +916,10 @@ object Audit {
         |FROM (SELECT o_orderkey AS l, COUNT(*) AS nr,
         |    COUNT(DISTINCT o_orderpriority) AS ndv
         |  FROM orders GROUP BY 1)
-        |) ORDER BY fd""".stripMargin,
+        |) ORDER BY fd""".stripMargin),
     // the q109 merge's delete set (keys ending in 0) leaves lineitem
     // orphans; inserts (key+10^8 for keys ending in 3) keep custkeys valid
-    "q303_fk_orphans" ->
+    "q303_fk_orphans" -> Query(q303FkOrphans,
       """WITH merged AS (
         |  SELECT o_orderkey, o_custkey FROM orders
         |  WHERE o_orderkey % 10 <> 0
@@ -973,10 +950,10 @@ object Audit {
         |  CAST(COUNT(DISTINCT CASE WHEN p.p_partkey IS NULL
         |    THEN l.l_partkey END) AS BIGINT)
         |FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-        |) ORDER BY fk_edge""".stripMargin,
+        |) ORDER BY fk_edge""".stripMargin),
     // expected hourly grid from observed min/max, anti-joined, islands
     // via the bucket - row_number run collapse
-    "q188_calendar_gaps" ->
+    "q188_calendar_gaps" -> Query(q188CalendarGaps,
       """WITH obs AS (
         |  SELECT DISTINCT CAST(epoch_us(ts) AS BIGINT) // 60000000 AS b
         |  FROM events),
@@ -991,9 +968,9 @@ object Audit {
         |  FROM missing)
         |SELECT CAST(MIN(b) * 60 AS BIGINT) AS gap_start_epoch,
         |  CAST(COUNT(*) AS BIGINT) AS gap_buckets
-        |FROM runs GROUP BY grp ORDER BY gap_start_epoch""".stripMargin,
+        |FROM runs GROUP BY grp ORDER BY gap_start_epoch""".stripMargin),
     // blocked self-join on (customer, $1000 amount block), k1 < k2
-    "q189_duplicate_payments" ->
+    "q189_duplicate_payments" -> Query(q189DuplicatePayments,
       """WITH p AS (
         |  SELECT o_custkey AS cust,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1008,10 +985,10 @@ object Audit {
         |FROM p a JOIN p b ON a.cust = b.cust
         |  AND a.amt_c // 100000 = b.amt_c // 100000
         |  AND a.k < b.k AND ABS(a.us - b.us) <= 7776000000000
-        |ORDER BY o_custkey, key_1, key_2""".stripMargin,
+        |ORDER BY o_custkey, key_1, key_2""".stripMargin),
     // first digit from the exact centi-unit integer's string form; the
     // Benford constants are the same double literals the engine carries
-    "q177_benford" -> ("""WITH d AS (
+    "q177_benford" -> Query(q177Benford, ("""WITH d AS (
         |  SELECT CAST(substring(CAST(CAST(CAST(l_extendedprice
         |    AS DECIMAL(18,2)) * 100 AS BIGINT) AS VARCHAR), 1, 1) AS INT)
         |    AS digit
@@ -1032,26 +1009,26 @@ object Audit {
         |  CAST(benford_p_d AS DOUBLE) AS benford_p FROM t)
         |SELECT digit, n, obs_share, benford_p,
         |  ABS(obs_share - benford_p) AS abs_dev
-        |FROM t2 ORDER BY digit""".stripMargin),
+        |FROM t2 ORDER BY digit""".stripMargin)),
     // exact per-key counts; the KLL rank booleans are engine-side
-    "q146_approx_mad" ->
+    "q146_approx_mad" -> Query(q146ApproxMad,
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n,
         |  true AS med_rank_ok, true AS mad_rank_ok
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
     // one UNION ALL branch per column; exact NDV, stringified min/max
     // (value ranges here stay inside both engines' plain-notation zone)
-    "q145_table_stats" -> statsCols.map(c =>
+    "q145_table_stats" -> Query(q145TableStats, statsCols.map(c =>
       s"""SELECT '$c' AS "column", CAST(COUNT(*) AS BIGINT) AS n_rows,
          |  CAST(COUNT($c) AS BIGINT) AS n_nonnull,
          |  CAST(COUNT(DISTINCT $c) AS BIGINT) AS ndv, true AS est_ok,
          |  CAST(MIN($c) AS VARCHAR) AS min_s,
          |  CAST(MAX($c) AS VARCHAR) AS max_s FROM orders""".stripMargin)
-      .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\""),
+      .mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")),
     // two halves bucketed on the same FIXED grid, per-key CDF compare
     // the q142 grid/fill skeleton finished with the PSI mass-weighted
     // sum instead of the KS max gap; Laplace +1 on counts, terms
     // decimal-quantized before the one order-sensitive sum
-    "q331_psi_drift" ->
+    "q331_psi_drift" -> Query(q331PsiDrift,
       """WITH lv AS (
         |  SELECT event_type AS k,
         |    LEAST(63, GREATEST(0, CAST(FLOOR((value - 0.0) / 100.0 * 64)
@@ -1091,8 +1068,8 @@ object Audit {
         |SELECT k AS event_type, CAST(SUM(term) AS DOUBLE) AS psi,
         |  CAST(MAX(lnk) AS BIGINT) AS n_live,
         |  CAST(MAX(rnk) AS BIGINT) AS n_baseline
-        |FROM terms GROUP BY k ORDER BY event_type""".stripMargin,
-    "q142_ks_baseline_compare" ->
+        |FROM terms GROUP BY k ORDER BY event_type""".stripMargin),
+    "q142_ks_baseline_compare" -> Query(q142KsBaselineCompare,
       """WITH lv AS (
         |  SELECT event_type AS k,
         |    LEAST(63, GREATEST(0, CAST(FLOOR((value - 0.0) / 100.0 * 64)
@@ -1126,10 +1103,10 @@ object Audit {
         |  CAST(MAX(lnk) AS BIGINT) AS n_left,
         |  CAST(MAX(rnk) AS BIGINT) AS n_right
         |FROM lcd JOIN bcd USING (k, b) JOIN lt USING (k) JOIN rt USING (k)
-        |GROUP BY k ORDER BY event_type""".stripMargin,
+        |GROUP BY k ORDER BY event_type""".stripMargin),
     // the same bucket grid, fills, running sums, and exactly-rounded
     // CDF divisions
-    "q141_ks_drift" ->
+    "q141_ks_drift" -> Query(q141KsDrift,
       """WITH bounds AS (SELECT MIN(value) AS lo, MAX(value) AS hi FROM events),
         |bk AS (
         |  SELECT event_type AS k,
@@ -1160,10 +1137,10 @@ object Audit {
         |    - CAST(gcum AS DOUBLE) / CAST(nall AS DOUBLE))) AS ks_distance,
         |  CAST(MAX(nk) AS BIGINT) AS n_values
         |FROM cdf JOIN glc USING (b) JOIN tot USING (k) CROSS JOIN na
-        |GROUP BY k ORDER BY event_type""".stripMargin,
+        |GROUP BY k ORDER BY event_type""".stripMargin),
     // the same fixed expression shape: m = s/c, var = sq/c - m*m,
     // z = (n - m)/sqrt(var) — bit-identical IEEE ops in both engines
-    "q137_seasonal_anomaly" ->
+    "q137_seasonal_anomaly" -> Query(q137SeasonalAnomaly,
       """WITH cells AS (
         |  SELECT event_type,
         |    (CAST(epoch_us(ts) AS BIGINT) // 3600000000) % 24 AS season,
@@ -1184,8 +1161,8 @@ object Audit {
         |SELECT event_type, b * 3600 AS bucket_epoch, season, n,
         |  (CAST(n AS DOUBLE) - m) / sqrt(v) AS z
         |FROM j WHERE v > 0 AND abs((CAST(n AS DOUBLE) - m) / sqrt(v)) > 3
-        |ORDER BY event_type, bucket_epoch""".stripMargin,
-    "q112_dq_audit" ->
+        |ORDER BY event_type, bucket_epoch""".stripMargin),
+    "q112_dq_audit" -> Query(q112DqAudit,
       """SELECT * FROM (
         |  SELECT 'l_quantity_in_1_50' AS check_name,
         |    CAST(COUNT(*) FILTER (WHERE NOT COALESCE(
@@ -1218,8 +1195,8 @@ object Audit {
         |      SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
         |      AS BIGINT),
         |    CAST(COUNT(*) AS BIGINT) FROM lineitem l)
-        |ORDER BY check_name""".stripMargin,
-    "q113_mad_anomaly" ->
+        |ORDER BY check_name""".stripMargin),
+    "q113_mad_anomaly" -> Query(q113MadAnomaly,
       """WITH med AS (
         |  SELECT user_id, median(value) AS med FROM events GROUP BY user_id),
         |mad AS (
@@ -1228,10 +1205,10 @@ object Audit {
         |SELECT e.event_id, e.user_id, e.value, m.med, d.mad
         |FROM events e JOIN med m USING (user_id) JOIN mad d USING (user_id)
         |WHERE abs(e.value - m.med) > 3.0 * 1.4826 * d.mad
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin),
     // quantile_cont = percentile()'s exact interpolating twin (q139);
     // same clip expression, same DECIMAL-stabilized mean
-    "q152_winsorize" ->
+    "q152_winsorize" -> Query(q152Winsorize,
       """WITH q AS (
         |  SELECT l_returnflag,
         |    quantile_cont(l_extendedprice, 0.05) AS plo,
@@ -1248,5 +1225,5 @@ object Audit {
         |    AS n_clip_high,
         |  CAST(SUM(CAST(LEAST(GREATEST(v, plo), phi) AS DECIMAL(28,10)))
         |    AS DOUBLE) / COUNT(*) AS mean_winsor
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin)
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin))
 }

@@ -161,7 +161,6 @@ object Basket {
     val sup = bk.select(explode(col("__items")).as("p"))
       .groupBy("p").agg(count(lit(1)).as("s"))
     val totals = bk.agg(count(lit(1)).as("n_baskets"))
-    val dd = (c: Column) => c.cast("double")
     val both = pairs.select(col("p1").as("antecedent"),
         col("p2").as("consequent"), col("n"))
       .union(pairs.select(col("p2").as("antecedent"),
@@ -188,11 +187,6 @@ object Basket {
   def q273AssociationRules(spark: SparkSession, dir: String): DataFrame =
     associationRules(Tables.lineitem(spark, dir), "l_orderkey",
       "l_partkey", minSupport = 2L, basketCap = 64, topK = 50)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q273_association_rules" -> (q273AssociationRules _),
-    "q148_frequent_pairs" -> (q148FrequentPairs _),
-    "q163_basket_mv" -> (q163BasketMv _))
 
   private val pairsSql: String =
     """WITH op AS (
@@ -239,10 +233,10 @@ object Basket {
       |ORDER BY confidence DESC, b.antecedent, b.consequent
       |LIMIT 50""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // maintained counts are exactly the from-scratch counts (additive
     // per-basket increments), so the q148 oracle applies verbatim
-    "q163_basket_mv" -> pairsSql,
-    "q148_frequent_pairs" -> pairsSql,
-    "q273_association_rules" -> rulesSql)
+    "q163_basket_mv" -> Query(q163BasketMv, pairsSql),
+    "q148_frequent_pairs" -> Query(q148FrequentPairs, pairsSql),
+    "q273_association_rules" -> Query(q273AssociationRules, rulesSql))
 }

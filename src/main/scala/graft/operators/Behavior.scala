@@ -966,7 +966,6 @@ object Behavior {
   def markovPredictability(events: DataFrame, tsCol: String,
       userCol: String, typeCol: String, tieCol: String,
       gapSeconds: Long): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val tr = sessionTransitions(events, tsCol, userCol, typeCol, tieCol,
       gapSeconds).select("from_type", "to_type", "n")
     val total = tr.agg(sum("n").as("nt"))
@@ -1047,31 +1046,6 @@ object Behavior {
   def q376SessionGapSweep(spark: SparkSession, dir: String): DataFrame =
     sessionGapSweep(Tables.events(spark, dir), "ts", "user_id",
       "event_id", Seq(60L, 300L, 900L, 1800L, 3600L, 7200L, 14400L))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q376_session_gap_sweep" -> (q376SessionGapSweep _),
-    "q373_markov_predictability" -> (q373MarkovPredictability _),
-    "q367_sequential_pairs" -> (q367SequentialPairs _),
-    "q307_shapley_attribution" -> (q307ShapleyAttribution _),
-    "q266_markov_attribution" -> (q266MarkovAttribution _),
-    "q185_cohort_ltv" -> (q185CohortLtv _),
-    "q180_longest_streak" -> (q180LongestStreak _),
-    "q164_twap" -> (q164Twap _),
-    "q165_time_in_state" -> (q165TimeInState _),
-    "q121_funnel_steps" -> (q121FunnelSteps _),
-    "q133_funnel_state" -> (q133FunnelState _),
-    "q139_funnel_latency" -> (q139FunnelLatency _),
-    "q122_retention_cohorts" -> (q122RetentionCohorts _),
-    "q125_attribution" -> (q125Attribution _),
-    "q126_decay_score" -> (q126DecayScore _),
-    "q130_session_transitions" -> (q130SessionTransitions _),
-    "q144_interval_coverage" -> (q144IntervalCoverage _),
-    "q156_session_paths" -> (q156SessionPaths _),
-    "q194_bounce_rate" -> (q194BounceRate _),
-    "q196_linear_attribution" -> (q196LinearAttribution _),
-    "q278_position_attribution" -> (q278PositionAttribution _),
-    "q198_session_cooccurrence" -> (q198SessionCooccurrence _),
-    "q201_event_trigrams" -> (q201EventTrigrams _))
 
   /** Top-25 full session paths under the 30-minute-gap rule. Strict hash
     * gate: exact counts; the (n_sessions desc, path) order is total. */
@@ -1212,10 +1186,10 @@ object Behavior {
       |    * CAST(n_conversions AS DOUBLE) AS attributed_conversions
       |FROM ret CROSS JOIN nc ORDER BY channel""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // same 16-subset lattice: bit_or touch masks -> exact-set conversion
     // rates -> factorial-weighted marginal sums
-    "q307_shapley_attribution" ->
+    "q307_shapley_attribution" -> Query(q307ShapleyAttribution,
       """WITH um AS (
         |  SELECT user_id,
         |    BIT_OR(CASE event_type WHEN 'click' THEN 1 WHEN 'error' THEN 2
@@ -1247,10 +1221,10 @@ object Behavior {
         |  JOIN lat v1 ON v1.s = v0.s + ch.bit)
         |SELECT channel,
         |  CAST(CAST(SUM(term) AS DECIMAL(38,12)) AS DOUBLE) AS phi
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q266_markov_attribution" -> markovAttributionSql,
+        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q266_markov_attribution" -> Query(q266MarkovAttribution, markovAttributionSql),
     // next-conversion window + equal-share credit, decimal-quantized
-    "q278_position_attribution" ->
+    "q278_position_attribution" -> Query(q278PositionAttribution,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1281,8 +1255,8 @@ object Behavior {
         |SELECT event_type AS channel,
         |  CAST(COUNT(*) AS BIGINT) AS n_touches,
         |  CAST(CAST(SUM(credit) AS DECIMAL(20,12)) AS DOUBLE) AS credit
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q196_linear_attribution" ->
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q196_linear_attribution" -> Query(q196LinearAttribution,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1304,9 +1278,9 @@ object Behavior {
         |SELECT event_type AS channel,
         |  CAST(COUNT(*) AS BIGINT) AS n_touches,
         |  CAST(CAST(SUM(credit) AS DECIMAL(20,12)) AS DOUBLE) AS credit
-        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
     // the q156 session CTEs + two LEADs inside the session scope
-    "q201_event_trigrams" ->
+    "q201_event_trigrams" -> Query(q201EventTrigrams,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1327,9 +1301,9 @@ object Behavior {
         |    ORDER BY us, event_id))
         |SELECT trigram, CAST(COUNT(*) AS BIGINT) AS n
         |FROM tri WHERE t3 IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, trigram LIMIT 25""".stripMargin,
+        |GROUP BY 1 ORDER BY n DESC, trigram LIMIT 25""".stripMargin),
     // the q156 session CTEs + distinct-type pair explosion + lift
-    "q198_session_cooccurrence" ->
+    "q198_session_cooccurrence" -> Query(q198SessionCooccurrence,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1357,9 +1331,9 @@ object Behavior {
         |FROM pr
         |JOIN per p1 ON p1.event_type = t1
         |JOIN per p2 ON p2.event_type = t2, tot
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // the q156 session CTEs + an rn=1 entry-type pick
-    "q194_bounce_rate" ->
+    "q194_bounce_rate" -> Query(q194BounceRate,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1386,9 +1360,9 @@ object Behavior {
         |    AS n_bounces,
         |  CAST(SUM(CASE WHEN sz = 1 THEN 1 ELSE 0 END) AS DOUBLE)
         |    / COUNT(*) AS bounce_rate
-        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM s GROUP BY 1 ORDER BY 1""".stripMargin),
     // q122's cohort rule + centi-exact revenue + cumulative window
-    "q185_cohort_ltv" ->
+    "q185_cohort_ltv" -> Query(q185CohortLtv,
       """WITH b AS (
         |  SELECT user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS b,
@@ -1418,9 +1392,9 @@ object Behavior {
         |  CAST(cum_c AS DOUBLE) / 100.0 / CAST(cohort_users AS DOUBLE)
         |    AS ltv_per_user
         |FROM cum JOIN sizes USING (cohort)
-        |ORDER BY cohort_epoch, offs""".stripMargin,
+        |ORDER BY cohort_epoch, offs""".stripMargin),
     // same change-flag islands, per-island reduce, (len desc, start) argmin
-    "q180_longest_streak" ->
+    "q180_longest_streak" -> Query(q180LongestStreak,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1441,10 +1415,10 @@ object Behavior {
         |FROM runs
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
         |  ORDER BY len DESC, start_us) = 1
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
     // lead() per user, last event excluded; exact centi-unit · µs integer
     // accumulation, one truncating // onto the 10⁻⁶ grid (≡ Spark div)
-    "q164_twap" ->
+    "q164_twap" -> Query(q164Twap,
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v100
@@ -1464,8 +1438,8 @@ object Behavior {
         |  CAST(CAST((wv * 10000) // span_us AS BIGINT) AS DOUBLE)
         |    / 1000000.0 AS twavg,
         |  span_us, n_intervals
-        |FROM t ORDER BY user_id""".stripMargin,
-    "q165_time_in_state" ->
+        |FROM t ORDER BY user_id""".stripMargin),
+    "q165_time_in_state" -> Query(q165TimeInState,
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
         |  FROM events),
@@ -1481,11 +1455,11 @@ object Behavior {
         |SELECT event_type, total_us, n_intervals,
         |  CAST(total_us AS DOUBLE) /
         |    CAST((SELECT SUM(total_us) FROM s) AS DOUBLE) AS share
-        |FROM s ORDER BY event_type""".stripMargin,
-    "q121_funnel_steps" -> oraclesQ121,
+        |FROM s ORDER BY event_type""".stripMargin),
+    "q121_funnel_steps" -> Query(q121FunnelSteps, oraclesQ121),
     // two IGNORE-NULLS last_value calls over the same frame necessarily
     // pick the same (latest touch) row, so no struct portability issues
-    "q125_attribution" ->
+    "q125_attribution" -> Query(q125Attribution,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, value, epoch_us(ts) AS us
         |  FROM events),
@@ -1503,8 +1477,8 @@ object Behavior {
         |  FROM t WHERE event_type = 'purchase')
         |SELECT touch_type, CAST(COUNT(*) AS BIGINT) AS n_purchases,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM sel GROUP BY touch_type ORDER BY touch_type""".stripMargin,
-    "q126_decay_score" ->
+        |FROM sel GROUP BY touch_type ORDER BY touch_type""".stripMargin),
+    "q126_decay_score" -> Query(q126DecayScore,
       """WITH b AS (
         |  SELECT user_id, value,
         |    CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS b FROM events),
@@ -1517,23 +1491,23 @@ object Behavior {
         |SELECT user_id, CAST(SUM(term) AS DOUBLE) AS score,
         |  CAST(COUNT(*) AS BIGINT) AS n_events
         |FROM t GROUP BY user_id
-        |ORDER BY score DESC, user_id LIMIT 100""".stripMargin,
+        |ORDER BY score DESC, user_id LIMIT 100""".stripMargin),
     // the state fold and the window chain must produce identical step
     // counts — same oracle as q121 by construction
-    "q133_funnel_state" -> oraclesQ121,
+    "q133_funnel_state" -> Query(q133FunnelState, oraclesQ121),
     // conversion-delay distribution over the same per-user chain;
     // quantile_cont is DuckDB's exact interpolating twin of percentile()
-    "q139_funnel_latency" -> (funnelUserSql + "\n" +
+    "q139_funnel_latency" -> Query(q139FunnelLatency, (funnelUserSql + "\n" +
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_converted,
         |  quantile_cont(t2 - t0, 0.25) AS p25_us,
         |  quantile_cont(t2 - t0, 0.5) AS p50_us,
         |  quantile_cont(t2 - t0, 0.95) AS p95_us,
         |  quantile_cont(t1 - t0, 0.5) AS p50_click_us,
         |  quantile_cont(t2 - t1, 0.5) AS p50_buy_us
-        |FROM u WHERE t2 IS NOT NULL""".stripMargin),
+        |FROM u WHERE t2 IS NOT NULL""".stripMargin)),
     // gaps-and-islands over [ts, ts+30min) intervals: running max of
     // prior ends cuts islands, exact micros arithmetic throughout
-    "q144_interval_coverage" ->
+    "q144_interval_coverage" -> Query(q144IntervalCoverage,
       """WITH iv AS (
         |  SELECT user_id, epoch_us(ts) AS s, epoch_us(ts) + 1800000000 AS e
         |  FROM events),
@@ -1553,10 +1527,10 @@ object Behavior {
         |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_islands,
         |  CAST(SUM(e - s) AS BIGINT) AS covered_us,
         |  CAST(MAX(e) - MIN(s) - SUM(e - s) AS BIGINT) AS gap_us
-        |FROM spans GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM spans GROUP BY user_id ORDER BY user_id""".stripMargin),
     // q37's session rule, then lead() within (user, session), then the
     // count matrix with per-source normalization
-    "q130_session_transitions" ->
+    "q130_session_transitions" -> Query(q130SessionTransitions,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1579,9 +1553,9 @@ object Behavior {
         |SELECT from_type, to_type, n,
         |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY from_type)
         |    AS DOUBLE) AS p
-        |FROM cnt ORDER BY from_type, to_type""".stripMargin,
+        |FROM cnt ORDER BY from_type, to_type""".stripMargin),
     // q130's session rule, then an ORDER BY string_agg per session
-    "q156_session_paths" ->
+    "q156_session_paths" -> Query(q156SessionPaths,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1600,8 +1574,8 @@ object Behavior {
         |SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions,
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
         |FROM paths GROUP BY 1
-        |ORDER BY n_sessions DESC, path LIMIT 25""".stripMargin,
-    "q122_retention_cohorts" ->
+        |ORDER BY n_sessions DESC, path LIMIT 25""".stripMargin),
+    "q122_retention_cohorts" -> Query(q122RetentionCohorts,
       """WITH b AS (
         |  SELECT user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS b FROM events),
@@ -1615,8 +1589,8 @@ object Behavior {
         |  CAST(n_active AS DOUBLE) / CAST(MAX(CASE WHEN offs = 0
         |    THEN n_active END) OVER (PARTITION BY cohort) AS DOUBLE)
         |    AS retain_rate
-        |FROM n ORDER BY cohort_epoch, offs""".stripMargin,
-    "q367_sequential_pairs" ->
+        |FROM n ORDER BY cohort_epoch, offs""".stripMargin),
+    "q367_sequential_pairs" -> Query(q367SequentialPairs,
       """WITH seq AS (
         |  SELECT user_id AS u, event_type AS t,
         |    ROW_NUMBER() OVER (PARTITION BY user_id
@@ -1634,9 +1608,9 @@ object Behavior {
         |  FROM seq GROUP BY 1)
         |SELECT ante, succ, n_pairs, n_users, n_ante,
         |  CAST(n_pairs AS DOUBLE) / CAST(n_ante AS DOUBLE) AS avg_follows
-        |FROM pairs JOIN tot USING (ante) ORDER BY 1, 2""".stripMargin,
+        |FROM pairs JOIN tot USING (ante) ORDER BY 1, 2""".stripMargin),
     // the q138 session-transition CTE, then exact-count entropy algebra
-    "q373_markov_predictability" ->
+    "q373_markov_predictability" -> Query(q373MarkovPredictability,
       """WITH e AS (
         |  SELECT user_id, event_type, event_id, epoch_us(ts) AS us
         |  FROM events),
@@ -1687,8 +1661,8 @@ object Behavior {
         |SELECT 'ALL', nt, CAST(hc AS DOUBLE), CAST(hm AS DOUBLE),
         |  CAST(hm AS DOUBLE) - CAST(hc AS DOUBLE)
         |FROM cond, marg
-        |ORDER BY state""".stripMargin,
-    "q376_session_gap_sweep" ->
+        |ORDER BY state""".stripMargin),
+    "q376_session_gap_sweep" -> Query(q376SessionGapSweep,
       """WITH g AS (
         |  SELECT user_id AS u,
         |    CAST(epoch_us(ts) AS BIGINT)
@@ -1710,5 +1684,5 @@ object Behavior {
         |  CAST(n_users + n_breaks AS BIGINT) AS n_sessions,
         |  CAST(n_events AS DOUBLE) / CAST(n_users + n_breaks AS DOUBLE)
         |    AS avg_events_per_session
-        |FROM brk CROSS JOIN base ORDER BY 1""".stripMargin)
+        |FROM brk CROSS JOIN base ORDER BY 1""".stripMargin))
 }

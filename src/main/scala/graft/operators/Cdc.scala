@@ -354,16 +354,6 @@ object Cdc {
       .orderBy("o_custkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q183_point_in_time" -> (q183PointInTime _),
-    "q109_merge_upsert" -> (q109MergeUpsert _),
-    "q135_ivm_agg" -> (q135IvmAgg _),
-    "q136_snapshot_diff" -> (q136SnapshotDiff _),
-    "q110_scd2" -> (q110Scd2 _),
-    "q116_maintenance_loop" -> (q116MaintenanceLoop _),
-    "q128_maintained_zonemap" -> (q128MaintainedZonemap _),
-    "q157_maintained_bloom" -> (q157MaintainedBloom _))
-
   /** q157 probe keys: an updated key (…1), a deleted key (…0 — must NOT
     * come back), a batch-1-inserted key, and untouched keys. */
   private[graft] val bloomProbeKeys: Seq[Long] =
@@ -394,8 +384,8 @@ object Cdc {
       .orderBy("o_orderkey")
   }
 
-  val oracles: Map[String, String] = Map(
-    "q109_merge_upsert" ->
+  val declared: Map[String, Query] = Map(
+    "q109_merge_upsert" -> Query(q109MergeUpsert,
       """WITH changes AS (
         |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |         o_orderdate, o_orderpriority, 'D' AS op, 1 AS seq
@@ -429,10 +419,10 @@ object Cdc {
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |       o_orderdate, o_orderpriority
         |FROM latest WHERE op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
+        |ORDER BY o_orderkey""".stripMargin),
     // full-outer diff of the two recomputed nightly states; payload
     // equality via IS NOT DISTINCT FROM, same as the engine's <=>
-    "q136_snapshot_diff" -> (maintChainSql +
+    "q136_snapshot_diff" -> Query(q136SnapshotDiff, (maintChainSql +
       """
         |SELECT
         |  COALESCE(n.o_orderkey, o.o_orderkey) AS o_orderkey,
@@ -451,41 +441,41 @@ object Cdc {
         |    AND o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
         |    AND o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate
         |    AND o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority)
-        |ORDER BY o_orderkey""".stripMargin),
+        |ORDER BY o_orderkey""".stripMargin)),
     // the merged night-1 state (CTE m1) recomputed and re-aggregated —
     // what the incremental delta path must equal exactly
-    "q135_ivm_agg" -> (maintChainSql +
+    "q135_ivm_agg" -> Query(q135IvmAgg, (maintChainSql +
       """
         |SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
-        |FROM m1 GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+        |FROM m1 GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
     // both nights' MERGEs replayed sequentially from first principles:
     // version 1 is built FROM version 0 (CTE m1), not from the base —
     // the snapshot-chain semantics of the maintained store
-    "q116_maintenance_loop" -> (maintChainSql +
+    "q116_maintenance_loop" -> Query(q116MaintenanceLoop, (maintChainSql +
       """
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |       o_orderdate, o_orderpriority
-        |FROM m2 ORDER BY o_orderkey""".stripMargin),
+        |FROM m2 ORDER BY o_orderkey""".stripMargin)),
     // the same final version, range-filtered and aggregated — what the
     // maintained zone map answers from the pruned file subset
     // the same final version, point-probed — what the maintained bloom
     // index answers from the pruned file subset
-    "q157_maintained_bloom" -> (maintChainSql +
+    "q157_maintained_bloom" -> Query(q157MaintainedBloom, (maintChainSql +
       s"""
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM m2 WHERE o_orderkey IN (${bloomProbeKeys.mkString(", ")})
-        |ORDER BY o_orderkey""".stripMargin),
-    "q128_maintained_zonemap" -> (maintChainSql +
+        |ORDER BY o_orderkey""".stripMargin)),
+    "q128_maintained_zonemap" -> Query(q128MaintainedZonemap, (maintChainSql +
       """
         |SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
         |    AS sum_price,
         |  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_cust
         |FROM m2 WHERE o_custkey >= 200 AND o_custkey < 400
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
     // the q110 history CTEs + the corpus-midpoint pivot + interval filter
-    "q183_point_in_time" ->
+    "q183_point_in_time" -> Query(q183PointInTime,
       """WITH flagged AS (
         |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
         |    CASE WHEN LAG(o_orderpriority) OVER w IS NULL
@@ -519,8 +509,8 @@ object Cdc {
         |FROM hist CROSS JOIN mid
         |WHERE epoch_us(valid_from) <= as_of_us
         |  AND (valid_to IS NULL OR epoch_us(valid_to) > as_of_us)
-        |ORDER BY o_custkey""".stripMargin,
-    "q110_scd2" ->
+        |ORDER BY o_custkey""".stripMargin),
+    "q110_scd2" -> Query(q110Scd2,
       """WITH flagged AS (
         |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
         |    CASE WHEN LAG(o_orderpriority) OVER w IS NULL
@@ -543,7 +533,7 @@ object Cdc {
         |  LEAD(valid_from) OVER (PARTITION BY o_custkey ORDER BY version)
         |    AS valid_to,
         |  CAST(version AS BIGINT) AS version
-        |FROM versions ORDER BY o_custkey, version""".stripMargin)
+        |FROM versions ORDER BY o_custkey, version""".stripMargin))
 
   /** The two-night merge chain as shared oracle CTEs (final version = m2). */
   private lazy val maintChainSql: String =

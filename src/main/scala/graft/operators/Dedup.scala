@@ -1080,32 +1080,11 @@ object Dedup {
       .orderBy("source")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q104_curation_v3" -> (q104CurationV3 _),
-    "q103_cluster_split" -> (q103ClusterSplit _),
-    "q97_span_dedup" -> (q97SpanDedup _),
-    "q92_quality_dedup" -> (q92QualityDedup _),
-    "q81_substring_dups" -> (q81SubstringDups _),
-    "q83_contamination" -> (q83Contamination _),
-    "q56_corpus_pipeline" -> (q56CorpusPipeline _),
-    "q57_training_mix" -> (q57TrainingMix _),
-    "q40_dedup_exact" -> (q40DedupExact _),
-    "q45_minhash_pairs" -> (q45MinhashPairs _),
-    "q345_incremental_dedup" -> (q345IncrementalDedup _),
-    "q357_dedup_sweep" -> (q357DedupSweep _),
-    "q46_simhash_pairs" -> (q46SimhashPairs _),
-    "q47_ngram_jaccard_sample" -> (q47NgramJaccardSample _),
-    "q143_set_similarity_join" -> (q143SetSimilarityJoin _),
-    "q75_near_dup_clusters" -> (q75NearDupClusters _),
-    "q178_dup_cluster_histogram" -> (q178DupClusterHistogram _),
-    "q179_containment_dups" -> (q179ContainmentDups _),
-    "q76_curation_v2" -> (q76CurationV2 _))
-
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // every stage refit from first principles in ONE statement: span
     // dedup verbatim reassembly -> LM refit on the REBUILT corpus ->
     // perplexity gate -> quotas re-rated over gated counts -> md5 draw
-    "q104_curation_v3" ->
+    "q104_curation_v3" -> Query(q104CurationV3,
       """WITH sp_t AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
@@ -1178,10 +1157,10 @@ object Dedup {
         |SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(len(list_filter(regexp_split_to_array(text, '\s+'),
         |    x -> x <> ''))) AS BIGINT) AS n_tokens
-        |FROM rebal GROUP BY source ORDER BY source""".stripMargin,
+        |FROM rebal GROUP BY source ORDER BY source""".stripMargin),
     // exact pair set -> recursive closure -> min-id representative -> the
     // engine's own md5 split draw on the REP: every assignment hash-gated
-    "q103_cluster_split" ->
+    "q103_cluster_split" -> Query(q103ClusterSplit,
       """WITH RECURSIVE d0 AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
@@ -1220,10 +1199,10 @@ object Dedup {
         |  FROM h)
         |SELECT doc_id,
         |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'eval' ELSE 'test' END AS split
-        |FROM u ORDER BY doc_id""".stripMargin,
+        |FROM u ORDER BY doc_id""".stripMargin),
     // spans, first-occurrence choice, and verbatim reassembly all
     // recomputed from first principles; strict hash gate on rebuilt text
-    "q97_span_dedup" ->
+    "q97_span_dedup" -> Query(q97SpanDedup,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
@@ -1249,11 +1228,11 @@ object Dedup {
         |  COALESCE(r.n_spans_kept, 0) AS n_spans_kept,
         |  COALESCE(r.n_spans_dropped, 0) AS n_spans_dropped
         |FROM documents d LEFT JOIN r USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     // clusters via recursive closure over the exact jaccard pair set;
     // quality recomputed from first principles; winner = (quality DESC,
     // id ASC) per cluster — the full argmax decision is hash-gated
-    "q92_quality_dedup" ->
+    "q92_quality_dedup" -> Query(q92QualityDedup,
       """WITH RECURSIVE d0 AS (
         |  SELECT doc_id, text,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
@@ -1297,10 +1276,10 @@ object Dedup {
         |  UNION ALL
         |  SELECT id FROM winners)
         |SELECT k.doc_id, q.quality FROM kept k JOIN q ON q.doc_id = k.doc_id
-        |ORDER BY k.doc_id""".stripMargin,
+        |ORDER BY k.doc_id""".stripMargin),
     // distinct shared 8-token windows per pair, from plain window STRINGS
     // (no engine hash in the contract), with the same df <= 256 cutoff
-    "q81_substring_dups" ->
+    "q81_substring_dups" -> Query(q81SubstringDups,
       """WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(ts) < 8 THEN [array_to_string(ts, ' ')]
@@ -1316,10 +1295,10 @@ object Dedup {
         |  CAST(COUNT(*) AS BIGINT) AS n_shared_windows
         |FROM keep x JOIN keep y ON x.w = y.w AND x.doc_id < y.doc_id
         |GROUP BY x.doc_id, y.doc_id
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // same window definition and train-df cutoff as the engine; plain
     // window strings, so the hashed join must reproduce the exact report
-    "q83_contamination" ->
+    "q83_contamination" -> Query(q83Contamination,
       """WITH d AS (
         |  SELECT doc_id,
         |    CASE WHEN len(ts) < 8 THEN [array_to_string(ts, ' ')]
@@ -1339,14 +1318,14 @@ object Dedup {
         |SELECT eval_id, CAST(COUNT(*) AS BIGINT) AS n_train_docs,
         |  CAST(MAX(n_shared) AS BIGINT) AS max_shared,
         |  CAST(SUM(n_shared) AS BIGINT) AS total_shared
-        |FROM hits GROUP BY eval_id ORDER BY eval_id""".stripMargin,
-    "q56_corpus_pipeline" ->
+        |FROM hits GROUP BY eval_id ORDER BY eval_id""".stripMargin),
+    "q56_corpus_pipeline" -> Query(q56CorpusPipeline,
       """SELECT lang, COUNT(*) AS n_docs, CAST(SUM(len) AS BIGINT) AS total_chars FROM (
         |  SELECT MIN(doc_id) AS keep_id, MIN(lang) AS lang,
         |    CAST(MAX(LENGTH(text)) AS BIGINT) AS len
         |  FROM documents WHERE LENGTH(text) >= 200 GROUP BY text) t
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q57_training_mix" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    "q57_training_mix" -> Query(q57TrainingMix,
       s"""WITH d AS (
          |  SELECT doc_id, text FROM documents
          |  QUALIFY ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) = 1),
@@ -1355,17 +1334,17 @@ object Dedup {
          |  CAST(SUM(len(toks)) AS BIGINT) AS n_tokens,
          |  MIN(doc_id) AS min_doc_id
          |FROM q WHERE quality >= 0.5
-         |GROUP BY predicted_lang ORDER BY predicted_lang""".stripMargin,
-    "q40_dedup_exact" ->
+         |GROUP BY predicted_lang ORDER BY predicted_lang""".stripMargin),
+    "q40_dedup_exact" -> Query(q40DedupExact,
       """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies FROM documents
-        |GROUP BY text ORDER BY keep_id""".stripMargin,
+        |GROUP BY text ORDER BY keep_id""".stripMargin),
     // exact all-pairs ground truth at oracle scale: every pair whose distinct
     // 3-shingle Jaccard >= 0.5 (integer form: 2·|∩| >= |∪|), which the LSH
     // path must reproduce exactly (see q45MinhashPairs recall math)
     // every pipeline stage recomputed from first principles in ONE
     // statement: exact pair set -> recursive closure -> non-representative
     // drop -> top-bigram char fraction gate -> per-source totals
-    "q76_curation_v2" ->
+    "q76_curation_v2" -> Query(q76CurationV2,
       """WITH RECURSIVE toks AS (
         |  SELECT doc_id, source, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
         |  FROM documents),
@@ -1410,11 +1389,11 @@ object Dedup {
         |FROM toks d
         |JOIN ok ON d.doc_id = ok.doc_id
         |WHERE d.doc_id NOT IN (SELECT id FROM losers)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
     // the same exact pair set as the q45 oracle, then a RECURSIVE
     // transitive closure: comp(n) = min over n's reachability set — the
     // fixed point hash-min label propagation converges to
-    "q179_containment_dups" ->
+    "q179_containment_dups" -> Query(q179ContainmentDups,
       ("""WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')]
@@ -1441,8 +1420,8 @@ object Dedup {
         |  JOIN sz sb ON sb.doc_id = pc.id_b
         |WHERE CAST(n_common AS DOUBLE) / CAST(LEAST(sa.sz, sb.sz) AS DOUBLE)
         |  >= 0.6
-        |ORDER BY id_a, id_b""").stripMargin,
-    "q178_dup_cluster_histogram" ->
+        |ORDER BY id_a, id_b""").stripMargin),
+    "q178_dup_cluster_histogram" -> Query(q178DupClusterHistogram,
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1476,8 +1455,8 @@ object Dedup {
         |SELECT cluster_size, n_clusters, cluster_size * n_clusters AS n_docs
         |FROM (SELECT * FROM hist UNION ALL
         |      SELECT 1, nd - ni FROM tot CROSS JOIN cd)
-        |ORDER BY cluster_size""".stripMargin,
-    "q75_near_dup_clusters" ->
+        |ORDER BY cluster_size""".stripMargin),
+    "q75_near_dup_clusters" -> Query(q75NearDupClusters,
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1502,8 +1481,8 @@ object Dedup {
         |SELECT CAST(comp AS BIGINT) AS cluster_rep,
         |  CAST(COUNT(*) AS BIGINT) AS n_members,
         |  CAST(MAX(id) AS BIGINT) AS max_id
-        |FROM comp GROUP BY comp ORDER BY cluster_rep""".stripMargin,
-    "q357_dedup_sweep" ->
+        |FROM comp GROUP BY comp ORDER BY cluster_rep""".stripMargin),
+    "q357_dedup_sweep" -> Query(q357DedupSweep,
       """WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1535,8 +1514,8 @@ object Dedup {
         |  COALESCE(nd.n_docs_in_pairs, 0) AS n_docs_in_pairs
         |FROM th LEFT JOIN np USING (threshold_pct)
         |LEFT JOIN nd USING (threshold_pct)
-        |ORDER BY threshold_pct""".stripMargin,
-    "q345_incremental_dedup" ->
+        |ORDER BY threshold_pct""".stripMargin),
+    "q345_incremental_dedup" -> Query(q345IncrementalDedup,
       """WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1557,8 +1536,8 @@ object Dedup {
         |  CAST(CASE WHEN COUNT(m.id_prior) = 0 THEN 1 ELSE 0 END
         |    AS BIGINT) AS is_kept
         |FROM b LEFT JOIN m ON m.id_new = b.doc_id
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q45_minhash_pairs" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q45_minhash_pairs" -> Query(q45MinhashPairs,
       """WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
@@ -1573,13 +1552,13 @@ object Dedup {
         |    len(list_distinct(list_concat(x.sh, y.sh))) AS n_total
         |  FROM t x JOIN t y ON x.doc_id < y.doc_id) p
         |WHERE 2 * n_common >= n_total
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // recomputes the engine's simhash fingerprints from first principles:
     // token hash = first 8 bytes of md5 (hex-parsed to an unsigned 64-bit,
     // then reinterpreted signed to match Spark's LongType), ±1 votes per bit
     // over the token MULTISET (unnest keeps duplicates), fingerprint bit =
     // sign of the vote sum, then exact all-pairs popcount ≤ 3
-    "q46_simhash_pairs" ->
+    "q46_simhash_pairs" -> Query(q46SimhashPairs,
       """WITH toks AS (
         |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS t
         |  FROM documents WHERE text IS NOT NULL),
@@ -1603,11 +1582,11 @@ object Dedup {
         |  bit_count(xor(x.sim, y.sim))::BIGINT AS hamming
         |FROM sh x JOIN sh y ON x.doc_id < y.doc_id
         |WHERE bit_count(xor(x.sim, y.sim)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // ground truth by brute force through the inverted index: every pair
     // sharing ANY shingle gets an exact intersection count, thresholded
     // with the same integer-rational compare as the engine
-    "q143_set_similarity_join" ->
+    "q143_set_similarity_join" -> Query(q143SetSimilarityJoin,
       """WITH t AS (
         |  SELECT doc_id, unnest(list_distinct([array_to_string(toks[i:i+2], ' ')
         |    FOR i IN range(1, len(toks) - 1)])) AS sh
@@ -1626,8 +1605,8 @@ object Dedup {
         |FROM pairs JOIN sizes sa ON sa.doc_id = id_a
         |  JOIN sizes sb ON sb.doc_id = id_b
         |WHERE n_common * 5 >= 3 * (sa.n + sb.n - n_common)
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q47_ngram_jaccard_sample" ->
+        |ORDER BY id_a, id_b""".stripMargin),
+    "q47_ngram_jaccard_sample" -> Query(q47NgramJaccardSample,
       """WITH t AS (
         |  SELECT doc_id, list_distinct([array_to_string(toks[i:i+2], ' ')
         |    FOR i IN range(1, len(toks) - 1)]) AS sh
@@ -1637,5 +1616,5 @@ object Dedup {
         |  len(list_intersect(x.sh, y.sh)) AS n_common,
         |  len(list_distinct(list_concat(x.sh, y.sh))) AS n_total
         |FROM t x JOIN t y ON x.doc_id < y.doc_id
-        |ORDER BY id_a, id_b""".stripMargin)
+        |ORDER BY id_a, id_b""".stripMargin))
 }

@@ -633,8 +633,6 @@ object Graph {
       .orderBy("probe", "rk")
   }
 
-  private def dd(c: Column): Column = c.cast("double")
-
   /** Which unlinked part pairs the co-order graph predicts next:
     * Adamic–Adar top-3 per probe part (partkey ≡ 0 mod 100). */
   def q264AdamicAdar(spark: SparkSession, dir: String): DataFrame = {
@@ -829,7 +827,6 @@ object Graph {
       .join(comm, Seq("node"), "left")
       .groupBy("c")
       .agg(count(lit(1)).as("n_nodes"), sum(col("d")).as("d_c"))
-    val dd = (c: Column) => c.cast("double")
     val per = degc.join(intra, Seq("c"), "left")
       .na.fill(0L, Seq("m_c"))
       .crossJoin(broadcast(m)) // 1-row build side
@@ -987,7 +984,6 @@ object Graph {
     require(nSources >= 1, s"nSources must be >= 1: $nSources")
     require(maxDepth >= 1, s"maxDepth must be >= 1: $maxDepth")
     val q3812 = (c: Column) => c.cast("decimal(38,12)")
-    val dd = (c: Column) => c.cast("double")
     val bi = edges
       .select(col(aCol).as("u"), col(bCol).as("v"))
       .union(edges.select(col(bCol).as("u"), col(aCol).as("v")))
@@ -1064,7 +1060,6 @@ object Graph {
   def richClub(edges: DataFrame, aCol: String, bCol: String,
       topM: Int): DataFrame = {
     require(topM >= 2, s"topM must be >= 2: $topM")
-    val dd = (c: Column) => c.cast("double")
     val e = edges
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
@@ -1114,7 +1109,6 @@ object Graph {
     * double divisions. */
   def reciprocity(edges: DataFrame, srcCol: String, dstCol: String,
       nCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
         col(nCol).cast("long").as("n"))
       .filter(col("u") =!= col("v"))
@@ -1155,7 +1149,6 @@ object Graph {
     * fit r² and the graph shape numbers. */
   def degreePowerLaw(edges: DataFrame, aCol: String,
       bCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val e = edges
       .select(least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
@@ -1203,26 +1196,6 @@ object Graph {
     degreePowerLaw(Basket.pairCounts(bk, basketCap = 64, minSupport = 2L),
       "p1", "p2")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q406_transition_reciprocity" -> (q406TransitionReciprocity _),
-    "q407_degree_powerlaw" -> (q407DegreePowerLaw _),
-    "q392_harmonic_closeness" -> (q392HarmonicCloseness _),
-    "q393_rich_club" -> (q393RichClub _),
-    "q333_betweenness" -> (q333Betweenness _),
-    "q322_graph_modularity" -> (q322GraphModularity _),
-    "q297_personalized_pagerank" -> (q297PersonalizedPagerank _),
-    "q270_local_clustering" -> (q270LocalClustering _),
-    "q264_adamic_adar" -> (q264AdamicAdar _),
-    "q265_label_propagation" -> (q265LabelPropagation _),
-    "q208_assortativity" -> (q208Assortativity _),
-    "q211_kcore" -> (q211KCore _),
-    "q422_ktruss" -> (q422KTruss _),
-    "q138_pagerank" -> (q138PageRank _),
-    "q150_triangles" -> (q150Triangles _),
-    "q151_bfs_hops" -> (q151BfsHops _),
-    "q170_sssp" -> (q170Sssp _),
-    "q171_hits" -> (q171Hits _))
 
   private val transitionsSql: String =
     """WITH e AS (
@@ -1361,8 +1334,8 @@ object Graph {
        |      ORDER BY c DESC, lbl) AS rk
        |    FROM v$i) WHERE rk = 1)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q406_transition_reciprocity" -> (transitionsSql + ",\n" +
+  val declared: Map[String, Query] = Map(
+    "q406_transition_reciprocity" -> Query(q406TransitionReciprocity, (transitionsSql + ",\n" +
       """e2 AS (SELECT src, dst, n FROM cnt WHERE src <> dst),
         |wr AS (
         |  SELECT a.src, a.dst, a.n, COALESCE(b.n, 0) AS rn
@@ -1380,8 +1353,8 @@ object Graph {
         |  n_transitions,
         |  CAST(n_matched AS DOUBLE) / CAST(n_transitions AS DOUBLE)
         |    AS weighted_reciprocity
-        |FROM agg""".stripMargin),
-    "q407_degree_powerlaw" ->
+        |FROM agg""".stripMargin)),
+    "q407_degree_powerlaw" -> Query(q407DegreePowerLaw,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1427,8 +1400,8 @@ object Graph {
         |SELECT n_nodes, n_degrees, max_degree,
         |  cov / vx AS ccdf_slope, 1.0 - cov / vx AS alpha,
         |  (cov * cov) / (vx * vy) AS r2
-        |FROM f""".stripMargin,
-    "q392_harmonic_closeness" ->
+        |FROM f""".stripMargin),
+    "q392_harmonic_closeness" -> Query(q392HarmonicCloseness,
       """WITH RECURSIVE op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1454,8 +1427,8 @@ object Graph {
         |  CAST(CAST(SUM(CAST(1.0 / CAST(d AS DOUBLE) AS DECIMAL(38,12)))
         |    AS DECIMAL(38,12)) AS DOUBLE) AS harmonic,
         |  CAST(COUNT(*) AS DOUBLE) / CAST(SUM(d) AS DOUBLE) AS closeness
-        |FROM dist GROUP BY s ORDER BY node""".stripMargin,
-    "q393_rich_club" ->
+        |FROM dist GROUP BY s ORDER BY node""".stripMargin),
+    "q393_rich_club" -> Query(q393RichClub,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1484,12 +1457,12 @@ object Graph {
         |      / (CAST(n_nodes AS DOUBLE) * CAST(n_nodes - 1 AS DOUBLE))
         |      AS density
         |  FROM shape, er)
-        |SELECT *, phi / density AS phi_norm FROM fin""".stripMargin,
+        |SELECT *, phi / density AS phi_norm FROM fin""".stripMargin),
     // 8-source 4-hop Brandes, fully unrolled: 4 σ-level CTEs + 3
     // backprop CTEs; the deepest level's δ = 0 on both sides (no
     // successors inside the horizon), per-node totals are exact
     // decimal sums of the quantized δ
-    "q333_betweenness" ->
+    "q333_betweenness" -> Query(q333Betweenness,
       ("""WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1515,8 +1488,8 @@ object Graph {
         |  CAST(SUM(CAST(FLOOR(delta * 1e12 + 0.5) AS DECIMAL(38,0)))
         |    AS DOUBLE) / 1e12 AS betweenness,
         |  CAST(COUNT(*) AS BIGINT) AS n_sources
-        |FROM contrib GROUP BY node ORDER BY node""".stripMargin),
-    "q322_graph_modularity" ->
+        |FROM contrib GROUP BY node ORDER BY node""".stripMargin)),
+    "q322_graph_modularity" -> Query(q322GraphModularity,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1550,8 +1523,8 @@ object Graph {
         |  d_c AS degree_sum, q_c,
         |  (SELECT CAST(SUM(CAST(q_c AS DECIMAL(38,15))) AS DOUBLE)
         |   FROM per) AS q_total
-        |FROM per ORDER BY community""".stripMargin,
-    "q270_local_clustering" ->
+        |FROM per ORDER BY community""".stripMargin),
+    "q270_local_clustering" -> Query(q270LocalClustering,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1575,8 +1548,8 @@ object Graph {
         |  CAST(COALESCE(n_triangles, 0) AS DOUBLE) * 2
         |    / (CAST(degree AS DOUBLE) * (CAST(degree AS DOUBLE) - 1)) AS lcc
         |FROM deg LEFT JOIN tri ON tri.ctr = deg.node
-        |WHERE degree >= 2 ORDER BY node""".stripMargin,
-    "q264_adamic_adar" ->
+        |WHERE degree >= 2 ORDER BY node""".stripMargin),
+    "q264_adamic_adar" -> Query(q264AdamicAdar,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS MATERIALIZED (
@@ -1609,8 +1582,8 @@ object Graph {
         |  FROM nolink)
         |SELECT u AS probe, v AS candidate, n_common,
         |  CAST(aa AS DOUBLE) AS aa_score, rk
-        |FROM rked WHERE rk <= 3 ORDER BY probe, rk""".stripMargin,
-    "q265_label_propagation" ->
+        |FROM rked WHERE rk <= 3 ORDER BY probe, rk""".stripMargin),
+    "q265_label_propagation" -> Query(q265LabelPropagation,
       ("""WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS (
@@ -1622,8 +1595,8 @@ object Graph {
         |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM bi),
         |""".stripMargin +
         (1 to 3).map(lpaIterSql).mkString(",\n") + "\n" +
-        """SELECT node, lbl AS community FROM l3 ORDER BY node"""),
-    "q297_personalized_pagerank" -> (transitionsSql + ",\n" +
+        """SELECT node, lbl AS community FROM l3 ORDER BY node""")),
+    "q297_personalized_pagerank" -> Query(q297PersonalizedPagerank, (transitionsSql + ",\n" +
       """pr0 AS (
         |  SELECT node, CASE WHEN node = 'view' THEN CAST(1.0 AS DOUBLE)
         |    ELSE CAST(0 AS DOUBLE) END AS rank
@@ -1631,20 +1604,20 @@ object Graph {
       (1 to 5).map(pprIterSql).mkString(",\n") + "\n" +
       """SELECT node AS event_type,
         |  CAST(CAST(rank AS DECIMAL(20,12)) AS DOUBLE) AS ppr
-        |FROM pr5 ORDER BY event_type""".stripMargin),
-    "q138_pagerank" -> (transitionsSql + ",\n" +
+        |FROM pr5 ORDER BY event_type""".stripMargin)),
+    "q138_pagerank" -> Query(q138PageRank, (transitionsSql + ",\n" +
       """r0 AS (
         |  SELECT node, 1.0 / CAST(nn.n_nodes AS DOUBLE) AS rank
         |  FROM nodes CROSS JOIN nn),""".stripMargin + "\n" +
       (1 to 5).map(iterSql).mkString(",\n") + "\n" +
       """SELECT node AS event_type,
         |  CAST(CAST(rank AS DECIMAL(20,12)) AS DOUBLE) AS rank
-        |FROM r5 ORDER BY event_type""".stripMargin),
+        |FROM r5 ORDER BY event_type""".stripMargin)),
     // same ed CTE as q150, then exactly 6 unrolled peel rounds
     // (MATERIALIZED: each round feeds three references — inlining would
     // blow up 3^rounds). A converged round is a no-op, matching the
     // Spark loop's early exit.
-    "q211_kcore" ->
+    "q211_kcore" -> Query(q211KCore,
       ("""WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed0 AS MATERIALIZED (
@@ -1654,8 +1627,8 @@ object Graph {
         (1 to 6).map(kCoreIterSql).mkString(",\n") + "\n" +
         """SELECT node, CAST(COUNT(*) AS BIGINT) AS core_degree
         |FROM (SELECT u AS node FROM ed6 UNION ALL SELECT v FROM ed6)
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
-    "q422_ktruss" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    "q422_ktruss" -> Query(q422KTruss,
       ("""WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |te0 AS MATERIALIZED (
@@ -1666,10 +1639,10 @@ object Graph {
         (1 to 2).map(kTrussIterSql).mkString(",\n") + "\n" +
         """SELECT node, CAST(COUNT(*) AS BIGINT) AS truss_degree
         |FROM (SELECT u AS node FROM te2 UNION ALL SELECT v FROM te2)
-        |GROUP BY 1 ORDER BY 1""".stripMargin),
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
     // same ed CTE as q150; the bi-directed endpoint-degree moments are
     // exact integers, the final division is the one double op
-    "q208_assortativity" ->
+    "q208_assortativity" -> Query(q208Assortativity,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS (
@@ -1705,10 +1678,10 @@ object Graph {
         |    ELSE CAST(CAST(m AS DECIMAL(38,0)) * sxy - sx * sx AS DOUBLE)
         |      / CAST(CAST(m AS DECIMAL(38,0)) * sxx - sx * sx AS DOUBLE)
         |  END AS assortativity
-        |FROM shape CROSS JOIN st""".stripMargin,
+        |FROM shape CROSS JOIN st""".stripMargin),
     // id-ordered triangle join — orientation changes the join's cost, not
     // the triangle set, so the oracle can use the simple form
-    "q150_triangles" ->
+    "q150_triangles" -> Query(q150Triangles,
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS (
@@ -1731,10 +1704,10 @@ object Graph {
         |SELECT n_nodes, n_edges, n_triangles, n_wedges,
         |  CASE WHEN n_wedges = 0 THEN 0.0
         |    ELSE CAST(n_triangles AS DOUBLE) * 3 / n_wedges END AS global_cc
-        |FROM tot CROSS JOIN tri""".stripMargin,
+        |FROM tot CROSS JOIN tri""".stripMargin),
     // textbook recursive-CTE BFS; UNION (not ALL) dedupes (node, hop)
     // pairs and the hop < 6 guard bounds the recursion
-    "q151_bfs_hops" ->
+    "q151_bfs_hops" -> Query(q151BfsHops,
       """WITH RECURSIVE op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS (
@@ -1748,11 +1721,11 @@ object Graph {
         |  SELECT bi.v, bfs.hop + 1
         |  FROM bfs JOIN bi ON bi.u = bfs.node WHERE bfs.hop < 6)
         |SELECT node, CAST(MIN(hop) AS BIGINT) AS hop
-        |FROM bfs GROUP BY node ORDER BY hop, node""".stripMargin,
+        |FROM bfs GROUP BY node ORDER BY hop, node""".stripMargin),
     // hop-bounded weighted walk: distinct (node, dist, hop) triples are
     // bounded by nodes × reachable-distance values × 4, so the UNION
     // recursion terminates; MIN over hop ≤ 4 = 4-round Bellman-Ford
-    "q170_sssp" ->
+    "q170_sssp" -> Query(q170Sssp,
       """WITH RECURSIVE op AS (
         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
         |ed AS (
@@ -1772,10 +1745,10 @@ object Graph {
         |  SELECT bi.v, walk.dist + bi.w, walk.hop + 1
         |  FROM walk JOIN bi ON bi.u = walk.node WHERE walk.hop < 4)
         |SELECT node, CAST(MIN(dist) AS BIGINT) AS dist
-        |FROM walk GROUP BY node ORDER BY node""".stripMargin,
+        |FROM walk GROUP BY node ORDER BY node""".stripMargin),
     // two unrolled HITS iterations, same quantized-term + one-division
     // normalization shape as the engine
-    "q171_hits" ->
+    "q171_hits" -> Query(q171Hits,
       """WITH e AS (
         |  SELECT DISTINCT o.o_custkey AS u, l.l_partkey AS v
         |  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
@@ -1810,5 +1783,5 @@ object Graph {
         |  FROM h2
         |  UNION ALL
         |  SELECT 'auth', v, CAST(CAST(a AS DECIMAL(20,12)) AS DOUBLE) FROM a2)
-        |ORDER BY kind, id""".stripMargin)
+        |ORDER BY kind, id""".stripMargin))
 }

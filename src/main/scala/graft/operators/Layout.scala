@@ -279,16 +279,9 @@ object Layout {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q95_zorder" -> (q95Zorder _),
-    "q111_compact" -> (q111Compact _),
-    "q124_zonemap_skip" -> (q124ZonemapSkip _),
-    "q154_bloom_skip" -> (q154BloomSkip _),
-    "q159_schema_evolution" -> (q159SchemaEvolution _))
-
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // the two eras reproduced as a UNION with an explicit NULL column
-    "q159_schema_evolution" ->
+    "q159_schema_evolution" -> Query(q159SchemaEvolution,
       """WITH v0 AS (
         |  SELECT event_type, user_id, CAST(NULL AS BIGINT) AS vip
         |  FROM events WHERE event_id % 2 = 0),
@@ -299,30 +292,30 @@ object Layout {
         |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(COUNT(vip) AS BIGINT) AS n_vip,
         |  CAST(SUM(vip) AS BIGINT) AS sum_vip
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
     // the same IN-list on the pristine table: a false-negative bloom (or
     // a file list that dropped a needed file) loses rows and mismatches
-    "q154_bloom_skip" ->
+    "q154_bloom_skip" -> Query(q154BloomSkip,
       ("""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM orders WHERE o_orderkey IN (""".stripMargin +
         (1 to 12).map(i => i * 512L).mkString(", ") +
-        ")\nORDER BY o_orderkey"),
-    "q124_zonemap_skip" ->
+        ")\nORDER BY o_orderkey")),
+    "q124_zonemap_skip" -> Query(q124ZonemapSkip,
       """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_orders
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q111_compact" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q111_compact" -> Query(q111Compact,
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q95_zorder" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q95_zorder" -> Query(q95Zorder,
       s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
          |  ${zValueSql(Seq("l_partkey", "l_suppkey"), zBits)} AS zval
          |FROM lineitem
-         |ORDER BY zval, l_orderkey, l_linenumber LIMIT 500""".stripMargin)
+         |ORDER BY zval, l_orderkey, l_linenumber LIMIT 500""".stripMargin))
 }

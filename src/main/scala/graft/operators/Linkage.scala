@@ -231,15 +231,9 @@ object Linkage {
     sortedNeighborhoodPairs(Tables.documents(spark, dir), "doc_id", "text",
       keyLen = 32, cmpLen = 64, window = 4, maxDist = 20)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q123_entity_resolution" -> (q123EntityResolution _),
-    "q281_edit_distance_pairs" -> (q281EditDistancePairs _),
-    "q319_sorted_neighborhood" -> (q319SortedNeighborhood _),
-    "q172_jw_linkage" -> (q172JwLinkage _))
-
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // same sort key, same rank-window candidates, same prefix distance
-    "q319_sorted_neighborhood" ->
+    "q319_sorted_neighborhood" -> Query(q319SortedNeighborhood,
       """WITH d AS (
         |  SELECT doc_id, lower(substr(text, 1, 32)) AS key,
         |    substr(text, 1, 64) AS p
@@ -252,9 +246,9 @@ object Linkage {
         |  CAST(levenshtein(a.p, b.p) AS BIGINT) AS dist
         |FROM r a JOIN r b ON b.rn - a.rn BETWEEN 1 AND 3
         |WHERE levenshtein(a.p, b.p) <= 20
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // same length-band prefilter, same strict < pair canon, same order
-    "q281_edit_distance_pairs" ->
+    "q281_edit_distance_pairs" -> Query(q281EditDistancePairs,
       """WITH names AS (
         |  SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n_rows
         |  FROM part GROUP BY p_name)
@@ -265,9 +259,9 @@ object Linkage {
         |  ON a.name < b.name
         |  AND ABS(LENGTH(a.name) - LENGTH(b.name)) <= 2
         |  AND levenshtein(a.name, b.name) <= 2
-        |ORDER BY name_a, name_b""".stripMargin,
+        |ORDER BY name_a, name_b""".stripMargin),
     // same perturbation, same block key, same (dist, key) tie-break
-    "q123_entity_resolution" ->
+    "q123_entity_resolution" -> Query(q123EntityResolution,
       """WITH dirty AS (
         |  SELECT c_custkey AS dirty_id,
         |    substring(c_name, 1, 15) || reverse(substring(c_name, 16, 3))
@@ -289,10 +283,10 @@ object Linkage {
         |FROM blocked
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY dirty_id
         |  ORDER BY dist, c_custkey) = 1
-        |ORDER BY dirty_id""".stripMargin,
+        |ORDER BY dirty_id""".stripMargin),
     // same block key; DuckDB's native jaro_winkler_similarity, quantized
     // to the same DECIMAL(10,6) before the (sim desc, key) arg-max
-    "q172_jw_linkage" ->
+    "q172_jw_linkage" -> Query(q172JwLinkage,
       """WITH dirty AS (
         |  SELECT c_custkey AS dirty_id,
         |    substring(c_name, 1, 15) || reverse(substring(c_name, 16, 3))
@@ -314,5 +308,5 @@ object Linkage {
         |FROM blocked
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY dirty_id
         |  ORDER BY sim DESC, c_custkey) = 1
-        |ORDER BY dirty_id""".stripMargin)
+        |ORDER BY dirty_id""".stripMargin))
 }

@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Ml {
 
-  private def dd(c: Column): Column = c.cast("double")
-  private def d380(c: Column): Column = c.cast("decimal(38,0)")
-
   /** Out-of-fold (OOF) target mean encoding — the leakage-proof way to
     * turn a categorical column into a numeric feature: each fold's rows
     * are encoded with the target mean computed from the OTHER folds only,
@@ -4131,14 +4128,13 @@ object Ml {
     val per = df.select(scoreCol.cast("long").as("s"),
         when(posCond, 1L).otherwise(0L).as("y"))
       .groupBy("s").agg(count(lit(1)).as("n"), sum(col("y")).as("r"))
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val tot = per.agg(sum(col("n")).as("nn"), sum(col("r")).as("rr"),
       // decimal products: n/r are data-scaled counts — s²·n wraps a long
       // once scores × rows pass ~9e18
-      sum(d38(col("s")) * d38(col("s")) * d38(col("n")))
+      sum(d380(col("s")) * d380(col("s")) * d380(col("n")))
         .cast("decimal(38,0)").as("a"),
-      sum(d38(col("s")) * d38(col("n"))).cast("decimal(38,0)").as("b"),
-      sum(d38(col("s")) * d38(col("r"))).cast("decimal(38,0)").as("sr"))
+      sum(d380(col("s")) * d380(col("n"))).cast("decimal(38,0)").as("b"),
+      sum(d380(col("s")) * d380(col("r"))).cast("decimal(38,0)").as("sr"))
     val p = dd(col("rr")) / dd(col("nn"))
     per.crossJoin(broadcast(tot)) // 1-row statistic frame
       .select(col("s").as("score"), col("n"), col("r"),
@@ -5132,18 +5128,17 @@ object Ml {
   def cronbachAlpha(df: DataFrame, itemCols: Seq[String]): DataFrame = {
     require(itemCols.size >= 2, s"need >= 2 items: $itemCols")
     val k = itemCols.size
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val cents = (c: Column) =>
       (c.cast("decimal(18,2)") * 100).cast("long")
     val base = df.select(
       itemCols.zipWithIndex.map { case (c, i) => cents(col(c)).as(s"x$i") }
         :+ itemCols.map(c => cents(col(c))).reduce(_ + _).as("t"): _*)
     val aggs = (0 until k).flatMap(i => Seq(
-      sum(d38(col(s"x$i"))).cast("decimal(38,0)").as(s"s$i"),
-      sum(d38(col(s"x$i")) * d38(col(s"x$i"))).cast("decimal(38,0)")
+      sum(d380(col(s"x$i"))).cast("decimal(38,0)").as(s"s$i"),
+      sum(d380(col(s"x$i")) * d380(col(s"x$i"))).cast("decimal(38,0)")
         .as(s"q$i"))) ++ Seq(
-      sum(d38(col("t"))).cast("decimal(38,0)").as("st"),
-      sum(d38(col("t")) * d38(col("t"))).cast("decimal(38,0)").as("qt"),
+      sum(d380(col("t"))).cast("decimal(38,0)").as("st"),
+      sum(d380(col("t")) * d380(col("t"))).cast("decimal(38,0)").as("qt"),
       count(lit(1)).as("n"))
     val m = base.agg(aggs.head, aggs.tail: _*)
     val nn = dd(col("n"))
@@ -5176,16 +5171,15 @@ object Ml {
     * every output is a fixed double shape over DECIMAL sums. */
   def agreementAudit(df: DataFrame, xCents: Column,
       yCents: Column): DataFrame = {
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val base = df.select(xCents.as("x"), yCents.as("y"))
       .withColumn("d", col("x") - col("y"))
     val m = base.agg(count(lit(1)).as("n"),
-      sum(d38(col("x"))).cast("decimal(38,0)").as("sx"),
-      sum(d38(col("y"))).cast("decimal(38,0)").as("sy"),
-      sum(d38(col("x")) * d38(col("x"))).cast("decimal(38,0)").as("sxx"),
-      sum(d38(col("y")) * d38(col("y"))).cast("decimal(38,0)").as("syy"),
-      sum(d38(col("x")) * d38(col("y"))).cast("decimal(38,0)").as("sxy"),
-      sum(d38(col("d")) * d38(col("d"))).cast("decimal(38,0)").as("sdd"))
+      sum(d380(col("x"))).cast("decimal(38,0)").as("sx"),
+      sum(d380(col("y"))).cast("decimal(38,0)").as("sy"),
+      sum(d380(col("x")) * d380(col("x"))).cast("decimal(38,0)").as("sxx"),
+      sum(d380(col("y")) * d380(col("y"))).cast("decimal(38,0)").as("syy"),
+      sum(d380(col("x")) * d380(col("y"))).cast("decimal(38,0)").as("sxy"),
+      sum(d380(col("d")) * d380(col("d"))).cast("decimal(38,0)").as("sdd"))
     val nn = dd(col("n"))
     val sd = dd(col("sx")) - dd(col("sy"))
     val bias = sd / nn / 100.0
@@ -5374,15 +5368,14 @@ object Ml {
     * Returns the (round, π₁, μ₁, σ₁, μ₂, σ₂) trajectory in dollars. */
   def emMixture2(df: DataFrame, valCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds in [1,8]: $rounds")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val q1812 = (c: Column) => c.cast("decimal(18,12)")
     val hist = df.select(
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("c"))
       .localCheckpoint(true) // feeds init + every round
     val tot = hist.agg(sum("c").as("n"),
-      sum(d38(col("c")) * d38(col("v"))).cast("decimal(38,0)").as("sv"),
-      sum(d38(col("c")) * d38(col("v")) * d38(col("v")))
+      sum(d380(col("c")) * d380(col("v"))).cast("decimal(38,0)").as("sv"),
+      sum(d380(col("c")) * d380(col("v")) * d380(col("v")))
         .cast("decimal(38,0)").as("sq"))
     val mus = Rank.globalRankPrefix(hist, Seq(col("v")),
         Seq("cum" -> col("c")))
@@ -5449,106 +5442,6 @@ object Ml {
     * hash-gated against the unrolled oracle recursion. */
   def q410EmMixture(spark: SparkSession, dir: String): DataFrame =
     emMixture2(Tables.events(spark, dir), "value", rounds = 3)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q410_em_mixture" -> (q410EmMixture _),
-    "q413_nelson_aalen" -> (q413NelsonAalen _),
-    "q408_ansari_bradley" -> (q408AnsariBradley _),
-    "q409_brier_decomposition" -> (q409BrierDecomposition _),
-    "q402_pages_trend" -> (q402PagesTrend _),
-    "q403_cronbach_alpha" -> (q403CronbachAlpha _),
-    "q404_price_agreement" -> (q404PriceAgreement _),
-    "q389_mantel_haenszel" -> (q389MantelHaenszel _),
-    "q396_hellinger_drift" -> (q396HellingerDrift _),
-    "q383_cochran_q" -> (q383CochranQ _),
-    "q384_kendalls_w" -> (q384KendallsW _),
-    "q369_huber" -> (q369Huber _),
-    "q370_quantile_regression" -> (q370QuantileRegression _),
-    "q364_msprt" -> (q364Msprt _),
-    "q330_fairness_audit" -> (q330FairnessAudit _),
-    "q358_mcc" -> (q358Mcc _),
-    "q359_odds_ratio" -> (q359OddsRatio _),
-    "q329_conformal_intervals" -> (q329ConformalIntervals _),
-    "q328_quantile_normalize" -> (q328QuantileNormalize _),
-    "q327_kmeans" -> (q327Kmeans _),
-    "q325_logistic_gd" -> (q325LogisticGd _),
-    "q306_friedman" -> (q306Friedman _),
-    "q312_cochran_armitage" -> (q312CochranArmitage _),
-    "q280_brown_forsythe" -> (q280BrownForsythe _),
-    "q286_ridge_two" -> (q286RidgeTwo _),
-    "q290_moods_median" -> (q290MoodsMedian _),
-    "q291_runs_test" -> (q291RunsTest _),
-    "q292_tukey_hsd" -> (q292TukeyHsd _),
-    "q293_cliffs_delta" -> (q293CliffsDelta _),
-    "q287_durbin_watson" -> (q287DurbinWatson _),
-    "q288_breusch_pagan" -> (q288BreuschPagan _),
-    "q289_jarque_bera" -> (q289JarqueBera _),
-    "q274_partial_corr" -> (q274PartialCorr _),
-    "q275_ols_two" -> (q275OlsTwo _),
-    "q284_kruskal_wallis" -> (q284KruskalWallis _),
-    "q272_decision_stump" -> (q272DecisionStump _),
-    "q335_boosted_stumps" -> (q335BoostedStumps _),
-    "q336_als_factors" -> (q336AlsFactors _),
-    "q339_als_recommend" -> (q339AlsRecommend _),
-    "q341_bh_fdr" -> (q341BhFdr _),
-    "q342_energy_distance" -> (q342EnergyDistance _),
-    "q346_cramer_von_mises" -> (q346CramerVonMises _),
-    "q348_anderson_darling" -> (q348AndersonDarling _),
-    "q349_bartlett" -> (q349Bartlett _),
-    "q354_icc" -> (q354Icc _),
-    "q356_data_map" -> (q356DataMap _),
-    "q279_randomization_test" -> (q279RandomizationTest _),
-    "q285_mcnemar" -> (q285Mcnemar _),
-    "q268_log_rank" -> (q268LogRank _),
-    "q267_kendall_tau" -> (q267KendallTau _),
-    "q269_wasserstein" -> (q269Wasserstein _),
-    "q263_js_divergence" -> (q263JsDivergence _),
-    "q260_welch_ttest" -> (q260WelchTTest _),
-    "q261_avg_precision" -> (q261AvgPrecision _),
-    "q262_cohens_kappa" -> (q262CohensKappa _),
-    "q259_woe_iv" -> (q259WoeIv _),
-    "q257_rolling_ols" -> (q257RollingOls _),
-    "q258_qini_curve" -> (q258QiniCurve _),
-    "q255_covariate_balance" -> (q255CovariateBalance _),
-    "q256_price_elasticity" -> (q256PriceElasticity _),
-    "q253_rake_keyphrases" -> (q253RakeKeyphrases _),
-    "q254_source_overlap" -> (q254SourceOverlap _),
-    "q251_power_analysis" -> (q251PowerAnalysis _),
-    "q252_qte" -> (q252Qte _),
-    "q249_two_way_anova" -> (q249TwoWayAnova _),
-    "q250_cuped" -> (q250Cuped _),
-    "q247_theil_sen" -> (q247TheilSen _),
-    "q248_item_knn" -> (q248ItemKnn _),
-    "q245_conformal_interval" -> (q245ConformalInterval _),
-    "q246_hard_negatives" -> (q246HardNegatives _),
-    "q243_table_checksum" -> (q243TableChecksum _),
-    "q244_hist_intersection" -> (q244HistIntersection _),
-    "q241_zipf_fit" -> (q241ZipfFit _),
-    "q242_term_burstiness" -> (q242TermBurstiness _),
-    "q240_calibration_ece" -> (q240CalibrationEce _),
-    "q236_feature_hashing" -> (q236FeatureHashing _),
-    "q237_roc_auc" -> (q237RocAuc _),
-    "q238_classifier_report" -> (q238ClassifierReport _),
-    "q239_loo_influence" -> (q239LooInfluence _),
-    "q233_int8_quant" -> (q233Int8Quant _),
-    "q234_seasonal_decompose" -> (q234SeasonalDecompose _),
-    "q235_ndcg" -> (q235Ndcg _),
-    "q230_naive_bayes" -> (q230NaiveBayes _),
-    "q231_stratified_ate" -> (q231StratifiedAte _),
-    "q316_ips_policy_value" -> (q316IpsPolicyValue _),
-    "q317_diff_in_diff" -> (q317DiffInDiff _),
-    "q318_wilcoxon_signed_rank" -> (q318WilcoxonSignedRank _),
-    "q321_isotonic_calibration" -> (q321IsotonicCalibration _),
-    "q232_gains_curve" -> (q232GainsCurve _),
-    "q227_oov_rate" -> (q227OovRate _),
-    "q228_ewma" -> (q228Ewma _),
-    "q229_purged_cv" -> (q229PurgedCv _),
-    "q221_target_encoding" -> (q221TargetEncoding _),
-    "q222_spearman_trend" -> (q222SpearmanTrend _),
-    "q223_mutual_information" -> (q223MutualInformation _),
-    "q224_mann_whitney" -> (q224MannWhitney _),
-    "q225_anova_f" -> (q225AnovaF _),
-    "q226_bootstrap_ci" -> (q226BootstrapCI _))
 
   /** Shared daily-trend-residual CTE for q287/q288 — mirrors
     * [[dailyTrendResiduals]] double-op for double-op. */
@@ -5971,9 +5864,9 @@ object Ml {
            |  sqrt(s2) / 100.0 AS sigma2 FROM p$r""".stripMargin)
         .mkString("\nUNION ALL\n") + "\nORDER BY round"
 
-  val oracles: Map[String, String] = Map(
-    "q410_em_mixture" -> emMixtureOracleSql(3),
-    "q413_nelson_aalen" ->
+  val declared: Map[String, Query] = Map(
+    "q410_em_mixture" -> Query(q410EmMixture, emMixtureOracleSql(3)),
+    "q413_nelson_aalen" -> Query(q413NelsonAalen,
       """WITH ev AS (
         |  SELECT user_id AS u, epoch_us(ts) AS us,
         |    (event_type = 'purchase') AS isd
@@ -6003,8 +5896,8 @@ object Ml {
         |  FROM inc)
         |SELECT t AS t_days, dth AS n_deaths, n_risk,
         |  CAST(cum AS DOUBLE) / 1e12 AS na_cum_hazard
-        |FROM cm ORDER BY 1""".stripMargin,
-    "q408_ansari_bradley" ->
+        |FROM cm ORDER BY 1""".stripMargin),
+    "q408_ansari_bradley" -> Query(q408AnsariBradley,
       """WITH mm AS (
         |  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid
         |  FROM events),
@@ -6072,8 +5965,8 @@ object Ml {
         |  FROM agg)
         |SELECT k AS event_type, n_a, n_b, w_ab, e_w, sd_w,
         |  (w_ab - e_w) / sd_w AS z
-        |FROM fin ORDER BY 1""".stripMargin,
-    "q409_brier_decomposition" ->
+        |FROM fin ORDER BY 1""".stripMargin),
+    "q409_brier_decomposition" -> Query(q409BrierDecomposition,
       """WITH li AS (
         |  SELECT l_orderkey AS o_orderkey,
         |    CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -6127,8 +6020,8 @@ object Ml {
         |  CAST(rel AS DOUBLE) / CAST(n AS DOUBLE) AS reliability,
         |  CAST(res AS DOUBLE) / CAST(n AS DOUBLE) AS resolution,
         |  obar * (1.0 - obar) AS uncertainty
-        |FROM agg""".stripMargin,
-    "q402_pages_trend" ->
+        |FROM agg""".stripMargin),
+    "q402_pages_trend" -> Query(q402PagesTrend,
       """WITH cells AS (
         |  SELECT CAST(year(l_shipdate) AS VARCHAR) AS j,
         |    CAST(quarter(l_shipdate) AS VARCHAR) AS it,
@@ -6157,8 +6050,8 @@ object Ml {
         |  CAST(n AS DOUBLE) * 4.0 * 5.0 * 5.0 / 4.0 AS e_l,
         |  (CAST(l AS DOUBLE) - CAST(n AS DOUBLE) * 4.0 * 5.0 * 5.0 / 4.0)
         |  / sqrt(CAST(n AS DOUBLE) * 80.0 * 15.0 / 144.0) AS z
-        |FROM ls""".stripMargin,
-    "q403_cronbach_alpha" ->
+        |FROM ls""".stripMargin),
+    "q403_cronbach_alpha" -> Query(q403CronbachAlpha,
       """WITH base AS (
         |  SELECT
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6201,8 +6094,8 @@ object Ml {
         |SELECT n, CAST(3 AS BIGINT) AS k, iv / 1e4 AS sum_item_var,
         |  tv / 1e4 AS total_var,
         |  (3.0 / 2.0) * (1.0 - iv / tv) AS alpha
-        |FROM v""".stripMargin,
-    "q404_price_agreement" ->
+        |FROM v""".stripMargin),
+    "q404_price_agreement" -> Query(q404PriceAgreement,
       """WITH base AS (
         |  SELECT
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6245,8 +6138,8 @@ object Ml {
         |  bias + 1.959963984540054 * sd_diff AS loa_high,
         |  cv / sqrt(vx * vy) AS pearson_r,
         |  2.0 * cv / (vx + vy + sd * sd) AS ccc
-        |FROM g""".stripMargin,
-    "q389_mantel_haenszel" ->
+        |FROM g""".stripMargin),
+    "q389_mantel_haenszel" -> Query(q389MantelHaenszel,
       """WITH base AS (
         |  SELECT c_mktsegment AS g,
         |    (o_orderpriority IN ('1-URGENT','2-HIGH')) AS e,
@@ -6290,8 +6183,8 @@ object Ml {
         |  CASE WHEN CAST(v AS DOUBLE) > 0
         |    THEN CAST(ome AS DOUBLE) * CAST(ome AS DOUBLE)
         |      / CAST(v AS DOUBLE) END AS chi2_cmh
-        |FROM agg""".stripMargin,
-    "q396_hellinger_drift" ->
+        |FROM agg""".stripMargin),
+    "q396_hellinger_drift" -> Query(q396HellingerDrift,
       """WITH mm AS (
         |  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid
         |  FROM events),
@@ -6322,8 +6215,8 @@ object Ml {
         |SELECT k AS event_type, n_a, n_b,
         |  CAST(bc AS DOUBLE) AS bhattacharyya,
         |  sqrt(GREATEST(0.0, 1.0 - CAST(bc AS DOUBLE))) AS hellinger
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q336_als_factors" ->
+        |FROM agg ORDER BY event_type""".stripMargin),
+    "q336_als_factors" -> Query(q336AlsFactors,
       ("""WITH rt AS MATERIALIZED (
         |  SELECT o_custkey AS u, l_partkey AS i,
         |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS r
@@ -6346,8 +6239,8 @@ object Ml {
         |  UNION ALL
         |  SELECT 'item', if2.i, n, f1, f2
         |  FROM if2 JOIN icnt ON icnt.i = if2.i)
-        |ORDER BY kind, id""".stripMargin),
-    "q339_als_recommend" ->
+        |ORDER BY kind, id""".stripMargin)),
+    "q339_als_recommend" -> Query(q339AlsRecommend,
       ("""WITH rt AS MATERIALIZED (
         |  SELECT o_custkey AS u, l_partkey AS i,
         |    CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS r
@@ -6373,8 +6266,8 @@ object Ml {
         |  FROM sc)
         |SELECT u AS custkey, CAST(rnk AS BIGINT) AS rank, i AS partkey,
         |  score
-        |FROM rk WHERE rnk <= 5 ORDER BY custkey, rank""".stripMargin),
-    "q341_bh_fdr" ->
+        |FROM rk WHERE rnk <= 5 ORDER BY custkey, rank""".stripMargin)),
+    "q341_bh_fdr" -> Query(q341BhFdr,
       """WITH base AS (
         |  SELECT p_brand AS g, l_discount >= 0.05 AS arm,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -6439,8 +6332,8 @@ object Ml {
         |  p_value, p_adj,
         |  CAST(CASE WHEN p_adj <= 0.10 THEN 1 ELSE 0 END AS BIGINT)
         |    AS reject
-        |FROM adj ORDER BY rank""".stripMargin,
-    "q342_energy_distance" ->
+        |FROM adj ORDER BY rank""".stripMargin),
+    "q342_energy_distance" -> Query(q342EnergyDistance,
       """WITH mm AS (
         |  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid
         |  FROM events),
@@ -6489,8 +6382,8 @@ object Ml {
         |    * CAST(n_a AS DOUBLE)) / 100.0
         |  - CAST(sbb AS DOUBLE) * 2.0 / (CAST(n_b AS DOUBLE)
         |    * CAST(n_b AS DOUBLE)) / 100.0 AS energy
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q348_anderson_darling" ->
+        |FROM agg ORDER BY event_type""".stripMargin),
+    "q348_anderson_darling" -> Query(q348AndersonDarling,
       """WITH mm AS (
         |  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid
         |  FROM events),
@@ -6526,8 +6419,8 @@ object Ml {
         |SELECT k AS event_type, CAST(MAX(na) AS BIGINT) AS n_a,
         |  CAST(MAX(nb) AS BIGINT) AS n_b,
         |  CAST(CAST(SUM(term) AS DECIMAL(38,15)) AS DOUBLE) AS ad_stat
-        |FROM terms GROUP BY k ORDER BY event_type""".stripMargin,
-    "q359_odds_ratio" ->
+        |FROM terms GROUP BY k ORDER BY event_type""".stripMargin),
+    "q359_odds_ratio" -> Query(q359OddsRatio,
       """WITH cells AS (
         |  SELECT l_linestatus AS slice,
         |    CAST(SUM(CASE WHEN l_discount >= 0.05 AND l_returnflag = 'R'
@@ -6555,8 +6448,8 @@ object Ml {
         |      + 1.96 * sqrt(1.0 / CAST(a AS DOUBLE) + 1.0
         |        / CAST(b AS DOUBLE) + 1.0 / CAST(c AS DOUBLE)
         |        + 1.0 / CAST(d AS DOUBLE))) END AS ci_hi
-        |FROM cells ORDER BY slice""".stripMargin,
-    "q358_mcc" ->
+        |FROM cells ORDER BY slice""".stripMargin),
+    "q358_mcc" -> Query(q358Mcc,
       """WITH li AS (
         |  SELECT l_orderkey AS o_orderkey, CAST(COUNT(*) AS BIGINT)
         |    AS n_lines
@@ -6607,8 +6500,8 @@ object Ml {
         |      / sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE)
         |        * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE))
         |    END AS mcc
-        |FROM cells ORDER BY slice""".stripMargin,
-    "q354_icc" ->
+        |FROM cells ORDER BY slice""".stripMargin),
+    "q354_icc" -> Query(q354Icc,
       """WITH base AS (
         |  SELECT c_mktsegment AS c,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS t
@@ -6643,8 +6536,8 @@ object Ml {
         |SELECT k, n, msb, msw, n0,
         |  CASE WHEN msb + (n0 - 1.0) * msw > 0
         |    THEN (msb - msw) / (msb + (n0 - 1.0) * msw) END AS icc
-        |FROM fin""".stripMargin,
-    "q349_bartlett" ->
+        |FROM fin""".stripMargin),
+    "q349_bartlett" -> Query(q349Bartlett,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -6685,8 +6578,8 @@ object Ml {
         |      - 1.0 / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
         |     / (3.0 * (CAST(k AS DOUBLE) - 1.0))) AS chi2_bartlett,
         |  CAST(k - 1 AS BIGINT) AS dof
-        |FROM agg WHERE k > 1 AND n > k""".stripMargin,
-    "q346_cramer_von_mises" ->
+        |FROM agg WHERE k > 1 AND n > k""".stripMargin),
+    "q346_cramer_von_mises" -> Query(q346CramerVonMises,
       """WITH mm AS (
         |  SELECT (epoch_us(MIN(ts)) + epoch_us(MAX(ts))) // 2 AS mid
         |  FROM events),
@@ -6719,8 +6612,8 @@ object Ml {
         |  CAST(s AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE)
         |    * CAST(n_a + n_b AS DOUBLE) * CAST(n_a AS DOUBLE)
         |    * CAST(n_b AS DOUBLE)) AS t_stat
-        |FROM agg ORDER BY event_type""".stripMargin,
-    "q335_boosted_stumps" ->
+        |FROM agg ORDER BY event_type""".stripMargin),
+    "q335_boosted_stumps" -> Query(q335BoostedStumps,
       ("""WITH b0 AS MATERIALIZED (
         |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
         |      AS BIGINT) AS y,
@@ -6735,8 +6628,8 @@ object Ml {
         |  FROM b0),""".stripMargin + "\n" +
         (1 to 3).map(boostRoundSql).mkString(",\n") + "\n" +
         (1 to 3).map(boostRowSql).mkString("", "\nUNION ALL\n",
-          "\nORDER BY round")),
-    "q330_fairness_audit" ->
+          "\nORDER BY round"))),
+    "q330_fairness_audit" -> Query(q330FairnessAudit,
       """WITH li AS (
         |  SELECT l_orderkey AS o_orderkey, CAST(COUNT(*) AS BIGINT)
         |    AS n_lines
@@ -6784,8 +6677,8 @@ object Ml {
         |    / CAST(n - n_pos AS DOUBLE) END) - (CASE WHEN tn_ - tpos > 0
         |    THEN CAST(tfp AS DOUBLE) / CAST(tn_ - tpos AS DOUBLE) END)
         |    AS fpr_gap
-        |FROM cells CROSS JOIN pop ORDER BY 1""".stripMargin,
-    "q329_conformal_intervals" ->
+        |FROM cells CROSS JOIN pop ORDER BY 1""".stripMargin),
+    "q329_conformal_intervals" -> Query(q329ConformalIntervals,
       """WITH base AS (
         |  SELECT event_type AS t, event_id % 2 = 0 AS is_cal,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc
@@ -6817,8 +6710,8 @@ object Ml {
         |    / CAST(COUNT(*) AS DOUBLE) AS coverage
         |FROM base b JOIN model m USING (t) JOIN qhat q USING (t)
         |WHERE NOT b.is_cal
-        |GROUP BY 1, 2, 4, 5 ORDER BY 1""".stripMargin,
-    "q328_quantile_normalize" ->
+        |GROUP BY 1, 2, 4, 5 ORDER BY 1""".stripMargin),
+    "q328_quantile_normalize" -> Query(q328QuantileNormalize,
       """WITH vals AS (SELECT source AS s, n_chars AS v FROM documents),
         |ghist AS (
         |  SELECT v, CAST(COUNT(*) AS BIGINT) AS cnt FROM vals GROUP BY 1),
@@ -6849,11 +6742,11 @@ object Ml {
         |SELECT rr.s AS source, rr.v AS n_chars, rr.n_in_slice,
         |  rr.scum AS rank_in_slice, gh.gv AS normalized
         |FROM rr JOIN gh USING (r)
-        |ORDER BY source, n_chars""".stripMargin,
-    "q327_kmeans" -> kmeansOracle,
-    "q325_logistic_gd" -> logisticOracle,
-    "q356_data_map" -> dataMapOracle,
-    "q312_cochran_armitage" ->
+        |ORDER BY source, n_chars""".stripMargin),
+    "q327_kmeans" -> Query(q327Kmeans, kmeansOracle),
+    "q325_logistic_gd" -> Query(q325LogisticGd, logisticOracle),
+    "q356_data_map" -> Query(q356DataMap, dataMapOracle),
+    "q312_cochran_armitage" -> Query(q312CochranArmitage,
       """WITH per AS (
         |  SELECT CAST(substring(o_orderpriority, 1, 1) AS BIGINT) AS s,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -6875,10 +6768,10 @@ object Ml {
         |    * (CAST(a AS DOUBLE)
         |      - CAST(b AS DOUBLE) * CAST(b AS DOUBLE)
         |        / CAST(nn AS DOUBLE))) AS z
-        |FROM per CROSS JOIN tot ORDER BY score""".stripMargin,
+        |FROM per CROSS JOIN tot ORDER BY score""".stripMargin),
     // average-tie ranks via 2*RANK() + tie-count - 1 (the same integer
     // identity the engine derives from the per-(block, value) histogram)
-    "q306_friedman" ->
+    "q306_friedman" -> Query(q306Friedman,
       """WITH cell AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) // 7 AS b,
@@ -6912,8 +6805,8 @@ object Ml {
         |  - 3.0 * CAST(nn AS DOUBLE) * CAST(k + 1 AS DOUBLE) AS q,
         |  CAST(k - 1 AS BIGINT) AS dof
         |FROM byt CROSS JOIN agg CROSS JOIN kk
-        |ORDER BY 1""".stripMargin,
-    "q280_brown_forsythe" ->
+        |ORDER BY 1""".stripMargin),
+    "q280_brown_forsythe" -> Query(q280BrownForsythe,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -6954,11 +6847,11 @@ object Ml {
         |      / CAST(n AS DOUBLE)) / CAST(k - 1 AS DOUBLE))
         |    / ((CAST(sq AS DOUBLE) - CAST(tsum AS DOUBLE))
         |      / CAST(n - k AS DOUBLE)) AS f_bf
-        |FROM agg WHERE k > 1 AND n > k""".stripMargin,
+        |FROM agg WHERE k > 1 AND n > k""".stripMargin),
     // correlation-scale solve: same moment CTE as q275, then the
     // (1+lambda)-diagonal Cramer finish; 1+0.1 is composed from DOUBLE
     // literals exactly as the Spark side composes lit(1.0)+lit(0.1)
-    "q286_ridge_two" ->
+    "q286_ridge_two" -> Query(q286RidgeTwo,
       """WITH rows_q AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS a,
@@ -7016,8 +6909,8 @@ object Ml {
         |  (r1y - r2y * r12) / (CAST(1.0 AS DOUBLE) - r12 * r12) AS b1_ols,
         |  (r2y - r1y * r12) / (CAST(1.0 AS DOUBLE) - r12 * r12) AS b2_ols
         |FROM r CROSS JOIN lp
-        |WHERE CAST(1.0 AS DOUBLE) - r12 * r12 > 0 ORDER BY 1""".stripMargin,
-    "q287_durbin_watson" -> (residualsSql + ",\n" +
+        |WHERE CAST(1.0 AS DOUBLE) - r12 * r12 > 0 ORDER BY 1""".stripMargin),
+    "q287_durbin_watson" -> Query(q287DurbinWatson, (residualsSql + ",\n" +
       """eqd AS (
         |  SELECT g, x, CAST(e AS DECIMAL(38,0)) AS eq FROM res),
         |dif AS (
@@ -7029,8 +6922,8 @@ object Ml {
         |    / CAST(SUM(CAST(eq * eq AS DECIMAL(38,0))) AS DOUBLE) AS dw
         |FROM dif GROUP BY 1
         |HAVING SUM(CAST(eq * eq AS DECIMAL(38,0))) > 0
-        |ORDER BY 1""".stripMargin),
-    "q288_breusch_pagan" -> (residualsSql + ",\n" +
+        |ORDER BY 1""".stripMargin)),
+    "q288_breusch_pagan" -> Query(q288BreuschPagan, (residualsSql + ",\n" +
       """zt AS (
         |  SELECT g, x,
         |    CAST(CAST(e / 100.0 AS DECIMAL(38,0))
@@ -7061,8 +6954,8 @@ object Ml {
         |    / (CAST(vx AS DOUBLE) * CAST(vz AS DOUBLE)) AS r2_aux,
         |  CAST(n_days AS DOUBLE) * ((CAST(cov AS DOUBLE) * CAST(cov AS DOUBLE))
         |    / (CAST(vx AS DOUBLE) * CAST(vz AS DOUBLE))) AS bp_lm
-        |FROM cvz WHERE vx > 0 AND vz > 0 ORDER BY 1""".stripMargin),
-    "q289_jarque_bera" ->
+        |FROM cvz WHERE vx > 0 AND vz > 0 ORDER BY 1""".stripMargin)),
+    "q289_jarque_bera" -> Query(q289JarqueBera,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc
@@ -7113,8 +7006,8 @@ object Ml {
         |SELECT g AS o_orderpriority, n, skewness, kurtosis_ex,
         |  CAST(n AS DOUBLE) * (skewness * skewness / CAST(6.0 AS DOUBLE)
         |    + kurtosis_ex * kurtosis_ex / CAST(24.0 AS DOUBLE)) AS jb
-        |FROM sk ORDER BY 1""".stripMargin,
-    "q290_moods_median" ->
+        |FROM sk ORDER BY 1""".stripMargin),
+    "q290_moods_median" -> Query(q290MoodsMedian,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -7151,8 +7044,8 @@ object Ml {
         |  (CAST(above AS DOUBLE) - ea) * (CAST(above AS DOUBLE) - ea) / ea
         |    + (CAST(n - above AS DOUBLE) - eb)
         |      * (CAST(n - above AS DOUBLE) - eb) / eb AS chi2_g
-        |FROM ee ORDER BY 1""".stripMargin,
-    "q291_runs_test" ->
+        |FROM ee ORDER BY 1""".stripMargin),
+    "q291_runs_test" -> Query(q291RunsTest,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7201,8 +7094,8 @@ object Ml {
         |SELECT g AS l_returnflag, n1, n2, runs,
         |  CASE WHEN sig2 > 0 THEN (CAST(runs AS DOUBLE) - mu) / SQRT(sig2)
         |    ELSE CAST(0 AS DOUBLE) END AS z_runs
-        |FROM zf ORDER BY 1""".stripMargin,
-    "q292_tukey_hsd" ->
+        |FROM zf ORDER BY 1""".stripMargin),
+    "q292_tukey_hsd" -> Query(q292TukeyHsd,
       """WITH cls AS (
         |  SELECT o_orderpriority AS c, CAST(COUNT(*) AS BIGINT) AS nc,
         |    CAST(SUM(CAST(t AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sc,
@@ -7239,8 +7132,8 @@ object Ml {
         |    * (CAST(1.0 AS DOUBLE) / CAST(n_a AS DOUBLE)
         |      + CAST(1.0 AS DOUBLE) / CAST(n_b AS DOUBLE))) AS q_stat
         |FROM pa JOIN pb ON class_a < class_b CROSS JOIN ms2
-        |ORDER BY 1, 2""".stripMargin,
-    "q293_cliffs_delta" ->
+        |ORDER BY 1, 2""".stripMargin),
+    "q293_cliffs_delta" -> Query(q293CliffsDelta,
       """WITH base AS (
         |  SELECT o_orderstatus AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
@@ -7274,8 +7167,8 @@ object Ml {
         |    WHEN ABS(delta) < 0.33 THEN 'small'
         |    WHEN ABS(delta) < 0.474 THEN 'medium'
         |    ELSE 'large' END AS magnitude
-        |FROM dl ORDER BY 1""".stripMargin,
-    "q274_partial_corr" ->
+        |FROM dl ORDER BY 1""".stripMargin),
+    "q274_partial_corr" -> Query(q274PartialCorr,
       """WITH rows_q AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -7328,8 +7221,8 @@ object Ml {
         |  (rxy - rxz * ryz)
         |    / SQRT((1.0 - rxz * rxz) * (1.0 - ryz * ryz)) AS r_xy_z
         |FROM r WHERE rxz * rxz < 1.0 AND ryz * ryz < 1.0
-        |ORDER BY 1""".stripMargin,
-    "q275_ols_two" ->
+        |ORDER BY 1""".stripMargin),
+    "q275_ols_two" -> Query(q275OlsTwo,
       """WITH rows_q AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS a,
@@ -7386,8 +7279,8 @@ object Ml {
         |    AS intercept,
         |  (b1 * CAST(s1y AS DOUBLE) + b2 * CAST(s2y AS DOUBLE))
         |    / CAST(syy_c AS DOUBLE) AS r2
-        |FROM bb ORDER BY 1""".stripMargin,
-    "q284_kruskal_wallis" ->
+        |FROM bb ORDER BY 1""".stripMargin),
+    "q284_kruskal_wallis" -> Query(q284KruskalWallis,
       """WITH v AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
@@ -7425,8 +7318,8 @@ object Ml {
         |    / (1.0 - CAST(tie_sum AS DOUBLE)
         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
         |        - CAST(n AS DOUBLE))) AS h_adj
-        |FROM terms CROSS JOIN ties""".stripMargin,
-    "q272_decision_stump" ->
+        |FROM terms CROSS JOIN ties""".stripMargin),
+    "q272_decision_stump" -> Query(q272DecisionStump,
       """WITH pf AS (
         |  SELECT 'l_quantity' AS feature,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -7473,8 +7366,8 @@ object Ml {
         |SELECT feature, CAST(x AS DOUBLE) / 100.0 AS threshold,
         |  wg AS weighted_gini, nl AS n_left, nr AS n_right,
         |  pl AS pos_left, pr AS pos_right
-        |FROM k WHERE rk = 1 ORDER BY feature""".stripMargin,
-    "q279_randomization_test" ->
+        |FROM k WHERE rk = 1 ORDER BY feature""".stripMargin),
+    "q279_randomization_test" -> Query(q279RandomizationTest,
       """WITH base AS (
         |  SELECT l_returnflag AS g, l_discount >= 0.05 AS arm,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
@@ -7523,8 +7416,8 @@ object Ml {
         |  (CAST(SUM(CASE WHEN d_null >= d_obs THEN 1 ELSE 0 END)
         |      AS DOUBLE) + 1.0)
         |    / (CAST(COUNT(*) AS DOUBLE) + 1.0) AS p_value
-        |FROM nulls GROUP BY g ORDER BY 1""".stripMargin,
-    "q285_mcnemar" ->
+        |FROM nulls GROUP BY g ORDER BY 1""".stripMargin),
+    "q285_mcnemar" -> Query(q285Mcnemar,
       """WITH base AS (
         |  SELECT c_mktsegment AS f1, o_orderstatus AS f2,
         |    o_orderpriority AS c
@@ -7583,8 +7476,8 @@ object Ml {
         |      AS DOUBLE)) AS chi2_mcnemar
         |FROM j
         |HAVING SUM(CASE WHEN NOT a_ok AND b_ok THEN 1 ELSE 0 END)
-        |  + SUM(CASE WHEN a_ok AND NOT b_ok THEN 1 ELSE 0 END) > 0""".stripMargin,
-    "q268_log_rank" ->
+        |  + SUM(CASE WHEN a_ok AND NOT b_ok THEN 1 ELSE 0 END) > 0""".stripMargin),
+    "q268_log_rank" -> Query(q268LogRank,
       """WITH ev AS (
         |  SELECT user_id AS u, CAST(epoch_us(ts) AS BIGINT) AS us,
         |    user_id % 2 = 0 AS arm, event_type = 'purchase' AS isd
@@ -7639,8 +7532,8 @@ object Ml {
         |  CAST(n_rest AS BIGINT) AS n_rest,
         |  CAST(observed_a AS BIGINT) AS observed_a, expected_a, variance,
         |  (CAST(observed_a AS DOUBLE) - expected_a) / SQRT(variance) AS z
-        |FROM agg CROSS JOIN arms""".stripMargin,
-    "q267_kendall_tau" ->
+        |FROM agg CROSS JOIN arms""".stripMargin),
+    "q267_kendall_tau" -> Query(q267KendallTau,
       """WITH cells AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -7680,8 +7573,8 @@ object Ml {
         |  CAST(cc AS DOUBLE) AS concordant, CAST(dc AS DOUBLE) AS discordant,
         |  (CAST(cc AS DOUBLE) - CAST(dc AS DOUBLE)) * 2.0
         |    / SQRT(CAST(vx AS DOUBLE) * CAST(vy AS DOUBLE)) AS tau_b
-        |FROM f WHERE vx > 0 AND vy > 0 ORDER BY 1""".stripMargin,
-    "q269_wasserstein" ->
+        |FROM f WHERE vx > 0 AND vy > 0 ORDER BY 1""".stripMargin),
+    "q269_wasserstein" -> Query(q269Wasserstein,
       """WITH mid AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid
@@ -7716,8 +7609,8 @@ object Ml {
         |SELECT k AS event_type, CAST(MAX(na) AS BIGINT) AS n_a,
         |  CAST(MAX(nb) AS BIGINT) AS n_b,
         |  CAST(CAST(SUM(term) AS DECIMAL(38,15)) AS DOUBLE) AS w1
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q263_js_divergence" ->
+        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q263_js_divergence" -> Query(q263JsDivergence,
       """WITH cnt AS (
         |  SELECT event_type AS k, CAST(hour(ts) AS INT) AS h,
         |    COUNT(*) AS c
@@ -7748,8 +7641,8 @@ object Ml {
         |  CAST(CAST(SUM(term) AS DECIMAL(38,15)) AS DOUBLE) AS jsd_nats,
         |  CAST(CAST(SUM(term) AS DECIMAL(38,15)) AS DOUBLE) / LN(2.0)
         |    AS jsd_bits
-        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q260_welch_ttest" ->
+        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q260_welch_ttest" -> Query(q260WelchTTest,
       """WITH cells AS (
         |  SELECT l_returnflag AS g, l_discount >= 0.05 AS arm,
         |    COUNT(*) AS n,
@@ -7787,8 +7680,8 @@ object Ml {
         |    AS t_stat,
         |  (a1 + a2) * (a1 + a2) / (a1 * a1 / CAST(n1 - 1 AS DOUBLE)
         |    + a2 * a2 / CAST(n2 - 1 AS DOUBLE)) AS welch_df
-        |FROM f ORDER BY 1""".stripMargin,
-    "q261_avg_precision" ->
+        |FROM f ORDER BY 1""".stripMargin),
+    "q261_avg_precision" -> Query(q261AvgPrecision,
       """WITH j AS (
         |  SELECT c_mktsegment AS g, o_totalprice AS v, o_orderkey AS k,
         |    o_orderstatus = 'F' AS pos
@@ -7808,8 +7701,8 @@ object Ml {
         |  FROM r GROUP BY g)
         |SELECT g AS c_mktsegment, n, CAST(np AS BIGINT) AS n_pos,
         |  CAST(sp AS DOUBLE) / CAST(np AS DOUBLE) AS avg_precision
-        |FROM a WHERE np > 0 ORDER BY 1""".stripMargin,
-    "q262_cohens_kappa" ->
+        |FROM a WHERE np > 0 ORDER BY 1""".stripMargin),
+    "q262_cohens_kappa" -> Query(q262CohensKappa,
       """WITH base AS (
         |  SELECT c_mktsegment AS f1, o_orderstatus AS f2,
         |    o_orderpriority AS c
@@ -7864,8 +7757,8 @@ object Ml {
         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)))
         |    / (1.0 - CAST(pe_num AS DOUBLE)
         |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) AS kappa
-        |FROM agg""".stripMargin,
-    "q259_woe_iv" ->
+        |FROM agg""".stripMargin),
+    "q259_woe_iv" -> Query(q259WoeIv,
       """WITH cuts AS (
         |  SELECT [quantile_cont(o_totalprice, 0.1),
         |    quantile_cont(o_totalprice, 0.2), quantile_cont(o_totalprice, 0.3),
@@ -7911,8 +7804,8 @@ object Ml {
         |SELECT bin, CAST(np AS BIGINT) AS n_pos,
         |  CAST(nn AS BIGINT) AS n_neg, woe,
         |  CAST(SUM(iv_term) OVER () AS DOUBLE) AS iv
-        |FROM woe ORDER BY bin""".stripMargin,
-    "q257_rolling_ols" ->
+        |FROM woe ORDER BY bin""".stripMargin),
+    "q257_rolling_ols" -> Query(q257RollingOls,
       """WITH cells AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -7942,8 +7835,8 @@ object Ml {
         |    / CAST(nw * sxx - sx * sx AS DOUBLE) AS slope
         |FROM win
         |WHERE nw >= 3 AND nw * sxx - sx * sx > 0
-        |ORDER BY event_type, bucket""".stripMargin,
-    "q258_qini_curve" ->
+        |ORDER BY event_type, bucket""".stripMargin),
+    "q258_qini_curve" -> Query(q258QiniCurve,
       """WITH cuts AS (
         |  SELECT [quantile_cont(l_extendedprice, 0.1),
         |    quantile_cont(l_extendedprice, 0.2),
@@ -7997,8 +7890,8 @@ object Ml {
         |  - (CAST(tpt AS DOUBLE) - CAST(tpc AS DOUBLE)
         |    * CAST(tnt AS DOUBLE) / CAST(tnc AS DOUBLE))
         |    * (CAST(cnt AS DOUBLE) / CAST(tnt AS DOUBLE)) AS qini_gap
-        |FROM cum WHERE cnc > 0 ORDER BY bin DESC""".stripMargin,
-    "q255_covariate_balance" ->
+        |FROM cum WHERE cnc > 0 ORDER BY bin DESC""".stripMargin),
+    "q255_covariate_balance" -> Query(q255CovariateBalance,
       """WITH fan AS (
         |  SELECT l_discount >= 0.05 AS t,
         |    unnest(['l_extendedprice', 'l_quantity', 'l_tax']) AS cv,
@@ -8041,8 +7934,8 @@ object Ml {
         |  CASE WHEN v0 + v1 > 0
         |    THEN ABS((m1 - m0) / SQRT((v0 + v1) / 2.0)) <= 0.1
         |    ELSE TRUE END AS balanced
-        |FROM f ORDER BY covariate""".stripMargin,
-    "q256_price_elasticity" ->
+        |FROM f ORDER BY covariate""".stripMargin),
+    "q256_price_elasticity" -> Query(q256PriceElasticity,
       """WITH pp AS (
         |  SELECT l_returnflag AS g, l_partkey AS p, COUNT(*) AS n,
         |    CAST(SUM(CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -8083,8 +7976,8 @@ object Ml {
         |FROM m
         |WHERE CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
         |  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-        |ORDER BY l_returnflag""".stripMargin,
-    "q253_rake_keyphrases" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    "q253_rake_keyphrases" -> Query(q253RakeKeyphrases,
       """WITH d AS (
         |  SELECT doc_id AS doc,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
@@ -8126,8 +8019,8 @@ object Ml {
         |SELECT phrase, COUNT(*) AS n_occurrences,
         |  CAST(MIN(pscore) AS DOUBLE) AS score
         |FROM scored GROUP BY phrase
-        |ORDER BY score DESC, phrase LIMIT 20""".stripMargin,
-    "q254_source_overlap" ->
+        |ORDER BY score DESC, phrase LIMIT 20""".stripMargin),
+    "q254_source_overlap" -> Query(q254SourceOverlap,
       """WITH keyed AS (
         |  SELECT DISTINCT source AS src,
         |    array_to_string(list_sort(list_filter(
@@ -8145,8 +8038,8 @@ object Ml {
         |    AS jaccard
         |FROM co JOIN counts ca ON co.sa = ca.src
         |JOIN counts cb ON co.sb = cb.src
-        |ORDER BY source_a, source_b""".stripMargin,
-    "q251_power_analysis" ->
+        |ORDER BY source_a, source_b""".stripMargin),
+    "q251_power_analysis" -> Query(q251PowerAnalysis,
       """WITH q AS (
         |  SELECT o_orderkey % 2 AS v,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
@@ -8192,8 +8085,8 @@ object Ml {
         |        * (CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE)
         |          - CAST(sa AS DOUBLE) / CAST(na AS DOUBLE))))
         |      AS BIGINT) END AS n_for_observed
-        |FROM g, grid ORDER BY mde_rel_pct""".stripMargin,
-    "q252_qte" ->
+        |FROM g, grid ORDER BY mde_rel_pct""".stripMargin),
+    "q252_qte" -> Query(q252Qte,
       """WITH q AS (
         |  SELECT l_discount >= 0.05 AS t,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -8215,8 +8108,8 @@ object Ml {
         |  a.qv / 100.0 AS q_treated, b.qv / 100.0 AS q_control,
         |  (a.qv - b.qv) / 100.0 AS qte
         |FROM e a JOIN e b ON a.i = b.i AND a.t AND NOT b.t
-        |ORDER BY percentile""".stripMargin,
-    "q249_two_way_anova" ->
+        |ORDER BY percentile""".stripMargin),
+    "q249_two_way_anova" -> Query(q249TwoWayAnova,
       """WITH q AS (
         |  SELECT o_orderpriority AS a, c_mktsegment AS b,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS t
@@ -8276,8 +8169,8 @@ object Ml {
         |      * (CAST(kb AS DOUBLE) - 1.0)))
         |  / (((CAST(sqq AS DOUBLE) - CAST(tab AS DOUBLE)) / 1e4)
         |    / (CAST(nn AS DOUBLE) - CAST(kab AS DOUBLE))) END AS f_ab
-        |FROM j""".stripMargin,
-    "q250_cuped" ->
+        |FROM j""".stripMargin),
+    "q250_cuped" -> Query(q250Cuped,
       """WITH mid AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid FROM events),
@@ -8338,8 +8231,8 @@ object Ml {
         |    * (CAST(gn AS DOUBLE) * CAST(gsyy AS DOUBLE)
         |      - CAST(gsy AS DOUBLE) * CAST(gsy AS DOUBLE)))
         |    AS var_reduction
-        |FROM g ORDER BY variant""".stripMargin,
-    "q247_theil_sen" ->
+        |FROM g ORDER BY variant""".stripMargin),
+    "q247_theil_sen" -> Query(q247TheilSen,
       """WITH cells AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -8358,8 +8251,8 @@ object Ml {
         |  FROM pairs)
         |SELECT k AS event_type, np AS n_pairs, slope AS theil_sen_slope
         |FROM ranked WHERE rk = (np + 1) // 2
-        |ORDER BY event_type""".stripMargin,
-    "q248_item_knn" ->
+        |ORDER BY event_type""".stripMargin),
+    "q248_item_knn" -> Query(q248ItemKnn,
       """WITH bi AS (
         |  SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
         |  FROM lineitem),
@@ -8382,8 +8275,8 @@ object Ml {
         |SELECT ia AS l_partkey, CAST(rank AS BIGINT) AS rank,
         |  ib AS neighbor, co, cosine
         |FROM ranked WHERE rank <= 10
-        |ORDER BY l_partkey, rank""".stripMargin,
-    "q245_conformal_interval" ->
+        |ORDER BY l_partkey, rank""".stripMargin),
+    "q245_conformal_interval" -> Query(q245ConformalInterval,
       """WITH base AS (
         |  SELECT o_orderpriority AS cat, o_orderkey % 3 AS fold,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y,
@@ -8424,8 +8317,8 @@ object Ml {
         |    AS coverage
         |FROM train t JOIN qhat q ON t.cat = q.cat
         |JOIN test e ON t.cat = e.cat
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q246_hard_negatives" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    "q246_hard_negatives" -> Query(q246HardNegatives,
       """WITH probes AS (
         |  SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv,
         |    label AS plbl
@@ -8439,8 +8332,8 @@ object Ml {
         |  WHERE e.label <> p.plbl)
         |SELECT pid AS vec_id, CAST(rank AS BIGINT) AS rank, neg_id,
         |  neg_label
-        |FROM ranked WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin,
-    "q243_table_checksum" ->
+        |FROM ranked WHERE rank <= 5 ORDER BY vec_id, rank""".stripMargin),
+    "q243_table_checksum" -> Query(q243TableChecksum,
       """WITH rows_c AS (
         |  SELECT CAST(CAST(date_trunc('month', o_orderdate) AS DATE)
         |      AS VARCHAR) AS slice,
@@ -8493,8 +8386,8 @@ object Ml {
         |SELECT slice, COUNT(*) AS n_rows,
         |  CAST(CAST(SUM(CAST(h AS DECIMAL(38,0))) AS DECIMAL(38,0))
         |    AS DOUBLE) AS checksum
-        |FROM hashed GROUP BY slice ORDER BY slice""".stripMargin,
-    "q244_hist_intersection" ->
+        |FROM hashed GROUP BY slice ORDER BY slice""".stripMargin),
+    "q244_hist_intersection" -> Query(q244HistIntersection,
       """WITH span AS (
         |  SELECT MIN(value) AS mn, MAX(value) AS mx FROM events),
         |binned AS (
@@ -8509,8 +8402,8 @@ object Ml {
         |    CAST(b.c AS DOUBLE) / CAST(b.n AS DOUBLE))
         |    AS DECIMAL(38,12))) AS DOUBLE) AS hist_intersection
         |FROM withn a JOIN withn b ON a.bin = b.bin AND a.k < b.k
-        |GROUP BY a.k, b.k ORDER BY ka, kb""".stripMargin,
-    "q241_zipf_fit" ->
+        |GROUP BY a.k, b.k ORDER BY ka, kb""".stripMargin),
+    "q241_zipf_fit" -> Query(q241ZipfFit,
       """WITH toks AS (
         |  SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
         |    x -> x <> '')) AS term
@@ -8551,8 +8444,8 @@ object Ml {
         |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |  * (CAST(nf AS DOUBLE) * CAST(syy AS DOUBLE)
         |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS r2
-        |FROM m""".stripMargin,
-    "q242_term_burstiness" ->
+        |FROM m""".stripMargin),
+    "q242_term_burstiness" -> Query(q242TermBurstiness,
       """WITH toks AS (
         |  SELECT doc_id AS doc,
         |    unnest(list_filter(regexp_split_to_array(text, '\s+'),
@@ -8569,8 +8462,8 @@ object Ml {
         |    - (CAST(tf AS DOUBLE) / CAST(df AS DOUBLE))
         |      * (CAST(tf AS DOUBLE) / CAST(df AS DOUBLE)))
         |  / (CAST(tf AS DOUBLE) / CAST(df AS DOUBLE)) AS dispersion
-        |FROM m ORDER BY dispersion DESC, term LIMIT 20""".stripMargin,
-    "q240_calibration_ece" ->
+        |FROM m ORDER BY dispersion DESC, term LIMIT 20""".stripMargin),
+    "q240_calibration_ece" -> Query(q240CalibrationEce,
       """WITH base AS (
         |  SELECT c_mktsegment AS f1, o_orderstatus AS f2,
         |    o_orderpriority AS c
@@ -8626,8 +8519,8 @@ object Ml {
         |  CAST(n_correct AS DOUBLE) / CAST(n AS DOUBLE) AS accuracy,
         |  CAST(conf_sum AS DOUBLE) / CAST(n AS DOUBLE) AS mean_conf,
         |  CAST(SUM(term) OVER () AS DOUBLE) AS ece
-        |FROM terms ORDER BY bin""".stripMargin,
-    "q236_feature_hashing" ->
+        |FROM terms ORDER BY bin""".stripMargin),
+    "q236_feature_hashing" -> Query(q236FeatureHashing,
       """WITH toks AS (
         |  SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
         |    x -> x <> '')) AS term
@@ -8652,8 +8545,8 @@ object Ml {
         |  CAST(SUM(n) AS BIGINT) AS n_tokens,
         |  CAST(MAX(n) AS DOUBLE) / CAST(SUM(n) AS DOUBLE)
         |    AS dominant_share
-        |FROM tb GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q237_roc_auc" ->
+        |FROM tb GROUP BY bucket ORDER BY bucket""".stripMargin),
+    "q237_roc_auc" -> Query(q237RocAuc,
       """WITH j AS (
         |  SELECT c_mktsegment AS g, o_totalprice AS v,
         |    o_orderstatus = 'F' AS pos
@@ -8673,8 +8566,8 @@ object Ml {
         |  (CAST(rpx2 AS DOUBLE) / 2.0
         |    - CAST(np AS DOUBLE) * CAST(np + 1 AS DOUBLE) / 2.0)
         |  / (CAST(np AS DOUBLE) * CAST(nn AS DOUBLE)) AS auc
-        |FROM m WHERE np > 0 AND nn > 0 ORDER BY 1""".stripMargin,
-    "q238_classifier_report" ->
+        |FROM m WHERE np > 0 AND nn > 0 ORDER BY 1""".stripMargin),
+    "q238_classifier_report" -> Query(q238ClassifierReport,
       """WITH base AS (
         |  SELECT c_mktsegment AS f1, o_orderstatus AS f2,
         |    o_orderpriority AS c
@@ -8729,8 +8622,8 @@ object Ml {
         |        + CAST(tp AS DOUBLE) / CAST(support AS DOUBLE))
         |    ELSE 0.0 END AS f1
         |FROM ba LEFT JOIN bp ON ba.cls = bp.cls
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q239_loo_influence" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    "q239_loo_influence" -> Query(q239LooInfluence,
       """WITH g AS (
         |  SELECT c_mktsegment AS g, COUNT(*) AS n,
         |    CAST(SUM(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -8745,8 +8638,8 @@ object Ml {
         |  CAST(sn AS DOUBLE) / CAST(nn AS DOUBLE) / 100.0
         |    - CAST(sn - s AS DOUBLE) / CAST(nn - n AS DOUBLE) / 100.0
         |    AS influence
-        |FROM t WHERE nn > n ORDER BY 1""".stripMargin,
-    "q233_int8_quant" ->
+        |FROM t WHERE nn > n ORDER BY 1""".stripMargin),
+    "q233_int8_quant" -> Query(q233Int8Quant,
       """WITH el AS (
         |  SELECT vec_id AS id, label AS lbl, t.x AS x
         |  FROM embeddings, unnest(embedding) AS t(x)),
@@ -8779,8 +8672,8 @@ object Ml {
         |  CAST(CAST(SUM(mse) AS DECIMAL(38,18)) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS mean_mse,
         |  MAX(amax) AS max_abs_err
-        |FROM pm GROUP BY lbl ORDER BY label""".stripMargin,
-    "q234_seasonal_decompose" ->
+        |FROM pm GROUP BY lbl ORDER BY label""".stripMargin),
+    "q234_seasonal_decompose" -> Query(q234SeasonalDecompose,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -8821,8 +8714,8 @@ object Ml {
         |JOIN hod ON tr.k = hod.k AND tr.h = hod.h
         |JOIN grand ON tr.k = grand.k
         |WHERE tc_ = 25
-        |ORDER BY event_type, bucket""".stripMargin,
-    "q235_ndcg" ->
+        |ORDER BY event_type, bucket""".stripMargin),
+    "q235_ndcg" -> Query(q235Ndcg,
       """WITH probes AS (
         |  SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pv,
         |    label AS plbl
@@ -8858,8 +8751,8 @@ object Ml {
         |FROM dcg d
         |JOIN support s ON d.plbl = s.plbl
         |JOIN iterms it ON it.i = LEAST(10, s.n_lbl - 1)
-        |ORDER BY vec_id""".stripMargin,
-    "q230_naive_bayes" ->
+        |ORDER BY vec_id""".stripMargin),
+    "q230_naive_bayes" -> Query(q230NaiveBayes,
       """WITH base AS (
         |  SELECT c_mktsegment AS f1, o_orderstatus AS f2,
         |    o_orderpriority AS c
@@ -8895,8 +8788,8 @@ object Ml {
         |SELECT f1 AS c_mktsegment, f2 AS o_orderstatus, c AS predicted,
         |  score, n AS n_train
         |FROM scored WHERE rk = 1
-        |ORDER BY c_mktsegment, o_orderstatus""".stripMargin,
-    "q321_isotonic_calibration" ->
+        |ORDER BY c_mktsegment, o_orderstatus""".stripMargin),
+    "q321_isotonic_calibration" -> Query(q321IsotonicCalibration,
       """WITH base AS (
         |  SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
@@ -8923,8 +8816,8 @@ object Ml {
         |SELECT b.bin, b.n, b.pos,
         |  CAST(b.pos AS DOUBLE) / CAST(b.n AS DOUBLE) AS raw_rate,
         |  f.iso_rate
-        |FROM bins b JOIN fit f ON f.i = b.bin ORDER BY b.bin""".stripMargin,
-    "q318_wilcoxon_signed_rank" ->
+        |FROM bins b JOIN fit f ON f.i = b.bin ORDER BY b.bin""".stripMargin),
+    "q318_wilcoxon_signed_rank" -> Query(q318WilcoxonSignedRank,
       """WITH mm AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid FROM events),
@@ -8959,8 +8852,8 @@ object Ml {
         |  / sqrt(CAST(n AS DOUBLE) * CAST(n + 1 AS DOUBLE)
         |      * CAST(2 * n + 1 AS DOUBLE) / 24.0
         |    - CAST(tie3 AS DOUBLE) / 48.0) AS z
-        |FROM agg""".stripMargin,
-    "q316_ips_policy_value" ->
+        |FROM agg""".stripMargin),
+    "q316_ips_policy_value" -> Query(q316IpsPolicyValue,
       """WITH base AS (
         |  SELECT event_type AS x,
         |    ascii(substr(md5(CAST(event_id AS VARCHAR)), 1, 1)) AS a,
@@ -8993,8 +8886,8 @@ object Ml {
         |  CASE WHEN s_w > 0
         |    THEN CAST(s_ips AS DOUBLE) / CAST(s_w AS DOUBLE) / 100.0 END
         |    AS snips_value
-        |FROM cells ORDER BY event_type""".stripMargin,
-    "q317_diff_in_diff" ->
+        |FROM cells ORDER BY event_type""".stripMargin),
+    "q317_diff_in_diff" -> Query(q317DiffInDiff,
       """WITH mm AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid FROM events),
@@ -9038,8 +8931,8 @@ object Ml {
         |  FROM cells)
         |SELECT g AS event_type, n_t0, n_t1, n_c0, n_c1, did, se,
         |  did / se AS t_stat
-        |FROM calc ORDER BY event_type""".stripMargin,
-    "q231_stratified_ate" ->
+        |FROM calc ORDER BY event_type""".stripMargin),
+    "q231_stratified_ate" -> Query(q231StratifiedAte,
       """WITH arms AS (
         |  SELECT l_returnflag AS s, COUNT(*) AS n,
         |    SUM(CASE WHEN l_discount >= 0.05 THEN 1 ELSE 0 END) AS n1,
@@ -9068,8 +8961,8 @@ object Ml {
         |  CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) / 100.0
         |    - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE) / 100.0 AS diff,
         |  CAST(SUM(term) OVER () AS DOUBLE) AS ate
-        |FROM terms ORDER BY 1""".stripMargin,
-    "q232_gains_curve" ->
+        |FROM terms ORDER BY 1""".stripMargin),
+    "q232_gains_curve" -> Query(q232GainsCurve,
       """WITH cuts AS (
         |  SELECT [quantile_cont(o_totalprice, 0.1),
         |    quantile_cont(o_totalprice, 0.2), quantile_cont(o_totalprice, 0.3),
@@ -9106,8 +8999,8 @@ object Ml {
         |  CAST(cum_pos AS DOUBLE) / CAST(np AS DOUBLE) AS capture,
         |  (CAST(cum_pos AS DOUBLE) / CAST(np AS DOUBLE))
         |    / (CAST(cum_n AS DOUBLE) / CAST(nn AS DOUBLE)) AS lift
-        |FROM cum ORDER BY bin DESC""".stripMargin,
-    "q227_oov_rate" ->
+        |FROM cum ORDER BY bin DESC""".stripMargin),
+    "q227_oov_rate" -> Query(q227OovRate,
       """WITH toks AS (
         |  SELECT lang, doc_id,
         |    unnest(list_filter(regexp_split_to_array(text, '\s+'),
@@ -9125,8 +9018,8 @@ object Ml {
         |  CAST(SUM(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS oov_rate
         |FROM toks t LEFT JOIN vocab v ON t.term = v.term
-        |GROUP BY t.lang ORDER BY t.lang""".stripMargin,
-    "q228_ewma" ->
+        |GROUP BY t.lang ORDER BY t.lang""".stripMargin),
+    "q228_ewma" -> Query(q228Ewma,
       """WITH hourly AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -9148,8 +9041,8 @@ object Ml {
         |  CAST(SUM(l.m * l.w) AS DOUBLE) / CAST(SUM(l.w) AS DOUBLE)
         |    AS ewma
         |FROM lagged l JOIN m a ON l.k = a.k AND l.tb = a.b
-        |GROUP BY l.k, l.tb ORDER BY event_type, bucket""".stripMargin,
-    "q229_purged_cv" ->
+        |GROUP BY l.k, l.tb ORDER BY event_type, bucket""".stripMargin),
+    "q229_purged_cv" -> Query(q229PurgedCv,
       """WITH span AS (
         |  SELECT MIN(CAST(epoch_us(ts) AS BIGINT)) AS mn,
         |    MAX(CAST(epoch_us(ts) AS BIGINT)) AS mx,
@@ -9167,8 +9060,8 @@ object Ml {
         |    WHERE (r.us - r.mn) // r.width = f.fold) AS n_test,
         |  (SELECT COUNT(*) FROM rows_us r
         |    WHERE r.us < r.mn + f.fold * r.width - 3600000000) AS n_train
-        |FROM folds f, span s ORDER BY f.fold""".stripMargin,
-    "q224_mann_whitney" ->
+        |FROM folds f, span s ORDER BY f.fold""".stripMargin),
+    "q224_mann_whitney" -> Query(q224MannWhitney,
       """WITH mid AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid FROM events),
@@ -9207,8 +9100,8 @@ object Ml {
         |          / (CAST(n1 + n2 AS DOUBLE) * (n1 + n2 - 1))))
         |    ELSE 0.0 END AS z
         |FROM m WHERE n1 > 0 AND n2 > 0 AND n1 + n2 > 1
-        |ORDER BY event_type""".stripMargin,
-    "q225_anova_f" ->
+        |ORDER BY event_type""".stripMargin),
+    "q225_anova_f" -> Query(q225AnovaF,
       """WITH q AS (
         |  SELECT o_orderpriority AS c,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS t
@@ -9237,8 +9130,8 @@ object Ml {
         |      / CAST(n AS DOUBLE)) / CAST(k - 1 AS DOUBLE))
         |    / ((CAST(sq AS DOUBLE) - CAST(tsum AS DOUBLE))
         |      / CAST(n - k AS DOUBLE)) AS f
-        |FROM tot WHERE k > 1 AND n > k""".stripMargin,
-    "q226_bootstrap_ci" ->
+        |FROM tot WHERE k > 1 AND n > k""".stripMargin),
+    "q226_bootstrap_ci" -> Query(q226BootstrapCI,
       """WITH q AS (
         |  SELECT o_orderstatus AS g, o_orderkey AS k,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS t
@@ -9281,8 +9174,8 @@ object Ml {
         |  MIN(CASE WHEN rk = 31 THEN rmean END) AS ci_hi,
         |  MAX(nb) AS n_replicates
         |FROM reps WHERE rk = 2 OR rk = 31
-        |GROUP BY g ORDER BY g""".stripMargin,
-    "q221_target_encoding" ->
+        |GROUP BY g ORDER BY g""".stripMargin),
+    "q221_target_encoding" -> Query(q221TargetEncoding,
       """WITH cells AS (
         |  SELECT o_orderpriority AS cat, o_orderkey % 5 AS fold,
         |    COUNT(*) AS n_fold,
@@ -9297,8 +9190,8 @@ object Ml {
         |  CAST(s_all - s_fold AS DOUBLE) / CAST(n_all - n_fold AS DOUBLE)
         |    / 100.0 AS oof_mean
         |FROM tot WHERE n_all > n_fold
-        |ORDER BY o_orderpriority, fold""".stripMargin,
-    "q222_spearman_trend" ->
+        |ORDER BY o_orderpriority, fold""".stripMargin),
+    "q222_spearman_trend" -> Query(q222SpearmanTrend,
       """WITH ev AS (
         |  SELECT event_type AS g, CAST(epoch_us(ts) AS BIGINT) AS x,
         |    value AS y
@@ -9334,8 +9227,8 @@ object Ml {
         |    - CAST(sx AS DECIMAL(38,0)) * CAST(sx AS DECIMAL(38,0)) > 0
         |  AND CAST(n AS DECIMAL(38,0)) * syy
         |    - CAST(sy AS DECIMAL(38,0)) * CAST(sy AS DECIMAL(38,0)) > 0
-        |ORDER BY event_type""".stripMargin,
-    "q223_mutual_information" ->
+        |ORDER BY event_type""".stripMargin),
+    "q223_mutual_information" -> Query(q223MutualInformation,
       """WITH cells AS (
         |  SELECT o_orderpriority AS a, o_orderstatus AS b, COUNT(*) AS nab
         |  FROM orders GROUP BY 1, 2),
@@ -9365,8 +9258,8 @@ object Ml {
         |    THEN CAST(SUM(mi_t) AS DOUBLE)
         |      / SQRT(CAST(SUM(ha_t) AS DOUBLE) * CAST(SUM(hb_t) AS DOUBLE))
         |    ELSE 0.0 END AS nmi
-        |FROM t""".stripMargin,
-    "q364_msprt" ->
+        |FROM t""".stripMargin),
+    "q364_msprt" -> Query(q364Msprt,
       """WITH base AS (
         |  SELECT event_type AS g,
         |    CAST(datediff('day', DATE '1992-01-01', CAST(ts AS DATE))
@@ -9423,8 +9316,8 @@ object Ml {
         |SELECT g AS event_type, day, n0, n1, theta_c, v_c2, lr,
         |  LEAST(1.0, MIN(1.0 / lr) OVER (PARTITION BY g ORDER BY day
         |    ROWS UNBOUNDED PRECEDING)) AS p_always_valid
-        |FROM lrs ORDER BY 1, 2""".stripMargin,
-    "q383_cochran_q" ->
+        |FROM lrs ORDER BY 1, 2""".stripMargin),
+    "q383_cochran_q" -> Query(q383CochranQ,
       """WITH cells AS (
         |  SELECT DISTINCT o_custkey AS s, year(o_orderdate) AS t
         |  FROM orders),
@@ -9453,8 +9346,8 @@ object Ml {
         |      * CAST(ssq AS DOUBLE) / CAST(k * nn - r2 AS DOUBLE) END
         |    AS q_stat,
         |  CAST(k - 1 AS BIGINT) AS dof
-        |FROM num""".stripMargin,
-    "q384_kendalls_w" ->
+        |FROM num""".stripMargin),
+    "q384_kendalls_w" -> Query(q384KendallsW,
       """WITH cells AS (
         |  SELECT year(l_shipdate) AS j, p_brand AS it,
         |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -9482,8 +9375,8 @@ object Ml {
         |  12.0 * CAST(s AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
         |    * (CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * CAST(m AS DOUBLE)
         |      - CAST(m AS DOUBLE))) AS w
-        |FROM s""".stripMargin,
-    "q370_quantile_regression" ->
+        |FROM s""".stripMargin),
+    "q370_quantile_regression" -> Query(q370QuantileRegression,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -9518,8 +9411,8 @@ object Ml {
         |  FROM loss)
         |SELECT g AS l_returnflag, n AS n_days, b AS slope_c_per_day,
         |  a AS intercept_c, loss10
-        |FROM rk WHERE rk = 1 ORDER BY 1""".stripMargin,
-    "q369_huber" ->
+        |FROM rk WHERE rk = 1 ORDER BY 1""".stripMargin),
+    "q369_huber" -> Query(q369Huber,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -9657,5 +9550,5 @@ object Ml {
         |    - CAST(swx AS DOUBLE) * CAST(swy AS DOUBLE))
         |  / (CAST(swq AS DOUBLE) * CAST(swxx AS DOUBLE)
         |    - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b2
-        |FROM f1 f JOIN s2 ON s2.g = f.g ORDER BY 1""".stripMargin)
+        |FROM f1 f JOIN s2 ON s2.g = f.g ORDER BY 1""".stripMargin))
 }

@@ -691,21 +691,14 @@ object Multimodal {
       .select(col("n_clips"), (col("__t") === col("n_clips")).as("all_twins_found"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q60_media_features" -> (q60MediaFeatures _),
-    "q61_frame_sample" -> (q61FrameSample _),
-    "q101_resize_images" -> (q101ResizeImages _),
-    "q105_image_near_dup" -> (q105ImageNearDup _),
-    "q106_audio_near_dup" -> (q106AudioNearDup _))
-
   /** The decoded image dimensions and audio (rate, frames) are
     * SQL-expressible because the fixture PNGs/WAVs are generated FROM the
     * metadata formulas — the oracle recomputes the formulas, the engine
     * must recover the same numbers by actually parsing the containers.
     * Stub-path feature values are engine-specific; vector validity is the
     * SQL-checkable part. */
-  val oracles: Map[String, String] = Map(
-    "q60_media_features" ->
+  val declared: Map[String, Query] = Map(
+    "q60_media_features" -> Query(q60MediaFeatures,
       s"""SELECT doc_id AS media_id,
         |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS format,
         |  CASE WHEN doc_id % 3 = 0 THEN CAST(doc_id % 64 + 16 AS INT)
@@ -714,8 +707,8 @@ object Multimodal {
         |       WHEN doc_id % 3 = 1 THEN CAST(doc_id % 500 + 100 AS INT)
         |       ELSE -1 END AS decoded_height,
         |  CASE WHEN doc_id % 3 = 2 THEN LENGTH(text) > 0 ELSE TRUE END AS features_valid
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "q101_resize_images" ->
+        |FROM documents ORDER BY media_id""".stripMargin),
+    "q101_resize_images" -> Query(q101ResizeImages,
       s"""SELECT doc_id AS media_id,
         |  CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS format,
         |  CASE WHEN doc_id % 3 = 0 THEN 24
@@ -724,17 +717,17 @@ object Multimodal {
         |       WHEN doc_id % 3 = 1 THEN CAST(doc_id % 500 + 100 AS INT)
         |       ELSE -1 END AS decoded_height,
         |  CASE WHEN doc_id % 3 = 2 THEN LENGTH(text) > 0 ELSE TRUE END AS features_valid
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "q105_image_near_dup" ->
+        |FROM documents ORDER BY media_id""".stripMargin),
+    "q105_image_near_dup" -> Query(q105ImageNearDup,
       """SELECT COUNT(*) AS n_images, true AS recall_ok
-        |FROM documents WHERE doc_id % 3 = 0 AND doc_id < 750""".stripMargin,
-    "q106_audio_near_dup" ->
+        |FROM documents WHERE doc_id % 3 = 0 AND doc_id < 750""".stripMargin),
+    "q106_audio_near_dup" -> Query(q106AudioNearDup,
       """SELECT COUNT(*) AS n_clips, true AS all_twins_found
-        |FROM documents WHERE doc_id % 3 = 1 AND doc_id < 750""".stripMargin,
-    "q61_frame_sample" ->
+        |FROM documents WHERE doc_id % 3 = 1 AND doc_id < 750""".stripMargin),
+    "q61_frame_sample" -> Query(q61FrameSample,
       """SELECT doc_id AS media_id, CAST(frame_idx AS BIGINT) AS frame_idx,
         |  CAST(LENGTH(SUBSTRING(text, CAST(frame_idx % 8 + 1 AS INT), 32)) AS BIGINT) AS n_frame_bytes
         |FROM (SELECT doc_id, text, unnest(range(0, doc_id % 24 + 1, 6)) AS frame_idx
         |      FROM documents WHERE doc_id % 3 = 2)
-        |ORDER BY media_id, frame_idx""".stripMargin)
+        |ORDER BY media_id, frame_idx""".stripMargin))
 }

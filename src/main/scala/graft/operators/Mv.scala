@@ -153,39 +153,33 @@ object Mv {
       .orderBy("l_returnflag")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q147_mv_rewrite" -> (q147MvRewrite _),
-    "q153_join_elimination" -> (q153JoinElimination _),
-    "q160_rollup_mv" -> (q160RollupMv _),
-    "q162_approx_mv" -> (q162ApproxMv _))
-
-  val oracles: Map[String, String] = Map(
-    "q147_mv_rewrite" ->
+  val declared: Map[String, Query] = Map(
+    "q147_mv_rewrite" -> Query(q147MvRewrite,
       """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
         |    AS sum_price,
         |  MIN(l_discount) AS min_disc, MAX(l_tax) AS max_tax
         |FROM lineitem WHERE l_linestatus = 'F'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q153_join_elimination" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q153_join_elimination" -> Query(q153JoinElimination,
       """SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |    AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q160_rollup_mv" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    "q160_rollup_mv" -> Query(q160RollupMv,
       """SELECT l_returnflag, l_linestatus, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  MIN(l_discount) AS min_disc, MAX(l_tax) AS max_tax
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
         |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""
-        .stripMargin,
+        .stripMargin),
     // exact distinct per flag; the driver's envelope convention (q30)
-    "q162_approx_mv" ->
+    "q162_approx_mv" -> Query(q162ApproxMv,
       """SELECT l_returnflag,
         |  CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_exact,
         |  true AS est_ok
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin)
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin))
 }

@@ -478,46 +478,9 @@ object Relational {
         |GROUP BY k ORDER BY k""".stripMargin)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q299_recursive_cte" -> (q299RecursiveCte _),
-    "q300_lateral_topk" -> (q300LateralTopk _),
-    "q301_unpivot_measures" -> (q301UnpivotMeasures _),
-    "q29_date_string_fns" -> (q29DateStringFns _),
-    "q21_cube" -> (q21Cube _),
-    "q22_json_props" -> (q22JsonProps _),
-    "q24_range_join" -> (q24RangeJoin _),
-    "q25_percentiles" -> (q25Percentiles _),
-    "q26_grouping_sets" -> (q26GroupingSets _),
-    "q27_pivot" -> (q27Pivot _),
-    "q28_null_semantics" -> (q28NullSemantics _),
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_filter_project" -> (q02FilterProject _),
-    "q03_join_agg" -> (q03JoinAgg _),
-    "q04_semi_join" -> (q04SemiJoin _),
-    "q05_anti_join" -> (q05AntiJoin _),
-    "q06_revenue_agg" -> (q06RevenueAgg _),
-    "q07_outer_join" -> (q07OuterJoin _),
-    "q08_window_topn" -> (q08WindowTopN _),
-    "q09_window_running" -> (q09WindowRunning _),
-    "q10_topk" -> (q10TopK _),
-    "q11_distinct_agg" -> (q11DistinctAgg _),
-    "q12_intersect" -> (q12Intersect _),
-    "q13_except" -> (q13Except _),
-    "q14_rollup" -> (q14Rollup _),
-    "q15_scalar_fns" -> (q15ScalarFns _),
-    "q16_having" -> (q16Having _),
-    "q17_scalar_subquery" -> (q17ScalarSubquery _),
-    "q18_star_join" -> (q18StarJoin _),
-    "q19_case_buckets" -> (q19CaseBuckets _),
-    "q20_year_agg" -> (q20YearAgg _),
-    "q85_full_outer_join" -> (q85FullOuterJoin _),
-    "q86_multiset_ops" -> (q86MultisetOps _),
-    "q88_time_range_window" -> (q88TimeRangeWindow _),
-    "q114_window_battery" -> (q114WindowBattery _))
-
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // identical recursion in DuckDB (// = integral division)
-    "q299_recursive_cte" ->
+    "q299_recursive_cte" -> Query(q299RecursiveCte,
       """WITH RECURSIVE walk(pk, node, acc) AS (
         |  SELECT p_partkey, p_partkey,
         |    CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -530,8 +493,8 @@ object Relational {
         |  WHERE w.node >= 4)
         |SELECT pk AS p_partkey, CAST(COUNT(*) AS BIGINT) AS depth,
         |  CAST(MAX(acc) AS BIGINT) AS path_price_c
-        |FROM walk GROUP BY pk ORDER BY pk""".stripMargin,
-    "q300_lateral_topk" ->
+        |FROM walk GROUP BY pk ORDER BY pk""".stripMargin),
+    "q300_lateral_topk" -> Query(q300LateralTopk,
       """SELECT r.r_name, l.c_custkey, l.bal_c
         |FROM region r,
         |LATERAL (
@@ -541,8 +504,8 @@ object Relational {
         |  FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
         |  WHERE n.n_regionkey = r.r_regionkey
         |  ORDER BY bal_c DESC, c.c_custkey LIMIT 3) l
-        |ORDER BY r.r_name, l.bal_c DESC, l.c_custkey""".stripMargin,
-    "q301_unpivot_measures" ->
+        |ORDER BY r.r_name, l.bal_c DESC, l.c_custkey""".stripMargin),
+    "q301_unpivot_measures" -> Query(q301UnpivotMeasures,
       """SELECT k AS measure, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(CAST(v AS DECIMAL(18,2)) * 100 AS BIGINT))
         |    AS BIGINT) AS sum_c,
@@ -554,8 +517,8 @@ object Relational {
         |      FROM lineitem)
         |  UNPIVOT (v FOR k IN (l_quantity, l_extendedprice, l_discount,
         |    l_tax))
-        |GROUP BY k ORDER BY k""".stripMargin,
-    "q114_window_battery" ->
+        |GROUP BY k ORDER BY k""".stripMargin),
+    "q114_window_battery" -> Query(q114WindowBattery,
       """SELECT o_orderkey, o_orderpriority, o_totalprice,
         |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
         |  PERCENT_RANK() OVER w AS pct_rank,
@@ -571,8 +534,8 @@ object Relational {
         |              ORDER BY o_totalprice, o_orderkey
         |              ROWS BETWEEN UNBOUNDED PRECEDING
         |                       AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q29_date_string_fns" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    "q29_date_string_fns" -> Query(q29DateStringFns,
       """SELECT o_orderkey,
         |  date_diff('day', CAST(o_orderdate AS DATE), DATE '2000-01-01') AS days_to_y2k,
         |  CAST(CAST(o_orderdate AS DATE) + INTERVAL 30 DAY AS DATE) AS due_date,
@@ -580,120 +543,120 @@ object Relational {
         |  CAST(POSITION('-' IN o_orderpriority) AS BIGINT) AS pos_dash,
         |  TRIM('  ' || o_orderstatus || ' ') AS st,
         |  LPAD(CAST(o_orderkey AS VARCHAR), 8, '0') AS key_padded
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q26_grouping_sets" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    "q26_grouping_sets" -> Query(q26GroupingSets,
       """SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sum_qty,
         |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q27_pivot" ->
+        |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    "q27_pivot" -> Query(q27Pivot,
       """SELECT l_returnflag,
         |  COUNT(*) FILTER (l_linestatus = 'F') AS "F",
         |  COUNT(*) FILTER (l_linestatus = 'O') AS "O"
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q28_null_semantics" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q28_null_semantics" -> Query(q28NullSemantics,
       """SELECT CASE WHEN o_orderkey % 7 = 0 THEN o_orderpriority END AS maybe,
         |  COUNT(*) AS n_rows,
         |  COUNT(CASE WHEN o_orderkey % 7 = 0 THEN o_orderpriority END) AS n_nonnull,
         |  CAST(SUM(CASE WHEN (CASE WHEN o_orderkey % 7 = 0 THEN o_orderpriority END)
         |           IS NOT DISTINCT FROM NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nullsafe_eq_null
-        |FROM orders GROUP BY 1 ORDER BY maybe ASC NULLS FIRST""".stripMargin,
-    "q24_range_join" ->
+        |FROM orders GROUP BY 1 ORDER BY maybe ASC NULLS FIRST""".stripMargin),
+    "q24_range_join" -> Query(q24RangeJoin,
       """SELECT a.user_id, COUNT(*) AS n_close_pairs
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         |  AND b.ts >= a.ts - INTERVAL 5 MINUTE AND b.ts <= a.ts + INTERVAL 5 MINUTE
-        |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin,
-    "q25_percentiles" ->
+        |GROUP BY a.user_id ORDER BY a.user_id""".stripMargin),
+    "q25_percentiles" -> Query(q25Percentiles,
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.25) AS p25,
         |  quantile_cont(l_quantity, 0.5) AS p50,
         |  quantile_cont(l_quantity, 0.75) AS p75,
         |  quantile_cont(l_quantity, 0.99) AS p99
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q21_cube" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q21_cube" -> Query(q21Cube,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
         |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    "q22_json_props" ->
+        |ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin),
+    "q22_json_props" -> Query(q22JsonProps,
       """SELECT event_type, CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
         |  MAX(CAST(props->>'k' AS BIGINT)) AS max_k, COUNT(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q01_pricing_summary" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q01_pricing_summary" -> Query(q01PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  SUM(l_quantity) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
         |  COUNT(*) AS count_order
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q02_filter_project" -> Query(q02FilterProject,
       """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1999-01-01' AND l_quantity < 10
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_join_agg" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    "q03_join_agg" -> Query(q03JoinAgg,
       """SELECT l_orderkey, o_orderdate,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
         |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q04_semi_join" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    "q04_semi_join" -> Query(q04SemiJoin,
       """SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q05_anti_join" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    "q05_anti_join" -> Query(q05AntiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q06_revenue_agg" ->
+        |ORDER BY c_custkey""".stripMargin),
+    "q06_revenue_agg" -> Query(q06RevenueAgg,
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_shipdate < TIMESTAMP '2000-01-01'
-        |  AND l_quantity < 24""".stripMargin,
-    "q07_outer_join" ->
+        |  AND l_quantity < 24""".stripMargin),
+    "q07_outer_join" -> Query(q07OuterJoin,
       """SELECT c_custkey, COUNT(o_orderkey) AS n_orders,
         |  COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS total_spend
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "q08_window_topn" ->
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+    "q08_window_topn" -> Query(q08WindowTopN,
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t
-        |WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin,
-    "q09_window_running" ->
+        |WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin),
+    "q09_window_running" -> Query(q09WindowRunning,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |  SUM(l_quantity) OVER (PARTITION BY l_suppkey
         |    ORDER BY l_shipdate, l_orderkey, l_linenumber, l_quantity
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
-        |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "q10_topk" ->
+        |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin),
+    "q10_topk" -> Query(q10TopK,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin,
-    "q11_distinct_agg" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin),
+    "q11_distinct_agg" -> Query(q11DistinctAgg,
       """SELECT COUNT(DISTINCT l_partkey) AS n_parts,
         |  COUNT(DISTINCT l_suppkey) AS n_supps,
         |  COUNT(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem""".stripMargin,
-    "q12_intersect" ->
+        |FROM lineitem""".stripMargin),
+    "q12_intersect" -> Query(q12Intersect,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
         |INTERSECT
         |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
-        |ORDER BY custkey""".stripMargin,
-    "q13_except" ->
+        |ORDER BY custkey""".stripMargin),
+    "q13_except" -> Query(q13Except,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY custkey""".stripMargin,
-    "q85_full_outer_join" ->
+        |ORDER BY custkey""".stripMargin),
+    "q85_full_outer_join" -> Query(q85FullOuterJoin,
       """SELECT COALESCE(c.nk, s.nk) AS nationkey,
         |  COALESCE(c.n_customers, 0) AS n_customers,
         |  COALESCE(s.n_suppliers, 0) AS n_suppliers
@@ -701,8 +664,8 @@ object Relational {
         |FULL OUTER JOIN
         |     (SELECT s_nationkey AS nk, COUNT(*) AS n_suppliers FROM supplier GROUP BY 1) s
         |ON c.nk = s.nk
-        |ORDER BY nationkey""".stripMargin,
-    "q86_multiset_ops" ->
+        |ORDER BY nationkey""".stripMargin),
+    "q86_multiset_ops" -> Query(q86MultisetOps,
       """WITH f AS (SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'),
         |o AS (SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'),
         |ex AS (SELECT 'except_all' AS op, custkey, COUNT(*) AS n
@@ -714,36 +677,36 @@ object Relational {
         |SELECT op, custkey, CAST(n AS BIGINT) AS n FROM ex
         |UNION ALL
         |SELECT op, custkey, CAST(n AS BIGINT) AS n FROM ia
-        |ORDER BY op, custkey""".stripMargin,
-    "q88_time_range_window" ->
+        |ORDER BY op, custkey""".stripMargin),
+    "q88_time_range_window" -> Query(q88TimeRangeWindow,
       """SELECT event_id, user_id, epoch_ns(ts) // 1000 AS ts_us,
         |  COUNT(*) OVER w AS n_1h,
         |  CAST(CAST(SUM(value) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS value_1h
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts) // 1000
         |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q14_rollup" ->
+        |ORDER BY event_id""".stripMargin),
+    "q14_rollup" -> Query(q14Rollup,
       """SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sum_qty,
         |  COUNT(*) AS n_rows, CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q15_scalar_fns" ->
+        |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    "q15_scalar_fns" -> Query(q15ScalarFns,
       """SELECT o_orderkey, UPPER(o_orderpriority) AS pri_up,
         |  SUBSTRING(o_orderpriority, 1, 1) AS pri_code,
         |  CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS yr,
         |  CAST(EXTRACT(MONTH FROM o_orderdate) AS BIGINT) AS mth,
         |  CAST(LENGTH(o_orderstatus) AS BIGINT) AS status_len,
         |  CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2)) / 1000, 0) AS DOUBLE) AS kprice
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q16_having" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    "q16_having" -> Query(q16Having,
       """SELECT o_custkey, COUNT(*) AS n_orders FROM orders
-        |GROUP BY o_custkey HAVING COUNT(*) >= 15 ORDER BY o_custkey""".stripMargin,
-    "q17_scalar_subquery" ->
+        |GROUP BY o_custkey HAVING COUNT(*) >= 15 ORDER BY o_custkey""".stripMargin),
+    "q17_scalar_subquery" -> Query(q17ScalarSubquery,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice >= (SELECT MAX(o_totalprice) FROM orders) * 0.9
-        |ORDER BY o_orderkey""".stripMargin,
-    "q18_star_join" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    "q18_star_join" -> Query(q18StarJoin,
       """SELECT r_name, n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
@@ -752,17 +715,17 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q19_case_buckets" ->
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    "q19_case_buckets" -> Query(q19CaseBuckets,
       """SELECT CASE WHEN l_quantity < 10 THEN 'low'
         |            WHEN l_quantity < 30 THEN 'mid'
         |            ELSE 'high' END AS qty_bucket,
         |  COUNT(*) AS n_rows,
         |  CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_returned
-        |FROM lineitem GROUP BY 1 ORDER BY qty_bucket""".stripMargin,
-    "q20_year_agg" ->
+        |FROM lineitem GROUP BY 1 ORDER BY qty_bucket""".stripMargin),
+    "q20_year_agg" -> Query(q20YearAgg,
       """SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS yr, o_orderpriority,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  COUNT(*) AS n
-        |FROM orders GROUP BY 1, 2 ORDER BY yr, o_orderpriority""".stripMargin)
+        |FROM orders GROUP BY 1, 2 ORDER BY yr, o_orderpriority""".stripMargin))
 }

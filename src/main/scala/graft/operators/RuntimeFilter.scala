@@ -97,14 +97,11 @@ object RuntimeFilter {
       .orderBy("o_orderpriority")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q64_bloom_semi_join" -> (q64BloomSemiJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "q64_bloom_semi_join" ->
+  val declared: Map[String, Query] = Map(
+    "q64_bloom_semi_join" -> Query(q64BloomSemiJoin,
       """SELECT o_orderpriority, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM orders WHERE o_custkey IN (
         |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
 }

@@ -293,7 +293,6 @@ object Sampling {
   def designEffect(df: DataFrame, groupCol: String, weightCol: Column,
       valCol: Column): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val base = df.select(col(groupCol).as("g"),
       floor(weightCol).cast("long").as("w"),
       (valCol.cast("decimal(18,2)") * 100).cast("long").as("yc"))
@@ -338,8 +337,6 @@ object Sampling {
   def neymanAllocation(df: DataFrame, strataCol: String, valCol: String,
       budget: Long): DataFrame = {
     require(budget >= 1, s"budget must be >= 1: $budget")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(strataCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"))
     val m = per.groupBy("g").agg(count(lit(1)).as("n"),
@@ -387,17 +384,6 @@ object Sampling {
     neymanAllocation(Tables.orders(spark, dir), "o_orderpriority",
       "o_totalprice", budget = 1000L)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q423_neyman_allocation" -> (q423NeymanAllocation _),
-    "q368_design_effect" -> (q368DesignEffect _),
-    "q184_sample_estimate" -> (q184SampleEstimate _),
-    "q70_stratified_sample" -> (q70StratifiedSample _),
-    "q71_split_by_key" -> (q71SplitByKey _),
-    "q79_weighted_sample" -> (q79WeightedSample _),
-    "q84_fixed_size_sample" -> (q84FixedSizeSample _),
-    "q94_quota_sample" -> (q94QuotaSample _),
-    "q149_mixture_weights" -> (q149MixtureWeights _))
-
   /** CTE computing the uniform draw per document, reproduced from first
     * principles (same md5 derivation as the q46 simhash oracle). */
   private def uniformCte(seed: Long): String =
@@ -410,8 +396,8 @@ object Sampling {
        |                 FOR i IN range(1, 17) ]) >> 11))::DOUBLE / 9007199254740992.0 AS u
        |  FROM h)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q423_neyman_allocation" ->
+  val declared: Map[String, Query] = Map(
+    "q423_neyman_allocation" -> Query(q423NeymanAllocation,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -457,10 +443,10 @@ object Sampling {
         |  bp + CASE WHEN kp <= 1000 - sbp THEN 1 ELSE 0 END
         |    AS alloc_proportional
         |FROM rk
-        |ORDER BY 1""".stripMargin,
+        |ORDER BY 1""".stripMargin),
     // md5 membership from first principles, centi-exact sums, the same
     // scale-up division chain
-    "q184_sample_estimate" ->
+    "q184_sample_estimate" -> Query(q184SampleEstimate,
       """WITH h AS (
         |  SELECT l_returnflag,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -490,33 +476,33 @@ object Sampling {
         |  CAST(ss AS DOUBLE) / 100.0 / 0.1 AS sum_est,
         |  ABS(CAST(ss AS DOUBLE) / 100.0 / 0.1 - CAST(sx AS DOUBLE) / 100.0)
         |    / (CAST(sx AS DOUBLE) / 100.0) AS rel_err_sum
-        |FROM a ORDER BY l_returnflag""".stripMargin,
-    "q70_stratified_sample" ->
+        |FROM a ORDER BY l_returnflag""".stripMargin),
+    "q70_stratified_sample" -> Query(q70StratifiedSample,
       s"""${uniformCte(42L)}
          |SELECT doc_id, lang FROM d
          |WHERE u < CASE WHEN lang = 'en' THEN 0.5
          |              WHEN lang IN ('de','fr','es','ja') THEN 0.2
          |              ELSE 0.0 END
-         |ORDER BY doc_id""".stripMargin,
-    "q71_split_by_key" ->
+         |ORDER BY doc_id""".stripMargin),
+    "q71_split_by_key" -> Query(q71SplitByKey,
       s"""${uniformCte(42L)}
          |SELECT lang,
          |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'eval' ELSE 'test' END AS split,
          |  COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
-         |FROM d GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-    "q79_weighted_sample" ->
+         |FROM d GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
+    "q79_weighted_sample" -> Query(q79WeightedSample,
       s"""${uniformCte(42L)}
          |SELECT doc_id, n_chars FROM d
          |WHERE u < LEAST(1.0, n_chars / 2048.0)
-         |ORDER BY doc_id""".stripMargin,
-    "q84_fixed_size_sample" ->
+         |ORDER BY doc_id""".stripMargin),
+    "q84_fixed_size_sample" -> Query(q84FixedSizeSample,
       s"""${uniformCte(42L)}
          |SELECT lang, doc_id FROM (
          |  SELECT lang, doc_id,
          |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY u, doc_id) AS rn
          |  FROM d)
-         |WHERE rn <= 30 ORDER BY lang, doc_id""".stripMargin,
-    "q94_quota_sample" ->
+         |WHERE rn <= 30 ORDER BY lang, doc_id""".stripMargin),
+    "q94_quota_sample" -> Query(q94QuotaSample,
       s"""${uniformCte(42L)},
          |n AS (SELECT source, COUNT(*) AS cnt FROM documents GROUP BY source),
          |r AS (SELECT source,
@@ -527,11 +513,11 @@ object Sampling {
          |                WHEN 'src2' THEN 15.0 WHEN 'src3' THEN 5.0 END AS q
          |  FROM n))
          |SELECT d.doc_id, d.source FROM d JOIN r USING (source)
-         |WHERE d.u < r.rate ORDER BY d.doc_id""".stripMargin,
+         |WHERE d.u < r.rate ORDER BY d.doc_id""".stripMargin),
     // same expression shapes: exact long token sums, sqrt (correctly
     // rounded), DECIMAL(28,12) quantized terms, exact decimal denominator,
     // left-associated double arithmetic for weight/alloc/epochs
-    "q149_mixture_weights" ->
+    "q149_mixture_weights" -> Query(q149MixtureWeights,
       """WITH d AS (
         |  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |    CAST(SUM(len(list_filter(string_split_regex(text, '\s+'),
@@ -546,8 +532,8 @@ object Sampling {
         |  CAST(sd AS DOUBLE) / CAST(denom AS DOUBLE) * 10000000 AS alloc_tokens,
         |  CAST(sd AS DOUBLE) / CAST(denom AS DOUBLE) * 10000000 / n_tokens
         |    AS epochs
-        |FROM s CROSS JOIN t ORDER BY source, lang""".stripMargin,
-    "q368_design_effect" ->
+        |FROM s CROSS JOIN t ORDER BY source, lang""".stripMargin),
+    "q368_design_effect" -> Query(q368DesignEffect,
       """WITH base AS (
         |  SELECT l_returnflag AS g,
         |    CAST(FLOOR(l_quantity) AS BIGINT) AS w,
@@ -569,5 +555,5 @@ object Sampling {
         |    / (CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)) AS deff,
         |  CAST(swy AS DOUBLE) / CAST(sw AS DOUBLE) / 100.0
         |    AS weighted_mean
-        |FROM m WHERE sw > 0 ORDER BY 1""".stripMargin)
+        |FROM m WHERE sw > 0 ORDER BY 1""".stripMargin))
 }

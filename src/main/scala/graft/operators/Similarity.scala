@@ -944,7 +944,6 @@ object Similarity {
   private[graft] def pcaSolveMoments(moments: DataFrame, dim: Int,
       iters: Int): Pc1Model = {
     require(dim > 0 && iters >= 1, s"bad args: dim=$dim iters=$iters")
-    val dd = (c: Column) => c.cast("double")
     val merged = moments.groupBy("j", "k")
       .agg(sum(col("s")).cast("decimal(38,0)").as("s"))
       .localCheckpoint(true)
@@ -1308,7 +1307,6 @@ object Similarity {
     * one dim-keyed groupBy (64 rows) + a 1-row finish. */
   def embeddingDrift(df: DataFrame, vecCol: String,
       sideA: Column): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val d = df.select(sideA.as("a"), posexplode(col(vecCol)).as(Seq("i", "v")))
       .withColumn("q", col("v").cast("decimal(20,9)"))
     val perDim = d.groupBy("i").agg(
@@ -1361,7 +1359,6 @@ object Similarity {
       budgets: Seq[Int]): DataFrame = {
     require(budgets.nonEmpty && budgets.forall(_ >= 1),
       s"budgets must be positive: $budgets")
-    val dd = (c: Column) => c.cast("double")
     val e = df.select(col(idCol).as("id"),
         posexplode(col(vecCol)).as(Seq("i", "v")))
       .withColumn("q", col("v").cast("decimal(20,9)"))
@@ -1407,7 +1404,6 @@ object Similarity {
     * a dims-row reduction, a 1-row finish. The pre-flight check before
     * trusting any cosine ANN index (q50/q93/q98) on a new encoder. */
   def embeddingIsotropy(df: DataFrame, vecCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val d = df.select(posexplode(col(vecCol)).as(Seq("i", "v")))
       .withColumn("q", col("v").cast("decimal(20,9)"))
     val perDim = d.groupBy("i").agg(count(lit(1)).as("n"),
@@ -1568,7 +1564,6 @@ object Similarity {
     // to an O(n²) all-pairs product (ADVICE r10)
     require(probeMod >= 2 && k >= 1 && topHubs >= 1 && maxProbes >= 1,
       s"bad args: $probeMod $k $topHubs $maxProbes")
-    val dd = (c: Column) => c.cast("double")
     val base = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("v"))
     requireNanoGridSafe(base, "v", "hubnessAudit")
@@ -1625,7 +1620,6 @@ object Similarity {
       maxProbes: Long = 65536L): DataFrame = {
     require(probeMod >= 2 && tau2Nano > 0 && maxProbes >= 1,
       s"bad args: $probeMod $tau2Nano $maxProbes")
-    val dd = (c: Column) => c.cast("double")
     val base = df.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("v"))
     // an out-of-grid train vector would get a NULL pair distance and
@@ -1664,29 +1658,6 @@ object Similarity {
       dir: String): DataFrame =
     embeddingDecontamination(Tables.embeddings(spark, dir), "vec_id",
       "embedding", probeMod = 100L, tau2Nano = 1300000000000000000L)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q411_embedding_decontamination" -> (q411EmbeddingDecontamination _),
-    "q400_hubness_audit" -> (q400HubnessAudit _),
-    "q385_kcenter_coreset" -> (q385KCenterCoreset _),
-    "q380_embedding_isotropy" -> (q380EmbeddingIsotropy _),
-    "q314_embedding_drift" -> (q314EmbeddingDrift _),
-    "q332_matryoshka_audit" -> (q332MatryoshkaAudit _),
-    "q158_semdedup" -> (q158SemDedup _),
-    "q107_hybrid_rrf" -> (q107HybridRrf _),
-    "q98_ann_ivfpq" -> (q98AnnIvfPq _),
-    "q50_knn_brute" -> (q50KnnBrute _),
-    "q181_knn_classify" -> (q181KnnClassify _),
-    "q209_silhouette" -> (q209Silhouette _),
-    "q210_pca_power" -> (q210PcaPower _),
-    "q214_label_outliers" -> (q214LabelOutliers _),
-    "q216_pc1_scores" -> (q216Pc1Scores _),
-    "q219_incremental_pca" -> (q219IncrementalPca _),
-    "q51_ann_lsh" -> (q51AnnLsh _),
-    "q52_embedding_near_dup" -> (q52EmbeddingNearDup _),
-    "q53_ann_ivf" -> (q53AnnIvf _),
-    "q93_ann_pq" -> (q93AnnPq _),
-    "q96_pq_index_query" -> (q96PqIndexQuery _))
 
   /** The whole-corpus PC1 oracle (q210 and the q219 merge-law gate). */
   private def pcaPowerSql: String =
@@ -1755,8 +1726,8 @@ object Similarity {
        |v$i AS MATERIALIZED (
        |  SELECT j AS k, wd / (SELECT nrm FROM n$i) AS v FROM w$i)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q411_embedding_decontamination" ->
+  val declared: Map[String, Query] = Map(
+    "q411_embedding_decontamination" -> Query(q411EmbeddingDecontamination,
       """WITH qv AS MATERIALIZED (
         |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
         |    CAST(CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(10,9))
@@ -1784,8 +1755,8 @@ object Similarity {
         |SELECT n_eval, n_train, n_flagged,
         |  CAST(n_flagged AS DOUBLE) / CAST(n_train AS DOUBLE)
         |    AS flag_rate
-        |FROM sh, fl""".stripMargin,
-    "q400_hubness_audit" ->
+        |FROM sh, fl""".stripMargin),
+    "q400_hubness_audit" -> Query(q400HubnessAudit,
       """WITH qv AS MATERIALIZED (
         |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
         |    CAST(CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(10,9))
@@ -1810,7 +1781,7 @@ object Similarity {
         |  FROM rk WHERE rank <= 10 GROUP BY id)
         |SELECT id AS vec_id, n_lists,
         |  CAST(rank_sum AS DOUBLE) / CAST(n_lists AS DOUBLE) AS mean_rank
-        |FROM top ORDER BY n_lists DESC, vec_id LIMIT 20""".stripMargin,
+        |FROM top ORDER BY n_lists DESC, vec_id LIMIT 20""".stripMargin),
     // 1-based generate_subscripts vs 0-based posexplode: the dim id is
     // only a group key, so the offset is irrelevant to the result.
     // float -> DOUBLE -> DECIMAL: DuckDB's direct float->decimal cast
@@ -1821,7 +1792,7 @@ object Similarity {
     // sqrt(E_d / E_all); 1-based generate_subscripts i <= d mirrors the
     // 0-based posexplode i < d. Same DOUBLE-hop decimal quantization as
     // q314 (see that comment), per-vector energies exact decimal sums.
-    "q332_matryoshka_audit" ->
+    "q332_matryoshka_audit" -> Query(q332MatryoshkaAudit,
       """WITH e AS (
         |  SELECT vec_id AS id, generate_subscripts(embedding, 1) AS i,
         |    CAST(CAST(CAST(CAST(unnest(embedding) AS DOUBLE)
@@ -1847,8 +1818,8 @@ object Similarity {
         |  MIN(cos) AS min_cosine,
         |  CAST(CAST(SUM(CASE WHEN cos >= 0.9 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS share_ge_090
-        |FROM cs GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q314_embedding_drift" ->
+        |FROM cs GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q314_embedding_drift" -> Query(q314EmbeddingDrift,
       """WITH d AS (
         |  SELECT vec_id % 2 = 0 AS a,
         |    generate_subscripts(embedding, 1) AS i,
@@ -1884,10 +1855,10 @@ object Similarity {
         |    / (sqrt(CAST(qa AS DOUBLE)) * sqrt(CAST(qb AS DOUBLE)))
         |    AS centroid_cosine,
         |  sqrt(CAST(sh AS DOUBLE)) AS centroid_l2
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin),
     // own-label centroid distances on the silhouette ladder; the cutoff
     // is quantile_cont (== Spark's exact R-7 percentile, the q193 rule)
-    "q214_label_outliers" ->
+    "q214_label_outliers" -> Query(q214LabelOutliers,
       """WITH ex AS (
         |  SELECT e.vec_id AS id, e.label AS lbl, r.pos,
         |    CAST(e.embedding[r.pos] AS DOUBLE) AS x
@@ -1910,8 +1881,8 @@ object Similarity {
         |SELECT d.id AS vec_id, d.lbl AS label, d.dist, c.p_cut
         |FROM dist d JOIN cut c ON c.plbl = d.lbl
         |WHERE d.dist > c.p_cut
-        |ORDER BY 1""".stripMargin,
-    "q216_pc1_scores" ->
+        |ORDER BY 1""".stripMargin),
+    "q216_pc1_scores" -> Query(q216Pc1Scores,
       (pcaCoreSql + ",\n" +
         """proj AS (
         |  SELECT ex.id,
@@ -1920,14 +1891,14 @@ object Similarity {
         |      / 1e12 AS pc1_score
         |  FROM ex JOIN means m ON m.mp = ex.p JOIN v8 v ON v.k = ex.p
         |  GROUP BY 1)
-        |SELECT id AS vec_id, pc1_score FROM proj ORDER BY 1""".stripMargin),
-    "q210_pca_power" -> pcaPowerSql,
+        |SELECT id AS vec_id, pc1_score FROM proj ORDER BY 1""".stripMargin)),
+    "q210_pca_power" -> Query(q210PcaPower, pcaPowerSql),
     // merged batch moments must reproduce the ONE-SHOT fit exactly —
     // the oracle is the full recompute
-    "q219_incremental_pca" -> pcaPowerSql,
+    "q219_incremental_pca" -> Query(q219IncrementalPca, pcaPowerSql),
     // DuckDB lists are 1-based; positions only need to be internally
     // consistent on each side. Same quantization ladder as the Spark plan.
-    "q209_silhouette" ->
+    "q209_silhouette" -> Query(q209Silhouette,
       """WITH ex AS (
         |  SELECT e.vec_id AS id, e.label AS lbl, r.pos,
         |    CAST(e.embedding[r.pos] AS DOUBLE) AS x
@@ -1956,11 +1927,11 @@ object Similarity {
         |SELECT lbl AS label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
         |  CAST(CAST(SUM(CAST(s AS DECIMAL(38,12))) AS DECIMAL(38,12))
         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_silhouette
-        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM sil GROUP BY 1 ORDER BY 1""".stripMargin),
     // both component rankings rebuilt from first principles (the generated
     // BM25 twin + list_cosine_similarity), fused with the same reciprocal
     // formula and rounding — the fused top-10 is hash-exact
-    "q107_hybrid_rrf" ->
+    "q107_hybrid_rrf" -> Query(q107HybridRrf,
       s"""WITH sparse AS (
         |  SELECT id, rank FROM (
         |    SELECT doc_id AS id,
@@ -1984,8 +1955,8 @@ object Similarity {
         |  SELECT id, CAST(CAST(SUM(c) AS DECIMAL(18,6)) AS DOUBLE) AS rrf
         |  FROM contrib GROUP BY id),
         |top AS (SELECT id, rrf FROM fused ORDER BY rrf DESC, id LIMIT 10)
-        |SELECT id AS doc_id, rrf FROM top ORDER BY doc_id""".stripMargin,
-    "q181_knn_classify" ->
+        |SELECT id AS doc_id, rrf FROM top ORDER BY doc_id""".stripMargin),
+    "q181_knn_classify" -> Query(q181KnnClassify,
       """WITH probes AS (
         |  SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS qv
         |  FROM embeddings WHERE vec_id < 25),
@@ -2007,8 +1978,8 @@ object Similarity {
         |FROM votes
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY pid
         |  ORDER BY votes DESC, lbl) = 1
-        |ORDER BY vec_id""".stripMargin,
-    "q50_knn_brute" ->
+        |ORDER BY vec_id""".stripMargin),
+    "q50_knn_brute" -> Query(q50KnnBrute,
       """SELECT vec_id, rank FROM (
         |  SELECT e.vec_id,
         |    CAST(ROW_NUMBER() OVER (ORDER BY
@@ -2016,32 +1987,32 @@ object Similarity {
         |        (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)) DESC,
         |      e.vec_id) AS BIGINT) AS rank
         |  FROM embeddings e) t
-        |WHERE rank <= 10 ORDER BY rank""".stripMargin,
-    "q51_ann_lsh" ->
-      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok",
-    "q53_ann_ivf" ->
-      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok",
-    "q93_ann_pq" ->
-      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok",
-    "q96_pq_index_query" ->
-      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok",
-    "q98_ann_ivfpq" ->
-      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok",
-    "q52_embedding_near_dup" ->
+        |WHERE rank <= 10 ORDER BY rank""".stripMargin),
+    "q51_ann_lsh" -> Query(q51AnnLsh,
+      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok"),
+    "q53_ann_ivf" -> Query(q53AnnIvf,
+      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok"),
+    "q93_ann_pq" -> Query(q93AnnPq,
+      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok"),
+    "q96_pq_index_query" -> Query(q96PqIndexQuery,
+      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok"),
+    "q98_ann_ivfpq" -> Query(q98AnnIvfPq,
+      "SELECT CAST(5 AS BIGINT) AS n_results, true AS recall_ok"),
+    "q52_embedding_near_dup" -> Query(q52EmbeddingNearDup,
       """SELECT COUNT(*) AS n_exact_pairs, true AS recall_ok
         |FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
         |WHERE x.vec_id < 500 AND y.vec_id < 500
         |  AND list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-        |  CAST(y.embedding AS DOUBLE[])) >= 0.4""".stripMargin,
+        |  CAST(y.embedding AS DOUBLE[])) >= 0.4""".stripMargin),
     // same exact probe-bounded ground truth as q52; the engine side must
     // re-find >= 50% of these pairs through its cluster-bucketed pipeline
-    "q158_semdedup" ->
+    "q158_semdedup" -> Query(q158SemDedup,
       """SELECT COUNT(*) AS n_exact_pairs, true AS recall_ok
         |FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id
         |WHERE x.vec_id < 500 AND y.vec_id < 500
         |  AND list_cosine_similarity(CAST(x.embedding AS DOUBLE[]),
-        |  CAST(y.embedding AS DOUBLE[])) >= 0.4""".stripMargin,
-    "q380_embedding_isotropy" ->
+        |  CAST(y.embedding AS DOUBLE[])) >= 0.4""".stripMargin),
+    "q380_embedding_isotropy" -> Query(q380EmbeddingIsotropy,
       """WITH d AS (
         |  SELECT generate_subscripts(embedding, 1) AS i,
         |    CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(20,9)) AS q
@@ -2074,8 +2045,8 @@ object Similarity {
         |  CAST(mmx AS DOUBLE) / CAST(ee AS DOUBLE) AS mean_share,
         |  CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(sv2 AS DOUBLE)
         |    AS participation_dims
-        |FROM agg""".stripMargin,
-    "q385_kcenter_coreset" -> (
+        |FROM agg""".stripMargin),
+    "q385_kcenter_coreset" -> Query(q385KCenterCoreset, (
       """WITH qv AS MATERIALIZED (
         |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
         |    CAST(CAST(CAST(unnest(embedding) AS DOUBLE) AS DECIMAL(10,9))
@@ -2095,7 +2066,7 @@ object Similarity {
       (2 to 8).map(r =>
         s"UNION ALL SELECT CAST($r AS BIGINT), vec_id, rad FROM c$r\n")
         .mkString +
-      "ORDER BY round"))
+      "ORDER BY round")))
 
   /** One unrolled k-center round for the q385 oracle: pick the argmax
     * of the previous min-distance table (exact-decimal compare, id

@@ -1107,38 +1107,6 @@ object SketchQueries {
       .orderBy("event_type", "prob")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q421_dd_store_merge" -> (q421DdStoreMerge _),
-    "q420_dd_quantiles" -> (q420DdQuantiles _),
-    "q161_sketch_mv" -> (q161SketchMv _),
-    "q36_windowed_approx_users" -> (q36WindowedApproxUsers _),
-    "q117_sliding_sketch_window" -> (q117SlidingSketchWindow _),
-    "q298_rowframe_sketch_window" -> (q298RowRangeSketchWindow _),
-    "q315_trailing_distinct_window" -> (q315TrailingDistinctWindow _),
-    "q118_sliding_quantile_window" -> (q118SlidingQuantileWindow _),
-    "q119_rolling_new_users" -> (q119RollingNewUsers _),
-    "q120_sliding_topk" -> (q120SlidingTopK _),
-    "q127_sliding_cm_freq" -> (q127SlidingCmFreq _),
-    "q134_join_size_estimate" -> (q134JoinSizeEstimate _),
-    "q37_sessions" -> (q37Sessions _),
-    "q38_running_approx_users" -> (q38RunningApproxUsers _),
-    "q30_approx_distinct_global" -> (q30ApproxGlobal _),
-    "q31_approx_distinct_grouped" -> (q31ApproxGrouped _),
-    "q32_approx_distinct_lc_users" -> (q32ApproxLcUsers _),
-    "q33_sketch_reagg" -> (q33SketchReagg _),
-    "q34_sketch_union" -> (q34SketchUnion _),
-    "q35_sketch_intersection" -> (q35SketchIntersection _),
-    "q72_theta_set_ops" -> (q72ThetaSetOps _),
-    "q77_theta_user_overlap" -> (q77ThetaUserOverlap _),
-    "q78_cm_frequencies" -> (q78CmFrequencies _),
-    "q62_heavy_hitters" -> (q62HeavyHitters _),
-    "q63_topk_store_merge" -> (q63TopkStoreMerge _),
-    "q65_approx_quantiles" -> (q65ApproxQuantiles _),
-    "q66_kll_store_merge" -> (q66KllStoreMerge _),
-    "q67_windowed_topk" -> (q67WindowedTopK _),
-    "q68_interval_join" -> (q68IntervalJoin _),
-    "q69_weighted_topk" -> (q69WeightedTopK _))
-
   // the full DDSketch reproduced in SQL: same double γ, same ceil-of-
   // log bucket index, same cumulative walk, same 2γ^i/(γ+1) estimate;
   // the zero bucket rides as LONG_MIN so the histogram sort puts it
@@ -1185,12 +1153,12 @@ object SketchQueries {
         |ORDER BY 1, 2""".stripMargin
 
   /** Oracles are exact counts; the driver applies the approx envelope. */
-  val oracles: Map[String, String] = Map(
-    "q420_dd_quantiles" -> ddQuantilesOracleSql,
-    "q421_dd_store_merge" -> ddQuantilesOracleSql,
+  val declared: Map[String, Query] = Map(
+    "q420_dd_quantiles" -> Query(q420DdQuantiles, ddQuantilesOracleSql),
+    "q421_dd_store_merge" -> Query(q421DdStoreMerge, ddQuantilesOracleSql),
     // per-instant trailing RANGE frame as a range self-join over distinct
     // (key, instant) rows — the row-anchored twin of the q117 oracle
-    "q315_trailing_distinct_window" ->
+    "q315_trailing_distinct_window" -> Query(q315TrailingDistinctWindow,
       """WITH e AS (
         |  SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS us, event_type
         |  FROM events),
@@ -1199,8 +1167,8 @@ object SketchQueries {
         |  CAST(COUNT(DISTINCT e.event_type) AS BIGINT) AS n_types
         |FROM inst i JOIN e ON e.user_id = i.user_id
         |  AND e.us BETWEEN i.us - 86400000000 AND i.us
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q298_rowframe_sketch_window" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q298_rowframe_sketch_window" -> Query(q298RowRangeSketchWindow,
       """WITH e AS (
         |  SELECT event_type, CAST(epoch_us(ts) AS BIGINT) AS us, user_id
         |  FROM events),
@@ -1210,8 +1178,8 @@ object SketchQueries {
         |  true AS est_ok
         |FROM inst i JOIN e ON e.event_type = i.event_type
         |  AND e.us BETWEEN i.us - 21600000000 AND i.us
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q161_sketch_mv" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q161_sketch_mv" -> Query(q161SketchMv,
       """WITH delta AS (
         |  SELECT o_orderstatus, o_custkey + 1000000 AS c
         |  FROM orders WHERE o_orderkey % 10 = 3),
@@ -1220,14 +1188,14 @@ object SketchQueries {
         |  UNION ALL SELECT * FROM delta)
         |SELECT o_orderstatus, CAST(COUNT(DISTINCT c) AS BIGINT) AS n_exact,
         |  true AS est_ok
-        |FROM all_rows GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q36_windowed_approx_users" ->
+        |FROM all_rows GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q36_windowed_approx_users" -> Query(q36WindowedApproxUsers,
       """SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS window_epoch,
         |  event_type, COUNT(DISTINCT user_id) AS n_users, true AS est_ok
-        |FROM events GROUP BY 1, 2 ORDER BY window_epoch, event_type""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY window_epoch, event_type""".stripMargin),
     // trailing-frame distinct as a range self-join over occupied grid
     // instants — the window-frame twin of the two-phase bucket rewrite
-    "q117_sliding_sketch_window" ->
+    "q117_sliding_sketch_window" -> Query(q117SlidingSketchWindow,
       """WITH b AS (
         |  SELECT event_type, user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS bucket
@@ -1240,11 +1208,11 @@ object SketchQueries {
         |    AND e.bucket BETWEEN o.bucket - 5 AND o.bucket
         |  GROUP BY 1, 2)
         |SELECT frame * 3600 AS frame_epoch, event_type, n_users, true AS est_ok
-        |FROM ex ORDER BY frame_epoch, event_type""".stripMargin,
+        |FROM ex ORDER BY frame_epoch, event_type""".stripMargin),
     // exact new-member counts per (occupied frame with occupied
     // predecessor): trailing-window membership minus the previous
     // instant's membership, by NOT EXISTS
-    "q119_rolling_new_users" ->
+    "q119_rolling_new_users" -> Query(q119RollingNewUsers,
       """WITH b AS (
         |  SELECT event_type, user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS bucket
@@ -1265,11 +1233,11 @@ object SketchQueries {
         |FROM nw n WHERE EXISTS (
         |  SELECT 1 FROM occ o WHERE o.event_type = n.event_type
         |    AND o.bucket + 1 = n.frame)
-        |ORDER BY frame_epoch, event_type""".stripMargin,
+        |ORDER BY frame_epoch, event_type""".stripMargin),
     // exact trailing top-3 per occupied instant with the library's
     // (count desc, user asc) tie-break — strict because the summaries
     // stay in the eviction-free exact regime at test SFs
-    "q120_sliding_topk" ->
+    "q120_sliding_topk" -> Query(q120SlidingTopK,
       """WITH b AS (
         |  SELECT event_type, CAST(user_id AS VARCHAR) AS user_id,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS bucket
@@ -1286,10 +1254,10 @@ object SketchQueries {
         |    ORDER BY n_events DESC, user_id) AS BIGINT) AS rnk,
         |  user_id, n_events
         |FROM cnt QUALIFY rnk <= 3
-        |ORDER BY frame_epoch, event_type, rnk""".stripMargin,
+        |ORDER BY frame_epoch, event_type, rnk""".stripMargin),
     // exact join size + exact second moments; the AGMS bound boolean is
     // computed by the sketch side
-    "q134_join_size_estimate" ->
+    "q134_join_size_estimate" -> Query(q134JoinSizeEstimate,
       """SELECT
         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM orders o
         |     JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS n_join,
@@ -1297,10 +1265,10 @@ object SketchQueries {
         |     SELECT COUNT(*) AS c FROM orders GROUP BY o_orderkey)) AS f2a,
         |  (SELECT CAST(SUM(c * c) AS BIGINT) FROM (
         |     SELECT COUNT(*) AS c FROM lineitem GROUP BY l_orderkey)) AS f2b,
-        |  true AS est_ok""".stripMargin,
+        |  true AS est_ok""".stripMargin),
     // exact trailing probe-user counts per occupied frame; the CM
     // guarantee booleans are computed by the sketch side
-    "q127_sliding_cm_freq" ->
+    "q127_sliding_cm_freq" -> Query(q127SlidingCmFreq,
       """WITH b AS (
         |  SELECT event_type, CAST(user_id AS VARCHAR) AS user_s,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS bucket
@@ -1314,10 +1282,10 @@ object SketchQueries {
         |    AND e.bucket BETWEEN o.bucket - 5 AND o.bucket
         |  GROUP BY 1, 2)
         |SELECT frame * 3600 AS frame_epoch, event_type, n_probe, true AS est_ok
-        |FROM ex ORDER BY frame_epoch, event_type""".stripMargin,
+        |FROM ex ORDER BY frame_epoch, event_type""".stripMargin),
     // exact trailing row counts per occupied instant x requested prob;
     // the rank booleans are true when the KLL estimates hold their bound
-    "q118_sliding_quantile_window" ->
+    "q118_sliding_quantile_window" -> Query(q118SlidingQuantileWindow,
       """WITH b AS (
         |  SELECT event_type, value,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS bucket
@@ -1332,8 +1300,8 @@ object SketchQueries {
         |  p.prob, n, true AS rank_ok
         |FROM ex CROSS JOIN (
         |  SELECT unnest([CAST(0.5 AS DOUBLE), CAST(0.95 AS DOUBLE)]) AS prob) p
-        |ORDER BY frame_epoch, event_type, prob""".stripMargin,
-    "q37_sessions" ->
+        |ORDER BY frame_epoch, event_type, prob""".stripMargin),
+    "q37_sessions" -> Query(q37Sessions,
       """WITH flagged AS (
         |  SELECT user_id, ts, value,
         |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -1347,20 +1315,20 @@ object SketchQueries {
         |  COUNT(*) AS n_events,
         |  CAST(CAST(SUM(value) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
         |FROM sess GROUP BY user_id, sid
-        |ORDER BY user_id, session_epoch""".stripMargin,
-    "q38_running_approx_users" ->
+        |ORDER BY user_id, session_epoch""".stripMargin),
+    "q38_running_approx_users" -> Query(q38RunningApproxUsers,
       """SELECT event_type, COUNT(DISTINCT user_id) AS n_users, true AS est_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q30_approx_distinct_global" ->
-      "SELECT COUNT(DISTINCT l_orderkey) AS n_orders, true AS est_ok FROM lineitem",
-    "q31_approx_distinct_grouped" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q30_approx_distinct_global" -> Query(q30ApproxGlobal,
+      "SELECT COUNT(DISTINCT l_orderkey) AS n_orders, true AS est_ok FROM lineitem"),
+    "q31_approx_distinct_grouped" -> Query(q31ApproxGrouped,
       """SELECT l_returnflag, COUNT(DISTINCT l_orderkey) AS n_orders, true AS est_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q32_approx_distinct_lc_users" ->
-      "SELECT COUNT(DISTINCT user_id) AS n_users FROM events",
-    "q33_sketch_reagg" ->
-      "SELECT COUNT(DISTINCT l_orderkey) AS n_orders, true AS est_ok FROM lineitem",
-    "q34_sketch_union" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    "q32_approx_distinct_lc_users" -> Query(q32ApproxLcUsers,
+      "SELECT COUNT(DISTINCT user_id) AS n_users FROM events"),
+    "q33_sketch_reagg" -> Query(q33SketchReagg,
+      "SELECT COUNT(DISTINCT l_orderkey) AS n_orders, true AS est_ok FROM lineitem"),
+    "q34_sketch_union" -> Query(q34SketchUnion,
       """SELECT
         |  (SELECT COUNT(DISTINCT o_orderkey) FROM orders
         |   WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1999-01-01') AS n_early,
@@ -1368,18 +1336,18 @@ object SketchQueries {
         |   WHERE o_orderdate >= TIMESTAMP '1998-01-01' AND o_orderdate < TIMESTAMP '2000-01-01') AS n_late,
         |  (SELECT COUNT(DISTINCT o_orderkey) FROM orders
         |   WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '2000-01-01') AS n_union,
-        |  true AS early_ok, true AS late_ok, true AS union_ok""".stripMargin,
-    "q35_sketch_intersection" ->
+        |  true AS early_ok, true AS late_ok, true AS union_ok""".stripMargin),
+    "q35_sketch_intersection" -> Query(q35SketchIntersection,
       """SELECT COUNT(DISTINCT o_orderkey) AS n_intersect, true AS est_ok
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1998-01-01'
-        |  AND o_orderdate < TIMESTAMP '1999-01-01'""".stripMargin,
+        |  AND o_orderdate < TIMESTAMP '1999-01-01'""".stripMargin),
     // each order has exactly one date, so slice-set intersection = orders in
     // the overlap year and A \ B = orders in the early-only year
-    "q78_cm_frequencies" ->
+    "q78_cm_frequencies" -> Query(q78CmFrequencies,
       """SELECT event_type, COUNT(*) AS n_events, true AS est_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q77_theta_user_overlap" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q77_theta_user_overlap" -> Query(q77ThetaUserOverlap,
       """WITH d1 AS (SELECT DISTINCT user_id FROM events
         |  WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-02'),
         |d2 AS (SELECT DISTINCT user_id FROM events
@@ -1387,8 +1355,8 @@ object SketchQueries {
         |SELECT
         |  (SELECT COUNT(*) FROM d1 WHERE user_id IN (SELECT user_id FROM d2)) AS n_both,
         |  (SELECT COUNT(*) FROM (SELECT user_id FROM d1 UNION SELECT user_id FROM d2)) AS n_either,
-        |  true AS jaccard_ok""".stripMargin,
-    "q72_theta_set_ops" ->
+        |  true AS jaccard_ok""".stripMargin),
+    "q72_theta_set_ops" -> Query(q72ThetaSetOps,
       """SELECT
         |  (SELECT COUNT(DISTINCT o_orderkey) FROM orders
         |   WHERE o_orderdate >= TIMESTAMP '1998-01-01'
@@ -1396,46 +1364,46 @@ object SketchQueries {
         |  (SELECT COUNT(DISTINCT o_orderkey) FROM orders
         |   WHERE o_orderdate >= TIMESTAMP '1997-01-01'
         |     AND o_orderdate < TIMESTAMP '1998-01-01') AS n_diff,
-        |  true AS est_ok, true AS diff_ok""".stripMargin,
+        |  true AS est_ok, true AS diff_ok""".stripMargin),
     // exact because capacity > domain (see q62 scaladoc): plain GROUP BY twin
-    "q62_heavy_hitters" ->
+    "q62_heavy_hitters" -> Query(q62HeavyHitters,
       """SELECT event_type, COUNT(*) AS n_events FROM events
-        |GROUP BY event_type ORDER BY n_events DESC, event_type LIMIT 5""".stripMargin,
+        |GROUP BY event_type ORDER BY n_events DESC, event_type LIMIT 5""".stripMargin),
     // exact token counts; ties at the top-10 boundary are broken (count DESC,
     // token ASC) identically on both sides
-    "q63_topk_store_merge" ->
+    "q63_topk_store_merge" -> Query(q63TopkStoreMerge,
       """WITH toks AS (
         |  SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS token
         |  FROM documents WHERE text IS NOT NULL)
         |SELECT token, COUNT(*) AS n_occurrences FROM toks GROUP BY token
-        |ORDER BY n_occurrences DESC, token LIMIT 10""".stripMargin,
-    "q65_approx_quantiles" ->
+        |ORDER BY n_occurrences DESC, token LIMIT 10""".stripMargin),
+    "q65_approx_quantiles" -> Query(q65ApproxQuantiles,
       """SELECT l_returnflag, CAST(prob AS DOUBLE) AS prob, n, true AS rank_ok
         |FROM (SELECT l_returnflag, COUNT(*) AS n FROM lineitem GROUP BY l_returnflag) t
         |CROSS JOIN (VALUES (0.25), (0.5), (0.95)) p(prob)
-        |ORDER BY l_returnflag, prob""".stripMargin,
-    "q66_kll_store_merge" ->
-      "SELECT COUNT(*) AS n, true AS rank_ok FROM lineitem",
+        |ORDER BY l_returnflag, prob""".stripMargin),
+    "q66_kll_store_merge" -> Query(q66KllStoreMerge,
+      "SELECT COUNT(*) AS n, true AS rank_ok FROM lineitem"),
     // exact because capacity > domain (see q67 scaladoc); same tie-break
-    "q67_windowed_topk" ->
+    "q67_windowed_topk" -> Query(q67WindowedTopK,
       """SELECT CAST(epoch(time_bucket(INTERVAL '1 hour', ts)) AS BIGINT) AS window_epoch,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY time_bucket(INTERVAL '1 hour', ts)
         |    ORDER BY COUNT(*) DESC, event_type) AS BIGINT) AS rnk,
         |  event_type, COUNT(*) AS n_events
         |FROM events GROUP BY time_bucket(INTERVAL '1 hour', ts), event_type
         |QUALIFY rnk <= 3
-        |ORDER BY window_epoch, rnk""".stripMargin,
-    "q68_interval_join" ->
+        |ORDER BY window_epoch, rnk""".stripMargin),
+    "q68_interval_join" -> Query(q68IntervalJoin,
       """SELECT c.user_id, COUNT(*) AS n_attributed,
         |  COUNT(DISTINCT c.event_id) AS n_clicks_with_view
         |FROM events c JOIN events v ON c.user_id = v.user_id
         |  AND c.event_type = 'click' AND v.event_type = 'view'
         |  AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE
-        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin,
+        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin),
     // exact because capacity > domain (q62 rationale); BIGINT-cast the sum
     // (DuckDB integer SUM is HUGEINT)
-    "q69_weighted_topk" ->
+    "q69_weighted_topk" -> Query(q69WeightedTopK,
       """SELECT p_brand, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY total_qty DESC, p_brand LIMIT 10""".stripMargin)
+        |GROUP BY p_brand ORDER BY total_qty DESC, p_brand LIMIT 10""".stripMargin))
 }

@@ -82,16 +82,12 @@ object Skew {
     skewProfile(Tables.events(spark, dir), Seq("event_type", "user_id"))
       .orderBy("key_col")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q73_salted_skew_join" -> (q73SaltedSkewJoin _),
-    "q140_skew_profile" -> (q140SkewProfile _))
-
-  val oracles: Map[String, String] = Map(
-    "q73_salted_skew_join" ->
+  val declared: Map[String, Query] = Map(
+    "q73_salted_skew_join" -> Query(q73SaltedSkewJoin,
       """SELECT event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) * LENGTH(event_type) AS weighted
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q140_skew_profile" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q140_skew_profile" -> Query(q140SkewProfile,
       """WITH et AS (
         |  SELECT COUNT(*) AS n FROM events GROUP BY event_type),
         |uid AS (
@@ -109,5 +105,5 @@ object Skew {
         |  CAST(CEIL(CAST(max_n AS DOUBLE) /
         |    (CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE))) AS BIGINT)
         |    AS rec_salts
-        |FROM p ORDER BY key_col""".stripMargin)
+        |FROM p ORDER BY key_col""".stripMargin))
 }

@@ -74,12 +74,9 @@ object Skyline {
     skyline2d(Tables.lineitem(spark, dir), "l_extendedprice", "l_quantity")
       .orderBy("l_extendedprice")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q129_skyline" -> (q129Skyline _))
-
-  val oracles: Map[String, String] = Map(
+  val declared: Map[String, Query] = Map(
     // the same sort-scan characterization, single-pass in SQL
-    "q129_skyline" ->
+    "q129_skyline" -> Query(q129Skyline,
       """WITH pts AS (
         |  SELECT l_extendedprice AS x, l_quantity AS y,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -90,5 +87,5 @@ object Skyline {
         |  FROM pts)
         |SELECT x AS l_extendedprice, y AS l_quantity, n
         |FROM s WHERE mq IS NULL OR y > mq
-        |ORDER BY l_extendedprice""".stripMargin)
+        |ORDER BY l_extendedprice""".stripMargin))
 }

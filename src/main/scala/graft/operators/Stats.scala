@@ -71,7 +71,6 @@ object Stats {
     * [[chiSquare]] float discipline; ln crosses the engine boundary at
     * well under the quantization step). */
   def gTest(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val obs = df.groupBy(col(aCol).as("__a"), col(bCol).as("__b"))
       .agg(count(lit(1)).as("__o"))
     val ra = obs.groupBy("__a").agg(sum("__o").as("__ra"))
@@ -819,7 +818,6 @@ object Stats {
       grid.join(buck.filter(col("k") === key).drop("k"), Seq("b"), "left")
         .select(col("b"), coalesce(col("n"), lit(0L)).as(out))
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val w = Window.orderBy("b")
       .rowsBetween(-(windowBuckets - 1), Window.currentRow)
     val nD = lit(windowBuckets.toLong).cast("decimal(38,0)")
@@ -878,7 +876,6 @@ object Stats {
       .select(col("brand"), col("pk"), col("q").as("q1"), col("rev").as("rev1"))
     val b = per.filter(col("yr") === y2)
       .select(col("brand"), col("pk"), col("q").as("q2"), col("rev").as("rev2"))
-    val dd = (c: Column) => c.cast("double")
     val fxg = (c: Column) =>
       floor(c * lit(1e4) + lit(0.5)).cast("long").cast("decimal(38,0)")
     val both = col("q1").isNotNull && col("q2").isNotNull
@@ -1057,7 +1054,6 @@ object Stats {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("k")
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val base = buck.groupBy("k").agg(min("b").as("b0"), max("b").as("b1"))
       .select(col("k"), col("b0"),
         explode(sequence(col("b0"), col("b1"))).as("b"))
@@ -1141,7 +1137,6 @@ object Stats {
   def grubbsTest(df: DataFrame, groupCol: String, valCol: String,
       keyCol: String): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(groupCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"),
       col(keyCol).as("key"))
@@ -1188,7 +1183,6 @@ object Stats {
       keyCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 5, s"rounds must be in [1,5]: $rounds")
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val base = df.select(col(groupCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"),
       col(keyCol).as("key"))
@@ -1248,7 +1242,6 @@ object Stats {
   def forecastAccuracy(events: DataFrame, tsCol: String, keyCol: String,
       bucketSeconds: Long, season: Int): DataFrame = {
     require(bucketSeconds > 0 && season >= 2, s"bad args: $bucketSeconds $season")
-    val dd = (c: Column) => c.cast("double")
     val buck = events.select(col(keyCol).as("k"),
         expr(s"unix_micros($tsCol) div ${bucketSeconds * 1000000L}").as("b"))
       .groupBy("k", "b").agg(count(lit(1)).as("n"))
@@ -1323,7 +1316,6 @@ object Stats {
   def lorenzCurve(perEntity: DataFrame, entityCol: String,
       measureCol: String, k: Int): DataFrame = {
     require(k >= 2, s"decile count must be >= 2: $k")
-    val dd = (c: Column) => c.cast("double")
     val ent = perEntity.select(col(entityCol).as("e"), col(measureCol).as("m"))
     val n = ent.agg(count(lit(1)).as("__n"))
     val tot = ent.agg(sum(col("m")).as("total"))
@@ -1496,7 +1488,6 @@ object Stats {
       .withColumn("vy", (d(col("n")) * col("sdd") -
         d(col("sd")) * d(col("sd"))).cast("decimal(38,0)"))
       .filter(col("vx") > 0 && col("n") > 2)
-    val dd = (c: Column) => c.cast("double")
     val gamma = dd(col("cov")) / dd(col("vx"))
     val sse = (dd(col("vy")) - dd(col("cov")) * dd(col("cov")) /
       dd(col("vx"))) / dd(col("n"))
@@ -1531,8 +1522,6 @@ object Stats {
   def acfLjungBox(df: DataFrame, dateCol: String, valCol: String,
       maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1: $maxLag")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily0 = df
       .select(datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -1592,8 +1581,6 @@ object Stats {
   def crossCorrelation(events: DataFrame, tsCol: String, xCond: Column,
       xVal: Column, yCond: Column, yVal: Column, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1: $maxLag")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val hourly0 = events
       .select(expr(s"unix_micros($tsCol) div 3600000000").as("h"),
         when(xCond, xVal).otherwise(0L).as("xv"),
@@ -1648,8 +1635,6 @@ object Stats {
     * joins), not the fact-table row count. */
   def ar2YuleWalker(df: DataFrame, dateCol: String, valCol: String)
       : DataFrame = {
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily0 = df
       .select(datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -1728,7 +1713,6 @@ object Stats {
     * plain long arithmetic. One day-grid reduction feeds all arms. */
   def sesAlphaSweep(df: DataFrame, dateCol: String, valCol: String)
       : DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val daily0 = df
       .select(datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -1776,8 +1760,6 @@ object Stats {
   def hurstRs(df: DataFrame, dateCol: String, valCol: String,
       sizes: Seq[Int] = Seq(16, 32, 64, 128)): DataFrame = {
     require(sizes.nonEmpty && sizes.forall(_ >= 4), s"bad sizes: $sizes")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily0 = df
       .select(datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -1862,8 +1844,6 @@ object Stats {
   def trimmedMean(df: DataFrame, groupCol: String, valCol: String,
       trimDenom: Int = 10): DataFrame = {
     require(trimDenom >= 3, s"trim denominator must be >= 3: $trimDenom")
-    val dd = (c: Column) => c.cast("double")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
     val hist = df.select(col(groupCol).as("g"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("v"))
       .groupBy("g", "v").agg(count(lit(1)).as("c"))
@@ -1915,8 +1895,6 @@ object Stats {
   def simpsonsScreen(df: DataFrame, xCol: String, yCol: String,
       stratifiers: Seq[String]): DataFrame = {
     require(stratifiers.nonEmpty, "need at least one stratifier")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val xc = (col(xCol).cast("decimal(18,2)") * 100).cast("long")
     val yc = (col(yCol).cast("decimal(18,2)") * 100).cast("long")
     val per = stratifiers.map { s =>
@@ -1977,8 +1955,6 @@ object Stats {
     * double shapes on them. Grid-sized work, two statistic rows out. */
   def grangerScreen(events: DataFrame, tsCol: String, xCond: Column,
       xVal: Column, yCond: Column, yVal: Column): DataFrame = {
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val hourly0 = events
       .select(expr(s"unix_micros($tsCol) div 3600000000").as("h"),
         when(xCond, xVal).otherwise(0L).as("xv"),
@@ -2065,8 +2041,6 @@ object Stats {
   def seasonalStrength(df: DataFrame, tsCol: String,
       periods: Seq[Int], bucketSeconds: Long): DataFrame = {
     require(periods.nonEmpty && periods.forall(_ >= 2), s"bad periods")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val bUs = bucketSeconds * 1000000L
     val hourly0 = df
       .select(expr(s"unix_micros($tsCol) div $bUs").as("h"))
@@ -2316,7 +2290,6 @@ object Stats {
     * d2) order — no single-partition sort. Returns n_pairs + slope in
     * cents/day. */
   def theilSen(df: DataFrame, dateCol: String, valCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     // r11: the pair count is C(days, 2) — arithmetic on the day count
     // instead of a second full materialization of the triangular pair
     // join (guide §2.4: the BroadcastNestedLoopJoin over days² now runs
@@ -2361,8 +2334,6 @@ object Stats {
     * gain. */
   def changepoint(df: DataFrame, dateCol: String,
       valCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
     val daily0 = df
       .select(datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -2520,7 +2491,6 @@ object Stats {
   def chowTest(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String, breakDate: String): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val dz = lit(0).cast("decimal(38,0)")
     val sd = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("x"),
@@ -2591,7 +2561,6 @@ object Stats {
   def kdeGrid(df: DataFrame, groupCol: String, valCol: String,
       gridLoCents: Long, gridHiCents: Long, gridStepCents: Long,
       bandwidth: Double): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val hist = df.select(col(groupCol).as("g"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
       .groupBy("g", "vc").agg(count(lit(1)).as("cnt"))
@@ -2686,7 +2655,6 @@ object Stats {
   def engleGranger(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("x"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -2761,7 +2729,6 @@ object Stats {
   def gumbelReturnLevels(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val bm = df.select(col(groupCol).as("g"),
         (year(col(dateCol)) * 12 + month(col(dateCol))).cast("long")
           .as("mth"),
@@ -2912,7 +2879,6 @@ object Stats {
     * finish. Cubes are explicit products — no pow() at the gate. */
   def loessGrid(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String, gridStep: Long, bandwidth: Double): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val dw = (c: Column) => c.cast("decimal(38,12)")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("x"),
@@ -2964,7 +2930,6 @@ object Stats {
   def dispersionIndex(df: DataFrame, groupCol: String,
       tsCol: String): DataFrame = {
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(to_date(col(tsCol)), lit("1992-01-01")).cast("long")
           .as("day"))
@@ -3004,7 +2969,6 @@ object Stats {
     * near-tied scores). */
   def frequencyMovers(df: DataFrame, keyCol: String, dateCol: String,
       splitDate: String, zMin: Double): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val half = when(col("__d") < datediff(lit(splitDate),
       lit("1992-01-01")), 0).otherwise(1)
     val counts = df.select(col(keyCol).as("k"),
@@ -3048,7 +3012,6 @@ object Stats {
       valCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag >= 1: $maxLag")
     val d = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("x"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("y"))
@@ -3171,7 +3134,6 @@ object Stats {
   def exponentialHazard(orders: DataFrame, custCol: String,
       dateCol: String, segments: DataFrame, segKey: String,
       segCol: String, churnDays: Long): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val per = orders.select(col(custCol).as("c"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("day"))
       .groupBy("c").agg(min("day").as("fd"), max("day").as("ld"))
@@ -3218,7 +3180,6 @@ object Stats {
     * from one scan. */
   def herfindahl(df: DataFrame, marketCol: String, memberCol: String,
       valCol: Column): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val cells = df.select(col(marketCol).as("mkt"),
         col(memberCol).as("mem"),
         (valCol.cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -3307,8 +3268,6 @@ object Stats {
     * per-task work scales with the value DOMAIN. */
   def brownForsythe(df: DataFrame, groupCol: String,
       valCol: String): DataFrame = {
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(groupCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"))
     val wCum = Window.partitionBy("g").orderBy("x")
@@ -3374,8 +3333,6 @@ object Stats {
     require(ordering.size >= 2 && ordering.distinct.size == ordering.size,
       s"need >= 2 distinct ordered groups: $ordering")
     val k = ordering.size
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(groupCol).as("g"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"))
       .filter(col("g").isin(ordering: _*))
@@ -3447,8 +3404,6 @@ object Stats {
     * exact integers into fixed double shapes. */
   def runsTest(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -3515,8 +3470,6 @@ object Stats {
     * z NULL rather than 0/0. */
   def mannKendall(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -3566,8 +3519,6 @@ object Stats {
   def fanoFactor(events: DataFrame, tsCol: String, keyCol: String,
       bucketSeconds: Long): DataFrame = {
     require(bucketSeconds > 0, s"bucketSeconds: $bucketSeconds")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val us = bucketSeconds * 1000000L
     val b = events.select(col(keyCol).as("k"),
       expr(s"unix_micros($tsCol) div $us").as("b"))
@@ -3606,7 +3557,6 @@ object Stats {
     * order-insensitive sum. */
   def recordBreaks(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val q3812 = (c: Column) => c.cast("decimal(38,12)")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
@@ -3651,8 +3601,6 @@ object Stats {
     * convention 1 − SSE/Σy². */
   def logisticGrowthFit(df: DataFrame, dateCol: String,
       idCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
-    val d38 = (c: Column) => c.cast("decimal(38,0)")
     val days = df.select(col(idCol).as("id"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"))
       .groupBy("id").agg(min("d").as("d"))
@@ -3663,15 +3611,15 @@ object Stats {
       .select((col("cn") - col("nw")).as("x"), col("nw").as("y"))
       .filter(col("x") > 0) // day 1 has no installed base to grow from
     val m = pts.agg(count(lit(1)).as("n_days"),
-      sum(d38(col("x")) * d38(col("x"))).cast("decimal(38,0)").as("s2"),
-      sum(d38(col("x")) * d38(col("x")) * d38(col("x")))
+      sum(d380(col("x")) * d380(col("x"))).cast("decimal(38,0)").as("s2"),
+      sum(d380(col("x")) * d380(col("x")) * d380(col("x")))
         .cast("decimal(38,0)").as("s3"),
-      sum(d38(col("x")) * d38(col("x")) * d38(col("x")) * d38(col("x")))
+      sum(d380(col("x")) * d380(col("x")) * d380(col("x")) * d380(col("x")))
         .cast("decimal(38,0)").as("s4"),
-      sum(d38(col("x")) * d38(col("y"))).cast("decimal(38,0)").as("sxy"),
-      sum(d38(col("x")) * d38(col("x")) * d38(col("y")))
+      sum(d380(col("x")) * d380(col("y"))).cast("decimal(38,0)").as("sxy"),
+      sum(d380(col("x")) * d380(col("x")) * d380(col("y")))
         .cast("decimal(38,0)").as("sx2y"),
-      sum(d38(col("y")) * d38(col("y"))).cast("decimal(38,0)").as("syy"))
+      sum(d380(col("y")) * d380(col("y"))).cast("decimal(38,0)").as("syy"))
     val tot = df.select(col(idCol).as("id")).distinct()
       .agg(count(lit(1)).as("n_total"))
     val det = dd(col("s2")) * dd(col("s4")) - dd(col("s3")) * dd(col("s3"))
@@ -3705,7 +3653,6 @@ object Stats {
     * engines). */
   def medianCI(df: DataFrame, groupCol: String,
       valCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(groupCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"))
     val wCum = Window.partitionBy("g").orderBy("x")
@@ -3754,7 +3701,6 @@ object Stats {
     * (group, paired index) — day-frame-sized throughout. */
   def coxStuart(df: DataFrame, groupCol: String, dateCol: String,
       valCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val daily = df.select(col(groupCol).as("g"),
         datediff(col(dateCol), lit("1992-01-01")).cast("long").as("d"),
         (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("vc"))
@@ -3797,8 +3743,6 @@ object Stats {
   def winsorizedMean(df: DataFrame, groupCol: String, valCol: String,
       trimDenom: Int = 10): DataFrame = {
     require(trimDenom >= 3, s"trim denominator must be >= 3: $trimDenom")
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
-    val dd = (c: Column) => c.cast("double")
     val per = df.select(col(groupCol).as("g"),
       (col(valCol).cast("decimal(18,2)") * 100).cast("long").as("x"))
     val wCum = Window.partitionBy("g").orderBy("x")
@@ -3865,7 +3809,6 @@ object Stats {
   def rankBiasedOverlap(ranked1: DataFrame, ranked2: DataFrame,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
-    val dd = (c: Column) => c.cast("double")
     val joined = ranked1.select(col("item"), col("rnk").as("r1"))
       .join(ranked2.select(col("item"), col("rnk").as("r2")),
         Seq("item"), "full_outer")
@@ -3933,7 +3876,6 @@ object Stats {
     * globally sorted and nothing collects. */
   def theilDecomposition(entities: DataFrame, groupCol: String,
       centsCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val base = entities.select(col(groupCol).as("g"),
       col(centsCol).cast("decimal(38,0)").as("x"))
     val gstats = base.groupBy("g")
@@ -3994,7 +3936,6 @@ object Stats {
   def fleissKappa(labels: DataFrame, itemCol: String,
       labelCol: String, nRaters: Int): DataFrame = {
     require(nRaters >= 2, s"nRaters must be >= 2: $nRaters")
-    val dd = (c: Column) => c.cast("double")
     val nij = labels.select(col(itemCol).as("i"), col(labelCol).as("j"))
       .groupBy("i", "j").agg(count(lit(1)).as("nij"))
     val perItem = nij.groupBy("i")
@@ -4005,7 +3946,6 @@ object Stats {
         min("n").as("n_min"))
     // chance term is EXACT integers end-to-end: sum p_j^2 =
     // (sum c_j^2) / (sum c_j)^2, one double division at the finish
-    val d380 = (c: Column) => c.cast("decimal(38,0)")
     val pe = nij.groupBy("j").agg(sum("nij").as("cj"))
       .agg(count(lit(1)).as("n_categories"),
         sum("cj").as("n_labels"),
@@ -4058,7 +3998,6 @@ object Stats {
   def medianOfMeans(df: DataFrame, groupCol: String, blockCol: Column,
       centsCol: Column, nBlocks: Int): DataFrame = {
     require(nBlocks >= 2, s"nBlocks must be >= 2: $nBlocks")
-    val dd = (c: Column) => c.cast("double")
     val blocks = df
       .select(col(groupCol).as("g"), (blockCol % nBlocks).as("b"),
         centsCol.cast("decimal(38,0)").as("x"))
@@ -4103,7 +4042,6 @@ object Stats {
       blockCol: Column, numCents: Column, denCents: Column,
       nBlocks: Int): DataFrame = {
     require(nBlocks >= 2, s"nBlocks must be >= 2: $nBlocks")
-    val dd = (c: Column) => c.cast("double")
     val blocks = df
       .select(col(groupCol).as("g"), (blockCol % nBlocks).as("b"),
         numCents.cast("decimal(38,0)").as("y"),
@@ -4175,7 +4113,6 @@ object Stats {
     * bounded period counts. */
   def pettittTest(series: DataFrame, keyCol: String, tCol: String,
       xCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val base = series.select(col(keyCol).as("k"), col(tCol).as("t"),
       col(xCol).as("x"))
     // doubled average rank 2r = 2*rank_min + ties - 1 stays integral, so
@@ -4250,7 +4187,6 @@ object Stats {
     * 0/0. Shape: one contingency aggregation to ≤9 cells, then
     * single-row algebra. */
   def stuartMaxwell(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val cell = (i: Int, j: Int) =>
       sum(when(col("a") === i && col("b") === j, 1L).otherwise(0L))
     val m = df.select(col(aCol).cast("long").as("a"),
@@ -4311,7 +4247,6 @@ object Stats {
     * histogram. */
   def turningPointTest(series: DataFrame, keyCol: String, tCol: String,
       xCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val w = Window.partitionBy("k").orderBy("t")
     series.select(col(keyCol).as("k"), col(tCol).as("t"),
       col(xCol).as("x"))
@@ -4363,7 +4298,6 @@ object Stats {
   def kupiecPof(series: DataFrame, keyCol: String, tCol: String,
       xCol: String, splitAt: Column, p: Double): DataFrame = {
     require(p > 0 && p < 1, s"p must be in (0,1): $p")
-    val dd = (c: Column) => c.cast("double")
     val base = series.select(col(keyCol).as("k"), col(tCol).as("t"),
       col(xCol).cast("double").as("x"))
     val varTrain = base.filter(col("t") < splitAt).groupBy("k")
@@ -4407,92 +4341,6 @@ object Stats {
     kupiecPof(series, "n_name", "m", "rev_c",
       lit("1998-01-01").cast("timestamp"), p = 0.05)
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q432_stuart_maxwell" -> (q432StuartMaxwell _),
-    "q433_turning_point" -> (q433TurningPoint _),
-    "q434_kupiec_pof" -> (q434KupiecPof _),
-    "q430_block_jackknife" -> (q430BlockJackknife _),
-    "q431_pettitt" -> (q431Pettitt _),
-    "q427_fleiss_kappa" -> (q427FleissKappa _),
-    "q429_median_of_means" -> (q429MedianOfMeans _),
-    "q424_rank_biased_overlap" -> (q424RankBiasedOverlap _),
-    "q425_theil_decomposition" -> (q425TheilDecomposition _),
-    "q388_brown_forsythe" -> (q388BrownForsythe _),
-    "q390_jonckheere_terpstra" -> (q390JonckheereTerpstra _),
-    "q391_runs_test" -> (q391RunsTest _),
-    "q416_mann_kendall" -> (q416MannKendall _),
-    "q397_record_breaks" -> (q397RecordBreaks _),
-    "q405_cox_stuart" -> (q405CoxStuart _),
-    "q412_logistic_growth" -> (q412LogisticGrowth _),
-    "q414_median_ci" -> (q414MedianCI _),
-    "q398_fano_factor" -> (q398FanoFactor _),
-    "q401_winsorized_mean" -> (q401WinsorizedMean _),
-    "q387_coverage_counts" -> (q387CoverageCounts _),
-    "q386_herfindahl" -> (q386Herfindahl _),
-    "q379_quantile_shift" -> (q379QuantileShift _),
-    "q381_exponential_hazard" -> (q381ExponentialHazard _),
-    "q377_frequency_movers" -> (q377FrequencyMovers _),
-    "q378_newey_west" -> (q378NeweyWest _),
-    "q375_dispersion" -> (q375Dispersion _),
-    "q372_loess_grid" -> (q372LoessGrid _),
-    "q366_grid_dbscan" -> (q366GridDbscan _),
-    "q363_engle_granger" -> (q363EngleGranger _),
-    "q365_gumbel_maxima" -> (q365GumbelMaxima _),
-    "q360_chow_test" -> (q360ChowTest _),
-    "q361_kde_grid" -> (q361KdeGrid _),
-    "q362_croston" -> (q362Croston _),
-    "q323_density_islands" -> (q323DensityIslands _),
-    "q326_holt_winters" -> (q326HoltWinters _),
-    "q334_cusum_drift" -> (q334CusumDrift _),
-    "q304_acf_ljung_box" -> (q304AcfLjungBox _),
-    "q320_cross_correlation" -> (q320CrossCorrelation _),
-    "q305_seasonal_strength" -> (q305SeasonalStrength _),
-    "q308_holt_linear" -> (q308HoltLinear _),
-    "q309_theil_sen" -> (q309TheilSen _),
-    "q310_changepoint" -> (q310Changepoint _),
-    "q311_stl_decompose" -> (q311StlDecompose _),
-    "q294_var_cvar" -> (q294VarCvar _),
-    "q295_ohlc_bars" -> (q295OhlcBars _),
-    "q296_dickey_fuller" -> (q296DickeyFuller _),
-    "q271_max_drawdown" -> (q271MaxDrawdown _),
-    "q276_grubbs" -> (q276Grubbs _),
-    "q277_forecast_accuracy" -> (q277ForecastAccuracy _),
-    "q282_nelson_aalen" -> (q282NelsonAalen _),
-    "q283_lorenz_curve" -> (q283LorenzCurve _),
-    "q202_weighted_median" -> (q202WeightedMedian _),
-    "q203_lead_lag" -> (q203LeadLag _),
-    "q204_mix_entropy" -> (q204MixEntropy _),
-    "q205_interarrival" -> (q205Interarrival _),
-    "q206_changepoint" -> (q206Changepoint _),
-    "q213_rolling_corr" -> (q213RollingCorr _),
-    "q218_revenue_bridge" -> (q218RevenueBridge _),
-    "q220_psi_drift" -> (q220PsiDrift _),
-    "q199_survival_curve" -> (q199SurvivalCurve _),
-    "q200_group_ols" -> (q200GroupOls _),
-    "q197_autocorrelation" -> (q197Autocorrelation _),
-    "q195_supervised_bins" -> (q195SupervisedBins _),
-    "q193_percentile_series" -> (q193PercentileSeries _),
-    "q190_seasonal_naive" -> (q190SeasonalNaive _),
-    "q191_threshold_crossing" -> (q191ThresholdCrossing _),
-    "q192_rank_migration" -> (q192RankMigration _),
-    "q186_abc_classes" -> (q186Abc _),
-    "q187_ma_crossover" -> (q187MaCross _),
-    "q166_chi_square" -> (q166ChiSquare _),
-    "q340_g_test" -> (q340GTest _),
-    "q343_ar2_forecast" -> (q343Ar2Forecast _),
-    "q344_esd_outliers" -> (q344EsdOutliers _),
-    "q347_granger" -> (q347Granger _),
-    "q350_ses_sweep" -> (q350SesSweep _),
-    "q351_hurst" -> (q351Hurst _),
-    "q352_trimmed_mean" -> (q352TrimmedMean _),
-    "q355_simpsons" -> (q355Simpsons _),
-    "q167_equidepth_hist" -> (q167EquidepthHist _),
-    "q168_ab_test" -> (q168AbTest _),
-    "q169_cusum" -> (q169Cusum _),
-    "q174_cusum_state" -> (q174CusumState _),
-    "q175_rfm" -> (q175Rfm _),
-    "q176_gini" -> (q176Gini _))
 
   /** One ESD oracle round: moments over the surviving rows b{r−1},
     * winner pick by (dev desc, key), remainder b{r}. */
@@ -4609,8 +4457,8 @@ object Stats {
        |            AS HUGEINT) AS sxx
        |        FROM base GROUP BY 1) g1) g2) g3""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q432_stuart_maxwell" ->
+  val declared: Map[String, Query] = Map(
+    "q432_stuart_maxwell" -> Query(q432StuartMaxwell,
       """WITH feat AS (
         |  SELECT n_chars,
         |    len(list_filter(regexp_split_to_array(text, '\s+'),
@@ -4668,8 +4516,8 @@ object Stats {
         |  CASE WHEN b2 > 0 THEN
         |    exp(-(CAST(a2 AS DOUBLE) / CAST(b2 AS DOUBLE)) / 2.0)
         |    END AS p_value
-        |FROM e""".stripMargin,
-    "q433_turning_point" ->
+        |FROM e""".stripMargin),
+    "q433_turning_point" -> Query(q433TurningPoint,
       """WITH series AS (
         |  SELECT n.n_name, CAST(date_trunc('month', l.l_shipdate)
         |      AS TIMESTAMP) AS m,
@@ -4694,8 +4542,8 @@ object Stats {
         |  (CAST(turning_points AS DOUBLE)
         |    - 2.0 * CAST(n_periods - 2 AS DOUBLE) / 3.0)
         |    / sqrt(CAST(16 * n_periods - 29 AS DOUBLE) / 90.0) AS z_score
-        |FROM agg ORDER BY 1""".stripMargin,
-    "q434_kupiec_pof" ->
+        |FROM agg ORDER BY 1""".stripMargin),
+    "q434_kupiec_pof" -> Query(q434KupiecPof,
       """WITH series AS (
         |  SELECT n.n_name, CAST(date_trunc('month', l.l_shipdate)
         |      AS TIMESTAMP) AS m,
@@ -4731,8 +4579,8 @@ object Stats {
         |        ELSE CAST(x_exc AS DOUBLE)
         |          * ln(CAST(x_exc AS DOUBLE) / CAST(n_test AS DOUBLE))
         |        END)) AS lr_pof
-        |FROM te ORDER BY 1""".stripMargin,
-    "q430_block_jackknife" ->
+        |FROM te ORDER BY 1""".stripMargin),
+    "q430_block_jackknife" -> Query(q430BlockJackknife,
       """WITH rows_ AS (
         |  SELECT l_returnflag AS g,
         |    (l_orderkey + CAST(l_linenumber AS BIGINT) * 7919) % 40 AS b,
@@ -4782,8 +4630,8 @@ object Stats {
         |    + 1.96 * sqrt(CAST(t.st2 AS DOUBLE) * CAST(gs.nb - 1 AS DOUBLE)
         |      / (CAST(gs.nb AS DOUBLE) * CAST(gs.nb AS DOUBLE)
         |        * CAST(gs.nb AS DOUBLE))) AS ci_hi
-        |FROM gstats gs JOIN terms t ON gs.g = t.g ORDER BY 1""".stripMargin,
-    "q431_pettitt" ->
+        |FROM gstats gs JOIN terms t ON gs.g = t.g ORDER BY 1""".stripMargin),
+    "q431_pettitt" -> Query(q431Pettitt,
       """WITH series AS (
         |  SELECT n.n_name, CAST(date_trunc('month', l.l_shipdate) AS TIMESTAMP) AS m,
         |    CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
@@ -4834,8 +4682,8 @@ object Stats {
         |    AS p_approx,
         |  CAST(d.sb AS DOUBLE) / CAST(d.nb AS DOUBLE) AS mean_before,
         |  CAST(d.sa AS DOUBLE) / CAST(d.na AS DOUBLE) AS mean_after
-        |FROM best b JOIN sides d ON b.k = d.k ORDER BY 1""".stripMargin,
-    "q427_fleiss_kappa" ->
+        |FROM best b JOIN sides d ON b.k = d.k ORDER BY 1""".stripMargin),
+    "q427_fleiss_kappa" -> Query(q427FleissKappa,
       """WITH feat AS (
         |  SELECT doc_id, n_chars,
         |    len(list_filter(regexp_split_to_array(text, '\s+'),
@@ -4886,8 +4734,8 @@ object Stats {
         |  / (1.0 - CAST(e.pe_num AS DOUBLE)
         |      / (CAST(e.n_labels AS DOUBLE) * CAST(e.n_labels AS DOUBLE)))
         |    AS kappa
-        |FROM pbar b CROSS JOIN pe e""".stripMargin,
-    "q429_median_of_means" ->
+        |FROM pbar b CROSS JOIN pe e""".stripMargin),
+    "q429_median_of_means" -> Query(q429MedianOfMeans,
       """WITH blocks AS (
         |  SELECT o_orderpriority AS g, (o_orderkey % 97) % 32 AS b,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -4904,8 +4752,8 @@ object Stats {
         |  CAST(CAST(SUM(sx) AS DECIMAL(38,0)) AS DOUBLE)
         |    / CAST(SUM(nx) AS DOUBLE) AS mean_cents,
         |  quantile_cont(block_mean, 0.5) AS mom_cents
-        |FROM bm GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q424_rank_biased_overlap" ->
+        |FROM bm GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q424_rank_biased_overlap" -> Query(q424RankBiasedOverlap,
       """WITH h1 AS (
         |  SELECT l_partkey AS item,
         |    SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -4953,8 +4801,8 @@ object Stats {
         |  CAST(s.rbo_q AS DOUBLE) +
         |    (CAST(c.n_common AS DOUBLE) / CAST(25 AS DOUBLE))
         |      / power(2.0, 25.0) AS rbo_ext
-        |FROM c, s""".stripMargin,
-    "q425_theil_decomposition" ->
+        |FROM c, s""".stripMargin),
+    "q425_theil_decomposition" -> Query(q425TheilDecomposition,
       """WITH spend AS (
         |  SELECT o_custkey,
         |    SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -4996,8 +4844,8 @@ object Stats {
         |      / (CAST(gs.n_g AS DOUBLE) * CAST(t.s_all AS DOUBLE)))
         |    AS between_term
         |FROM gstats gs JOIN within w ON gs.g = w.g CROSS JOIN tot t
-        |ORDER BY 1""".stripMargin,
-    "q388_brown_forsythe" ->
+        |ORDER BY 1""".stripMargin),
+    "q388_brown_forsythe" -> Query(q388BrownForsythe,
       """WITH per AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5046,8 +4894,8 @@ object Stats {
         |      / CAST(n_groups - 1 AS DOUBLE))
         |    / ((CAST(q2 AS DOUBLE) - a)
         |      / CAST(n_total - n_groups AS DOUBLE)) END AS f_bf
-        |FROM fin WHERE n_groups > 1 AND n_total > n_groups""".stripMargin,
-    "q390_jonckheere_terpstra" ->
+        |FROM fin WHERE n_groups > 1 AND n_total > n_groups""".stripMargin),
+    "q390_jonckheere_terpstra" -> Query(q390JonckheereTerpstra,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x
@@ -5155,8 +5003,8 @@ object Stats {
         |  FROM wide WHERE nn > 2)
         |SELECT n_total, n_groups, jt_u, e_jt, var_jt,
         |  CASE WHEN var_jt > 0 THEN (jt_u - e_jt) / sqrt(var_jt) END AS z
-        |FROM fin""".stripMargin,
-    "q391_runs_test" ->
+        |FROM fin""".stripMargin),
+    "q391_runs_test" -> Query(q391RunsTest,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -5212,8 +5060,8 @@ object Stats {
         |      * CAST(n_above + n_below - 1 AS DOUBLE))) AS z
         |FROM agg
         |WHERE n_above > 0 AND n_below > 0 AND n_above + n_below > 1
-        |ORDER BY 1""".stripMargin,
-    "q416_mann_kendall" ->
+        |ORDER BY 1""".stripMargin),
+    "q416_mann_kendall" -> Query(q416MannKendall,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -5250,8 +5098,8 @@ object Stats {
         |    (CAST(s AS DOUBLE) - sign(CAST(s AS DOUBLE))) / sqrt(var_s)
         |  END AS z
         |FROM fin
-        |ORDER BY 1""".stripMargin,
-    "q412_logistic_growth" ->
+        |ORDER BY 1""".stripMargin),
+    "q412_logistic_growth" -> Query(q412LogisticGrowth,
       """WITH firstd AS (
         |  SELECT o_custkey AS id,
         |    CAST(MIN(datediff('day', DATE '1992-01-01', o_orderdate))
@@ -5302,8 +5150,8 @@ object Stats {
         |SELECT n_days, n_total, a AS r_growth,
         |  CASE WHEN b < 0 THEN -a / b END AS k_capacity,
         |  1.0 - (dyy - a * dxy - b * dx2y) / dyy AS r2
-        |FROM g""".stripMargin,
-    "q414_median_ci" ->
+        |FROM g""".stripMargin),
+    "q414_median_ci" -> Query(q414MedianCI,
       """WITH hist AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5336,8 +5184,8 @@ object Stats {
         |  CAST(med2 AS DOUBLE) / 200.0 AS median,
         |  CAST(lo AS DOUBLE) / 100.0 AS ci_lo,
         |  CAST(hi AS DOUBLE) / 100.0 AS ci_hi
-        |FROM agg WHERE n > 3 ORDER BY 1""".stripMargin,
-    "q405_cox_stuart" ->
+        |FROM agg WHERE n > 3 ORDER BY 1""".stripMargin),
+    "q405_cox_stuart" -> Query(q405CoxStuart,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -5365,8 +5213,8 @@ object Stats {
         |SELECT g AS l_returnflag, n_days, n_pairs, n_up,
         |  (CAST(n_up AS DOUBLE) * 2.0 - CAST(n_pairs AS DOUBLE))
         |    / sqrt(CAST(n_pairs AS DOUBLE)) AS z
-        |FROM agg WHERE n_pairs > 0 ORDER BY 1""".stripMargin,
-    "q397_record_breaks" ->
+        |FROM agg WHERE n_pairs > 0 ORDER BY 1""".stripMargin),
+    "q397_record_breaks" -> Query(q397RecordBreaks,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -5391,8 +5239,8 @@ object Stats {
         |SELECT g AS l_returnflag, n_days, n_records,
         |  CAST(h AS DOUBLE) AS expected_records,
         |  CAST(n_records AS DOUBLE) / CAST(h AS DOUBLE) AS record_ratio
-        |FROM agg ORDER BY 1""".stripMargin,
-    "q398_fano_factor" ->
+        |FROM agg ORDER BY 1""".stripMargin),
+    "q398_fano_factor" -> Query(q398FanoFactor,
       """WITH b AS (
         |  SELECT event_type AS k, epoch_us(ts) // 3600000000 AS b
         |  FROM events),
@@ -5414,8 +5262,8 @@ object Stats {
         |    - (CAST(n_events AS DOUBLE) / CAST(nb AS DOUBLE))
         |      * (CAST(n_events AS DOUBLE) / CAST(nb AS DOUBLE)))
         |  / (CAST(n_events AS DOUBLE) / CAST(nb AS DOUBLE)) AS fano
-        |FROM m, span ORDER BY event_type""".stripMargin,
-    "q401_winsorized_mean" ->
+        |FROM m, span ORDER BY event_type""".stripMargin),
+    "q401_winsorized_mean" -> Query(q401WinsorizedMean,
       """WITH hist AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5455,8 +5303,8 @@ object Stats {
         |    AS DOUBLE) / CAST(cl.n AS DOUBLE) / 100.0 AS winsorized_mean
         |FROM mids m JOIN clamps cl ON m.g = cl.g
         |WHERE cl.n > cl.gcut * 2
-        |ORDER BY 1""".stripMargin,
-    "q355_simpsons" ->
+        |ORDER BY 1""".stripMargin),
+    "q355_simpsons" -> Query(q355Simpsons,
       ("""WITH base AS (
         |  SELECT l_linestatus, l_returnflag,
         |    CAST(CAST(CAST(l_tax AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5468,8 +5316,8 @@ object Stats {
         |SELECT * FROM (""".stripMargin + "\n" +
         Seq("l_linestatus", "l_returnflag", "tax_band")
           .map(simpsonsDirSql).mkString("\nUNION ALL\n") + "\n" +
-        """) u ORDER BY stratifier"""),
-    "q352_trimmed_mean" ->
+        """) u ORDER BY stratifier""")),
+    "q352_trimmed_mean" -> Query(q352TrimmedMean,
       """WITH hist AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -5496,8 +5344,8 @@ object Stats {
         |  CAST(SUM(c * v) AS DOUBLE) / CAST(MAX(n) AS DOUBLE) / 100.0
         |    AS raw_mean
         |FROM t2 GROUP BY g HAVING MAX(n) > MAX(gcut) * 2
-        |ORDER BY 1""".stripMargin,
-    "q350_ses_sweep" ->
+        |ORDER BY 1""".stripMargin),
+    "q350_ses_sweep" -> Query(q350SesSweep,
       """WITH RECURSIVE daily0 AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5528,8 +5376,8 @@ object Stats {
         |  CAST(sae AS DOUBLE) / (CAST((SELECT n FROM nn) AS DOUBLE) - 1.0)
         |    / 100.0 AS mae
         |FROM r WHERE i = (SELECT n FROM nn)
-        |ORDER BY alpha_quarters""".stripMargin,
-    "q351_hurst" ->
+        |ORDER BY alpha_quarters""".stripMargin),
+    "q351_hurst" -> Query(q351Hurst,
       """WITH daily0 AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5594,8 +5442,8 @@ object Stats {
         |    FROM ps2) z)
         |SELECT CAST(w AS BIGINT) AS window_days, n_blocks, mean_ln_rs,
         |  hurst
-        |FROM ps2 CROSS JOIN fit ORDER BY window_days""".stripMargin,
-    "q340_g_test" ->
+        |FROM ps2 CROSS JOIN fit ORDER BY window_days""".stripMargin),
+    "q340_g_test" -> Query(q340GTest,
       """WITH obs AS (
         |  SELECT o_orderpriority AS a, o_orderstatus AS b,
         |    CAST(COUNT(*) AS BIGINT) AS o
@@ -5615,8 +5463,8 @@ object Stats {
         |  CAST((COUNT(DISTINCT a) - 1) * (COUNT(DISTINCT b) - 1) AS BIGINT)
         |    AS dof,
         |  MAX(n) AS n
-        |FROM t""".stripMargin,
-    "q343_ar2_forecast" ->
+        |FROM t""".stripMargin),
+    "q343_ar2_forecast" -> Query(q343Ar2Forecast,
       """WITH daily0 AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5677,8 +5525,8 @@ object Stats {
         |  CAST(xl AS DOUBLE) / 100.0 AS last_value,
         |  f1 / 100.0 AS forecast_1, f2 / 100.0 AS forecast_2,
         |  f3 / 100.0 AS forecast_3
-        |FROM d6""".stripMargin,
-    "q344_esd_outliers" ->
+        |FROM d6""".stripMargin),
+    "q344_esd_outliers" -> Query(q344EsdOutliers,
       ("""WITH b0 AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -5686,8 +5534,8 @@ object Stats {
         |  FROM orders),""".stripMargin + "\n" +
         (1 to 3).map(esdRoundSql).mkString(",\n") + "\n" +
         (1 to 3).map(esdRowSql).mkString("", "\nUNION ALL\n",
-          "\nORDER BY o_orderpriority, round")),
-    "q347_granger" ->
+          "\nORDER BY o_orderpriority, round"))),
+    "q347_granger" -> Query(q347Granger,
       ("""WITH hourly0 AS (
         |  SELECT CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS h,
         |    CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
@@ -5710,8 +5558,8 @@ object Stats {
         grangerDirSql("x_to_y", "y", "yp", "xp") + "\n" +
         """UNION ALL""" + "\n" +
         grangerDirSql("y_to_x", "x", "xp", "yp") + "\n" +
-        """) u ORDER BY direction"""),
-    "q323_density_islands" ->
+        """) u ORDER BY direction""")),
+    "q323_density_islands" -> Query(q323DensityIslands,
       """WITH h AS (
         |  SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
         |      AS vc,
@@ -5736,8 +5584,8 @@ object Stats {
         |    AS cluster_id,
         |  lo_cents, hi_cents, hi_cents - lo_cents AS width_cents,
         |  n_values, n_points
-        |FROM g WHERE n_points >= 30 ORDER BY cluster_id""".stripMargin,
-    "q310_changepoint" ->
+        |FROM g WHERE n_points >= 30 ORDER BY cluster_id""".stripMargin),
+    "q310_changepoint" -> Query(q310Changepoint,
       """WITH daily AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5773,8 +5621,8 @@ object Stats {
         |    AS mean_right,
         |  CAST(obj AS DOUBLE)
         |    - CAST(s * s AS DOUBLE) / CAST(n AS DOUBLE) AS gain_c2
-        |FROM pick""".stripMargin,
-    "q311_stl_decompose" ->
+        |FROM pick""".stripMargin),
+    "q311_stl_decompose" -> Query(q311StlDecompose,
       """WITH daily AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5801,10 +5649,10 @@ object Stats {
         |  FROM det GROUP BY wd)
         |SELECT d.d, d.x AS x_c, d.trend_c, s.seasonal_c,
         |  d.det - s.seasonal_c AS resid_c
-        |FROM det d JOIN seasonal s USING (wd) ORDER BY d.d""".stripMargin,
+        |FROM det d JOIN seasonal s USING (wd) ORDER BY d.d""".stripMargin),
     // the identical integer floor-recurrence as a recursive CTE: one
     // step per day index, joined to the zero-filled per-key grid
-    "q326_holt_winters" -> {
+    "q326_holt_winters" -> Query(q326HoltWinters, {
       // the recursive twin carries the 7-slot seasonal state as a LIST;
       // the phase-selective update is an explicit 7-way list_value (no
       // indexed-lambda dependence), each slot the exact CASE mirror of
@@ -5848,10 +5696,10 @@ object Stats {
          |SELECT k AS o_orderpriority, d, l AS level_c, b AS trend_c,
          |  s[CAST(d % 7 AS INT) + 1] AS seasonal_c
          |FROM hw ORDER BY 1, 2""".stripMargin
-    },
+    }),
     // Page CUSUM twin: same day grid as q308, recursion carries the
     // (S⁺, S⁻) pair from the rn=28 baseline anchor; all-integer updates
-    "q334_cusum_drift" ->
+    "q334_cusum_drift" -> Query(q334CusumDrift,
       """WITH RECURSIVE daily AS (
         |  SELECT l_returnflag AS k,
         |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
@@ -5891,8 +5739,8 @@ object Stats {
         |  CAST(CASE WHEN c.sn > p.h THEN 1 ELSE 0 END AS BIGINT)
         |    AS alarm_dn
         |FROM cusum c JOIN params p ON p.k = c.k
-        |ORDER BY 1, 2""".stripMargin,
-    "q308_holt_linear" ->
+        |ORDER BY 1, 2""".stripMargin),
+    "q308_holt_linear" -> Query(q308HoltLinear,
       """WITH RECURSIVE daily AS (
         |  SELECT l_returnflag AS k,
         |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
@@ -5920,8 +5768,8 @@ object Stats {
         |      + CAST(FLOOR(3.0 * h.b / 4.0) AS BIGINT)
         |  FROM hw h JOIN grid g ON g.k = h.k AND g.rn = h.rn + 1)
         |SELECT k AS l_returnflag, d, l AS level_c, b AS trend_c
-        |FROM hw ORDER BY 1, 2""".stripMargin,
-    "q309_theil_sen" ->
+        |FROM hw ORDER BY 1, 2""".stripMargin),
+    "q309_theil_sen" -> Query(q309TheilSen,
       """WITH daily AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -5938,11 +5786,11 @@ object Stats {
         |  FROM pairs)
         |SELECT MAX(nn) AS n_pairs, AVG(slope) AS slope_c_per_day
         |FROM ranked, n
-        |WHERE rn = (nn + 1) // 2 OR rn = (nn + 2) // 2""".stripMargin,
+        |WHERE rn = (nn + 1) // 2 OR rn = (nn + 2) // 2""".stripMargin),
     // exact integer ACF algebra on HUGEINT (int128) — DuckDB's decimal
     // multiply caps at precision 38 at bind time, so the oracle carries
     // the same exact values in int128 instead; identical doubles out
-    "q320_cross_correlation" ->
+    "q320_cross_correlation" -> Query(q320CrossCorrelation,
       """WITH e AS (
         |  SELECT CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS h,
         |    CASE WHEN event_type = 'purchase'
@@ -5981,8 +5829,8 @@ object Stats {
         |SELECT CAST(k AS BIGINT) AS lag, m AS n_hours,
         |  CAST(num AS DOUBLE) / sqrt(CAST(dx AS DOUBLE) * CAST(dy AS DOUBLE))
         |    AS ccf
-        |FROM calc WHERE dx > 0 AND dy > 0 ORDER BY lag""".stripMargin,
-    "q304_acf_ljung_box" ->
+        |FROM calc WHERE dx > 0 AND dy > 0 ORDER BY lag""".stripMargin),
+    "q304_acf_ljung_box" -> Query(q304AcfLjungBox,
       """WITH daily0 AS (
         |  SELECT date_diff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) AS d,
@@ -6023,8 +5871,8 @@ object Stats {
         |  CAST(a.n AS DOUBLE) * CAST(a.n + 2 AS DOUBLE)
         |    * CAST(CAST(SUM(b.t) AS DECIMAL(38,15)) AS DOUBLE) AS q_lb
         |FROM t2 a JOIN t2 b ON b.k <= a.k
-        |GROUP BY a.k, a.n, a.r ORDER BY lag""".stripMargin,
-    "q305_seasonal_strength" ->
+        |GROUP BY a.k, a.n, a.r ORDER BY lag""".stripMargin),
+    "q305_seasonal_strength" -> Query(q305SeasonalStrength,
       """WITH hourly0 AS (
         |  SELECT CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS h,
         |    COUNT(*) AS x
@@ -6058,8 +5906,8 @@ object Stats {
         |  / (CAST(sxx AS DOUBLE)
         |    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
         |    AS strength
-        |FROM bt CROSS JOIN m ORDER BY period""".stripMargin,
-    "q294_var_cvar" ->
+        |FROM bt CROSS JOIN m ORDER BY period""".stripMargin),
+    "q294_var_cvar" -> Query(q294VarCvar,
       """WITH perv AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
@@ -6085,8 +5933,8 @@ object Stats {
         |      AS DOUBLE)
         |    / CAST(100.0 AS DOUBLE) AS cvar_p
         |FROM perv p JOIN crossing c ON c.g = p.g
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q295_ohlc_bars" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q295_ohlc_bars" -> Query(q295OhlcBars,
       """WITH base AS (
         |  SELECT event_type AS k, strftime(ts, '%Y-%m-%d') AS day,
         |    epoch_us(ts) AS us, event_id AS tie, value AS v,
@@ -6106,8 +5954,8 @@ object Stats {
         |  CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(vc) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
         |    / CAST(100.0 AS DOUBLE) AS mean_value
-        |FROM rk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q296_dickey_fuller" ->
+        |FROM rk GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q296_dickey_fuller" -> Query(q296DickeyFuller,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -6153,8 +6001,8 @@ object Stats {
         |SELECT g AS l_returnflag, n AS n_pairs, gamma,
         |  gamma / SQRT(sse / CAST(n - 2 AS DOUBLE) * CAST(n AS DOUBLE)
         |    / CAST(vx AS DOUBLE)) AS t_df
-        |FROM ff ORDER BY 1""".stripMargin,
-    "q271_max_drawdown" ->
+        |FROM ff ORDER BY 1""".stripMargin),
+    "q271_max_drawdown" -> Query(q271MaxDrawdown,
       """WITH e AS (
         |  SELECT event_type, event_id, CAST(epoch_us(ts) AS BIGINT) AS us,
         |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS vu
@@ -6177,8 +6025,8 @@ object Stats {
         |  CAST(dd AS DOUBLE) / 1000000.0 AS max_drawdown,
         |  us AS trough_us,
         |  CAST(peak AS DOUBLE) / 1000000.0 AS peak_equity
-        |FROM k WHERE rk = 1 ORDER BY event_type""".stripMargin,
-    "q276_grubbs" ->
+        |FROM k WHERE rk = 1 ORDER BY event_type""".stripMargin),
+    "q276_grubbs" -> Query(q276Grubbs,
       """WITH per AS (
         |  SELECT o_orderpriority AS g,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -6205,8 +6053,8 @@ object Stats {
         |  (CAST(dev AS DOUBLE) / CAST(n AS DOUBLE))
         |    / SQRT(CAST(CAST(n AS DECIMAL(38,0)) * ss - s * s AS DOUBLE)
         |      / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))) AS g_stat
-        |FROM k WHERE rk = 1 ORDER BY 1""".stripMargin,
-    "q277_forecast_accuracy" ->
+        |FROM k WHERE rk = 1 ORDER BY 1""".stripMargin),
+    "q277_forecast_accuracy" -> Query(q277ForecastAccuracy,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6231,8 +6079,8 @@ object Stats {
         |  CAST(sape AS DOUBLE) * 100.0 / CAST(n_buckets AS DOUBLE)
         |    AS mape_pct,
         |  CAST(sae AS DOUBLE) / CAST(sae1 AS DOUBLE) AS mase
-        |FROM agg ORDER BY 1""".stripMargin,
-    "q282_nelson_aalen" ->
+        |FROM agg ORDER BY 1""".stripMargin),
+    "q282_nelson_aalen" -> Query(q282NelsonAalen,
       """WITH lt AS (
         |  SELECT user_id,
         |    (MAX(CAST(epoch_us(ts) AS BIGINT))
@@ -6254,8 +6102,8 @@ object Stats {
         |  FROM inc)
         |SELECT t_days, d, n_at_risk, cum_hazard,
         |  EXP(-cum_hazard) AS s_na
-        |FROM cum ORDER BY t_days""".stripMargin,
-    "q283_lorenz_curve" ->
+        |FROM cum ORDER BY t_days""".stripMargin),
+    "q283_lorenz_curve" -> Query(q283LorenzCurve,
       """WITH spend AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -6280,8 +6128,8 @@ object Stats {
         |  CAST(sc AS DOUBLE) / 100.0 AS spend,
         |  CAST(sc AS DOUBLE) / CAST(total AS DOUBLE) AS share,
         |  CAST(cum AS DOUBLE) / CAST(total AS DOUBLE) AS cum_share
-        |FROM t ORDER BY decile""".stripMargin,
-    "q220_psi_drift" ->
+        |FROM t ORDER BY decile""".stripMargin),
+    "q220_psi_drift" -> Query(q220PsiDrift,
       """WITH mid AS (
         |  SELECT (MIN(CAST(epoch_us(ts) AS BIGINT))
         |    + MAX(CAST(epoch_us(ts) AS BIGINT))) // 2 AS mid
@@ -6335,8 +6183,8 @@ object Stats {
         |  FROM t)
         |SELECT k AS event_type, MIN(na) AS n_ref, MIN(nb) AS n_cur,
         |  CAST(CAST(SUM(term) AS DECIMAL(38,12)) AS DOUBLE) AS psi
-        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q218_revenue_bridge" ->
+        |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q218_revenue_bridge" -> Query(q218RevenueBridge,
       """WITH li AS (
         |  SELECT p.p_brand AS brand, l.l_partkey AS pk,
         |    year(l.l_shipdate) AS yr,
@@ -6376,8 +6224,8 @@ object Stats {
         |    AS new_cents,
         |  CAST(SUM(CASE WHEN q2 IS NULL THEN -rev1 ELSE 0 END) AS BIGINT)
         |    AS discontinued_cents
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q213_rolling_corr" ->
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q213_rolling_corr" -> Query(q213RollingCorr,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6417,8 +6265,8 @@ object Stats {
         |  CASE WHEN d1 > 0 AND d2 > 0 THEN
         |    CAST(num AS DOUBLE) / sqrt(CAST(d1 AS DOUBLE) * CAST(d2 AS DOUBLE))
         |  END AS r
-        |FROM f ORDER BY 1""".stripMargin,
-    "q206_changepoint" ->
+        |FROM f ORDER BY 1""".stripMargin),
+    "q206_changepoint" -> Query(q206Changepoint,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6458,8 +6306,8 @@ object Stats {
         |  (CAST(sn AS DOUBLE) - CAST(st AS DOUBLE))
         |    / (CAST(nb AS DOUBLE) - CAST(t AS DOUBLE)) AS mean_after,
         |  gain
-        |FROM best WHERE rk = 1 ORDER BY 1""".stripMargin,
-    "q204_mix_entropy" ->
+        |FROM best WHERE rk = 1 ORDER BY 1""".stripMargin),
+    "q204_mix_entropy" -> Query(q204MixEntropy,
       """WITH cnt AS (
         |  SELECT user_id AS e, event_type AS c,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -6483,8 +6331,8 @@ object Stats {
         |  CASE WHEN n_cats > 1
         |    THEN CAST(hq AS DOUBLE) / ln(CAST(n_cats AS DOUBLE))
         |    ELSE 0.0 END AS norm_entropy
-        |FROM agg ORDER BY 1""".stripMargin,
-    "q205_interarrival" ->
+        |FROM agg ORDER BY 1""".stripMargin),
+    "q205_interarrival" -> Query(q205Interarrival,
       """WITH g AS (
         |  SELECT event_type AS c,
         |    CAST(epoch_us(ts) AS BIGINT)
@@ -6508,8 +6356,8 @@ object Stats {
         |SELECT event_type, n_gaps, mean_us, sd_us,
         |  sd_us / mean_us AS cv,
         |  (sd_us - mean_us) / (sd_us + mean_us) AS burstiness
-        |FROM f ORDER BY 1""".stripMargin,
-    "q202_weighted_median" ->
+        |FROM f ORDER BY 1""".stripMargin),
+    "q202_weighted_median" -> Query(q202WeightedMedian,
       """WITH perv AS (
         |  SELECT l_returnflag AS g, l_extendedprice AS v,
         |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
@@ -6522,8 +6370,8 @@ object Stats {
         |  FROM perv)
         |SELECT g AS l_returnflag, MIN(v) AS p_value,
         |  MIN(tw) AS total_w_cents
-        |FROM c WHERE cumw * 2 >= tw GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q203_lead_lag" ->
+        |FROM c WHERE cumw * 2 >= tw GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q203_lead_lag" -> Query(q203LeadLag,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6563,8 +6411,8 @@ object Stats {
         |SELECT CAST(lag AS INTEGER) AS lag, n_pairs,
         |  CAST(num AS DOUBLE)
         |    / sqrt(CAST(d1 AS DOUBLE) * CAST(d2 AS DOUBLE)) AS r
-        |FROM f WHERE d1 > 0 AND d2 > 0 ORDER BY 1""".stripMargin,
-    "q199_survival_curve" ->
+        |FROM f WHERE d1 > 0 AND d2 > 0 ORDER BY 1""".stripMargin),
+    "q199_survival_curve" -> Query(q199SurvivalCurve,
       """WITH lt AS (
         |  SELECT user_id,
         |    (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) // 86400000000
@@ -6579,8 +6427,8 @@ object Stats {
         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_survivors,
         |  CAST(SUM(n_t) OVER (ORDER BY t_days DESC
         |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) / n_total AS s
-        |FROM hist, tot ORDER BY t_days""".stripMargin,
-    "q200_group_ols" ->
+        |FROM hist, tot ORDER BY t_days""".stripMargin),
+    "q200_group_ols" -> Query(q200GroupOls,
       """WITH q AS (
         |  SELECT l_returnflag AS g,
         |    CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
@@ -6612,8 +6460,8 @@ object Stats {
         |    AS intercept,
         |  CASE WHEN vy > 0 THEN (CAST(cov AS DOUBLE) * CAST(cov AS DOUBLE))
         |    / (CAST(vx AS DOUBLE) * CAST(vy AS DOUBLE)) END AS r2
-        |FROM f WHERE vx > 0 ORDER BY 1""".stripMargin,
-    "q197_autocorrelation" ->
+        |FROM f WHERE vx > 0 ORDER BY 1""".stripMargin),
+    "q197_autocorrelation" -> Query(q197Autocorrelation,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6650,8 +6498,8 @@ object Stats {
         |SELECT k AS event_type, n_pairs,
         |  CAST(num AS DOUBLE)
         |    / sqrt(CAST(d1 AS DOUBLE) * CAST(d2 AS DOUBLE)) AS r
-        |FROM f WHERE d1 > 0 AND d2 > 0 ORDER BY 1""".stripMargin,
-    "q195_supervised_bins" ->
+        |FROM f WHERE d1 > 0 AND d2 > 0 ORDER BY 1""".stripMargin),
+    "q195_supervised_bins" -> Query(q195SupervisedBins,
       """WITH cuts AS (
         |  SELECT quantile_cont(l_extendedprice, 0.1) AS c1,
         |    quantile_cont(l_extendedprice, 0.2) AS c2,
@@ -6682,16 +6530,16 @@ object Stats {
         |  CAST(SUM(pos) AS BIGINT) AS n_pos,
         |  CAST(SUM(pos) AS DOUBLE) / COUNT(*) AS pos_rate,
         |  MIN(v) AS v_min, MAX(v) AS v_max
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q193_percentile_series" ->
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q193_percentile_series" -> Query(q193PercentileSeries,
       """SELECT event_type,
         |  (CAST(epoch_us(ts) AS BIGINT) // 21600000000) * 21600
         |    AS bucket_epoch,
         |  CAST(COUNT(*) AS BIGINT) AS n,
         |  quantile_cont(value, 0.5) AS p50,
         |  quantile_cont(value, 0.95) AS p95
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q190_seasonal_naive" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q190_seasonal_naive" -> Query(q190SeasonalNaive,
       """WITH buck AS (
         |  SELECT event_type AS k,
         |    CAST(epoch_us(ts) AS BIGINT) // 3600000000 AS b,
@@ -6704,8 +6552,8 @@ object Stats {
         |  CAST(SUM(ABS(a.n - f.n)) AS DOUBLE) / COUNT(*) AS mae,
         |  CAST(SUM(a.n - f.n) AS DOUBLE) / COUNT(*) AS bias
         |FROM buck a JOIN buck f ON a.k = f.k AND f.b = a.b - 24
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q191_threshold_crossing" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q191_threshold_crossing" -> Query(q191ThresholdCrossing,
       """WITH r AS (
         |  SELECT l_partkey, l_shipdate, l_orderkey, l_linenumber,
         |    CAST(SUM(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
@@ -6718,8 +6566,8 @@ object Stats {
         |    ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn
         |  FROM r WHERE cum_cents >= 50000)
         |SELECT l_partkey, l_shipdate AS cross_at, cum_cents
-        |FROM f WHERE rn = 1 ORDER BY l_partkey""".stripMargin,
-    "q192_rank_migration" ->
+        |FROM f WHERE rn = 1 ORDER BY l_partkey""".stripMargin),
+    "q192_rank_migration" -> Query(q192RankMigration,
       """WITH per AS (
         |  SELECT l_partkey AS item,
         |    year(l_shipdate) * 4 + quarter(l_shipdate) - 1 AS yq,
@@ -6735,8 +6583,8 @@ object Stats {
         |FROM ranked a JOIN ranked b
         |  ON a.item = b.item AND a.yq = b.yq + 1
         |ORDER BY ABS(b.rnk - a.rnk) DESC, a.item, a.yq
-        |LIMIT 25""".stripMargin,
-    "q186_abc_classes" ->
+        |LIMIT 25""".stripMargin),
+    "q186_abc_classes" -> Query(q186Abc,
       """WITH per AS (
         |  SELECT l_partkey AS item,
         |    CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -6761,8 +6609,8 @@ object Stats {
         |  FROM classed GROUP BY abc_class)
         |SELECT abc_class, n_items, revenue,
         |  revenue / SUM(revenue) OVER () AS share_of_total
-        |FROM agg ORDER BY abc_class""".stripMargin,
-    "q187_ma_crossover" ->
+        |FROM agg ORDER BY abc_class""".stripMargin),
+    "q187_ma_crossover" -> Query(q187MaCross,
       """WITH daily AS (
         |  SELECT CAST(epoch_us(ts) AS BIGINT) // 86400000000 AS b,
         |    CAST(COUNT(*) AS BIGINT) AS n
@@ -6787,9 +6635,9 @@ object Stats {
         |  CAST(ss AS DOUBLE) / CAST(cs AS DOUBLE) AS ma_short,
         |  CAST(sl AS DOUBLE) / CAST(cl AS DOUBLE) AS ma_long
         |FROM sig WHERE prev IS NOT NULL AND prev <> above
-        |ORDER BY bucket_epoch""".stripMargin,
+        |ORDER BY bucket_epoch""".stripMargin),
     // full r×c grid (zero cells included), same quantized term shape
-    "q166_chi_square" ->
+    "q166_chi_square" -> Query(q166ChiSquare,
       """WITH obs AS (
         |  SELECT l_returnflag AS a, l_linestatus AS b,
         |    CAST(COUNT(*) AS BIGINT) AS o
@@ -6816,8 +6664,8 @@ object Stats {
         |  sqrt(CAST(SUM(term) AS DOUBLE) / (CAST(MAX(n) AS DOUBLE) *
         |    CAST(LEAST(COUNT(DISTINCT a), COUNT(DISTINCT b)) - 1 AS DOUBLE)))
         |    AS cramers_v
-        |FROM terms""".stripMargin,
-    "q167_equidepth_hist" ->
+        |FROM terms""".stripMargin),
+    "q167_equidepth_hist" -> Query(q167EquidepthHist,
       """WITH t AS (
         |  SELECT l_returnflag, l_extendedprice,
         |    ntile(8) OVER (PARTITION BY l_returnflag
@@ -6826,8 +6674,8 @@ object Stats {
         |SELECT l_returnflag, CAST(bucket AS BIGINT) AS bucket,
         |  MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi,
         |  CAST(COUNT(*) AS BIGINT) AS n
-        |FROM t GROUP BY 1, 2 ORDER BY l_returnflag, bucket""".stripMargin,
-    "q168_ab_test" ->
+        |FROM t GROUP BY 1, 2 ORDER BY l_returnflag, bucket""".stripMargin),
+    "q168_ab_test" -> Query(q168AbTest,
       """WITH u AS (
         |  SELECT user_id,
         |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >
@@ -6858,15 +6706,15 @@ object Stats {
         |      * (1.0 - CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
         |      * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
         |    AS DECIMAL(20,12)) AS DOUBLE) AS z
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
     // prefix closed form of the max(0, ·) fold, S⁺ = P − min(0, run-min P),
     // in exact integer micro-units; HUGEINT // = Spark's div (truncating)
-    "q169_cusum" -> cusumSql,
+    "q169_cusum" -> Query(q169Cusum, cusumSql),
     // the state fold and the closed form must produce identical reports —
     // same oracle as q169 by construction
-    "q174_cusum_state" -> cusumSql,
+    "q174_cusum_state" -> Query(q174CusumState, cusumSql),
     // same total (metric, custkey) ntile orders, centi-exact spend
-    "q175_rfm" ->
+    "q175_rfm" -> Query(q175Rfm,
       """WITH per AS (
         |  SELECT o_custkey AS cust,
         |    MAX(epoch_us(o_orderdate)) AS last_us,
@@ -6883,9 +6731,9 @@ object Stats {
         |SELECT CAST(r AS INT) AS r, CAST(f AS INT) AS f, CAST(m AS INT) AS m,
         |  CAST(COUNT(*) AS BIGINT) AS n_customers,
         |  CAST(SUM(spend_c) AS DOUBLE) / 100.0 AS total_spend
-        |FROM scored GROUP BY r, f, m ORDER BY r, f, m""".stripMargin,
+        |FROM scored GROUP BY r, f, m ORDER BY r, f, m""".stripMargin),
     // same rank window and closed form on exact centi-longs
-    "q176_gini" ->
+    "q176_gini" -> Query(q176Gini,
       """WITH spend AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -6907,8 +6755,8 @@ object Stats {
         |SELECT c_nationkey, n,
         |  CAST(2 * six - (n + 1) * sx AS DOUBLE) / CAST(n * sx AS DOUBLE)
         |    AS gini
-        |FROM agg ORDER BY c_nationkey""".stripMargin,
-    "q360_chow_test" ->
+        |FROM agg ORDER BY c_nationkey""".stripMargin),
+    "q360_chow_test" -> Query(q360ChowTest,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7007,8 +6855,8 @@ object Stats {
         |    THEN ((rssp - (rss1 + rss2)) / 2.0)
         |      / ((rss1 + rss2) / CAST(n1 + n2 - 4 AS DOUBLE)) END
         |    AS f_chow
-        |FROM r ORDER BY 1""".stripMargin,
-    "q361_kde_grid" ->
+        |FROM r ORDER BY 1""".stripMargin),
+    "q361_kde_grid" -> Query(q361KdeGrid,
       """WITH hist AS (
         |  SELECT event_type AS g,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc,
@@ -7029,8 +6877,8 @@ object Stats {
         |  CAST(CAST(SUM(term) AS DECIMAL(38,15)) AS DOUBLE)
         |    / (CAST(CAST(SUM(cnt) AS BIGINT) AS DOUBLE) * 25.0
         |      * sqrt(2 * pi())) AS density
-        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q362_croston" ->
+        |FROM terms GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q362_croston" -> Query(q362Croston,
       """WITH RECURSIVE occ AS (
         |  SELECT l_partkey AS k,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7055,8 +6903,8 @@ object Stats {
         |  FROM rec r JOIN seq s ON s.k = r.k AND s.rn = r.rn + 1)
         |SELECT k AS l_partkey, d, x AS demand_c, z AS z_c, p AS p_days,
         |  CAST(z AS DOUBLE) / 100.0 / CAST(p AS DOUBLE) AS forecast
-        |FROM rec ORDER BY 1, 2""".stripMargin,
-    "q363_engle_granger" ->
+        |FROM rec ORDER BY 1, 2""".stripMargin),
+    "q363_engle_granger" -> Query(q363EngleGranger,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7138,8 +6986,8 @@ object Stats {
         |SELECT ga AS g_x, gb AS g_y, n_days, alpha, beta, gamma,
         |  gamma / SQRT(sse / CAST(mm - 2 AS DOUBLE) * CAST(mm AS DOUBLE)
         |    / CAST(vx2 AS DOUBLE)) AS t_eg
-        |FROM ff ORDER BY 1, 2""".stripMargin,
-    "q365_gumbel_maxima" ->
+        |FROM ff ORDER BY 1, 2""".stripMargin),
+    "q365_gumbel_maxima" -> Query(q365GumbelMaxima,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT)
@@ -7175,8 +7023,8 @@ object Stats {
         |  beta / 100.0 AS gumbel_beta, mu / 100.0 AS gumbel_mu,
         |  (mu - beta * ln(-ln(1.0 - 1.0 / 12.0))) / 100.0 AS rl_12,
         |  (mu - beta * ln(-ln(1.0 - 1.0 / 60.0))) / 100.0 AS rl_60
-        |FROM q ORDER BY 1""".stripMargin,
-    "q366_grid_dbscan" ->
+        |FROM q ORDER BY 1""".stripMargin),
+    "q366_grid_dbscan" -> Query(q366GridDbscan,
       """WITH RECURSIVE tot AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS nt FROM events),
         |pts AS (
@@ -7213,8 +7061,8 @@ object Stats {
         |  CAST(MIN(cx) AS BIGINT) AS cx_lo, CAST(MAX(cx) AS BIGINT) AS cx_hi,
         |  CAST(MIN(cy) AS BIGINT) AS cy_lo, CAST(MAX(cy) AS BIGINT) AS cy_hi
         |FROM core JOIN comp USING (id)
-        |GROUP BY comp ORDER BY cluster_id""".stripMargin,
-    "q372_loess_grid" ->
+        |GROUP BY comp ORDER BY cluster_id""".stripMargin),
+    "q372_loess_grid" -> Query(q372LoessGrid,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7265,8 +7113,8 @@ object Stats {
         |        / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
         |          - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)))
         |        * CAST(x0 AS DOUBLE)) / 100.0 END AS yhat
-        |FROM m WHERE n_local >= 3 ORDER BY 1, 2""".stripMargin,
-    "q375_dispersion" ->
+        |FROM m WHERE n_local >= 3 ORDER BY 1, 2""".stripMargin),
+    "q375_dispersion" -> Query(q375Dispersion,
       """WITH daily AS (
         |  SELECT event_type AS g,
         |    CAST(datediff('day', DATE '1992-01-01', CAST(ts AS DATE))
@@ -7300,8 +7148,8 @@ object Stats {
         |SELECT g AS event_type, n AS n_days, mean AS mean_per_day,
         |  varr AS var_per_day, varr / mean AS dispersion,
         |  CAST(n - 1 AS DOUBLE) * (varr / mean) AS chi2
-        |FROM f ORDER BY 1""".stripMargin,
-    "q377_frequency_movers" ->
+        |FROM f ORDER BY 1""".stripMargin),
+    "q377_frequency_movers" -> Query(q377FrequencyMovers,
       """WITH c AS (
         |  SELECT l_partkey AS k,
         |    CAST(SUM(CASE WHEN datediff('day', DATE '1992-01-01',
@@ -7323,8 +7171,8 @@ object Stats {
         |      AS z
         |  FROM c CROSS JOIN t WHERE n1 + n2 > 0)
         |SELECT k AS l_partkey, n1 AS n_early, n2 AS n_late, z
-        |FROM z WHERE abs(z) >= 3.0 ORDER BY 1""".stripMargin,
-    "q378_newey_west" ->
+        |FROM z WHERE abs(z) >= 3.0 ORDER BY 1""".stripMargin),
+    "q378_newey_west" -> Query(q378NeweyWest,
       """WITH daily AS (
         |  SELECT l_returnflag AS g,
         |    CAST(datediff('day', DATE '1992-01-01', l_shipdate)
@@ -7405,8 +7253,8 @@ object Stats {
         |  FROM vm)
         |SELECT g AS l_returnflag, n AS n_days, b AS slope, se_nw,
         |  b / se_nw AS t_nw
-        |FROM fin ORDER BY 1""".stripMargin,
-    "q379_quantile_shift" ->
+        |FROM fin ORDER BY 1""".stripMargin),
+    "q379_quantile_shift" -> Query(q379QuantileShift,
       """WITH base AS (
         |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
         |      AS BIGINT) AS vc,
@@ -7435,8 +7283,8 @@ object Stats {
         |  CAST(l.q - e.q AS DOUBLE) / CAST(e.q AS DOUBLE) AS shift_frac
         |FROM (SELECT d, q FROM quant WHERE h = 0) e
         |JOIN (SELECT d, q FROM quant WHERE h = 1) l USING (d)
-        |ORDER BY decile""".stripMargin,
-    "q381_exponential_hazard" ->
+        |ORDER BY decile""".stripMargin),
+    "q381_exponential_hazard" -> Query(q381ExponentialHazard,
       """WITH per AS (
         |  SELECT o_custkey AS c,
         |    CAST(MIN(datediff('day', DATE '1992-01-01', o_orderdate))
@@ -7474,8 +7322,8 @@ object Stats {
         |    * exp(1.96 / sqrt(CAST(n_churned AS DOUBLE))) AS hr_ci_hi
         |FROM bseg CROSS JOIN tall
         |WHERE n_churned > 0 AND exposure_days > 0
-        |ORDER BY seg""".stripMargin,
-    "q386_herfindahl" ->
+        |ORDER BY seg""".stripMargin),
+    "q386_herfindahl" -> Query(q386Herfindahl,
       """WITH cells AS (
         |  SELECT s.s_nationkey AS mkt, l.l_suppkey AS mem,
         |    CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
@@ -7495,8 +7343,8 @@ object Stats {
         |  GROUP BY 1, 2)
         |SELECT mkt AS s_nationkey, n_members, CAST(hhi AS DOUBLE) AS hhi,
         |  1.0 / CAST(hhi AS DOUBLE) AS effective_members
-        |FROM h ORDER BY 1""".stripMargin,
-    "q387_coverage_counts" ->
+        |FROM h ORDER BY 1""".stripMargin),
+    "q387_coverage_counts" -> Query(q387CoverageCounts,
       """WITH cells AS (
         |  SELECT s.s_nationkey AS mkt, l.l_suppkey AS mem,
         |    CAST(SUM(CAST(CAST(l.l_extendedprice AS DECIMAL(18,2)) * 100
@@ -7518,9 +7366,9 @@ object Stats {
         |    AS n80,
         |  CAST(MIN(CASE WHEN cum * 100 >= 95 * t THEN rk END) AS BIGINT)
         |    AS n95
-        |FROM cum WHERE t > 0 GROUP BY 1 ORDER BY 1""".stripMargin)
+        |FROM cum WHERE t > 0 GROUP BY 1 ORDER BY 1""".stripMargin))
 
-  // lazy: referenced by `oracles` above in object-initialization order
+  // lazy: referenced by `declared` above in object-initialization order
   private lazy val cusumSql: String =
       """WITH e AS (
         |  SELECT event_type, event_id, epoch_us(ts) AS us,

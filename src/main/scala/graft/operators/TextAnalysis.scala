@@ -463,7 +463,6 @@ object TextAnalysis {
   def negativeSamplingTable(docs: DataFrame, textCol: String,
       nDraws: Int, topK: Int): DataFrame = {
     require(nDraws >= 1 && topK >= 1, s"bad args: $nDraws $topK")
-    val dd = (c: Column) => c.cast("double")
     val vocab = docs.select(explode(tokens(col(textCol))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
       .withColumn("w", floor(lit(1e6) *
@@ -1351,7 +1350,6 @@ object TextAnalysis {
     * sub-ulp libm differences — then exact decimal moments, double
     * finish). */
   def heapsLaw(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val tok = docs.select(col(idCol).cast("long").as("d"),
       explode(tokens(col(textCol))).as("term"))
     val perDoc = tok.groupBy("d").agg(count(lit(1)).as("nt"))
@@ -1400,7 +1398,6 @@ object TextAnalysis {
     * move), so no self-join ever touches the corpus. */
   def lexicalDiversity(docs: DataFrame, langCol: String,
       textCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     val base = docs.select(col(langCol).as("lang"),
       tokens(col(textCol)).as("ts"))
     val uni = base.select(col("lang"), explode(col("ts")).as("t"))
@@ -1450,7 +1447,6 @@ object TextAnalysis {
     * 1-row reduction over the frequency spectrum — the same two-shuffle
     * funnel as a word count; nothing is ordered and nothing collects. */
   def vocabCoverage(docs: DataFrame, textCol: String): DataFrame = {
-    val dd = (c: Column) => c.cast("double")
     docs.select(explode(tokens(col(textCol))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
       .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_vocab"),
@@ -1500,7 +1496,6 @@ object TextAnalysis {
   def knBigramCrossEntropy(docs: DataFrame, sliceCol: String,
       idCol: String, textCol: String, holdoutMod: Int): DataFrame = {
     require(holdoutMod >= 2, s"holdoutMod must be >= 2: $holdoutMod")
-    val dd = (c: Column) => c.cast("double")
     val D = lit(0.75)
     val base = docs
       .select(col(sliceCol).as("lg"), col(idCol).as("id"),
@@ -1581,7 +1576,6 @@ object TextAnalysis {
   def burrowsDelta(docs: DataFrame, sliceCol: String, textCol: String,
       topM: Int): DataFrame = {
     require(topM >= 1, s"topM must be positive: $topM")
-    val dd = (c: Column) => c.cast("double")
     val counts = docs
       .select(col(sliceCol).as("s"), explode(tokens(col(textCol))).as("t"))
       .groupBy("s", "t").agg(count(lit(1)).as("c"))
@@ -1622,42 +1616,6 @@ object TextAnalysis {
     * the top-50 corpus terms, all source pairs. */
   def q426BurrowsDelta(spark: SparkSession, dir: String): DataFrame =
     burrowsDelta(Tables.documents(spark, dir), "source", "text", topM = 50)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q426_burrows_delta" -> (q426BurrowsDelta _),
-    "q428_kn_cross_entropy" -> (q428KnCrossEntropy _),
-    "q415_vocab_coverage" -> (q415VocabCoverage _),
-    "q394_heaps_law" -> (q394HeapsLaw _),
-    "q395_lexical_diversity" -> (q395LexicalDiversity _),
-    "q382_truncation_loss" -> (q382TruncationLoss _),
-    "q374_unigram_lm" -> (q374UnigramLm _),
-    "q371_textrank" -> (q371TextRank _),
-    "q337_bpe_train" -> (q337BpeTrain _),
-    "q338_bpe_fertility" -> (q338BpeFertility _),
-    "q173_ngram_novelty" -> (q173NgramNovelty _),
-    "q155_collocations" -> (q155Collocations _),
-    "q131_phrase_search" -> (q131PhraseSearch _),
-    "q132_distinctive_terms" -> (q132DistinctiveTerms _),
-    "q80_gopher_quality" -> (q80GopherQuality _),
-    "q82_pii_scrub" -> (q82PiiScrub _),
-    "q87_chunk_documents" -> (q87ChunkDocuments _),
-    "q108_corpus_profile" -> (q108CorpusProfile _),
-    "q89_pack_sequences" -> (q89PackSequences _),
-    "q90_bm25_search" -> (q90Bm25Search _),
-    "q91_assemble_sequences" -> (q91AssembleSequences _),
-    "q48_top_terms" -> (q48TopTerms _),
-    "q353_negative_sampling" -> (q353NegativeSampling _),
-    "q49_top_bigrams" -> (q49TopBigrams _),
-    "q99_lm_perplexity" -> (q99LmPerplexity _),
-    "q102_tfidf_nearest" -> (q102TfidfNearest _),
-    "q115_tfidf_all_pairs_topk" -> (q115TfidfAllPairsTopK _),
-    "q41_token_count" -> (q41TokenCount _),
-    "q42_text_quality" -> (q42TextQuality _),
-    "q43_langid" -> (q43LangId _),
-    "q44_fingerprint_dedup" -> (q44FingerprintDedup _),
-    "q74_repetition_metrics" -> (q74RepetitionMetrics _),
-    "q212_lexical_diversity" -> (q212LexicalDiversity _),
-    "q215_readability" -> (q215Readability _))
 
   /** DuckDB twin of [[graft.functions.LangId]] + [[graft.functions.QualityScore]],
     * generated from the same [[stopwords]] tables so the two can never drift:
@@ -1767,8 +1725,8 @@ object TextAnalysis {
        |    AS s
        |  FROM c${k - 1} CROSS JOIN b$k b)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q428_kn_cross_entropy" ->
+  val declared: Map[String, Query] = Map(
+    "q428_kn_cross_entropy" -> Query(q428KnCrossEntropy,
       """WITH toks AS (
         |  SELECT lang AS lg, doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
@@ -1822,8 +1780,8 @@ object TextAnalysis {
         |  CAST(SUM(CAST(-CAST(m AS DOUBLE) * ln(p) AS DECIMAL(38,12)))
         |      AS DOUBLE)
         |    / CAST(SUM(m) AS DOUBLE) AS cross_entropy_nats
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q426_burrows_delta" ->
+        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin),
+    "q426_burrows_delta" -> Query(q426BurrowsDelta,
       """WITH counts AS (
         |  SELECT s, t, CAST(COUNT(*) AS BIGINT) AS c FROM (
         |    SELECT source AS s, unnest(list_filter(
@@ -1866,8 +1824,8 @@ object TextAnalysis {
         |SELECT slice_a, slice_b,
         |  CAST(COUNT(*) AS BIGINT) AS n_terms_used,
         |  CAST(SUM(term) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS delta
-        |FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q415_vocab_coverage" ->
+        |FROM pairs GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    "q415_vocab_coverage" -> Query(q415VocabCoverage,
       """WITH tf AS (
         |  SELECT t, COUNT(*) AS c FROM (
         |    SELECT unnest(list_filter(
@@ -1886,8 +1844,8 @@ object TextAnalysis {
         |    CAST(SUM(c) AS DOUBLE) AS gt_unseen_mass,
         |  1.0 - CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) /
         |    CAST(SUM(c) AS DOUBLE) AS gt_coverage
-        |FROM tf""".stripMargin,
-    "q394_heaps_law" ->
+        |FROM tf""".stripMargin),
+    "q394_heaps_law" -> Query(q394HeapsLaw,
       """WITH tok AS (
         |  SELECT doc_id AS d,
         |    unnest(list_filter(regexp_split_to_array(text, '\s+'),
@@ -1939,8 +1897,8 @@ object TextAnalysis {
         |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |  * (CAST(n_docs AS DOUBLE) * CAST(syy AS DOUBLE)
         |    - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS r2
-        |FROM m""".stripMargin,
-    "q395_lexical_diversity" ->
+        |FROM m""".stripMargin),
+    "q395_lexical_diversity" -> Query(q395LexicalDiversity,
       """WITH base AS (
         |  SELECT lang,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')
@@ -1979,8 +1937,8 @@ object TextAnalysis {
         |  END AS distinct2
         |FROM nd n JOIN uni u ON n.lang = u.lang
         |LEFT JOIN bg b ON n.lang = b.lang
-        |ORDER BY 1""".stripMargin,
-    "q337_bpe_train" ->
+        |ORDER BY 1""".stripMargin),
+    "q337_bpe_train" -> Query(q337BpeTrain,
       ("""WITH c0 AS MATERIALIZED (
         |  SELECT doc_id AS d,
         |    ' ' || regexp_replace(regexp_replace(
@@ -1992,9 +1950,9 @@ object TextAnalysis {
           s"""SELECT CAST($k AS BIGINT) AS round, t1 AS left_tok,
              |  t2 AS right_tok, t1 || t2 AS merged_tok, n AS pair_count
              |FROM b$k""".stripMargin)
-          .mkString("", "\nUNION ALL\n", "\nORDER BY round")),
+          .mkString("", "\nUNION ALL\n", "\nORDER BY round"))),
     // same merge chain, then pure integer token/vocab counts per round
-    "q338_bpe_fertility" ->
+    "q338_bpe_fertility" -> Query(q338BpeFertility,
       ("""WITH c0 AS MATERIALIZED (
         |  SELECT doc_id AS d,
         |    ' ' || regexp_replace(regexp_replace(
@@ -2012,9 +1970,9 @@ object TextAnalysis {
              |    AS tokens_per_doc
              |FROM (SELECT unnest(list_filter(string_split(s, ' '),
              |  x -> x <> '')) AS t FROM c$k)""".stripMargin)
-          .mkString("", "\nUNION ALL\n", "\nORDER BY round")),
+          .mkString("", "\nUNION ALL\n", "\nORDER BY round"))),
     // same token/sentence/vowel-group heuristics in DuckDB list functions
-    "q215_readability" ->
+    "q215_readability" -> Query(q215Readability,
       """WITH d AS (
         |  SELECT lang,
         |    list_filter(regexp_split_to_array(text, '\s+'),
@@ -2042,9 +2000,9 @@ object TextAnalysis {
         |    AS syllables_per_word,
         |  CAST(CAST(SUM(CAST(flesch AS DECIMAL(38,12))) AS DECIMAL(38,12))
         |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_flesch
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
     // the q48 tokenizer + the q204 entropy quantization ladder
-    "q212_lexical_diversity" ->
+    "q212_lexical_diversity" -> Query(q212LexicalDiversity,
       """WITH toks AS (
         |  SELECT lang, unnest(list_filter(
         |    regexp_split_to_array(text, '\s+'), x -> x <> '')) AS term
@@ -2075,10 +2033,10 @@ object TextAnalysis {
         |  CASE WHEN n_types > 1
         |    THEN CAST(hq AS DOUBLE) / ln(CAST(n_types AS DOUBLE))
         |    ELSE 0.0 END AS norm_entropy
-        |FROM agg ORDER BY 1""".stripMargin,
+        |FROM agg ORDER BY 1""".stripMargin),
     // distinct 3-gram windows per doc (whole text when < 3 tokens — the
     // q81 convention), corpus df per window, df = 1 ⇒ novel
-    "q173_ngram_novelty" ->
+    "q173_ngram_novelty" -> Query(q173NgramNovelty,
       """WITH t AS (
         |  SELECT doc_id,
         |    CASE WHEN len(ts) < 3 THEN [array_to_string(ts, ' ')]
@@ -2097,10 +2055,10 @@ object TextAnalysis {
         |  FROM wn JOIN dfc USING (w) GROUP BY wn.doc_id)
         |SELECT doc_id, n_grams, n_unique,
         |  CAST(n_unique AS DOUBLE) / CAST(n_grams AS DOUBLE) AS novelty
-        |FROM per ORDER BY doc_id""".stripMargin,
+        |FROM per ORDER BY doc_id""".stripMargin),
     // 1-based list comprehension: range(1, len) pairs tl[i] with tl[i+1]
     // and is empty for docs under 2 tokens; identical PMI expression shape
-    "q155_collocations" ->
+    "q155_collocations" -> Query(q155Collocations,
       """WITH d AS (
         |  SELECT list_filter(string_split_regex(text, '\s+'),
         |    t -> t <> '') AS tl FROM documents),
@@ -2121,8 +2079,8 @@ object TextAnalysis {
         |    / (CAST(tot.n2 AS DOUBLE) * u1.c * u2.c)) AS pmi
         |FROM big JOIN uni u1 ON big.p1 = u1.t
         |  JOIN uni u2 ON big.p2 = u2.t CROSS JOIN tot
-        |ORDER BY n DESC, bigram LIMIT 50""".stripMargin,
-    "q132_distinctive_terms" ->
+        |ORDER BY n DESC, bigram LIMIT 50""".stripMargin),
+    "q132_distinctive_terms" -> Query(q132DistinctiveTerms,
       """WITH toks AS (
         |  SELECT lang AS g, u.tok AS term
         |  FROM documents, unnest(list_filter(
@@ -2142,10 +2100,10 @@ object TextAnalysis {
         |    ORDER BY ratio DESC, term) AS BIGINT) AS rank,
         |  term, n_gt, ratio
         |FROM scored QUALIFY rank <= 5
-        |ORDER BY lang, rank""".stripMargin,
+        |ORDER BY lang, rank""".stripMargin),
     // positional postings via an indexed list_transform (1-based there,
     // 0-based in Spark's posexplode — the self-join offsets cancel it out)
-    "q131_phrase_search" ->
+    "q131_phrase_search" -> Query(q131PhraseSearch,
       """WITH d AS (
         |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'),
         |    t -> t <> '') AS l
@@ -2157,8 +2115,8 @@ object TextAnalysis {
         |p AS (SELECT doc_id, pos FROM toks WHERE tok = 'table')
         |SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches
         |FROM p a JOIN p b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin,
-    "q89_pack_sequences" ->
+        |GROUP BY a.doc_id ORDER BY a.doc_id""".stripMargin),
+    "q89_pack_sequences" -> Query(q89PackSequences,
       """WITH h AS (
         |  SELECT doc_id, lang,
         |    len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS n_tokens,
@@ -2182,9 +2140,9 @@ object TextAnalysis {
         |SELECT stream, shard, doc_id, n_tokens, tok_start,
         |  tok_start // 256 AS seq_first,
         |  (tok_start + n_tokens - 1) // 256 AS seq_last
-        |FROM c ORDER BY stream, shard, doc_id""".stripMargin,
-    "q90_bm25_search" -> q90OracleSql,
-    "q91_assemble_sequences" ->
+        |FROM c ORDER BY stream, shard, doc_id""".stripMargin),
+    "q90_bm25_search" -> Query(q90Bm25Search, q90OracleSql),
+    "q91_assemble_sequences" -> Query(q91AssembleSequences,
       """WITH h AS (
         |  SELECT doc_id, lang,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts,
@@ -2220,8 +2178,8 @@ object TextAnalysis {
         |  CAST(SUM(len(part)) AS BIGINT) AS seq_len,
         |  string_agg(array_to_string(part, ' '), ' ' ORDER BY tok_start) AS seq_text
         |FROM x GROUP BY stream, shard, seq_id
-        |ORDER BY stream, shard, seq_id""".stripMargin,
-    "q87_chunk_documents" ->
+        |ORDER BY stream, shard, seq_id""".stripMargin),
+    "q87_chunk_documents" -> Query(q87ChunkDocuments,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
@@ -2235,9 +2193,9 @@ object TextAnalysis {
         |    AS chunk_len,
         |  array_to_string(list_slice(ts, chunk_start + 1, chunk_start + 64), ' ')
         |    AS chunk_text
-        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
+        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin),
     // every rule recomputed from first principles; strict hash gate
-    "q80_gopher_quality" ->
+    "q80_gopher_quality" -> Query(q80GopherQuality,
       s"""WITH t AS (
         |  SELECT doc_id, text,
         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS ts,
@@ -2282,20 +2240,20 @@ object TextAnalysis {
         |    AND symbol_ratio <= 0.1 AND alpha_word_frac >= 0.9 AND n_stop_hits >= 2
         |    AND bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3
         |    AS gopher_quality_ok
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q43_langid" -> q43OracleSql,
+        |FROM m ORDER BY doc_id""".stripMargin),
+    "q43_langid" -> Query(q43LangId, q43OracleSql),
     // verbatim redaction equality: same portable patterns, 'g' to match
     // Spark's replace-all semantics
-    "q82_pii_scrub" ->
+    "q82_pii_scrub" -> Query(q82PiiScrub,
       s"""SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '$EmailPattern')) AS BIGINT) AS n_emails,
         |  CAST(len(regexp_extract_all(text, '$Ipv4Pattern')) AS BIGINT) AS n_ips,
         |  regexp_replace(regexp_replace(text, '$EmailPattern', '<EMAIL>', 'g'),
         |    '$Ipv4Pattern', '<IP>', 'g') AS redacted
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // exact metrics -> strict hash gate; argmax tie-break (c DESC, gram ASC)
     // mirrors the Spark min_by over (-c, gram)
-    "q74_repetition_metrics" ->
+    "q74_repetition_metrics" -> Query(q74RepetitionMetrics,
       """WITH toks AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
         |  FROM documents),
@@ -2327,8 +2285,8 @@ object TextAnalysis {
         |  CAST(t2.c * (len(t2.g) - 1) AS DOUBLE) / CAST(b.n_token_chars AS DOUBLE) <= 0.2 AS gopher_ok
         |FROM base b
         |JOIN top1 t1 USING (doc_id) JOIN top2 t2 USING (doc_id) JOIN adj a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q353_negative_sampling" ->
+        |ORDER BY doc_id""".stripMargin),
+    "q353_negative_sampling" -> Query(q353NegativeSampling,
       """WITH toks AS (
         |  SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
         |    x -> x <> '')) AS t
@@ -2362,8 +2320,8 @@ object TextAnalysis {
         |  CAST(MAX(w) AS DOUBLE) / CAST((SELECT tw FROM tot) AS DOUBLE)
         |    AS weight_share
         |FROM sel GROUP BY t
-        |ORDER BY n_sampled DESC, token LIMIT 50""".stripMargin,
-    "q48_top_terms" ->
+        |ORDER BY n_sampled DESC, token LIMIT 50""".stripMargin),
+    "q48_top_terms" -> Query(q48TopTerms,
       """WITH toks AS (
         |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS term
         |  FROM documents),
@@ -2374,10 +2332,10 @@ object TextAnalysis {
         |    CAST(ROW_NUMBER() OVER (PARTITION BY tf.doc_id
         |      ORDER BY tf.tf DESC, df.df, tf.term) AS BIGINT) AS rank
         |  FROM tf JOIN df ON tf.term = df.term WHERE tf.doc_id < 30) t
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
     // every datasheet column recomputed from first principles: counts,
     // continuous quantiles, sorted-token canonical duplicates, PII regexes
-    "q108_corpus_profile" ->
+    "q108_corpus_profile" -> Query(q108CorpusProfile,
       s"""WITH d AS (
         |  SELECT lang,
         |    len(list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS nt,
@@ -2392,11 +2350,11 @@ object TextAnalysis {
         |  quantile_cont(nt, 0.95) AS p95_tokens,
         |  COUNT(*) - COUNT(DISTINCT canon) AS n_dup_docs,
         |  CAST(SUM(CASE WHEN has_pii THEN 1 ELSE 0 END) AS BIGINT) AS n_pii_docs
-        |FROM d GROUP BY lang ORDER BY lang""".stripMargin,
+        |FROM d GROUP BY lang ORDER BY lang""".stripMargin),
     // vectors, postings join, and rounded argmax refit from scratch:
     // same df cutoff, same per-posting normalization, same 6-dp rounding
     // BEFORE the argmax, same (sim DESC, id ASC) tie-break
-    "q102_tfidf_nearest" ->
+    "q102_tfidf_nearest" -> Query(q102TfidfNearest,
       """WITH toks AS (
         |  SELECT doc_id AS id, unnest(list_filter(
         |    regexp_split_to_array(text, '\s+'), x -> x <> '')) AS t
@@ -2422,12 +2380,12 @@ object TextAnalysis {
         |  SELECT id_a, id_b, sim,
         |    ROW_NUMBER() OVER (PARTITION BY id_a ORDER BY sim DESC, id_b) AS rn
         |  FROM pairs)
-        |SELECT id_a, id_b, sim FROM ranked WHERE rn = 1 ORDER BY id_a""".stripMargin,
+        |SELECT id_a, id_b, sim FROM ranked WHERE rn = 1 ORDER BY id_a""".stripMargin),
     // full rebuild of the trigram-shingle tf-idf vectors (q49's shingle
     // convention: a <k-token doc contributes its whole token string as one
     // shingle), BOTH posting cutoffs (df <= 0.5*N, df <= 4096), norms,
     // pair sums, and the decimal-rounded per-doc top-3 — strict hash gate
-    "q115_tfidf_all_pairs_topk" ->
+    "q115_tfidf_all_pairs_topk" -> Query(q115TfidfAllPairsTopK,
       """WITH toksArr AS (
         |  SELECT doc_id AS id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
@@ -2459,10 +2417,10 @@ object TextAnalysis {
         |    CAST(ROW_NUMBER() OVER (PARTITION BY id_a ORDER BY sim DESC, id_b) AS BIGINT) AS rank
         |  FROM pairs)
         |SELECT id_a, rank, id_b, sim FROM ranked WHERE rank <= 3
-        |ORDER BY id_a, rank""".stripMargin,
+        |ORDER BY id_a, rank""".stripMargin),
     // identical smoothed bigram MLE refit from scratch: same >= 2-token
     // filter, same add-one smoothing, same vocabulary, same 6-dp rounding
-    "q99_lm_perplexity" ->
+    "q99_lm_perplexity" -> Query(q99LmPerplexity,
       """WITH t AS (
         |  SELECT doc_id,
         |    list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
@@ -2483,8 +2441,8 @@ object TextAnalysis {
         |SELECT doc_id, COUNT(*) AS n_bigrams,
         |  CAST(CAST(AVG(-LN((c + 1.0) / (c1 + v)) / LN(2.0))
         |       AS DECIMAL(18,6)) AS DOUBLE) AS avg_nll_bits
-        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q49_top_bigrams" ->
+        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    "q49_top_bigrams" -> Query(q49TopBigrams,
       """WITH toks AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS ts
         |  FROM documents),
@@ -2493,21 +2451,21 @@ object TextAnalysis {
         |       UNION ALL
         |       SELECT array_to_string(ts, ' ') AS bigram FROM toks WHERE len(ts) < 2)
         |SELECT bigram, COUNT(*) AS n FROM bg GROUP BY bigram
-        |ORDER BY n DESC, bigram LIMIT 20""".stripMargin,
-    "q41_token_count" ->
+        |ORDER BY n DESC, bigram LIMIT 20""".stripMargin),
+    "q41_token_count" -> Query(q41TokenCount,
       """SELECT doc_id, len(regexp_split_to_array(text, '\s+')) AS n_tokens,
         |  len(list_filter(regexp_split_to_array(text, '[^a-zA-Z0-9]+'), x -> x <> '')) AS n_subwords
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q42_text_quality" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q42_text_quality" -> Query(q42TextQuality,
       """SELECT doc_id, LENGTH(text) AS text_len,
         |  len(list_distinct(string_split(text, ' '))) AS n_unique_tokens,
         |  LENGTH(text) - LENGTH(REPLACE(text, 'dup', '')) AS dup_marker_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q44_fingerprint_dedup" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    "q44_fingerprint_dedup" -> Query(q44FingerprintDedup,
       """SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies FROM documents
         |GROUP BY array_to_string(list_sort(string_split(text, ' ')), ' ')
-        |ORDER BY keep_id""".stripMargin,
-    "q371_textrank" -> (
+        |ORDER BY keep_id""".stripMargin),
+    "q371_textrank" -> Query(q371TextRank, (
       """WITH toks0 AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
         |    '\s+'), x -> x <> '') AS ts
@@ -2545,8 +2503,8 @@ object TextAnalysis {
         |  FROM r5)
         |SELECT CAST(pos AS BIGINT) AS pos, node AS word,
         |  CAST(CAST(rank AS DECIMAL(20,12)) AS DOUBLE) AS rank
-        |FROM top WHERE pos <= 20 ORDER BY pos""".stripMargin),
-    "q374_unigram_lm" ->
+        |FROM top WHERE pos <= 20 ORDER BY pos""".stripMargin)),
+    "q374_unigram_lm" -> Query(q374UnigramLm,
       """WITH words AS (
         |  SELECT w, CAST(COUNT(*) AS BIGINT) AS c,
         |    CAST(len(w) AS BIGINT) AS L
@@ -2605,8 +2563,8 @@ object TextAnalysis {
         |        CAST(SUM(n_tokens) AS BIGINT),
         |        CAST(SUM(tot_ubits) AS BIGINT),
         |        CAST(SUM(n_chars) AS BIGINT) FROM bl)
-        |ORDER BY word_len""".stripMargin,
-    "q382_truncation_loss" ->
+        |ORDER BY word_len""".stripMargin),
+    "q382_truncation_loss" -> Query(q382TruncationLoss,
       """WITH lens AS (
         |  SELECT CAST(len(list_filter(regexp_split_to_array(text,
         |    '\s+'), x -> x <> '')) AS BIGINT) AS len
@@ -2623,7 +2581,7 @@ object TextAnalysis {
         |    AS BIGINT) AS tokens_lost,
         |  CAST(SUM(CASE WHEN len > budget THEN len - budget ELSE 0 END)
         |    AS DOUBLE) / CAST(SUM(len) AS DOUBLE) AS frac_tokens_lost
-        |FROM lens CROSS JOIN bf GROUP BY 1 ORDER BY 1""".stripMargin)
+        |FROM lens CROSS JOIN bf GROUP BY 1 ORDER BY 1""".stripMargin))
 
   /** One unrolled TextRank iteration — the [[Graph.pageRank]] recursion
     * with this oracle's CTE names, contributions DECIMAL-quantized

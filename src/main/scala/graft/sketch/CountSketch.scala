@@ -42,6 +42,7 @@ final class CountSketch(val depth: Int, val width: Int) extends Serializable {
   def offerHash(hash: Long): Unit = offerHash(hash, 1L)
 
   def offerHash(hash: Long, weight: Long): Unit = {
+    require(weight > 0, s"count-sketch weight must be positive, got $weight")
     n += weight
     val h1 = hash
     val h2 = (hash >>> 32) | 1L

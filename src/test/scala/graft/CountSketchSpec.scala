@@ -147,6 +147,18 @@ class CountSketchSpec extends AnyFunSuite {
     assert(CountSketch.deserialize(wide.serialize()).counters.sameElements(wide.counters))
   }
 
+  test("non-positive weights are refused, naming the weight; the sketch is unchanged") {
+    val cs = new CountSketch(5, 64)
+    cs.offerHash(hash(123), 3L)
+    val before = cs.serialize()
+    for (w <- Seq(0L, -5L)) {
+      val e = intercept[IllegalArgumentException](cs.offerHash(hash(456), w))
+      assert(e.getMessage.contains(s"got $w"), e.getMessage)
+    }
+    assert(cs.serialize().sameElements(before))
+    assert(CountSketch.deserialize(before).totalWeight == 3L)
+  }
+
   test("a count-sketch of 2048 keys packs into at most 4 KB") {
     val cs = new CountSketch(CountSketch.DefaultDepth, CountSketch.DefaultWidth)
     (1L to 2048L).foreach(k => cs.offerHash(hash(k)))

@@ -125,13 +125,13 @@ class SketchAggContractSpec extends AnyFunSuite {
     assert(agms.forall(counterMin(_) < 0), agms.map(counterMin))
 
     // merge mode, over stored sketches whose counters need up to 64 bits: one
-    // AGMS store in group 0 holds ±3·2^61 (a range of 1.5·2^63), and the
-    // stores' weights reach 2^41
+    // AGMS store in group 0 holds ±3·2^61 (one key of weight 3·2^61 whose
+    // rows' signs differ: a range of 1.5·2^63), and the stores' weights
+    // reach 2^41
     val rnd = new scala.util.Random(17)
     val wide = Iterator.from(1).map { i =>
       val cs = new CountSketch(4, 256)
       cs.offerHash(rnd.nextLong(), 3L << 61)
-      cs.offerHash(rnd.nextLong(), -(3L << 61))
       cs.serialize()
     }.find(counterBits(_) == 64).get
     def stores[S](mk: => S, offer: (S, Long, Long) => Unit, bytes: S => Array[Byte]) =
